@@ -4,7 +4,10 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+
 import graft.functions.VectorFunctions
+import graft.sinks.Commit
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §2B X3).
@@ -371,9 +374,12 @@ object Similarity extends Logging {
     * deterministic and reusable.
     *
     * Layout under `indexPath`:
-    *  - `meta.parquet` — ONE [[AnnIndexMeta]] row: method, dim, corpus row
-    *    count, geometry, and the data-dependent state (trained centroids for
-    *    ivf / generated hyperplanes for lsh — a few hundred KB at most).
+    *  - `_manifest/N.json` — the committed [[AnnIndexMeta]] ([[Commit]]'s
+    *    numbered manifest, written by the driver): method, dim, corpus row
+    *    count, geometry, generation/tombstone fences; the data-dependent
+    *    state (trained centroids for ivf / generated hyperplanes for lsh —
+    *    a few hundred KB at most) sits in the `_manifest/vectors.bin`
+    *    sidecar, written once per build and named by the manifest.
     *  - `index.parquet` — the postings, carrying the full vectors so the
     *    index is SELF-CONTAINED (query time never rescans the corpus):
     *    quantized → (id, q int8-sketch, vec); ivf → (id, vec) PARTITIONED BY
@@ -469,26 +475,23 @@ object Similarity extends Logging {
     val meta = meta0.copy(attr_cols =
       if (attributeColumns.nonEmpty) Some(attributeColumns) else None)
     val idxDir = s"$indexPath/index.parquet"
-    // REBUILD crash ordering: retract the meta BEFORE touching postings —
-    // from this instant the path reads as "no index here" (readIndexMeta
-    // fails loudly), so a build killed at ANY point can never leave an old
-    // meta paired with new postings (old centroids resolving cells against
-    // a new partition domain would return silently wrong neighbors). The
-    // meta is re-written LAST below; an in-place rebuild is therefore
-    // destructive while it runs — build to a fresh path and swap for
-    // zero-downtime republishes. The staged meta_next (a crashed append's
-    // swap file) is retracted too — left behind, it would pair a STALE
-    // meta with the fresh postings through readIndexMeta's recovery read.
-    val hc = spark.sparkContext.hadoopConfiguration
-    // a previous incarnation's tombstones die with its meta — the rebuilt
-    // index starts with no deletions (its corpus IS the truth). A previous
-    // incarnation's per-category SUB-INDEXES die too (the category set is
-    // data-derived; a stale sub-directory would serve a vanished category)
-    val fs0 = hpath(indexPath).getFileSystem(hc)
-    Seq(s"$indexPath/meta.parquet", s"$indexPath/meta_next.parquet",
-        tombDir(indexPath), s"$indexPath/_family_stage_postings",
-        s"$indexPath/_family_stage_meta")
-      .foreach(p => fs0.delete(hpath(p), true))
+    // REBUILD crash ordering: retract the manifest BEFORE touching
+    // postings — from this instant the path reads as "no index here"
+    // (readIndexMeta fails loudly), so a build killed at ANY point can
+    // never leave an old manifest paired with new postings (old centroids
+    // resolving cells against a new partition domain would return
+    // silently wrong neighbors). The manifest is committed LAST below; an
+    // in-place rebuild is therefore destructive while it runs — build to a
+    // fresh path and swap for zero-downtime republishes.
+    // A previous incarnation's tombstones die with its manifest — the
+    // rebuilt index starts with no deletions (its corpus IS the truth). A
+    // previous incarnation's per-category SUB-INDEXES die too (the
+    // category set is data-derived; a stale sub-directory would serve a
+    // vanished category)
+    val fs0 = hpath(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(Commit.manifestDir(hpath(indexPath)), hpath(tombDir(indexPath)),
+        hpath(s"$indexPath/_family_stage_postings"))
+      .foreach(fs0.delete(_, true))
     if (fs0.exists(hpath(indexPath)))
       fs0.listStatus(hpath(indexPath)).foreach { st =>
         if (st.getPath.getName.startsWith("attr="))
@@ -540,14 +543,14 @@ object Similarity extends Logging {
       // ONE-PASS family build (quantized/lsh — per-row-deterministic
       // posting state, so every sub-index's postings are computable from
       // one shared corpus scan): stage ALL sub postings in one write
-      // partitioned by the category key, stage all sub metas in one more
-      // job, then rename each staged directory into its sub-index layout.
+      // partitioned by the category key, then rename each staged directory
+      // into its sub-index layout and commit its manifest driver-side.
       // The per-category loop below (kept for ivf, whose subs each train
       // their own centroids, and for any sub large enough to want leaf
       // directories — the staged write is flat) paid one corpus scan PLUS
-      // count/write/meta jobs PER CATEGORY: ~4 jobs × |categories| at any
+      // count/write jobs PER CATEGORY: ~3 jobs × |categories| at any
       // scale, and without attribute-partitioned source data, |categories|
-      // full corpus re-reads at 100 TB. Postings and metas are
+      // full corpus re-reads at 100 TB. Postings and manifests are
       // bit-equivalent to the loop's (same select lists, same geometry,
       // same flat layout the adaptive sizing picks for sub-sized corpora).
       val subWantsLeafDirs =
@@ -556,8 +559,6 @@ object Similarity extends Logging {
         hexOf.values.toSet.size == vals.length
       if (onePass) {
         val stageP = s"$indexPath/_family_stage_postings"
-        val stageM = s"$indexPath/_family_stage_meta"
-        Seq(stageP, stageM).foreach(p => fs0.delete(hpath(p), true))
         val fc = c.filter(col(a).isNotNull)
           .withColumn("__ap", hex(xxhash64(col(a).cast("string"))))
         val g = lit(0).as("gen")
@@ -580,15 +581,6 @@ object Similarity extends Logging {
               .write.mode("overwrite").partitionBy("__ap", "gen")
               .parquet(stageP)
         }
-        // one job writes every sub meta row: the category value rides
-        // temporarily in part_attr purely to derive the staging key, and
-        // is nulled in place (a sub meta is a plain single index — no
-        // part_attr/part_values)
-        val metasDf = vals.map(v => meta.copy(n_rows = counts(v),
-            part_attr = Some(v))).toDS().toDF()
-          .withColumn("__ap", hex(xxhash64(col("part_attr"))))
-          .withColumn("part_attr", lit(null).cast("string"))
-        metasDf.write.mode("overwrite").partitionBy("__ap").parquet(stageM)
         vals.foreach { v =>
           val sub = subIndexPath(indexPath, v)
           fs0.delete(hpath(sub), true)
@@ -597,12 +589,9 @@ object Similarity extends Logging {
               hpath(s"$sub/index.parquet")),
             s"buildIndex: cannot install staged postings for category '$v'" +
               s" at $sub")
-          require(fs0.rename(hpath(s"$stageM/__ap=${hexOf(v)}"),
-              hpath(s"$sub/meta.parquet")),
-            s"buildIndex: cannot install staged meta for category '$v'" +
-              s" at $sub")
+          commitBuild(spark, sub, meta.copy(n_rows = counts(v)))
         }
-        Seq(stageP, stageM).foreach(p => fs0.delete(hpath(p), true))
+        fs0.delete(hpath(stageP), true)
       } else vals.foreach { v =>
         buildIndex(corpus.filter(col(a).cast("string") === lit(v)), idCol,
           vecCol, method, subIndexPath(indexPath, v), nCells = nCells,
@@ -614,15 +603,10 @@ object Similarity extends Logging {
     }
     val metaFinal = meta.copy(n_rows = n, part_attr = partitionByAttribute,
       part_values = partVals)
-    // meta LAST: a killed build leaves postings without meta, which reads
-    // as "no index here" (readIndexMeta fails loudly) instead of a silent
-    // half-index — the same crash-ordering discipline as the sink compactor
-    Seq(metaFinal).toDS().write.mode("overwrite").parquet(s"$indexPath/meta.parquet")
-    // pre-populate the memo (the swapMeta discipline): the first consumer
-    // of a fresh build — the chain's own append/search — skips the
-    // one-row meta read job
-    cappedPut(metaCache, indexPath, (metaListingSig(spark, indexPath),
-      metaFinal))
+    // manifest LAST: a killed build leaves postings without a manifest,
+    // which reads as "no index here" (readIndexMeta fails loudly) instead
+    // of a silent half-index
+    commitBuild(spark, indexPath, metaFinal)
     // idxRows is the Observation-measured posting count from the write
     // pass itself — the old full read-back count was a second pass over
     // the entire just-written index on every build
@@ -769,7 +753,7 @@ object Similarity extends Logging {
       (String, Boolean)]
   private def storedAttrTypeIsString(spark: SparkSession, indexPath: String,
       attr: String): Boolean = {
-    val sig = metaListingSig(spark, indexPath)
+    val sig = metaSig(spark, indexPath)
     val key = (indexPath, attr)
     val hit = attrTypeCache.get(key)
     if (hit != null && hit._1 == sig) hit._2
@@ -806,17 +790,9 @@ object Similarity extends Logging {
   private val selCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       (String, Long)]
-  private def metaListingSig(spark: SparkSession, indexPath: String): String = {
-    val p = hpath(s"$indexPath/meta.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-  }
   private[graft] def filteredLiveIdCount(spark: SparkSession,
       indexPath: String, meta: AnnIndexMeta, filter: String): Long = {
-    val sig = metaListingSig(spark, indexPath)
+    val sig = metaSig(spark, indexPath)
     val key = (indexPath, filter)
     val hit = selCache.get(key)
     if (hit != null && hit._1 == sig) hit._2
@@ -898,36 +874,6 @@ object Similarity extends Logging {
           }
         }
     }
-  }
-
-  /** Row count of a posting generation directory from its parquet FOOTERS
-    * — driver-side metadata reads (parallel over files), no Spark job and
-    * no data scan. The write-landed verification currency: after the
-    * leaf-layout sizing above, a generation holds O(leaves) files, so
-    * this is bounded by directory size, never by data volume.
-    */
-  private[graft] def footerRowCount(spark: SparkSession, dir: String): Long = {
-    val p = hpath(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return -1L
-    def files(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        // hidden entries (underscore/dot) are invisible to Spark's parquet
-        // reader whether files OR directories (_pin.parquet,
-        // _tombstones.parquet side artifacts) — the footer count must see
-        // exactly the reader's file set
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) files(st.getPath)
-        else Seq(st)
-      }
-    import scala.jdk.CollectionConverters._
-    files(p).asJava.parallelStream().mapToLong { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try r.getRecordCount finally r.close()
-    }.sum()
   }
 
   /** Method-specific posting write shared by [[buildIndex]] (gen 0,
@@ -1032,7 +978,7 @@ object Similarity extends Logging {
     *  - a RETRY first retracts orphan generations (one directory delete)
     *    — an append is therefore idempotent under kill/retry, never
     *    duplicating postings;
-    *  - the meta commit itself is a two-file swap ([[swapMeta]]) whose
+    *  - the meta commit itself is one manifest rename ([[commitMeta]]):
     *    every window reads as either the old or the new committed meta.
     *
     * Semantics per method: quantized/lsh appended == full-rebuild EXACTLY
@@ -1046,8 +992,6 @@ object Similarity extends Logging {
       indexPath: String): DataFrame = {
     val spark = newRows.sparkSession
     import spark.implicits._
-    // complete (or retract) a predecessor append's crashed meta swap first
-    finishMetaSwap(spark, indexPath)
     val meta = readIndexMeta(spark, indexPath)
     // a per-category family's top and sub indexes must stay the SAME
     // corpus: appending to the top alone would leave every routed
@@ -1062,10 +1006,6 @@ object Similarity extends Logging {
         "rebuild the family with knn_index on the extended snapshot")
     val idxDir = s"$indexPath/index.parquet"
     val postings = spark.read.parquet(idxDir)
-    require(postings.columns.contains("gen"),
-      s"appendIndex: the index at '$indexPath' predates the generation " +
-        "layout (no gen partition) — rebuild it once with knn_index; " +
-        "appends commit through generations")
     // appended postings must match the stored column types exactly or the
     // parquet read would mix schemas (e.g. array<float> vs array<double>);
     // declared attribute columns must arrive with the batch — an appended
@@ -1128,9 +1068,9 @@ object Similarity extends Logging {
       }
     }
     // RETRY IDENTITY: the one crash window the generation fence alone
-    // cannot disambiguate is "postings AND swap file committed, promotion
-    // pending" — finishMetaSwap above completes that commit, so a blind
-    // re-append of the same batch would then DUPLICATE it. The meta records
+    // cannot disambiguate is "postings AND manifest committed, the verb
+    // killed before it returned" — a blind re-append of the same batch
+    // would then DUPLICATE it. The meta records
     // the last committed batch's signature (count ⊕ id-hash sum); a retry
     // of that exact batch reads as already-committed, retracts the
     // generation it just (redundantly) wrote, and no-ops. (Two deliberate,
@@ -1150,7 +1090,7 @@ object Similarity extends Logging {
     // survives an interleaved empty commit
     val updated = meta.copy(n_rows = meta.n_rows + n, generation = newGen,
       batch_sig = if (n > 0) Some(sig) else meta.batch_sig)
-    swapMeta(spark, indexPath, updated)
+    commitMeta(spark, indexPath, updated)
     // idxRows is the Observation-measured posting count from the write
     // pass — O(batch) like the old gen-directory recount, minus the
     // second pass over the appended generation
@@ -1176,7 +1116,7 @@ object Similarity extends Logging {
     *    invisible until its meta commits (the gen <= generation fence);
     *    killed before the commit, the OLD index reads bit-identically and
     *    the next maintenance verb retracts the orphan;
-    *  - the meta commit ([[swapMeta]]) advances `generation` AND
+    *  - the meta commit ([[commitMeta]]) advances `generation` AND
     *    `base_gen` to the new generation together, so the folded
     *    duplicates below it become invisible ATOMICALLY with the copy
     *    becoming visible;
@@ -1203,8 +1143,6 @@ object Similarity extends Logging {
   def compactIndex(spark: SparkSession, indexPath: String,
       retainFolded: Boolean = false): DataFrame = {
     import spark.implicits._
-    // complete (or retract) a predecessor maintenance verb's crashed swap
-    finishMetaSwap(spark, indexPath)
     val meta = readIndexMeta(spark, indexPath)
     // per-category family: fold every sub-index first (their report rows
     // are subsumed — the family compacts as one maintenance action)
@@ -1215,8 +1153,7 @@ object Similarity extends Logging {
     val tombP = tombDir(indexPath)
     val tombsActive = meta.tomb_gen >= meta.tomb_base
     if (meta.base_gen == meta.generation && !tombsActive) {
-      // one committed generation and no pending deletions (also: a
-      // pre-generation-era flat index, which reads as gen 0, or a retry
+      // one committed generation and no pending deletions (also: a retry
       // landing after a completed compaction) — nothing to fold, but
       // STILL sweep a predecessor's leftovers: a compaction killed
       // between its meta commit and its cleanup leaves invisible
@@ -1245,11 +1182,6 @@ object Similarity extends Logging {
     deleteGensBelow(spark, idxDir, meta.base_gen)
     deleteGensAbove(spark, tombP, meta.tomb_gen)
     deleteGensBelow(spark, tombP, meta.tomb_base)
-    val postings0 = spark.read.parquet(idxDir)
-    require(postings0.columns.contains("gen"),
-      s"compactIndex: the index at '$indexPath' carries no gen partition " +
-        s"but its meta spans generations ${meta.base_gen}..${meta.generation}" +
-        " — the artifact is corrupt; rebuild with knn_index")
     // the committed fenced postings MINUS active tombstones: the fold is
     // where deleted rows are physically dropped (until here they were only
     // anti-joined away at read time)
@@ -1333,7 +1265,8 @@ object Similarity extends Logging {
     // the whole copy) must hold exactly the observed live posting count.
     // A mismatch aborts with the orphan generation still invisible and
     // the OLD index fully intact.
-    val copiedRows = footerRowCount(spark, s"$idxDir/gen=$newGen")
+    val copiedRows = Commit.footerRowCount(spark.sessionState.newHadoopConf(),
+      hpath(s"$idxDir/gen=$newGen"))
     require(copiedRows == liveRows,
       s"compactIndex: consolidated generation holds $copiedRows postings " +
         s"but the committed range holds $liveRows — aborting before the " +
@@ -1344,7 +1277,7 @@ object Similarity extends Logging {
     // invisible atomically with the consolidated copy becoming visible
     val updated = meta.copy(generation = newGen, base_gen = newGen,
       tomb_base = meta.tomb_gen + 1, tomb_rows = 0L)
-    swapMeta(spark, indexPath, updated)
+    commitMeta(spark, indexPath, updated)
     // cleanup AFTER the commit — a crash here leaves invisible duplicates
     // for the next maintenance verb's sweep, never a half-visible index.
     // With retainFolded the cleanup is DEFERRED to that same sweep by
@@ -1391,7 +1324,7 @@ object Similarity extends Logging {
     * Crash contract (the [[appendIndex]] discipline): a tombstone
     * generation above the committed `tomb_gen` is invisible (readers
     * fence `tomb_base <= gen <= tomb_gen`); the retry retracts orphans
-    * first; the meta commit is the same two-file swap. The verb is
+    * first; the meta commit is the same manifest rename. The verb is
     * idempotent ACROSS the commit too, without a signature: only ids with
     * >= 1 LIVE not-yet-tombstoned posting are written (an unmatched id's
     * tombstone could never kill anything — later appends outrank its
@@ -1413,15 +1346,10 @@ object Similarity extends Logging {
   def deleteIndex(ids: DataFrame, idCol: String, indexPath: String): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    finishMetaSwap(spark, indexPath)
     val meta = readIndexMeta(spark, indexPath)
     val idxDir = s"$indexPath/index.parquet"
     val tombP = tombDir(indexPath)
     val postings = spark.read.parquet(idxDir)
-    require(postings.columns.contains("gen"),
-      s"deleteIndex: the index at '$indexPath' predates the generation " +
-        "layout (no gen partition) — rebuild it once with knn_index; " +
-        "deletes commit through tombstone generations")
     // persist the distinct batch only when a per-category family will
     // cascade it into every sub-index (multiple consumers); the plain
     // single-index delete consumes it exactly once — inside the one
@@ -1503,14 +1431,19 @@ object Similarity extends Logging {
         .write.mode("append").partitionBy("gen").parquet(tombP)
       val matchedPostings = observedOr(pObs, "p", 0L)
       if (matchedPostings == 0L) {
-        // nothing live matches — commit NOTHING (and nothing landed: the
-        // empty partitioned write created no gen directory). A tombstone
+        // nothing live matches — commit NOTHING, and leave no trace: the
+        // empty partitioned write landed no gen directory, but it may have
+        // created an empty tombstone root, which goes again. A tombstone
         // for an id with no live posting can never kill anything (later
         // appends take higher generations than its `upto` fence), so
         // committing the batch would only widen every search's anti-join
         // and inflate tomb_rows for free. This is also what makes a
         // committed delete's RETRY a true no-op: the retry re-matches
         // nothing and leaves meta and disk untouched.
+        val tfs = indexFs(spark, indexPath)
+        if (tfs.exists(hpath(tombP)) && !tfs.listStatus(hpath(tombP))
+            .exists(_.getPath.getName.startsWith("gen=")))
+          tfs.delete(hpath(tombP), true)
         logInfo(s"deleteIndex: no live postings match the id " +
           s"batch at $indexPath — no-op (nothing to tombstone)")
         return Seq((meta.method, meta.dim, 0L, meta.n_rows, meta.tomb_gen))
@@ -1523,7 +1456,7 @@ object Similarity extends Logging {
         tomb_gen = newTombGen,
         tomb_base = math.min(meta.tomb_base, newTombGen),
         tomb_rows = meta.tomb_rows + matchedN)
-      swapMeta(spark, indexPath, updated)
+      commitMeta(spark, indexPath, updated)
       logInfo(s"deleteIndex committed tombstone gen $newTombGen at " +
         s"$indexPath: $matchedN batch ids matched, $removed " +
         s"corpus rows removed -> ${updated.n_rows} corpus rows")
@@ -1567,17 +1500,13 @@ object Similarity extends Logging {
     * anti-join above it, so a mass takedown degrades to one extra
     * exchange instead of an unbounded broadcast. A tombstone kills only
     * postings with gen <= its `upto` (the posting generation committed
-    * when the delete ran), so re-appended ids stay live. A
-    * pre-generation-era flat index reads as gen 0. The `gen` column is
-    * dropped on the way out.
+    * when the delete ran), so re-appended ids stay live. The `gen` column
+    * is dropped on the way out.
     */
   private[graft] def livePostings(spark: SparkSession, indexPath: String,
       meta: AnnIndexMeta): DataFrame = {
-    val index0 = spark.read.parquet(s"$indexPath/index.parquet")
-    val withGen =
-      if (index0.columns.contains("gen")) index0
-      else index0.withColumn("gen", lit(0))
-    val fenced = withGen.filter(col("gen") >= meta.base_gen &&
+    val fenced = spark.read.parquet(s"$indexPath/index.parquet")
+      .filter(col("gen") >= meta.base_gen &&
       col("gen") <= meta.generation)
     val screened =
       if (meta.tomb_gen < meta.tomb_base) fenced
@@ -1605,12 +1534,17 @@ object Similarity extends Logging {
   private def hpath(s: String) = new org.apache.hadoop.fs.Path(s)
 
   /** Delete posting generation directories ABOVE the committed generation —
-    * a crashed append's orphans. Readers never see them (the gen fence),
-    * but a RETRY would duplicate them the moment its own meta commits, so
-    * every append retracts first.
+    * a crashed append's orphans — and the scratch of a write job killed
+    * before its commit ([[Commit.clearScratch]]). Readers never see
+    * either (the gen fence; `_temporary` is hidden), but a RETRY would
+    * duplicate them the moment its own write and meta commit, so every
+    * append retracts first.
     */
   private def deleteGensAbove(spark: SparkSession, idxDir: String,
-      g: Int): Unit = deleteGensWhere(spark, idxDir, _ > g)
+      g: Int): Unit = {
+    Commit.clearScratch(indexFs(spark, idxDir), hpath(idxDir))
+    deleteGensWhere(spark, idxDir, _ > g)
+  }
 
   /** Delete posting generation directories BELOW the live floor — a
     * completed compaction's folded duplicates. Readers never see them
@@ -1633,131 +1567,82 @@ object Similarity extends Logging {
     }
   }
 
-  /** Two-file meta commit for appends: write the updated meta to
-    * `meta_next.parquet`, delete `meta.parquet`, rename the swap file into
-    * place. The swap file is only ever written AFTER its generation's
-    * postings committed, so every crash window reads consistently:
-    * before the swap write lands → old meta (new gen invisible); swap
-    * written, old meta still present → old meta still authoritative-
-    * and-correct, the next append (or [[finishMetaSwap]]) completes the
-    * promotion; old meta deleted, rename pending → [[readIndexMeta]]
-    * falls back to the committed swap file — never "no index".
+  /** The manifest body of a stored index: the scalar [[AnnIndexMeta]]
+    * (its `vectors` left empty) plus the name of the sidecar holding the
+    * centroids/hyperplanes — written once per build, so appends, deletes
+    * and compactions commit scalars only.
     */
-  private def swapMeta(spark: SparkSession, indexPath: String,
+  private[graft] case class IndexManifest(meta: AnnIndexMeta,
+      vectors_file: Option[String])
+
+  private val VectorsFile = "vectors.bin"
+
+  private def indexFs(spark: SparkSession, indexPath: String) =
+    hpath(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Commit `m` as the index's next manifest ([[Commit.writeManifest]]:
+    * temp file, rename, prune). Every crash window reads as either the
+    * previous or the new committed meta; the postings and tombstones a
+    * commit makes visible are always written before it. The memo is
+    * pre-populated with what was just committed, so the next verb/search
+    * in a chain skips the manifest read.
+    */
+  private[graft] def commitMeta(spark: SparkSession, indexPath: String,
       m: AnnIndexMeta): Unit = {
-    import spark.implicits._
-    val fs = hpath(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(m).toDS().write.mode("overwrite").parquet(s"$indexPath/meta_next.parquet")
-    fs.delete(hpath(s"$indexPath/meta.parquet"), true)
-    fs.rename(hpath(s"$indexPath/meta_next.parquet"),
-      hpath(s"$indexPath/meta.parquet"))
-    // pre-populate the memo with the meta we just committed: the commit
-    // changed the listing signature, so the NEXT verb/search in a chain
-    // would otherwise re-read the one-row parquet as a Spark job. Same
-    // single-maintainer assumption as the commit protocol itself; an
-    // out-of-band write landing later changes the listing and the memo
-    // re-validates as always.
-    cappedPut(metaCache, indexPath, (metaListingSig(spark, indexPath), m))
+    val sig = Commit.writeManifest(indexFs(spark, indexPath), hpath(indexPath),
+      IndexManifest(m.copy(vectors = None), m.vectors.map(_ => VectorsFile)))
+    cappedPut(metaCache, indexPath, (sig, m))
   }
 
-  /** Recovery half of [[swapMeta]], run at the top of every append: a
-    * READABLE swap file always supersedes (its postings committed before
-    * it was written) — complete the promotion; an unreadable one is a
-    * crashed swap WRITE — retract it, `meta.parquet` stays authoritative.
+  /** A build's commit: the once-per-build vectors sidecar, then the
+    * manifest naming it.
     */
-  private def finishMetaSwap(spark: SparkSession, indexPath: String): Unit = {
-    val fs = hpath(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = hpath(s"$indexPath/meta_next.parquet")
-    if (!fs.exists(next)) return
-    val readable = scala.util.Try(
-      spark.read.parquet(next.toString).count() > 0).getOrElse(false)
-    if (readable) {
-      fs.delete(hpath(s"$indexPath/meta.parquet"), true)
-      fs.rename(next, hpath(s"$indexPath/meta.parquet"))
-    } else fs.delete(next, true)
+  private def commitBuild(spark: SparkSession, indexPath: String,
+      m: AnnIndexMeta): Unit = {
+    m.vectors.foreach(Commit.writeSidecar(indexFs(spark, indexPath),
+      hpath(indexPath), VectorsFile, _))
+    commitMeta(spark, indexPath, m)
   }
 
-  /** Read a stored index's meta row; fails with a build-the-artifact hint
-    * when `indexPath` holds no readable [[AnnIndexMeta]].
+  /** The index's manifest listing signature — the memo key of everything
+    * derived from its committed state (one driver-side listing). Every
+    * commit, rebuild or republish-and-swap changes it.
+    */
+  private def metaSig(spark: SparkSession, indexPath: String): String =
+    Commit.manifestSig(indexFs(spark, indexPath), hpath(indexPath))
+
+  /** Read a stored index's committed meta (the highest readable manifest,
+    * vectors loaded from its sidecar); fails with a build-the-artifact
+    * hint when `indexPath` holds no readable manifest — which includes an
+    * index written in the pre-manifest format (a one-row parquet meta):
+    * such indexes are refused, never migrated, and are rebuilt once.
     *
-    * MEMOIZED on the meta file's listing signature (the selCache
-    * discipline): one lifecycle chain reads the same one-row meta parquet
-    * several times — the audit preflight, the search build, each
-    * maintenance verb's own re-read — and every read was a (small) spark
-    * job. The signature is a driver-side listing; every maintenance
-    * commit rewrites the meta file set (fresh part-file UUIDs), so the
-    * memo invalidates on any commit, rebuild, or republish-and-swap.
+    * MEMOIZED on the manifest listing signature: one lifecycle chain
+    * reads the same meta several times — the audit preflight, the search
+    * build, each maintenance verb's own re-read — and the signature is one
+    * driver-side listing.
     */
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, AnnIndexMeta)]
   def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): AnnIndexMeta = {
-    val sig = metaListingSig(spark, indexPath)
+    val sig = metaSig(spark, indexPath)
     val hit = metaCache.get(indexPath)
     if (hit != null && hit._1 == sig && sig != "absent") hit._2
     else {
-      val m = readIndexMetaUncached(spark, indexPath)
-      cappedPut(metaCache, indexPath, (sig, m))
+      val fs = indexFs(spark, indexPath)
+      val (manSig, man) = Commit.readManifest(fs, hpath(indexPath), classOf[IndexManifest])
+        .getOrElse(throw new IllegalArgumentException(
+          s"indexPath '$indexPath' has no readable index manifest " +
+            "(_manifest/) — build the artifact with the knn_index op (or " +
+            "Similarity.buildIndex) at crawl time; an index stored in the " +
+            "older parquet-meta format is not read: rebuild it once with " +
+            "knn_index"))
+      val m = man.meta.copy(vectors =
+        man.vectors_file.map(Commit.readSidecar(fs, hpath(indexPath), _)))
+      cappedPut(metaCache, indexPath, (manSig, m))
       m
     }
-  }
-  private def readIndexMetaUncached(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): AnnIndexMeta = {
-    import spark.implicits._
-    val df0 =
-      try spark.read.parquet(s"$indexPath/meta.parquet")
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // recovery read: the append commit's one residual window (old
-          // meta deleted, swap-file rename pending) leaves only
-          // meta_next.parquet — which is only ever written AFTER its
-          // generation's postings committed, so reading it is reading the
-          // NEW committed index, never a half-state
-          try spark.read.parquet(s"$indexPath/meta_next.parquet")
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              throw new IllegalArgumentException(
-                s"indexPath '$indexPath' has no readable meta.parquet — " +
-                  "build the artifact with the knn_index op (or " +
-                  "Similarity.buildIndex) at crawl time " +
-                  s"(${e.getClass.getSimpleName}: ${e.getMessage})", e)
-          }
-      }
-    val need = Seq("method", "dim", "n_rows", "vectors")
-    val missing = need.filterNot(df0.columns.contains)
-    require(missing.isEmpty,
-      s"indexPath '$indexPath' meta.parquet is not an ANN index meta: " +
-        s"missing column(s) ${missing.mkString(", ")} (found: " +
-        s"${df0.columns.mkString(", ")})")
-    // a pre-generation-era meta (no `generation` column) reads as gen 0 —
-    // its whole (flat) posting set is the one committed generation; the
-    // batch signature likewise backfills absent (no append committed)
-    val df1 = if (df0.columns.contains("generation")) df0
-      else df0.withColumn("generation", lit(0))
-    val df2 = if (df1.columns.contains("batch_sig")) df1
-      else df1.withColumn("batch_sig", lit(null).cast("long"))
-    // pre-compaction-era meta: the whole committed range is live
-    val df3 = if (df2.columns.contains("base_gen")) df2
-      else df2.withColumn("base_gen", lit(0))
-    // pre-deletion-era meta: no tombstones committed (tomb_gen < tomb_base)
-    val df4 = if (df3.columns.contains("tomb_gen")) df3
-      else df3.withColumn("tomb_gen", lit(-1))
-    val df5 = if (df4.columns.contains("tomb_base")) df4
-      else df4.withColumn("tomb_base", lit(0))
-    // pre-attribute-era meta: vectors-only postings
-    val df6 = if (df5.columns.contains("attr_cols")) df5
-      else df5.withColumn("attr_cols", lit(null).cast("array<string>"))
-    // pre-round-20 meta: no tombstone row bookkeeping (reads as 0 — the
-    // old unconditional-broadcast behavior) and no per-category family
-    val df7 = if (df6.columns.contains("tomb_rows")) df6
-      else df6.withColumn("tomb_rows", lit(0L))
-    val df8 = if (df7.columns.contains("part_attr")) df7
-      else df7.withColumn("part_attr", lit(null).cast("string"))
-    val df = if (df8.columns.contains("part_values")) df8
-      else df8.withColumn("part_values", lit(null).cast("array<string>"))
-    df.as[AnnIndexMeta].head()
   }
 
   /** Top-k search against a STORED index ([[buildIndex]]) — no training, no
@@ -1800,8 +1685,7 @@ object Similarity extends Logging {
     // a crashed append's orphans, postings below base_gen a completed
     // compaction's not-yet-cleaned duplicates — both stay invisible (gen
     // is the FIRST partition column, so the fence is static partition
-    // pruning, not a data scan). A pre-generation-era index (no gen
-    // column) reads whole. Active tombstones ([[deleteIndex]]) are
+    // pruning, not a data scan). Active tombstones ([[deleteIndex]]) are
     // anti-joined out map-side (a broadcast of the takedown set).
     val live = livePostings(spark, indexPath, meta)
     // ATTRIBUTE-FILTERED search (candidateFilter): the predicate runs over
@@ -1960,8 +1844,9 @@ object Similarity extends Logging {
   }
 }
 
-/** Geometry + provenance of a stored ANN index (ONE parquet row under
-  * `indexPath/meta.parquet`). `n_cells`/`n_assign`/`n_tables`/
+/** Geometry + provenance of a stored ANN index (the body of its
+  * committed `_manifest/N.json`, see [[graft.sinks.Commit]]; `vectors`
+  * lives in the build's sidecar). `n_cells`/`n_assign`/`n_tables`/
   * `planes_per_table`/`seed` are the DECLARED geometry — what the user
   * asked for, what a consuming knn's preflight compares declared values
   * against, and what auto-sizing arithmetic derives from; the trained
@@ -1974,30 +1859,34 @@ object Similarity extends Logging {
   * staleness reference the knn preflight compares against.
   */
 case class AnnIndexMeta(method: String, dim: Int, n_rows: Long,
-    n_cells: Option[Int], n_assign: Option[Int], n_tables: Option[Int],
-    planes_per_table: Option[Int], seed: Option[Long],
+    // contentAs: the JSON codec must box Option[Int]/Option[Long] as the
+    // declared width (erasure would otherwise guess from the number)
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer]) n_cells: Option[Int],
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer]) n_assign: Option[Int],
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer]) n_tables: Option[Int],
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer]) planes_per_table: Option[Int],
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) seed: Option[Long],
     vectors: Option[Seq[Seq[Double]]],
     // the COMMITTED posting generation — the append crash-ordering fence:
     // readers only see postings with gen <= generation, so a build is gen 0
-    // and every Similarity.appendIndex commit advances it by one; a meta
-    // without the column (pre-append-era artifact) reads as 0
+    // and every Similarity.appendIndex commit advances it by one
     generation: Int = 0,
     // content signature of the LAST committed append batch (count ⊕ id-hash
     // sum) — the retry-identity record that makes appendIndex idempotent
     // across the post-commit crash window (see appendIndex); None on builds
-    batch_sig: Option[Long] = None,
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) batch_sig: Option[Long] = None,
     // the LOWEST live posting generation — compaction's fence: a
     // [[Similarity.compactIndex]] folds gens [base_gen, generation] into
     // one new generation and commits meta with base_gen == generation ==
     // that new gen, so the folded (now duplicate) generations below it
     // stay invisible to readers even before their directories are
-    // physically cleaned up. Builds and pre-compaction metas read as 0
+    // physically cleaned up. Builds commit 0
     base_gen: Int = 0,
     // the tombstone fence ([[Similarity.deleteIndex]]): tombstone
     // generations [tomb_base, tomb_gen] are ACTIVE (anti-joined by every
     // reader; physically dropped + cleared by compaction, which commits
     // tomb_base = tomb_gen + 1). tomb_gen < tomb_base = no active
-    // tombstones; builds and pre-deletion metas read as (-1, 0)
+    // tombstones; builds commit (-1, 0)
     tomb_gen: Int = -1,
     tomb_base: Int = 0,
     // ATTRIBUTE columns stored alongside every posting (plain data
@@ -2011,8 +1900,7 @@ case class AnnIndexMeta(method: String, dim: Int, n_rows: Long,
     // [[Similarity.livePostings]] and the `knn_tombstone_fraction`
     // advisory: a mass takedown must not be BROADCAST into every search
     // (driver/executor OOM at scale), and past ~10% of the corpus the
-    // anti-join tax says compact. Pre-round-20 metas read as 0 (their
-    // takedown sets were broadcast unconditionally — the old behavior)
+    // anti-join tax says compact
     tomb_rows: Long = 0L,
     // PER-CATEGORY sub-index family ([[Similarity.buildIndex]]
     // partitionByAttribute): `part_attr` names the attribute column the

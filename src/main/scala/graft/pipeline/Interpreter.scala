@@ -273,8 +273,9 @@ object Interpreter extends Logging {
             // genuinely a parquet FOOTER count (driver-side metadata) —
             // this used to be a spark count() job over the whole history
             // artifact, on EVERY screen's preflight
-            val histRows =
-              graft.operators.Similarity.footerRowCount(df.sparkSession, p)
+            val histRows = graft.sinks.Commit.footerRowCount(
+              df.sparkSession.sessionState.newHadoopConf(),
+              new org.apache.hadoop.fs.Path(p))
             // -1 = history path not readable (the old spark count() threw
             // into the NonFatal handler below) — skip the advisory rather
             // than warn against a nonsense 1-row denominator
@@ -996,9 +997,10 @@ object Interpreter extends Logging {
     // (a hand-built artifact may carry BIGINT or null shingle_size —
     // those must surface as this config error, not a ClassCastException).
     // The distinct scan grows with history size and runs at EVERY pipeline
-    // build (round-17 ADVICE) — so a HEALTHY verdict is cached in a
-    // one-row `_pin.parquet` side file (underscore-prefixed: plain parquet
-    // reads of the artifact ignore it), keyed on the data files' listing
+    // build (round-17 ADVICE) — so a HEALTHY verdict is cached in the
+    // artifact's `_manifest` (graft.sinks.Commit; underscore-prefixed:
+    // plain parquet reads of the artifact ignore it), keyed on the data
+    // files' listing
     // signature; an out-of-band append changes the signature and the next
     // build re-scans once and re-caches (self-healing, hand-built
     // artifacts included). Unhealthy artifacts are never cached — they
@@ -1026,30 +1028,26 @@ object Interpreter extends Logging {
     df
   }
 
-  /** The shingle artifact's distinct-width probe with its one-row side
+  /** The shingle artifact's distinct-width probe with its manifest
     * cache (see [[readShingleArtifact]]): returns the artifact's distinct
     * `shingle_size` values (≤ 3 sampled, None = null/non-numeric), reading
-    * them from `_pin.parquet` when its stored listing signature still
-    * matches the data files, else from one column scan (the shingle_size
-    * column is a constant — RLE'd, so the rebuild scan is cheap even when
-    * the history is not).
+    * them from the committed [[ShinglePin]] when its stored listing
+    * signature still matches the data files, else from one column scan
+    * (the shingle_size column is a constant — RLE'd, so the rebuild scan
+    * is cheap even when the history is not).
     */
   private def shinglePinWidths(spark: SparkSession, path: String,
       df: DataFrame): Seq[Option[Int]] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = shinglePinSignature(fs, root)
-    val pinPath = new org.apache.hadoop.fs.Path(s"$path/_pin.parquet")
-    // existence-check before the read: a missing pin is the NORMAL first-
-    // build state, not worth a logged stack trace. The read itself is
-    // DRIVER-SIDE (one row of four scalars) — the previous spark.read
-    // cost a scheduled one-task job per screen/append/compact preflight
+    // a DRIVER-SIDE read (a listing plus one small JSON file) — no Spark job
+    // per screen/append/compact preflight; a missing pin is the normal
+    // first-build state
     val cached: Option[Int] =
-      if (!fs.exists(pinPath)) None
-      else readShinglePinRow(fs, spark.sparkContext.hadoopConfiguration,
-        pinPath) match {
-        case Some((nf, tb, mt, w)) if (nf, tb, mt) == sig => Some(w)
-        case _ => None
+      graft.sinks.Commit.readManifest(fs, root, classOf[ShinglePin]).collect {
+        case (_, pin) if (pin.n_files, pin.total_bytes, pin.max_mtime) == sig =>
+          pin.shingle_size
       }
     cached match {
       case Some(w) => Seq(Some(w))
@@ -1130,10 +1128,16 @@ object Interpreter extends Logging {
       s"${uuids.flatten.distinct.size} write jobs")
   }
 
-  /** Write the width-pin side cache for a KNOWN-healthy width — an
-    * O(#files) listing plus a one-row write, never a data scan. Used by
-    * the maintenance verbs after they change the layout (the append
-    * verified the batch width against the pin BEFORE writing; the
+  /** The width pin's manifest body: the data-file listing signature the
+    * width was verified against, and the verified width.
+    */
+  private[graft] case class ShinglePin(n_files: Long, total_bytes: Long,
+      max_mtime: Long, shingle_size: Int)
+
+  /** Write the width-pin manifest for a KNOWN-healthy width — an
+    * O(#files) listing plus one small driver-side file, never a data scan.
+    * Used by the maintenance verbs after they change the layout (the
+    * append verified the batch width against the pin BEFORE writing; the
     * compactor rewrites rows unchanged — both list fresh, their layout
     * being settled under the single-maintainer rule), and by the probe's
     * cache-miss path, which passes the signature it captured BEFORE its
@@ -1141,88 +1145,37 @@ object Interpreter extends Logging {
     * than hides. Best-effort: a read-only artifact location just skips
     * the cache.
     */
-  /** The pin's one-row parquet schema — written and read DRIVER-SIDE (the
-    * parquet example Group API, no Spark job): the pin is one row of four
-    * scalars, and the Spark write/read each cost a scheduled job per
-    * screen/append/compact at any scale. Field names and physical types
-    * match what the previous Spark write produced, so old pins read
-    * through the driver-side path and new pins stay readable by
-    * spark.read (the directory-with-one-part-file layout is preserved).
-    */
-  private lazy val pinSchema =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message spark_schema { required int64 n_files; " +
-        "required int64 total_bytes; required int64 max_mtime; " +
-        "required int32 shingle_size; }")
-
   private def writeShinglePin(spark: SparkSession, path: String,
       width: Int, preSig: Option[(Long, Long, Long)] = None): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = preSig.getOrElse(shinglePinSignature(fs, root))
-    scala.util.Try {
-      val dirP = new org.apache.hadoop.fs.Path(s"$path/_pin.parquet")
-      fs.delete(dirP, true)
-      fs.mkdirs(dirP)
-      val f = new org.apache.hadoop.fs.Path(dirP,
-        s"part-00000-${java.util.UUID.randomUUID()}.parquet")
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(f, conf))
-        .withType(pinSchema)
-        .build()
-      try {
-        val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-          pinSchema).newGroup()
-        g.add("n_files", sig._1)
-        g.add("total_bytes", sig._2)
-        g.add("max_mtime", sig._3)
-        g.add("shingle_size", width)
-        w.write(g)
-      } finally w.close()
-    }
+    scala.util.Try(graft.sinks.Commit.writeManifest(fs, root,
+      ShinglePin(sig._1, sig._2, sig._3, width)))
     ()
   }
-
-  /** Driver-side read of the pin's one row (directory or bare file; old
-    * Spark-written pins included). None = absent/unreadable.
-    */
-  private def readShinglePinRow(fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      pinPath: org.apache.hadoop.fs.Path): Option[(Long, Long, Long, Int)] =
-    scala.util.Try {
-      val file =
-        if (fs.getFileStatus(pinPath).isDirectory)
-          fs.listStatus(pinPath).filter(s => s.isFile && {
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          }).head.getPath
-        else pinPath
-      val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
-        .withConf(conf)
-        .build()
-      try {
-        val g = r.read()
-        (g.getLong("n_files", 0), g.getLong("total_bytes", 0),
-          g.getLong("max_mtime", 0), g.getInteger("shingle_size", 0))
-      } finally r.close()
-    }.toOption
 
   /** The shingle artifact's PENDING-RETRACTION set (`_tombstones.parquet`
     * — underscore-prefixed, so plain parquet reads of the artifact ignore
     * it, exactly like the width pin): distinct ids committed by
     * shingle_index_retract, KILLED from every screen by an anti-join
     * until shingle_index_compact physically drops their rows and clears
-    * the file. None = no retractions pending.
+    * the file. None = no retractions pending. The set's part files are
+    * listed and read by name: handing Spark the underscore directory
+    * itself logs a spurious "All paths were ignored" WARN on every read.
     */
   private def shingleTombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones.parquet")
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp))
-      Some(spark.read.parquet(tp.toString).select("id").distinct())
-    else None
+    val parts =
+      if (!fs.exists(tp)) Nil
+      else fs.listStatus(tp).toSeq.map(_.getPath).filter { f =>
+        val n = f.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
+    if (parts.isEmpty) None
+    else Some(spark.read.parquet(parts.map(_.toString): _*).select("id").distinct())
   }
 
   /** Size-aware id-set join against a shingle artifact's tombstone set (or
@@ -1567,7 +1520,7 @@ object Interpreter extends Logging {
       // re-pin the width over the grown artifact: the pre-append preflight
       // verified the batch width equals the stored pin, so the post-append
       // width set is unchanged by construction — the refresh is an
-      // O(#files) listing + one-row write (round-18 review: re-reading
+      // O(#files) listing + one manifest write (round-18 review: re-reading
       // the artifact here would have paid an accumulated-history column
       // scan on every append). The refresh must not MASK an out-of-band
       // foreign-width append landing in the write window (round-18
@@ -1586,6 +1539,7 @@ object Interpreter extends Logging {
       // non-empty batch guarantees) and leave the still-valid pin alone
       val batchRows = batch.count()
       if (batchRows > 0) {
+        graft.sinks.Commit.clearScratch(fsA, fsRoot)
         batch.write.mode("append").parquet(p)
         val after = shingleDataListing(fsA, fsRoot)
         val (foreign, raceNote) = Interpreter.appendRaceVerdict(
@@ -1596,7 +1550,7 @@ object Interpreter extends Logging {
             s"($raceNote) — an out-of-band " +
             "writer raced the append; invalidating the width-pin cache " +
             "so the next build re-verifies the width from the data")
-          fsA.delete(new org.apache.hadoop.fs.Path(s"$p/_pin.parquet"), true)
+          fsA.delete(graft.sinks.Commit.manifestDir(fsRoot), true)
         } else writeShinglePin(df.sparkSession, p, t.shingleSize.get,
           Some(shingleListingSig(after)))
       }
@@ -1604,8 +1558,9 @@ object Interpreter extends Logging {
       // count scans the batch once, and the post-append history count is a
       // parquet FOOTER count — now genuinely driver-side metadata reads
       // (this used to be a spark count() job over the accumulated history)
-      val histDocs = graft.operators.Similarity.footerRowCount(
-        df.sparkSession, p)
+      val histDocs = graft.sinks.Commit.footerRowCount(
+        df.sparkSession.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(p))
       // shingleIndex is row-preserving (one (id, sh, n) row per input doc,
       // no filter), so the already-counted batch IS the appended-docs count
       // — the separate df.count() here was a second full pass over the
@@ -1661,12 +1616,17 @@ object Interpreter extends Logging {
       val newly = shingleTombstones(spark, p)
         .fold(liveMatched)(tb => sizeAwareIdJoin(liveMatched, tb, "left_anti"))
       val retracted = newly.count()
-      if (batchN > 0)
-        ids.write.mode("append").parquet(s"$p/_tombstones.parquet")
+      if (batchN > 0) {
+        val tp = new org.apache.hadoop.fs.Path(s"$p/_tombstones.parquet")
+        graft.sinks.Commit.clearScratch(
+          tp.getFileSystem(spark.sparkContext.hadoopConfiguration), tp)
+        ids.write.mode("append").parquet(tp.toString)
+      }
       val tombTotal = shingleTombstones(spark, p).fold(0L)(_.count())
       // footer count (driver-side metadata), not a spark count() job —
       // same number, no history scan
-      val histRows = graft.operators.Similarity.footerRowCount(spark, p)
+      val histRows = graft.sinks.Commit.footerRowCount(
+        spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(p))
       logInfo(s"[$specId] shingle_index_retract: $batchN batch ids, " +
         s"$retracted newly retracted -> $tombTotal pending tombstones " +
         s"over $histRows history rows at $p")
@@ -1684,7 +1644,7 @@ object Interpreter extends Logging {
       // (rows, widths and screen verdicts are bit-identical; the rewrite
       // sorts by id so per-doc row groups stay contiguous). The width pin
       // is preflighted from the artifact's OWN pin (no declared width —
-      // there are no new rows), and the side cache is refreshed over the
+      // there are no new rows), and the pin manifest is refreshed over the
       // folded layout. REPLACES the row set with a one-row report.
       require(!df.isStreaming,
         "shingle_index_compact is batch-only (it rewrites a stored " +
@@ -1692,18 +1652,12 @@ object Interpreter extends Logging {
       val spark = df.sparkSession
       val p = resolvePath(t.historyPath.get, dataDir, specId)
       // crash recovery BEFORE the first read (round-18 review): a
-      // predecessor compaction killed between compactSnapshot's two
-      // renames leaves only '<p>.old' — the retry (re-running this verb)
-      // must restore it, and compactSnapshot's own preamble can only do
-      // that if the preflight reads don't fail on the missing path first
-      locally {
-        val cur = new org.apache.hadoop.fs.Path(p)
-        val aside = new org.apache.hadoop.fs.Path(p + ".old")
-        val rfs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!rfs.exists(cur) && rfs.exists(aside))
-          require(rfs.rename(aside, cur),
-            s"[$specId] cannot restore $aside to $cur")
-      }
+      // predecessor compaction killed between its two renames leaves only
+      // '<p>.old' — the retry (re-running this verb) restores it before
+      // the preflight reads would fail on the missing path
+      val fsP = new org.apache.hadoop.fs.Path(p)
+      val fsH = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.sinks.Commit.recover(fsH, fsP, 0)
       val hist = spark.read.parquet(p)
       val missingCols = Seq("id", "sh", "n", "shingle_size")
         .filterNot(hist.columns.contains)
@@ -1723,8 +1677,6 @@ object Interpreter extends Logging {
           " — compacting would bake the corruption in; rebuild the " +
           "artifact at one width with shingle_index first")
       val width = widths.headOption.flatten.getOrElse(0)
-      val fsP = new org.apache.hadoop.fs.Path(p)
-      val fsH = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def dataFileCount: Long = fsH.listStatus(fsP).count(s => s.isFile &&
         !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       val filesBefore = dataFileCount
@@ -1733,17 +1685,13 @@ object Interpreter extends Logging {
           // PENDING RETRACTIONS: the fold must physically drop the
           // tombstoned rows, so compactSnapshot's healthy-layout no-op
           // (file count already small enough) must not apply — run the
-          // same staging+aside swap protocol with the anti-join inside
-          // the rewrite. The artifact directory swap carries
+          // same staged swap (graft.sinks.Commit) with the anti-join
+          // inside the rewrite. The artifact directory swap carries
           // `_tombstones.parquet` into the deleted aside, so the
           // retraction set clears ATOMICALLY with the drop becoming
-          // visible; killed between the renames, the aside-restore
-          // preamble above brings back the OLD artifact WITH its
-          // tombstones and the retry re-runs the drop.
-          val aside = new org.apache.hadoop.fs.Path(p + ".old")
-          val staging = new org.apache.hadoop.fs.Path(p + ".staging")
-          if (fsH.exists(aside)) fsH.delete(aside, true)
-          if (fsH.exists(staging)) fsH.delete(staging, true)
+          // visible; killed between the renames, the recovery above
+          // brings back the OLD artifact WITH its tombstones and the
+          // retry re-runs the drop.
           val bytes = fsH.listStatus(fsP).filter(s => s.isFile &&
               !s.getPath.getName.startsWith("_") &&
               !s.getPath.getName.startsWith(".")).map(_.getLen).sum
@@ -1752,15 +1700,11 @@ object Interpreter extends Logging {
           sizeAwareIdJoin(hist, tombs, "left_anti")
             .repartitionByRange(needed, col("id"))
             .sortWithinPartitions("id")
-            .write.mode("overwrite").parquet(staging.toString)
-          require(fsH.rename(fsP, aside), s"[$specId] cannot move $p aside")
-          require(fsH.rename(staging, fsP),
-            s"[$specId] cannot install $staging as $p")
+            .write.mode("overwrite").parquet(graft.sinks.Commit.staging(p))
           // retainFolded: the pre-compaction artifact (WITH its tombstone
           // side file) outlives the swap as `<p>.old` — a recovery /
-          // slow-reader grace window; the next compact's preamble sweeps it
-          if (!t.retainFolded) fsH.delete(aside, true)
-          ()
+          // slow-reader grace window; the next compact's recovery sweeps it
+          graft.sinks.Commit.install(fsH, fsP, Nil, t.retainFolded)
         case None =>
           graft.sinks.BatchSink.compactSnapshot(spark, p, sortCols = Seq("id"),
             retainAside = t.retainFolded)
@@ -1771,11 +1715,12 @@ object Interpreter extends Logging {
       // layout (compactSnapshot's own return value is the number of files
       // it removed — a different quantity) — driver-side metadata, not a
       // spark count() job
-      val rows = graft.operators.Similarity.footerRowCount(spark, p)
+      val rows = graft.sinks.Commit.footerRowCount(
+        spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(p))
       // the rewrite replaced the file set — re-pin the width over the
       // folded layout (the width is UNCHANGED by a rewrite, so this is a
-      // listing + one-row write, not a rescan) so later builds stay at
-      // side-file cost; an artifact emptied by the drop (or empty to
+      // listing + one manifest write, not a rescan) so later builds stay
+      // at manifest-read cost; an artifact emptied by the drop (or empty to
       // begin with) has no width to pin
       if (width > 0 && rows > 0) writeShinglePin(spark, p, width)
       logInfo(s"[$specId] shingle_index_compact: $filesBefore -> " +

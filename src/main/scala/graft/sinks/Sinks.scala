@@ -184,28 +184,21 @@ object BatchSink extends org.apache.spark.internal.Logging {
     */
   def upsertSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
       changes: DataFrame, keys: Seq[String], orderCols: Seq[String]): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
     requireMergeColumns(changes, keys, orderCols)
     // Hadoop FileSystem API, not java.nio: the snapshot lives wherever
     // Spark writes (hdfs://, s3a://, file:) — local-only path ops would
     // silently treat a remote snapshot as absent and clobber it
-    val cur = new HPath(path)
+    val cur = new org.apache.hadoop.fs.Path(path)
     val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new HPath(path + ".old")
-    val staging = new HPath(path + ".staging")
-    // crash recovery BEFORE reading: a previous swap may have moved the
-    // snapshot aside without installing its replacement (crash between the
-    // two renames) — restore it; an aside left AFTER a completed install is
-    // just the prior version, dropped
-    if (!fs.exists(cur) && fs.exists(aside))
-      require(fs.rename(aside, cur), s"cannot restore $aside to $cur")
-    if (fs.exists(aside)) fs.delete(aside, true)
+    // crash recovery BEFORE reading (Commit.recover): a previous swap's
+    // aside is restored or dropped, so the merge reads the last install
+    val exists = Commit.recover(fs, cur, 0)
     // reverse layout guard (the partitioned overload has the mirror): a
     // partitioned snapshot fed through this flat path would be rewritten in
     // full AND converted to a flat layout — the silent 100 TB rewrite the
     // partitioned mode exists to avoid, usually a restart that lost the
     // partitionCols argument
-    require(!fs.exists(cur) || !fs.listStatus(cur).exists(s =>
+    require(!exists || !fs.listStatus(cur).exists(s =>
         s.isDirectory && s.getPath.getName.contains("=")),
       s"$path holds a PARTITIONED snapshot; pass its partitionCols instead " +
         "of the flat upsert (a flat merge would rewrite and de-partition it)")
@@ -218,24 +211,18 @@ object BatchSink extends org.apache.spark.internal.Logging {
     // merge (a null key collapses the batch into one group; a null order
     // column loses every new version).
     val merged =
-      if (fs.exists(cur))
+      if (exists)
         graft.sources.Tables.latestPerKey(
           spark.read.parquet(path).unionByName(changes, allowMissingColumns = true),
           keys, orderCols)
       else
         graft.sources.Tables.latestPerKey(changes, keys, orderCols)
-    merged.write.mode("overwrite").parquet(staging.toString)
-    val n = footerRowCount(fs, staging, spark.sessionState.newHadoopConf())
-    // swap via two renames (atomic per rename on HDFS-like filesystems;
-    // object stores want a manifest-based table format instead): the old
-    // snapshot is moved ASIDE, never deleted before its replacement exists,
-    // so every crash point leaves either cur or aside recoverable above.
-    // Replaying the same batch after any crash re-merges the same versions
-    // to the same result (last-write-wins idempotence).
-    if (fs.exists(cur))
-      require(fs.rename(cur, aside), s"cannot move $cur aside")
-    require(fs.rename(staging, cur), s"cannot install $staging as $cur")
-    fs.delete(aside, true)
+    val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
+    merged.write.mode("overwrite").parquet(staged.toString)
+    val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
+    // replaying the same batch after any crash re-merges the same versions
+    // to the same result (last-write-wins idempotence)
+    Commit.install(fs, cur, Nil, retainAside = false)
     n
   }
 
@@ -252,7 +239,7 @@ object BatchSink extends org.apache.spark.internal.Logging {
     *     directories — untouched terabytes are never opened),
     *  3. merges latest-per-key over |touched snapshot slice| + |changes|,
     *  4. swaps ONLY the touched partition directories, each under the same
-    *     rename-aside crash protocol as the unpartitioned path (a crash
+    *     [[Commit]] rename-aside protocol as the unpartitioned path (a crash
     *     between a partition's two renames is restored from its aside copy
     *     on the next call; replaying the batch re-merges to the same result).
     *
@@ -275,45 +262,27 @@ object BatchSink extends org.apache.spark.internal.Logging {
   def upsertSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
       changes: DataFrame, keys: Seq[String], orderCols: Seq[String],
       partitionCols: Seq[String]): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
     if (partitionCols.isEmpty)
       return upsertSnapshot(spark, path, changes, keys, orderCols)
     require(partitionCols.forall(changes.columns.contains),
       s"changes frame is missing partition columns: " +
         partitionCols.filterNot(changes.columns.contains).mkString(", "))
     requireMergeColumns(changes, keys, orderCols)
-    val cur = new HPath(path)
+    val cur = new org.apache.hadoop.fs.Path(path)
     val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new HPath(path + ".old")
-    val staging = new HPath(path + ".staging")
-    // crash recovery BEFORE reading. A FLAT aside with cur absent is the
-    // crash window of the UNPARTITIONED overload (its whole-snapshot swap) —
-    // restore it wholesale rather than deleting the only surviving copy; the
-    // layout guard below then rejects the flat snapshot with instructions.
-    if (!fs.exists(cur) && fs.exists(aside) &&
-        leafPartitionDirs(fs, aside, partitionCols.size).isEmpty)
-      require(fs.rename(aside, cur), s"cannot restore $aside to $cur")
-    // Partitioned crash recovery: restore any partition whose swap was
-    // interrupted between its two renames (moved aside, replacement never
-    // installed); asides next to an installed replacement are just the
-    // prior version, dropped with the aside root
-    leafPartitionDirs(fs, aside, partitionCols.size).foreach { rel =>
-      val target = new HPath(cur, rel)
-      if (!fs.exists(target)) {
-        fs.mkdirs(target.getParent)
-        require(fs.rename(new HPath(aside, rel), target),
-          s"cannot restore $aside/$rel to $target")
-      }
-    }
-    if (fs.exists(aside)) fs.delete(aside, true)
-    if (fs.exists(staging)) fs.delete(staging, true)
+    // crash recovery BEFORE reading: restores any partition whose swap was
+    // interrupted between its two renames — and a FLAT aside with cur
+    // absent (the unpartitioned overload's crash window) wholesale, so the
+    // layout guard below rejects the flat snapshot with instructions
+    // rather than deleting the only surviving copy
+    val exists = Commit.recover(fs, cur, partitionCols.size)
 
     // layout guard: installing partition directories next to a flat
     // snapshot's part-files would corrupt the table (double reads, undefined
     // pruning) — a path must stay in one layout for its lifetime. ONE
     // top-level listing, not a tree walk: this runs on every upsert and the
     // snapshot may hold tens of thousands of partition directories.
-    require(!fs.exists(cur) || fs.listStatus(cur).exists(s =>
+    require(!exists || fs.listStatus(cur).exists(s =>
         s.isDirectory && s.getPath.getName.contains("=")),
       s"$path holds an unpartitioned snapshot; the partitioned upsert cannot " +
         "convert it in place — rewrite it once with partitionBy, or keep " +
@@ -358,7 +327,7 @@ object BatchSink extends org.apache.spark.internal.Logging {
     }
 
     val merged =
-      if (!fs.exists(cur)) graft.sources.Tables.latestPerKey(changes, keys, orderCols)
+      if (!exists) graft.sources.Tables.latestPerKey(changes, keys, orderCols)
       else {
         val pred = touchedPartitionPredicate(touched.toSeq, partitionCols)
         // mergeSchema: schema evolution makes per-partition file schemas
@@ -379,27 +348,12 @@ object BatchSink extends org.apache.spark.internal.Logging {
         graft.sources.Tables.latestPerKey(
           slice.unionByName(changes, allowMissingColumns = true), keys, orderCols)
       }
+    val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
     merged.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(staging.toString)
-    val n = footerRowCount(fs, staging, spark.sessionState.newHadoopConf())
-
-    if (!fs.exists(cur)) {
-      require(fs.rename(staging, cur), s"cannot install $staging as $cur")
-    } else {
-      leafPartitionDirs(fs, staging, partitionCols.size).foreach { rel =>
-        val target = new HPath(cur, rel)
-        val asideDir = new HPath(aside, rel)
-        if (fs.exists(target)) {
-          fs.mkdirs(asideDir.getParent)
-          require(fs.rename(target, asideDir), s"cannot move $target aside")
-        }
-        fs.mkdirs(target.getParent)
-        require(fs.rename(new HPath(staging, rel), target),
-          s"cannot install $staging/$rel as $target")
-      }
-      fs.delete(aside, true)
-      fs.delete(staging, true) // leftover _SUCCESS marker and empty dirs
-    }
+      .parquet(staged.toString)
+    val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
+    Commit.install(fs, cur, Commit.leafPartitionDirs(fs, staged, partitionCols.size),
+      retainAside = false)
     n
   }
 
@@ -410,9 +364,9 @@ object BatchSink extends org.apache.spark.internal.Logging {
     * the same growth with log compaction). Layout-only: keys/versions are
     * untouched, so it needs no merge columns.
     *
-    * Protocol: the SAME `.staging`/`.old` dir names and two-rename swap as
-    * [[upsertSnapshot]] — a crash mid-compact leaves exactly the states the
-    * next upsert's (or compact's) recovery preamble already heals, and the
+    * Protocol: the SAME [[Commit]] staged swap as [[upsertSnapshot]] — a
+    * crash mid-compact leaves exactly the states the next upsert's (or
+    * compact's) [[Commit.recover]] already heals, and the
     * single-writer contract is shared: run it between batches of the one
     * snapshot writer (see `startSnapshotSink(compactEvery = ...)`), never
     * concurrently with it.
@@ -458,86 +412,59 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else df.repartition(needed)
     val cur = new HPath(path)
     val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new HPath(path + ".old")
-    val staging = new HPath(path + ".staging")
+    val staged = Commit.staging(path)
     def dataFiles(dir: HPath) = fs.listStatus(dir).filter(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
     def neededFiles(bytes: Long) =
       math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    // same recovery as the upserts — including the flat-aside-with-cur-
+    // absent window (the ONLY surviving copy after a flat upsert's crash):
+    // restored wholesale, never deleted
+    require(Commit.recover(fs, cur, partitionCols.size),
+      s"no snapshot at $path to compact")
+    val partitioned = fs.listStatus(cur).exists(s =>
+      s.isDirectory && s.getPath.getName.contains("="))
 
     if (partitionCols.isEmpty) {
-      // flat store: whole-snapshot rewrite under the flat swap protocol
-      if (!fs.exists(cur) && fs.exists(aside))
-        require(fs.rename(aside, cur), s"cannot restore $aside to $cur")
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-      require(fs.exists(cur), s"no snapshot at $path to compact")
       // same layout guard as the flat upsert: a partitioned store reaching
       // the flat path would silently no-op (its root holds directories,
       // not data files) — fail with instructions instead
-      require(!fs.listStatus(cur).exists(s =>
-          s.isDirectory && s.getPath.getName.contains("=")),
+      require(!partitioned,
         s"$path holds a PARTITIONED snapshot; pass its partitionCols")
       val files = dataFiles(cur)
       val needed = neededFiles(files.map(_.getLen).sum)
       if (files.length <= needed) return 0L
       rewritten(spark.read.parquet(path), needed.toInt)
-        .write.mode("overwrite").parquet(staging.toString)
-      require(fs.rename(cur, aside), s"cannot move $cur aside")
-      require(fs.rename(staging, cur), s"cannot install $staging as $cur")
+        .write.mode("overwrite").parquet(staged)
       // retainAside: the pre-compaction snapshot outlives the swap as
       // `<path>.old` (a grace window for recovery / slow readers pointed
-      // at it); the NEXT compaction's preamble sweeps it. Flat stores
-      // only — the partitioned path swaps per-slice.
-      if (!retainAside) fs.delete(aside, true)
+      // at it); the next writer's recovery sweeps it
+      Commit.install(fs, cur, Nil, retainAside)
       files.length - dataFiles(cur).length
     } else {
-      // partitioned store: per-directory compaction, same recovery preamble
-      // and per-partition swap as the partitioned upsert — including the
-      // flat-aside-with-cur-absent window (the ONLY surviving copy after a
-      // flat upsert's crash): restore it wholesale, never delete it
-      if (!fs.exists(cur) && fs.exists(aside) &&
-          leafPartitionDirs(fs, aside, partitionCols.size).isEmpty)
-        require(fs.rename(aside, cur), s"cannot restore $aside to $cur")
-      leafPartitionDirs(fs, aside, partitionCols.size).foreach { rel =>
-        val target = new HPath(cur, rel)
-        if (!fs.exists(target)) {
-          fs.mkdirs(target.getParent)
-          require(fs.rename(new HPath(aside, rel), target),
-            s"cannot restore $aside/$rel to $target")
-        }
-      }
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-      require(fs.exists(cur), s"no snapshot at $path to compact")
-      require(fs.listStatus(cur).exists(s =>
-          s.isDirectory && s.getPath.getName.contains("=")),
+      require(partitioned,
         s"$path holds an unpartitioned snapshot; call compactSnapshot " +
           "without partitionCols")
-      var removed = 0L
-      leafPartitionDirs(fs, cur, partitionCols.size).foreach { rel =>
+      // per-directory compaction: stage every over-fragmented partition,
+      // then swap just those (per-partition atomic renames)
+      val compacted = Commit.leafPartitionDirs(fs, cur, partitionCols.size).flatMap { rel =>
         val dir = new HPath(cur, rel)
         val files = dataFiles(dir)
         val needed = neededFiles(files.map(_.getLen).sum)
-        if (files.length > needed) {
+        if (files.length <= needed) None
+        else {
           // basePath keeps the partition columns on read; they are dropped
           // on write because in this layout their values live in the
           // directory name, not the files
           rewritten(spark.read.option("basePath", path).parquet(dir.toString)
               .drop(partitionCols: _*), needed.toInt)
-            .write.mode("overwrite").parquet(new HPath(staging, rel).toString)
-          val asideDir = new HPath(aside, rel)
-          fs.mkdirs(asideDir.getParent)
-          require(fs.rename(dir, asideDir), s"cannot move $dir aside")
-          fs.mkdirs(dir.getParent)
-          require(fs.rename(new HPath(staging, rel), dir),
-            s"cannot install $staging/$rel as $dir")
-          removed += files.length - dataFiles(dir).length
+            .write.mode("overwrite").parquet(new HPath(staged, rel).toString)
+          Some(rel -> files.length)
         }
       }
-      fs.delete(aside, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-      removed
+      if (compacted.nonEmpty)
+        Commit.install(fs, cur, compacted.map(_._1), retainAside)
+      compacted.map { case (rel, n) => n - dataFiles(new HPath(cur, rel)).length }.sum.toLong
     }
   }
 
@@ -621,43 +548,6 @@ object BatchSink extends org.apache.spark.internal.Logging {
     require(missing.isEmpty,
       s"changes frame is missing key/order columns: ${missing.mkString(", ")} " +
         "(schema evolution applies to payload columns only)")
-  }
-
-  /** Relative paths (`a=1/b=x`) of the hive-partition leaf directories
-    * exactly `depth` levels under `root`; Nil when `root` is absent.
-    */
-  /** Row count of a freshly-written parquet directory from its FOOTERS —
-    * no Spark job. The upsert's per-batch return value used to pay a full
-    * read-and-count of the staged snapshot on EVERY micro-batch of every
-    * snapshot sink; the footers carry the same number for the price of a
-    * driver-side metadata read per file.
-    */
-  private def footerRowCount(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    def files(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        if (st.isDirectory) files(st.getPath)
-        else if (!st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")) Seq(st)
-        else Nil
-      }
-    files(dir).map { st =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try reader.getRecordCount finally reader.close()
-    }.sum
-  }
-
-  private def leafPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, depth: Int): Seq[String] = {
-    def recurse(p: org.apache.hadoop.fs.Path, d: Int, prefix: String): Seq[String] =
-      if (d == 0) Seq(prefix)
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .flatMap(s => recurse(s.getPath, d - 1,
-          if (prefix.isEmpty) s.getPath.getName else s"$prefix/${s.getPath.getName}"))
-    if (!fs.exists(root)) Nil else recurse(root, depth, "")
   }
 }
 

@@ -7,6 +7,14 @@ import graft.sources.ParquetSourceResolver
 
 class InterpreterSpec extends SparkSuite {
 
+  /** The committed shingle width pin of a history artifact, if any. */
+  private def pinManifest(path: String) = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    graft.sinks.Commit.readManifest(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      classOf[graft.pipeline.Interpreter.ShinglePin]).map(_._2)
+  }
+
   test("PipelineSpec JSON parse fills defaults and tolerates unknown fields") {
     val spec = PipelineSpec.fromJson(
       """{"id":"x","processingMode":"SIMPLE_STREAM",
@@ -1644,10 +1652,9 @@ class InterpreterSpec extends SparkSuite {
            |"outputTopic":{"enabled":true,"name":"pin-out"}}""".stripMargin),
         resolver)
     screen(3)
-    val pin = new java.io.File(s"$dir/hist.parquet/_pin.parquet")
-    assert(pin.isDirectory, "first healthy read must write the pin cache")
-    val pinned = spark.read.parquet(pin.toString).head()
-    assert(pinned.getAs[Int]("shingle_size") == 3, pinned.toString)
+    val pinned = pinManifest(s"$dir/hist.parquet")
+    assert(pinned.isDefined, "first healthy read must write the pin cache")
+    assert(pinned.get.shingle_size == 3, pinned.toString)
     // the underscore prefix hides the cache from plain parquet reads of
     // the artifact — the columns (and row count) are unchanged
     val plain = spark.read.parquet(s"$dir/hist.parquet")
@@ -1714,26 +1721,69 @@ class InterpreterSpec extends SparkSuite {
              |  "historyPath":"$dir/hist.parquet"}],
              |"outputTopic":{"enabled":true,"name":"app-out"}}""".stripMargin),
         new ParquetSourceResolver(dir, TestdataCatalog))).collect()
-    def pinRow() = spark.read.parquet(s"$dir/hist.parquet/_pin.parquet").head()
+    def pinRow() = pinManifest(s"$dir/hist.parquet").get
     def dataFiles(): Seq[java.io.File] =
       new java.io.File(s"$dir/hist.parquet").listFiles().toSeq
         .filter(f => f.isFile && !f.getName.startsWith("_") &&
           !f.getName.startsWith("."))
     append("batch")
     val pinned = pinRow()
-    assert(pinned.getAs[Int]("shingle_size") == 3, pinned.toString)
+    assert(pinned.shingle_size == 3, pinned.toString)
     // the stored signature matches the POST-append listing exactly —
     // the next build's cache check is a pin hit, no width re-scan
     val listed = dataFiles()
-    assert(pinned.getAs[Long]("n_files") == listed.size.toLong &&
-      pinned.getAs[Long]("total_bytes") == listed.map(_.length).sum,
+    assert(pinned.n_files == listed.size.toLong &&
+      pinned.total_bytes == listed.map(_.length).sum,
       pinned.toString)
     // an EMPTY batch skips the write entirely: layout and pin untouched
     val namesBefore = listed.map(_.getName).toSet
     append("none")
     assert(dataFiles().map(_.getName).toSet == namesBefore,
       "an empty append must not touch the artifact layout")
-    assert(pinRow().getAs[Long]("n_files") == namesBefore.size.toLong)
+    assert(pinRow().n_files == namesBefore.size.toLong)
+  }
+
+  test("a shingle screen with pending retractions logs no data-source WARN (the tombstone set is read by file, not by underscore directory)") {
+    val dir = tempDirPath("graft_shingle_warn").toString
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
+        "doc_id", "text", 3)
+      .write.mode("overwrite").parquet(s"$dir/hist.parquet")
+    docs.filter(col("doc_id") < 10).select(col("doc_id").as("id"))
+      .write.parquet(s"$dir/hist.parquet/_tombstones.parquet")
+    docs.filter(col("doc_id") >= 40)
+      .write.mode("overwrite").parquet(s"$dir/batch.parquet")
+    def screen(): Long =
+      graft.pipeline.Interpreter.values(graft.pipeline.Interpreter.build(
+        spark, PipelineSpec.fromJson(
+          s"""{"id":"warn-screen","processingMode":"SIMPLE_STREAM",
+             |"sourceTopic":{"name":"batch","keyClass":"java.lang.Long"},
+             |"transform":[{"op":"dedup_near","method":"jaccard",
+             |  "column":"text","idColumn":"doc_id","shingleSize":3,
+             |  "threshold":0.8,"historyPath":"$dir/hist.parquet"}],
+             |"outputTopic":{"enabled":true,"name":"warn-out"}}""".stripMargin),
+        new ParquetSourceResolver(dir, TestdataCatalog))).count()
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-warn-capture", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      // the data-source layer's WARNs (file discovery and reads); Spark's
+      // BlockManager may WARN about a persisted block computed twice, a
+      // scheduling race unrelated to how artifacts are read
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN) &&
+            e.getLoggerName.startsWith("org.apache.spark.sql.execution.datasources"))
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    ctx.getRootLogger.addAppender(capture)
+    try screen()
+    finally { ctx.getRootLogger.removeAppender(capture); capture.stop() }
+    import scala.jdk.CollectionConverters._
+    assert(warns.isEmpty, warns.asScala.mkString("\n"))
   }
 
   test("shingle_index_retract: retracted docs stop screening; compact drops them and clears tombstones; pending append refused") {
@@ -1939,7 +1989,7 @@ class InterpreterSpec extends SparkSuite {
     assert(files() == rep.getAs[Long]("files_after"))
     // the folded history screens identically, and the pin cache is fresh
     assert(screen() == before, "compaction changed the screen verdicts")
-    assert(new java.io.File(s"$dir/hist.parquet/_pin.parquet").isDirectory,
+    assert(pinManifest(s"$dir/hist.parquet").exists(_.shingle_size == 3),
       "compaction must refresh the width-pin side cache")
     // the ASIDE-ONLY crash state (killed between compactSnapshot's two
     // renames): the retry — re-running the verb — must restore the

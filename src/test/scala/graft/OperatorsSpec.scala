@@ -1047,6 +1047,15 @@ class OperatorsSpec extends SparkSuite {
     assert(meta.method == "ivf" && meta.n_cells.contains(16) &&
       meta.n_assign.contains(2) && meta.dim == 64 &&
       meta.vectors.exists(_.length == 16), meta.toString)
+    // the manifest's JSON codec keeps the declared numeric widths (read
+    // through the file, not the committed-meta memo)
+    val lshPath = new org.apache.hadoop.fs.Path(s"$base/lsh")
+    val (_, stored) = graft.sinks.Commit.readManifest(
+      lshPath.getFileSystem(spark.sparkContext.hadoopConfiguration), lshPath,
+      classOf[Similarity.IndexManifest]).get
+    assert(stored.meta.seed.map(_ + 1L).contains(43L) &&
+      stored.meta.n_tables.map(_ + 1).contains(17) &&
+      stored.meta.vectors.isEmpty && stored.vectors_file.isDefined, stored.toString)
     // a non-index path is refused with the build hint named
     val bad = intercept[IllegalArgumentException] {
       Similarity.readIndexMeta(spark, s"${sf()}/embeddings.parquet")
@@ -1077,16 +1086,17 @@ class OperatorsSpec extends SparkSuite {
       rows(graft.operators.Similarity.ivfTopK(e, q, "vec_id", "embedding", 5,
         nCells = 16, nProbe = 0, nAssign = 2)),
       "clamped-grid stored route diverged from the direct path")
-    // (2) the rebuild crash window: the meta is retracted BEFORE postings
-    // are touched, so any point of death leaves "no index here" — never an
-    // old meta over new postings (silently wrong neighbors)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$base/tiny/meta.parquet")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(metaPath, true) // what a killed rebuild leaves behind
+    // (2) the rebuild crash window: the manifest is retracted BEFORE
+    // postings are touched, so any point of death leaves "no index here" —
+    // never an old manifest over new postings (silently wrong neighbors)
+    val manifest = graft.sinks.Commit.manifestDir(
+      new org.apache.hadoop.fs.Path(s"$base/tiny"))
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(manifest, true) // what a killed rebuild leaves behind
     val dead = intercept[IllegalArgumentException] {
       graft.operators.Similarity.readIndexMeta(spark, s"$base/tiny")
     }
-    assert(dead.getMessage.contains("no readable meta.parquet"), dead.getMessage)
+    assert(dead.getMessage.contains("no readable index manifest"), dead.getMessage)
   }
 
   test("appendIndex: appended == full rebuild (quantized exact, lsh exact, ivf probed-all exact); report verifies the commit") {
@@ -1148,8 +1158,12 @@ class OperatorsSpec extends SparkSuite {
     val newHalf = e.filter(col("vec_id") > cut)
     val q = e.filter(col("vec_id") < 3)
     val base = tempDirPath("graft_ann_append_crash").toString
-    val ss = spark
-    import ss.implicits._
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def manifests(idx: String): Seq[String] =
+      fs.listStatus(graft.sinks.Commit.manifestDir(
+          new org.apache.hadoop.fs.Path(idx)))
+        .map(_.getPath.getName).filter(_.endsWith(".json")).sorted.toSeq
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
       df.select("query_id", "rank", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -1161,10 +1175,10 @@ class OperatorsSpec extends SparkSuite {
     val committed = rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10, s"$base/idx"))
     assert(committed != preRows, "fixture must actually change the neighbor set")
 
-    // (1) kill BEFORE the meta commit: gen-1 postings exist but the meta
-    // still says generation 0 — the old index must read bit-identically
-    // (the gen fence is static partition pruning, not trust)
-    Seq(preMeta).toDS().write.mode("overwrite").parquet(s"$base/idx/meta.parquet")
+    // (1) kill BEFORE the manifest commit: gen-1 postings exist but the
+    // committed manifest still says generation 0 — the old index must read
+    // bit-identically (the gen fence is static partition pruning, not trust)
+    Similarity.commitMeta(spark, s"$base/idx", preMeta)
     assert(rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10, s"$base/idx")) ==
       preRows, "an uncommitted posting generation leaked into the search")
     // (2) RETRY after the kill: the orphan generation is retracted first,
@@ -1181,34 +1195,45 @@ class OperatorsSpec extends SparkSuite {
       visible.select("id").distinct().count() == e.count(),
       "retry duplicated postings")
 
-    // (3) the meta-swap residual window (old meta deleted, rename pending):
-    // only meta_next.parquet exists — readIndexMeta must read the COMMITTED
-    // swap file, never "no index"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/idx/meta.parquet"),
-      new org.apache.hadoop.fs.Path(s"$base/idx/meta_next.parquet")))
+    // (3) the manifest commit's residual windows: (a) killed after the
+    // temp file landed, before its rename — the torn/unrenamed temp file
+    // is ignored and the committed manifest reads; (b) killed after the
+    // rename, before the predecessor was pruned — the HIGHER manifest
+    // reads, never the older one or "no index"
+    val mdir = graft.sinks.Commit.manifestDir(
+      new org.apache.hadoop.fs.Path(s"$base/idx"))
+    def newestN(): Long = manifests(s"$base/idx").map(_.stripSuffix(".json").toLong).max
+    // the unpruned predecessor: preMeta as the manifest just below the newest
+    def unprunedPre(): Unit = {
+      val older = fs.create(new org.apache.hadoop.fs.Path(mdir, s"${newestN() - 1}.json"))
+      graft.sinks.Commit.json.writeValue(older: java.io.OutputStream,
+        Similarity.IndexManifest(preMeta.copy(vectors = None), None))
+      older.close()
+    }
+    val torn = fs.create(new org.apache.hadoop.fs.Path(mdir, s".${newestN() + 1}.json.tmp"))
+    torn.write("{\"meta\":{\"method\":".getBytes); torn.close()
+    unprunedPre()
     val recovered = Similarity.readIndexMeta(spark, s"$base/idx")
     assert(recovered.generation == 1 && recovered.n_rows == e.count(),
       recovered.toString)
     assert(rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10, s"$base/idx")) ==
-      committed, "the swap window must read as the committed index")
-    // the next append completes the promotion and commits generation 2
+      committed, "the commit window must read as the committed index")
+    // the next append commits generation 2 and prunes the leftovers
     Similarity.appendIndex(e.limit(0), "vec_id", "embedding", s"$base/idx")
     val promoted = Similarity.readIndexMeta(spark, s"$base/idx")
     assert(promoted.generation == 2 && promoted.n_rows == e.count(),
       promoted.toString)
+    assert(manifests(s"$base/idx").size == 1 &&
+      !fs.listStatus(mdir).exists(_.getPath.getName.endsWith(".tmp")),
+      s"the commit must prune older manifests and temp files: ${manifests(s"$base/idx")}")
 
     // (4) the POST-COMMIT crash window (round-18 review): postings AND the
-    // swap file committed, promotion pending — the retry must recognize
-    // the batch as already committed (the meta's batch signature) and
-    // NO-OP instead of duplicating it as a fresh generation
+    // manifest committed, the verb killed before it returned — the retry
+    // must recognize the batch as already committed (the meta's batch
+    // signature) and NO-OP instead of duplicating it as a fresh generation
     val committedMeta = Similarity.readIndexMeta(spark, s"$base/idx")
     assert(committedMeta.batch_sig.isDefined, committedMeta.toString)
-    Seq(committedMeta).toDS().write.mode("overwrite")
-      .parquet(s"$base/idx/meta_next.parquet")
-    Seq(preMeta).toDS().write.mode("overwrite")
-      .parquet(s"$base/idx/meta.parquet")
+    unprunedPre()
     val retryRep = Similarity.appendIndex(newHalf, "vec_id", "embedding",
       s"$base/idx").head()
     assert(retryRep.getLong(2) == 0L,
@@ -1219,12 +1244,16 @@ class OperatorsSpec extends SparkSuite {
     assert(rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10, s"$base/idx")) ==
       committed, "post-commit retry changed the search results")
 
-    // (5) a pre-generation-era index (no gen column) refuses append with
-    // the rebuild hint instead of corrupting the layout
+    // (5) an index in the pre-manifest format (a one-row meta parquet, no
+    // _manifest) refuses append with the rebuild hint instead of being
+    // read through a migration path
     val flat = s"$base/flat"
     spark.read.parquet(s"$base/idx/index.parquet").drop("gen")
       .write.mode("overwrite").parquet(s"$flat/index.parquet")
-    Seq(preMeta).toDS().write.mode("overwrite").parquet(s"$flat/meta.parquet")
+    val ss = spark
+    import ss.implicits._
+    Seq(preMeta.copy(vectors = None)).toDS().write.mode("overwrite")
+      .parquet(s"$flat/meta.parquet")
     val old = intercept[IllegalArgumentException] {
       Similarity.appendIndex(newHalf, "vec_id", "embedding", flat)
     }
@@ -2408,6 +2437,22 @@ class OperatorsSpec extends SparkSuite {
       .map(_.getPath.getName).filter(_.startsWith("attr=")).toSet
     assert(subDirs == Set("attr=0", "attr=1"),
       s"stale sub-indexes must die with the rebuild: $subDirs")
+  }
+
+  test("deleteIndex matching nothing on a fresh index leaves no tombstone or gen directory behind") {
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val base = tempDirPath("graft_ann_delete_none").toString
+    Similarity.buildIndex(e, "vec_id", "embedding", "quantized", s"$base/q")
+    val rep = Similarity.deleteIndex(
+      e.select((col("vec_id") + 1000000L).as("vec_id")), "vec_id", s"$base/q").head()
+    assert(rep.getLong(2) == 0L && rep.getLong(3) == e.count(), rep.toString)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/q/tombstones.parquet")),
+      "a delete that matched nothing must leave no tombstone directory")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/q/index.parquet"))
+      .map(_.getPath.getName).filter(_.startsWith("gen=")).toSet == Set("gen=0"))
   }
 
   test("deleteIndex bookkeeping on a duplicate-id corpus: n_rows stays in corpus-row " +
