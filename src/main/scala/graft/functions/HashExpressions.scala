@@ -407,8 +407,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
         while (j < nb && !b.isNullAt(j) && b.getLong(j) == y) j += 1
       }
     }
-    // nulls sort last: the intersection holds null iff both sides carry one
-    if (i < na && j < nb && a.isNullAt(i) && b.isNullAt(j)) c += 1
+    // nulls sort last: the intersection holds null iff both sides carry
+    // one, wherever the merge above stopped
+    if (na > 0 && nb > 0 && a.isNullAt(na - 1) && b.isNullAt(nb - 1)) c += 1
     c
   }
 

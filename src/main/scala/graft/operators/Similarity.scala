@@ -903,12 +903,17 @@ object Similarity extends Logging {
     * empty-relation propagation can replace the plan subtree holding the
     * CollectMetrics node, so the observation's metrics never surface.
     * That prune fires only when zero rows flowed through the observed
-    * point — exactly what the default encodes — so a missing metric is
-    * always the empty answer, never a lost count.
+    * point — exactly what the default encodes. Every default taken is
+    * still logged and counted (`Fallbacks`, site `similarity.observed_or`)
+    * so a metric lost any other way cannot pass as an empty answer.
     */
   private def observedOr[T](obs: org.apache.spark.sql.Observation,
       key: String, default: T): T =
-    obs.get.get(key).fold(default)(_.asInstanceOf[T])
+    obs.get.get(key).fold {
+      graft.observe.Fallbacks.record("similarity.observed_or",
+        s"observation metric '$key' did not surface; using $default")
+      default
+    }(_.asInstanceOf[T])
 
   private def writePostings(c: DataFrame, meta: AnnIndexMeta, gen: Int,
       idxDir: String, overwrite: Boolean, partitionLeaves: Boolean): Long = {
@@ -1055,8 +1060,9 @@ object Similarity extends Logging {
       overwrite = false,
       partitionLeaves = leafPartitionedOnDisk(spark, idxDir))
     val n = observedOr(probeObs, "n", 0L)
-    if (observedOr[Any](probeObs, "lo", null) != null) {
-      val lo = observedOr[Any](probeObs, "lo", null).asInstanceOf[Int]
+    val loObs = observedOr[Any](probeObs, "lo", null)
+    if (loObs != null) {
+      val lo = loObs.asInstanceOf[Int]
       val hi = observedOr[Any](probeObs, "hi", null).asInstanceOf[Int]
       if (lo != meta.dim || hi != meta.dim) {
         // retract the orphan generation before refusing — the artifact

@@ -234,9 +234,10 @@ object BatchSink extends org.apache.spark.internal.Logging {
     *     (`changes.select(partitionCols).distinct()` — bounded by the batch,
     *     guarded at [[DefaultMaxTouchedPartitions]] /
     *     `graft.sink.maxTouchedPartitions`),
-    *  2. reads ONLY those partitions of the stored snapshot (the predicate
-    *     references partition columns only, so the file index prunes
-    *     directories — untouched terabytes are never opened),
+    *  2. reads ONLY those partitions' directories of the stored snapshot
+    *     (`basePath` plus the touched leaf directories — untouched
+    *     terabytes are neither listed nor opened, not even for the schema
+    *     merge),
     *  3. merges latest-per-key over |touched snapshot slice| + |changes|,
     *  4. swaps ONLY the touched partition directories, each under the same
     *     [[Commit]] rename-aside protocol as the unpartitioned path (a crash
@@ -288,7 +289,10 @@ object BatchSink extends org.apache.spark.internal.Logging {
         "convert it in place — rewrite it once with partitionBy, or keep " +
         "calling the unpartitioned overload")
 
-    val touched = changes.select(partitionCols.map(col): _*).distinct().collect()
+    // touched partitions as the writer names their directories: each
+    // partition column cast to string (under the session time zone)
+    val touched = changes.select(partitionCols.map(col(_).cast("string")): _*)
+      .distinct().collect()
     if (touched.isEmpty) return 0L // empty micro-batch: snapshot unchanged
     val maxTouched = maxTouchedPartitions(spark)
     if (touched.length > maxTouched) {
@@ -326,19 +330,26 @@ object BatchSink extends org.apache.spark.internal.Logging {
       } finally { persisted.unpersist(); () }
     }
 
+    // only the touched partitions' directories are listed and opened; a
+    // touched partition without a directory yet holds no stored rows
+    val touchedDirs = if (!exists) Seq.empty else touched.toSeq.map { r =>
+      new org.apache.hadoop.fs.Path(cur, partitionCols.indices.map(i =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionPathString(partitionCols(i), r.getString(i))).mkString("/"))
+    }.filter(fs.exists)
     val merged =
-      if (!exists) graft.sources.Tables.latestPerKey(changes, keys, orderCols)
+      if (touchedDirs.isEmpty) graft.sources.Tables.latestPerKey(changes, keys, orderCols)
       else {
-        val pred = touchedPartitionPredicate(touched.toSeq, partitionCols)
         // mergeSchema: schema evolution makes per-partition file schemas
         // heterogeneous (only touched partitions widen); without it, schema
         // inference can sample an old-schema file and a rewrite would
         // silently DROP an evolved column's data from the touched partition.
-        // Cost is a parallel footer read, paid only on the pruned merge path.
-        // Then align the re-inferred partition column types back to the
-        // changelog's schema before the union.
+        // Its footer read covers the touched directories only; basePath
+        // keeps their partition columns, whose re-inferred types are then
+        // aligned back to the changelog's schema before the union.
         val slice = partitionCols.foldLeft(
-          spark.read.option("mergeSchema", "true").parquet(path).filter(pred)) {
+          spark.read.option("basePath", path).option("mergeSchema", "true")
+            .parquet(touchedDirs.map(_.toString): _*)) {
           (d, c) => d.withColumn(c, col(c).cast(changes.schema(c).dataType))
         }
         // lenient schema evolution as in the unpartitioned overload — only
@@ -468,18 +479,13 @@ object BatchSink extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Pruning predicate for the touched snapshot slice. Compares the STRING
-    * rendering of both sides: directory-derived partition values re-infer
-    * their type on read (a LongType bucket comes back IntegerType), and
-    * `<=>` on the string forms matches regardless while still referencing
-    * only partition columns — so the file index prunes to the touched
-    * directories (pinned by SinksSpec's files-read test: replacing this
-    * with a non-prunable form fails that test, not just slows down). The
-    * disjunction is reduced as a BALANCED tree: a left-deep Or chain over
-    * thousands of legitimately-touched partitions blows Catalyst's
-    * recursive transforms (StackOverflow) long before the touched-partition
-    * cap trips. Package-visible so the cap's planning cost is measurable
-    * in a test at exactly the shape the merge builds.
+  /** A wave's slice of the changelog: the rows whose partition columns,
+    * rendered as strings (the form `touched` is collected in), equal one
+    * of the wave's tuples. The disjunction is reduced as a BALANCED tree:
+    * a left-deep Or chain over thousands of legitimately-touched
+    * partitions blows Catalyst's recursive transforms (StackOverflow) long
+    * before the touched-partition cap trips. Package-visible so the cap's
+    * planning cost is measurable in a test at exactly this shape.
     */
   private[graft] def touchedPartitionPredicate(
       touched: Seq[org.apache.spark.sql.Row], partitionCols: Seq[String]): Column = {
@@ -494,13 +500,13 @@ object BatchSink extends org.apache.spark.internal.Logging {
   }
 
   /** Guard on how many partitions one changelog batch may touch — the
-    * touched-tuple collect, the pruning disjunction (~2 Catalyst nodes per
-    * tuple per partition column), and the post-merge swap are all
-    * O(touched) DRIVER-side work, and the swap is O(touched) SEQUENTIAL
-    * filesystem renames (two per partition; slower still on object stores
-    * where "rename" is copy+delete). At the 4096 default that is ~8k
-    * renames worst case — seconds on HDFS — and the predicate
-    * analyzes+optimizes in ~2 s cold (measured in SinksSpec).
+    * touched-tuple collect, the per-directory existence checks and read
+    * paths, and the post-merge swap are all O(touched) DRIVER-side work,
+    * and the swap is O(touched) SEQUENTIAL filesystem renames (two per
+    * partition; slower still on object stores where "rename" is
+    * copy+delete). At the 4096 default that is ~8k renames worst case —
+    * seconds on HDFS — and a wave's slicing predicate analyzes+optimizes
+    * in ~2 s cold (measured in SinksSpec).
     * A batch touching more partitions than this signals a layout finer
     * than the delta cadence: coarsen the bucketing (DEPLOY.md sizing) —
     * or raise `graft.sink.maxTouchedPartitions` in the session conf after

@@ -449,16 +449,9 @@ class SinksSpec extends SparkSuite {
     // The 100 TB claim of the partitioned sink is on the READ side: a
     // micro-batch merge must scan |touched partitions|, not |snapshot|.
     // SinksSpec already pins that untouched partitions aren't REWRITTEN;
-    // this pins they aren't READ — the executed merge plan's snapshot scan
-    // must carry non-empty partitionFilters and open only the touched
-    // directory's files. If a Spark upgrade stops recognizing the
-    // `cast(col as string) <=> lit` predicate form as a partition filter
-    // (Sinks.touchedPartitionPredicate), this fails instead of silently
-    // degrading every merge to a full-snapshot scan. Mutation-verified:
-    // with the slice predicate made pruning-ineligible (a data-column
-    // disjunct), partitionFilters came back empty and numPartitions read
-    // all 4 — this test failed on exactly that. Prunability = the
-    // predicate stays DETERMINISTIC and references PARTITION COLUMNS only.
+    // this pins they aren't READ — nor even listed: the executed merge
+    // plan's snapshot scan must be rooted at the touched directory alone
+    // and open only its files.
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val dir = tempDir("graft_upsert_prune") + "/snap"
@@ -487,7 +480,7 @@ class SinksSpec extends SparkSuite {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         scans(qe.executedPlan)
-          .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/snap")))
+          .filter(_.relation.location.rootPaths.exists(_.toString.contains("/snap")))
           .foreach(captured.add)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
@@ -504,9 +497,9 @@ class SinksSpec extends SparkSuite {
         assert(!captured.isEmpty, "merge produced no snapshot FileSourceScanExec")
         captured.peek()
       }
-      assert(scan.partitionFilters.nonEmpty,
-        "snapshot slice scan lost its partition filters — the merge predicate " +
-          "no longer qualifies for directory pruning (full-snapshot scan at 100 TB)")
+      assert(scan.relation.location.rootPaths.map(_.getName) == Seq("bucket=1"),
+        s"snapshot slice scan is rooted at ${scan.relation.location.rootPaths} — " +
+          "the merge lists more than the touched directory (full-snapshot scan at 100 TB)")
       assert(scan.metrics("numPartitions").value == 1,
         s"merge read ${scan.metrics("numPartitions").value} partition dirs for a " +
           "one-bucket delta — untouched directories were opened")
@@ -514,6 +507,24 @@ class SinksSpec extends SparkSuite {
         s"merge read ${scan.metrics("numFiles").value} files; bucket=1 holds " +
           s"$touchedBucketFiles — untouched partitions' files were read")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("partitioned upsert: a non-parquet file in an untouched partition does not fail a merge elsewhere") {
+    val dir = tempDir("graft_upsert_foreign") + "/snap"
+    def batch(rows: Seq[(Long, Long, String)]) =
+      spark.createDataFrame(rows.map { case (k, ver, v) => (k, k % 2, ver, v) })
+        .toDF("k", "bucket", "ver", "v")
+    graft.sinks.BatchSink.upsertSnapshot(spark, dir,
+      batch(Seq((1L, 1L, "a1"), (2L, 1L, "b1"))), Seq("k"), Seq("ver"), Seq("bucket"))
+    // an operator's note dropped into bucket=0: not parquet, not hidden
+    Files.write(java.nio.file.Paths.get(dir, "bucket=0", "NOTES.txt"),
+      "not a parquet file".getBytes("UTF-8"))
+    val n = graft.sinks.BatchSink.upsertSnapshot(spark, dir,
+      batch(Seq((1L, 2L, "a2"), (3L, 1L, "c1"))), Seq("k"), Seq("ver"), Seq("bucket"))
+    assert(n == 2, s"bucket=1 rows after the merge: $n")
+    val bucket1 = spark.read.parquet(s"$dir/bucket=1").collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
+    assert(bucket1 == Map(1L -> "a2", 3L -> "c1"), s"$bucket1")
   }
 
   test("touched-partition predicate at the default cap plans in bounded time") {

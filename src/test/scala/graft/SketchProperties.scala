@@ -100,20 +100,26 @@ object SketchProperties extends Properties("sketches") {
 
   // ---- sorted_intersect_count vs the set-intersection reference ----
 
-  private val hashArr: Gen[List[Long]] = for {
+  // null elements (None) too: the kernel must match array_intersect's null
+  // handling wherever the non-null prefixes stop
+  private val hashArr: Gen[List[Option[Long]]] = for {
     n <- Gen.chooseNum(0, 60)
     // small value domain so overlaps and duplicates actually occur
-    v <- Gen.listOfN(n, Gen.chooseNum(-30L, 30L))
+    v <- Gen.listOfN(n, Gen.frequency(
+      9 -> Gen.chooseNum(-30L, 30L).map(Option(_)), 1 -> Gen.const(None)))
   } yield v
+
+  // array_sort order: ascending, nulls last
+  private def sortedArray(a: List[Option[Long]]): ArrayData =
+    new GenericArrayData((a.flatten.sorted.map(Long.box) ++ a.filter(_.isEmpty).map(_ => null))
+      .toArray[Any])
 
   property("sorted_intersect_count == |distinct set intersection| on sorted arrays") =
     Prop.forAll(hashArr, hashArr) { (a, b) =>
-      val sa = a.sorted; val sb = b.sorted
       val e = graft.functions.SortedIntersectCount(
         org.apache.spark.sql.catalyst.expressions.Literal(1L),
         org.apache.spark.sql.catalyst.expressions.Literal(1L))
-      val got = e.count(new GenericArrayData(sa.toArray[Any]),
-        new GenericArrayData(sb.toArray[Any]))
+      val got = e.count(sortedArray(a), sortedArray(b))
       got == a.toSet.intersect(b.toSet).size
     }
 
