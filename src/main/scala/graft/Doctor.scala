@@ -100,8 +100,8 @@ object Doctor {
             planWarns.foreach(w => println(s"  plan audit WARN: ${w.rule} — ${w.detail}"))
             if (failOnWarn) failures += 1
           }
-          val gates = spec.transform.filter(t => t.op == "snapshot_drift" &&
-            (t.numericMaxAbsDelta.nonEmpty || t.numericMaxRelDelta.nonEmpty))
+          val gates = spec.transform.collect {
+            case t: graft.config.TransformOp.SnapshotDrift if t.gated => t }
           if (runGates && gates.nonEmpty) {
             // the drift frame is O(columns) rows; collect() (never count —
             // column pruning would drop the raising `pass` column)

@@ -1683,9 +1683,8 @@ object Queries {
       .withColumn("ts", expr("TIMESTAMP '2024-01-01 00:00:00' + " +
         "make_interval(0, 0, 0, 0, CAST(vec_id % 48 AS INT), 0, 0)"))
     Interpreter.applyTransform(e,
-        graft.config.TransformOp(op = "embedding_summary",
-          column = Some("embedding"), timeColumn = Some("ts"),
-          every = Some("1 day")),
+        graft.config.TransformOp.EmbeddingSummary(column = "embedding",
+          timeColumn = Some("ts"), every = Some("1 day")),
         None, "x29-embed-summary-window")
       .select(col("window_start"), col("i").cast("long").as("i"),
         zr6(col("dim_sum")).as("dim_sum"), zr6(col("norm_sum")).as("norm_sum"),
@@ -1712,7 +1711,7 @@ object Queries {
       .withColumn("ts", expr("TIMESTAMP '2024-01-01 00:00:00' + " +
         "make_interval(0, 0, 0, 0, CAST(vec_id % 48 AS INT), 0, 0)"))
     Interpreter.applyTransform(e,
-        graft.config.TransformOp(op = "snapshot_drift",
+        graft.config.TransformOp.SnapshotDrift(
           summaryPath = Some(art), embeddingColumns = Seq("embedding"),
           timeColumn = Some("ts"), every = Some("1 day")),
         None, "x29-windowed-drift")

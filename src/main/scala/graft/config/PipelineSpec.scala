@@ -1,7 +1,13 @@
 package graft.config
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonParser
+import com.fasterxml.jackson.databind.{DeserializationContext, DeserializationFeature,
+  JsonDeserializer, JsonMappingException, ObjectMapper}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.deser.DeserializationProblemHandler
+import com.fasterxml.jackson.databind.exc.InvalidTypeIdException
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** Declarative pipeline model — the Spark-native equivalent of the reference's
@@ -260,144 +266,6 @@ case class OutputTopic(
   }
 }
 
-/** Spec-level transform stage — the corpus X-operators through the config
-  * path. The reference's essence is config-driven pipelines
-  * (AggregationDefinition.java:7-130 is the whole API), but the
-  * training-data operators (dedup, quality filtering, PII redaction) were
-  * code-only; this stage makes the most-composed ones declarable. Ops apply
-  * in declaration order between the mode build and the pre-sink `filter`.
-  *
-  *  - `dedup_exact` (X1): one representative row per `dupColumns` group —
-  *    deterministic min-`tieBreak` winner. One map-side-combined shuffle.
-  *  - `quality_filter` (X5): keep rows whose `column` passes the cheap
-  *    pretraining text-quality thresholds — token-count floor and/or a band
-  *    on the ROUNDED (6 dp) mean token length; rounding first keeps the
-  *    boundary decision order-independent and oracle-mirrorable. At least
-  *    one threshold is required: an unconstrained quality filter is a
-  *    misconfiguration, not a pass-through. Zero shuffles.
-  *  - `redact_pii` (X22): scrub emails/phones/IPs/SSNs from `column` (or a
-  *    computed SQL `expression`) into `outputField` (defaults to `column`,
-  *    in place). Zero shuffles, codegen'd regexp chain.
-  *  - `dedup_near` (X2): BATCH — collapse near-duplicate clusters to one
-  *    representative row: exact-Jaccard pairs over `shingleSize`-word
-  *    shingles of `column` at `threshold` (prefix-filtered posting join),
-  *    connected components, min-`idColumn` representative survives.
-  *    STREAMING — the same spec wires the keyed-state LSH index
-  *    (graft.streaming.StreamingDedup): each arriving doc is checked
-  *    against the whole streamed history and the op REPLACES the row set
-  *    with the directed match stream (idColumn, dup_of, est_jaccard),
-  *    keyed by the arriving doc; survivors are the rows with no match
-  *    (first-arrival representative — equals the batch min-id collapse
-  *    when arrival follows id order). Similarity is minhash-ESTIMATED
-  *    Jaccard over `numHashes` hashes in `bands` bands (defaults 128/32);
-  *    `maxBucketDocs` caps per-bucket state (skew guard), `stateTtl`
-  *    expires idle buckets (else state grows with the distinct-shingle
-  *    history — same commitment as streaming dedup_exact).
-  *  - `chunk` (X5): split `column` into `size`-token windows every `stride`
-  *    tokens (REPLACES the row set: output is `idColumn`, chunk_id, chunk,
-  *    n_chunk_tokens, with the incoming record key carried through — each
-  *    chunk derives from one input row, Kafka Streams flatMap semantics).
-  *    Map-side only.
-  *  - `lang_id` (X5): append the n-gram-marker language prediction of
-  *    `column` as `outputField` (default `lang_pred`). Zero shuffles.
-  *  - `text_stats` (X5): append the pretraining quality metrics of
-  *    `column` — n_chars, n_tokens, avg_token_len, punct_ratio,
-  *    stopword_ratio (ratios rounded 6 dp, order-independent), and
-  *    n_lex_tokens. Same-named existing columns are OVERWRITTEN (the op's
-  *    contract is "computed from the text", not "trust the metadata").
-  *    Zero shuffles.
-  *  - `contamination_screen` (X19): score every row's `column` by the
-  *    fraction of its distinct `shingleSize`-word shingles that occur in
-  *    the benchmark at `benchPath` (a parquet path, optionally narrowed by
-  *    the SQL predicate `benchFilter`) — the eval-leakage screen a corpus
-  *    runs before training. The zero-shuffle PROJECTION form: the
-  *    benchmark's distinct shingle hashes are collected once at build time
-  *    (bounded — eval sets are small by definition) and ride into every
-  *    task as one sorted array, so the op is streaming-legal in any output
-  *    mode and adds no exchange in batch. REPLACES the row set with
-  *    (`idColumn`, n_shingles, matched, contamination; the incoming record
-  *    key carried through); thresholding is the spec's `filter`, not baked
-  *    in.
-  *
-  *  - `stratified_sample` (X9): keep every `interval`-th row per
-  *    `stratumColumns` group in stable `idColumn` order — deterministic
-  *    seedless class-balancing. One row_number window exchange; batch-only
-  *    (window over a stream is not streaming-legal — for the streaming /
-  *    billions-per-stratum shape use the hash-threshold form instead,
-  *    see TextAnalysis.stratifiedSample).
-  *  - `weighted_mix` (X9): keep fraction `weights[stratum]` (unlisted
-  *    strata: `defaultWeight`, default 0.0) of each `column` stratum in
-  *    stable `idColumn` order — deterministic training-mixture
-  *    reweighting, exactly ⌊n·w⌋±1 evenly-spread rows per stratum, no RNG.
-  *    Same window exchange + batch-only note as stratified_sample.
-  *
-  *  - `top_k` (X12): the `k` best rows per `groupColumns` group
-  *    (`groupColumns` empty = one global group) by `byColumn` descending,
-  *    ties broken by ascending `idColumn` — output is groupColumns…, rank
-  *    (1-based), idColumn, byColumn. Rides the partial-aggregating heap
-  *    (TopKAggregator): at most k rows per map partition per group cross
-  *    the exchange, never the corpus-sized sort a row_number window pays.
-  *    `byColumn` is compared as double and `idColumn` carried as long
-  *    (exact up to 2^53 — the aggregator's pair encoding). Batch-only.
-  *  - `heavy_hitters` (X21): every item of `column` occurring in at least
-  *    `minFraction` of rows, with its EXACT count — Misra–Gries sketch pass
-  *    + broadcast recount, identical to groupBy+filter without its
-  *    per-distinct-item exchange. `tokenize: true` treats `column` as text
-  *    and counts whitespace tokens instead of whole values. Output (item,
-  *    cnt), keyed by item (a compacted count-table). Batch-only (two
-  *    passes).
-  *
-  *  - `knn` (X3): similarity search — the frame is the CORPUS (stays
-  *    distributed, scored map-side, reduced by the TopK heap), the query
-  *    set is the parquet artifact at `queryPath` (narrowed by the SQL
-  *    predicate `queryFilter`), read once at build and broadcast. `method`
-  *    picks the family member: `exact` (default) and `quantized` (int8
-  *    sketch + exact re-rank of k·`refine` candidates) are oracle-exact;
-  *    `ivf` (`nCells`/`nProbe`/`nAssign`) and `lsh` (`nTables`/
-  *    `planesPerTable`; `dim` required) are approximate, recall-tested.
-  *    Output (query_id, rank, neighbor_id, cos), keyed by query.
-  *    Batch-only (a top-k over an unbounded corpus never finalizes).
-  *  - `resample` (X20): per-`idColumn` regular time grid every `every`
-  *    (whole-second duration) over `timeColumn`, `valueColumns`
-  *    forward-filled by the as-of merge; simultaneous observations
-  *    collapse by max FIRST, keeping the op deterministic. Batch-only.
-  *  - `profile` (X16): one-pass per-column audit of `columns` → (col_name,
-  *    n_non_null, n_distinct), keyed by col_name; `approx: true` swaps
-  *    exact distinct for HLL (no Expand). Batch-only (global exact
-  *    distinct counts).
-  *  - `quantile_rollup` (X26): per-`groupColumns` percentile estimates of
-  *    `column` at `quantiles` via the mergeable centroid sketch — output
-  *    one pNN column per requested fraction plus n_rows; ±1%-of-rank
-  *    accuracy pinned in tests. Batch-only.
-  *  - `distinct_rollup` (X25): per-`groupColumns` HLL distinct count of
-  *    `column` → (groups…, n_distinct, n_rows); deterministic (sketch
-  *    merges are order-independent), ±5% of exact. Batch-only.
-  *  - `pack` (X17): first-fit token packing of rows into fixed-`budget`
-  *    bins by the per-row count in `column`, visited in `orderColumns`
-  *    order per partition — appends pack_id/pack_slot, row-preserving (the
-  *    record key rides through). Partition-local by design; batch-only.
-  *
-  * Streaming note: most ops here are map-only on a stream; the batch-only
-  * ones (stratified_sample, weighted_mix, top_k, heavy_hitters, knn,
-  * resample, profile, quantile_rollup, distinct_rollup, pack) reject a
-  * streaming frame with a pointer to their streaming-shaped alternative.
-  * The two STATEFUL streaming ops hold history: `dedup_exact` becomes an
-  * UNWATERMARKED stateful aggregation in Update mode — state holds one
-  * entry per distinct `dupColumns` group FOREVER (a late duplicate must
-  * still dedup against the whole history), and `dedup_near` holds the LSH
-  * signature index. On a long-running high-cardinality stream that is an
-  * unbounded-state commitment: declare `stateTtl` to bound it (dedup_exact
-  * switches to a TTL'd flatMapGroupsWithState; dedup_near expires idle
-  * buckets), or acknowledge the unbounded form with `unboundedOk: true` —
-  * a streaming dedup_exact OR dedup_near declaring NEITHER is rejected at
-  * build (graft.streaming.StreamRunner.outputModeFor documents the
-  * posture). `stateTtl` is parsed at validate time (a bad duration is a
-  * config error here, not a first-micro-batch task failure).
-  *
-  * With these, the whole x14 training pipeline (filter → near-dedup →
-  * chunk) is expressible as pure JSON — see the r22_spec_training query —
-  * and the x19 screen via r23_spec_contamination.
-  */
 /** One fixed-bin histogram declaration for `snapshot_drift`'s binned
   * distribution-drift leg: `bins` equal-width bins over [`lo`, `hi`),
   * plus automatic under/over bins for out-of-range mass. Emits one
@@ -410,987 +278,6 @@ case class HistogramSpec(
     lo: Double,
     hi: Double,
     bins: Int)
-
-case class TransformOp(
-    op: String,
-    dupColumns: Seq[String] = Nil,
-    tieBreak: Option[String] = None,
-    column: Option[String] = None,
-    expression: Option[String] = None,
-    // contentAs: Jackson erases Option's type parameter and would box a JSON
-    // integer as java.lang.Integer inside Option[Long]/Option[Double],
-    // blowing up at first unbox (same reason retentionMs never crashed:
-    // it is only ever compared, never unboxed)
-    @JsonDeserialize(contentAs = classOf[java.lang.Long])
-    minTokens: Option[Long] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Double])
-    minAvgTokenLen: Option[Double] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Double])
-    maxAvgTokenLen: Option[Double] = None,
-    outputField: Option[String] = None,
-    idColumn: Option[String] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    shingleSize: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Double])
-    threshold: Option[Double] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    size: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    stride: Option[Int] = None,
-    benchPath: Option[String] = None,
-    benchFilter: Option[String] = None,
-    stratumColumns: Seq[String] = Nil,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    interval: Option[Int] = None,
-    // values arrive boxed by Jackson (Integer for whole-number JSON like
-    // "1") — read them through numericWeights/numericDefaultWeight, never
-    // by unboxing the Scala Double directly
-    weights: Option[Map[String, Double]] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Double])
-    defaultWeight: Option[Double] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    k: Option[Int] = None,
-    byColumn: Option[String] = None,
-    groupColumns: Seq[String] = Nil,
-    @JsonDeserialize(contentAs = classOf[java.lang.Double])
-    minFraction: Option[Double] = None,
-    tokenize: Boolean = false,
-    // streaming knobs (dedup_near's keyed-state LSH index; stateTtl also
-    // bounds streaming dedup_exact state) — see the Streaming note below
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    numHashes: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    bands: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    maxBucketDocs: Option[Int] = None,
-    stateTtl: Option[String] = None,
-    unboundedOk: Boolean = false,
-    // knn (declarative similarity search): the frame is the CORPUS, the
-    // query set is a batch parquet artifact (same second-frame pattern as
-    // contamination_screen's benchPath); `method` picks the x3 family
-    // member — exact / quantized re-rank (both oracle-exact) or ivf / lsh
-    // (approximate, recall-tested)
-    method: Option[String] = None,
-    queryPath: Option[String] = None,
-    queryFilter: Option[String] = None,
-    // ATTRIBUTE-FILTERED search: candidateFilter is a SQL predicate over
-    // CORPUS metadata ("top-k among docs where lang='en'") applied INSIDE
-    // the candidate stage — never a post-filter of the k results, so the
-    // k contract survives. On the direct route it filters the corpus
-    // frame; on the stored route it runs over the index's stored
-    // attributeColumns (parquet-pushdown), with guarantee-k routing: a
-    // near-empty filtered corpus falls back to an exact scan of the
-    // filtered postings, and ivf widens nProbe by 1/selectivity
-    candidateFilter: Option[String] = None,
-    // knn_index build-time declaration: metadata columns stored alongside
-    // every posting — the candidateFilter predicate surface of the stored
-    // route (the artifact pins them; a filter referencing an unstored
-    // column is refused with a rebuild hint)
-    attributeColumns: Seq[String] = Nil,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    refine: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    nCells: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    nProbe: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    nAssign: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    nTables: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    planesPerTable: Option[Int] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
-    dim: Option[Int] = None,
-    // resample (regular-grid gap fill): timeColumn + every (a duration
-    // string) + valueColumns; profile: columns (+ approx); quantile_rollup:
-    // groupColumns + column + quantiles.
-    // For the sketch/top-k family (top_k, heavy_hitters, distinct_rollup,
-    // quantile_rollup), declaring timeColumn + every switches the op to its
-    // WINDOWED form: cells are (tumbling window, groupColumns...) instead of
-    // global — the shape that runs on a stream with bounded state. watermark
-    // (required when the frame is streaming) bounds lateness and lets Spark
-    // evict window state; on batch the same declaration produces the
-    // identical windowed table, so stream-built == batch-built is testable.
-    timeColumn: Option[String] = None,
-    every: Option[String] = None,
-    watermark: Option[String] = None,
-    // sliding variant of the windowed form: each event lands in
-    // every/slide overlapping windows (slide must divide every — Spark
-    // anchors window starts at epoch mod slide, and divisibility is what
-    // keeps "which windows contain T" closed-form for oracles and users)
-    slide: Option[String] = None,
-    // windowType "session" turns `every` into the INACTIVITY GAP: cells
-    // are gap-merged sessions within each dims group (mirrors
-    // EventTimeSpec.windowType for AGGREGATION mode). Sessions stream in
-    // Append mode only — merging sessions cannot be expressed as per-key
-    // upserts — so each cell emits once, finalized past the watermark.
-    windowType: Option[String] = None,
-    // heavy_hitters windowed form: absolute count threshold (a per-window
-    // FRACTION needs the window total, which is a second stateful
-    // aggregation on a stream — Spark rejects chained stateful aggs)
-    @JsonDeserialize(contentAs = classOf[java.lang.Long])
-    minCount: Option[Long] = None,
-    // resample dense-grid guard: upper bound on the DENSEST key's grid
-    // rows (ceil(span / every)); output volume is SUM over keys of
-    // span/every, so a mis-declared `every` against a long-span key
-    // multiplies output silently — with the bound declared, the operator
-    // fails loudly before exploding the grid
-    @JsonDeserialize(contentAs = classOf[java.lang.Long])
-    maxGridRowsPerKey: Option[Long] = None,
-    valueColumns: Seq[String] = Nil,
-    columns: Seq[String] = Nil,
-    approx: Boolean = false,
-    // distinct_rollup global form: keepSketch keeps the mergeable HLL
-    // sketch column in the output — the STORED X25 artifact a crawl
-    // pipeline writes so later rollups (Profile.rollupDistinct) and
-    // snapshot_drift's sketchPath leg answer without rescanning this
-    // snapshot. The windowed form always keeps it (the maintained table
-    // IS the artifact)
-    keepSketch: Boolean = false,
-    // values arrive boxed by JSON token type (a literal 1 is an Integer
-    // inside the erased Seq) — read through numericQuantiles, never by
-    // unboxing directly
-    quantiles: Seq[Double] = Nil,
-    // pack (sequence packing): token budget per pack + the deterministic
-    // within-partition visit order
-    @JsonDeserialize(contentAs = classOf[java.lang.Long])
-    budget: Option[Long] = None,
-    orderColumns: Seq[String] = Nil,
-    // snapshot_drift (X29): the frame is the NEW snapshot; comparePath
-    // points at the OLD snapshot's parquet (the `<dataDir>` placeholder
-    // resolves like every other path field), compareFilter narrows it
-    comparePath: Option[String] = None,
-    compareFilter: Option[String] = None,
-    numericColumns: Seq[String] = Nil,
-    categoricalColumns: Seq[String] = Nil,
-    // snapshot_drift heavy-hitter leg (unbounded categorical key spaces —
-    // user ids, URLs, tokens — where exact freq_l1 would shuffle one row
-    // per distinct key): per-column Misra–Gries candidates + exact
-    // broadcast recount, threshold = the op's shared `minFraction`
-    heavyHitterColumns: Seq[String] = Nil,
-    // snapshot_drift GATE: per-metric |delta| bounds that fail the run
-    // (raise-on-evaluate) when violated — keys are "metric" or
-    // "col_name.metric" (most specific wins); maxRelDelta is relative to
-    // |old_value|. The declarative form of "retrain only if drift is
-    // within bounds".
-    maxAbsDelta: Option[Map[String, Double]] = None,
-    maxRelDelta: Option[Map[String, Double]] = None,
-    // snapshot_drift histogram leg: fixed-bin distribution drift + PSI per
-    // declared numeric column ([[graft.operators.Drift.histogramDrift]]) —
-    // catches the moment-preserving shape changes the mean/stddev rows
-    // miss; the exchange is ≤ bins+2 rows per side at any corpus size
-    histograms: Seq[HistogramSpec] = Nil,
-    // snapshot_drift embedding leg: vector-distribution drift per declared
-    // embedding column ([[graft.operators.Drift.embeddingDrift]] — count /
-    // mean-norm / centroid shift+distance); the drift a re-embedded corpus
-    // or vanished cluster shows when every scalar column stays put. One
-    // scan per side, exchange ≤ dim rows per partition
-    embeddingColumns: Seq[String] = Nil,
-    // optional stratum for the embedding leg: per-group drift rows keyed
-    // by `category` ([[graft.operators.Drift.embeddingDriftByGroup]]) —
-    // answers WHICH slice (language, source, cluster) moved; exchange
-    // grows to ≤ groups × dim rows, so point it at bounded-cardinality
-    // strata (the categorical-leg guidance)
-    embeddingGroupBy: Option[String] = None,
-    // snapshot_drift stored-artifact routing — the NO-RESCAN forms (the
-    // 100 TB discipline: drift between any two historical crawls must not
-    // rescan them). summaryPath points the embedding leg's OLD side at a
-    // stored embedding_summary parquet (≤ dim rows; grouped iff
-    // embeddingGroupBy is declared) instead of comparePath; sketchPath
-    // points a distinct-count leg at the OLD snapshot's stored mergeable
-    // HLL sketch table (the X25 artifact), declared with groupColumns
-    // (the sketch dims) + column (the counted item) — emits one
-    // n_distinct row per dimension cell without touching old raw data
-    summaryPath: Option[String] = None,
-    // BOTH-SIDES-STORED form: newSummaryPath supplies the NEW side's
-    // stored summary too — drift between any two HISTORICAL crawls whose
-    // raw snapshots are gone (or too big to touch) becomes a pure
-    // artifact-vs-artifact dim-row join; the source frame is not scanned
-    // by the embedding leg at all
-    newSummaryPath: Option[String] = None,
-    sketchPath: Option[String] = None,
-    // BOTH-SIDES-STORED form of the distinct-count leg: newSketchPath
-    // supplies the NEW side's stored X25 sketch table too — n_distinct
-    // drift between two historical crawls is a pure sketch-merge join;
-    // the frame is not scanned by this leg at all (mirrors newStatsPath)
-    newSketchPath: Option[String] = None,
-    // quantilePath points a PERCENTILE drift leg at the OLD snapshot's
-    // stored mergeable quantile-sketch table (the X26 artifact —
-    // quantile_rollup's keepSketch form), declared with groupColumns (the
-    // sketch dims; may be EMPTY for the GLOBAL form — corpus-wide
-    // percentiles, category NULL) + column (the measure on the new
-    // snapshot) + quantiles
-    // — emits one row per (dimension cell, quantile) without declared
-    // bins or a rescan of old raw data; a cell present on one side only
-    // reports the missing side (and delta) as NULL, which VIOLATES a
-    // declared gate bound rather than fabricating a 0
-    quantilePath: Option[String] = None,
-    // BOTH-SIDES-STORED form of the percentile leg: newQuantilePath
-    // supplies the NEW side's stored X26 quantile-sketch table too —
-    // percentile drift between two historical crawls is a pure
-    // sketch-rollup join; the frame is not scanned by this leg at all
-    newQuantilePath: Option[String] = None,
-    // statsPath points the SCALAR drift legs at a stored scalar_summary
-    // artifact (the numeric legs' baseline — long-shape rows of
-    // n_rows/n_nonnull/sum/sumsq/min/max per (dims, column)), declared
-    // with numericColumns (+ groupColumns, the artifact dims). Two forms:
-    // WINDOWED (+ timeColumn/every) it is the live scalar MONITOR — each
-    // (window, dims) cell's row_count / null_rate / mean / stddev / min /
-    // max evaluate against the baseline as the cell refreshes; BATCH it
-    // reroutes the numeric leg's OLD side to the artifact, so old raw
-    // data is never rescanned (the scalar analogue of summaryPath), with
-    // per-dims-cell rows when groupColumns are declared
-    statsPath: Option[String] = None,
-    // BOTH-SIDES-STORED form of the batch scalar leg: newStatsPath
-    // supplies the NEW side's stored scalar_summary too — numeric drift
-    // between two historical crawls whose raw snapshots are gone becomes
-    // a pure artifact-vs-artifact join; the frame is not scanned by the
-    // scalar leg at all (mirrors newSummaryPath)
-    newStatsPath: Option[String] = None,
-    // stored ANN index (X3's stored-artifact discipline): knn_index WRITES
-    // the artifact at indexPath at crawl time (method picks what is
-    // stored: quantized int8 codes / trained ivf cells / lsh buckets, all
-    // self-contained with the vectors); a later `knn` declaring the same
-    // indexPath searches the STORED index — no re-training, no corpus
-    // re-hash, no corpus scan. Declared geometry on the consuming knn must
-    // match the artifact (schema/geometry-preflighted); nProbe stays a
-    // query-time knob. seed pins the lsh hyperplane generation.
-    indexPath: Option[String] = None,
-    @JsonDeserialize(contentAs = classOf[java.lang.Long])
-    seed: Option[Long] = None,
-    // incremental near-dup screening (X2's stored-artifact discipline):
-    // historyPath points dedup_near (method=jaccard, batch) at the
-    // CORPUS's stored shingle_index artifact — the frame is the NEW
-    // ingest batch, screened for novelty against the history without
-    // re-tokenizing it; the artifact's shingle_size column must match the
-    // declared shingleSize (preflighted — mismatched shingle widths never
-    // collide, which would silently read as "everything is novel")
-    historyPath: Option[String] = None,
-    // parse_json (R16's strict-mode surface): jsonSchema is the parsed
-    // struct's DDL ("k INT, name STRING"), outputField the struct column
-    // appended; parseMode picks the malformed-input posture — PERMISSIVE
-    // (default; malformed → null fields, the reference's lenient-Jackson
-    // analogue), FAILFAST (throw on first malformed record — the
-    // reference's JsonStringToObjectMapper throw posture), or DLQ
-    // (malformed rows are DROPPED from the output and their raw payloads
-    // written to dlqPath — the reference's named-but-unimplemented
-    // dead-letter alternative; batch-only)
-    jsonSchema: Option[String] = None,
-    parseMode: Option[String] = None,
-    dlqPath: Option[String] = None,
-    // knn_index per-category family: build one routed sub-index per
-    // distinct value of this attribute column (must be listed in
-    // attributeColumns; bounded cardinality) — a consuming knn whose
-    // candidateFilter is the equality `<attr> = <value>` routes to the
-    // sub-index: full recall, no probe widening
-    partitionByAttribute: Option[String] = None,
-    // compaction grace window (knn_index_compact / shingle_index_compact):
-    // the folded layout outlives the commit — knn generation directories
-    // stay in place (invisible behind the base_gen fence, but an in-flight
-    // reader that listed them finishes instead of failing on a missing
-    // file); the shingle artifact's previous snapshot is retained as the
-    // `<path>.old` aside. The NEXT maintenance verb's sweep reclaims both
-    retainFolded: Boolean = false,
-    // windowed snapshot_drift monitors: how the STORED baseline is bound.
-    // Absent (default) = read once at query start (the pinned contract:
-    // an in-place overwrite mid-stream fails the next micro-batch;
-    // restart reprocesses against the refreshed values). "perBatch" =
-    // the foreachBatch re-read form — the baseline artifact is re-read
-    // at every micro-batch, so a weekly merge_* fold lands WITHOUT a
-    // monitor restart; start via StreamRunner.startRefreshingMonitor
-    baselineRefresh: Option[String] = None) {
-
-  /** Weight maps cross Jackson with their values boxed by JSON token type
-    * (a literal `1` arrives as java.lang.Integer inside the erased Map) —
-    * normalize through Number so a whole-number weight doesn't blow up at
-    * first unbox.
-    */
-  def numericWeights: Map[String, Double] =
-    // widen to Any BEFORE destructuring: a `case (k, v)` with v typed
-    // Double specializes to an eager unbox that throws on the
-    // Integer-boxed values — the very trap this accessor exists to absorb
-    weights.getOrElse(Map.empty).asInstanceOf[Map[String, Any]]
-      .map { case (k, v) => k -> v.asInstanceOf[Number].doubleValue }
-
-  /** Same boxed-by-token-type trap as [[numericWeights]]: a whole-number
-    * quantile literal (`1`) crosses Jackson as Integer inside the erased
-    * Seq — widen through Number.
-    */
-  def numericQuantiles: Seq[Double] =
-    quantiles.asInstanceOf[Seq[Any]].map(_.asInstanceOf[Number].doubleValue)
-
-  // defaultWeight is coerced to java.lang.Double by its @JsonDeserialize
-  // contentAs (same pattern as minAvgTokenLen), so plain access is safe
-  def numericDefaultWeight: Double = defaultWeight.getOrElse(0.0)
-
-  /** Same boxed-by-token-type trap as [[numericWeights]] for the drift
-    * gate bound maps: whole-number bounds cross Jackson Integer-boxed.
-    */
-  private def numericBounds(m: Option[Map[String, Double]]): Map[String, Double] =
-    m.getOrElse(Map.empty).asInstanceOf[Map[String, Any]]
-      .map { case (k, v) => k -> v.asInstanceOf[Number].doubleValue }
-  def numericMaxAbsDelta: Map[String, Double] = numericBounds(maxAbsDelta)
-  def numericMaxRelDelta: Map[String, Double] = numericBounds(maxRelDelta)
-  def validate(where: String): Unit = {
-    // stateTtl reaches GroupState.setTimeoutDuration verbatim inside an
-    // executor task — parse it HERE so a bad duration is an [id]-prefixed
-    // config error at validate time, not a cryptic streaming task failure
-    // on the first micro-batch. Same arithmetic as GroupStateImpl's
-    // parseDuration (31-day months, must come out strictly positive).
-    stateTtl.foreach { s =>
-      val micros =
-        try {
-          val cal = org.apache.spark.sql.catalyst.util.IntervalUtils
-            .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-          cal.months * (31L * 24 * 3600 * 1000000L) +
-            cal.days * (24L * 3600 * 1000000L) + cal.microseconds
-        } catch { case scala.util.control.NonFatal(_) => -1L }
-      require(micros > 0,
-        s"[$where] $op stateTtl '$s' is not a positive duration " +
-          "(examples: '10 minutes', '2 hours', '1 day')")
-    }
-    validateOp(where)
-  }
-
-  /** Microseconds of `s` when it parses as a positive, month-free duration
-    * (months are irregular — a tumbling window or watermark must be a
-    * fixed span); None otherwise (including the legal ZERO watermark). The
-    * ONE parse the positivity and slide-divisibility checks — and the
-    * Interpreter's windowed-state pricing — all read from.
-    */
-  private[graft] def durationMicros(s: String): Option[Long] =
-    try {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      val us = iv.days * 86_400_000_000L + iv.microseconds
-      if (iv.months == 0 && us > 0) Some(us) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def positiveDuration(s: String): Boolean = durationMicros(s).isDefined
-
-  /** '0 seconds' and friends: parseable, month-free, exactly zero. */
-  private def zeroDuration(s: String): Boolean =
-    try {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      iv.months == 0 && iv.days * 86_400_000_000L + iv.microseconds == 0
-    } catch { case scala.util.control.NonFatal(_) => false }
-
-  /** The windowed-form declaration shared by the sketch/top-k family:
-    * timeColumn + every come together (the tumbling window), watermark only
-    * rides on a declared window. Returns whether the op IS windowed.
-    */
-  private def validateWindowDecl(where: String): Boolean = {
-    require(timeColumn.isDefined == every.isDefined,
-      s"[$where] $op windowed form needs BOTH timeColumn and every " +
-        "(the tumbling window column and width)")
-    every.foreach(e => require(positiveDuration(e),
-      s"[$where] $op every '$e' is not a positive month-free duration"))
-    watermark.foreach { w =>
-      require(timeColumn.isDefined,
-        s"[$where] $op watermark requires the windowed form (timeColumn + every)")
-      // ZERO is legal — same posture as EventTimeSpec: a process-time-exact
-      // stream declares '0 seconds' to mean "no lateness tolerated", and
-      // rejecting it here while the AGGREGATION window accepts it was an
-      // inconsistency the spec fuzzer caught (round 12)
-      require(positiveDuration(w) || zeroDuration(w),
-        s"[$where] $op watermark '$w' is not a non-negative month-free duration")
-    }
-    windowType.foreach { wt =>
-      require(timeColumn.isDefined,
-        s"[$where] $op windowType requires the windowed form (timeColumn + every)")
-      require(Set("tumbling", "session")(wt),
-        s"[$where] $op windowType '$wt' unknown (tumbling, session; " +
-          "sliding is declared via slide)")
-      require(wt != "session" || slide.isEmpty,
-        s"[$where] $op session windows take no slide (the gap merges " +
-          "variable-width cells; there is nothing to hop)")
-    }
-    slide.foreach { sl =>
-      require(timeColumn.isDefined,
-        s"[$where] $op slide requires the windowed form (timeColumn + every)")
-      require(positiveDuration(sl),
-        s"[$where] $op slide '$sl' is not a positive month-free duration")
-      for (w <- durationMicros(every.get); st <- durationMicros(sl))
-        require(st <= w && w % st == 0,
-          s"[$where] $op slide '$sl' must divide every '${every.get}' " +
-            "(epoch-anchored overlapping windows; divisibility keeps the " +
-            "windows-containing-T set closed-form)")
-    }
-    timeColumn.isDefined
-  }
-
-  private def validateOp(where: String): Unit = op match {
-    case "filter" =>
-      require(expression.isDefined,
-        s"[$where] filter requires expression (a SQL predicate over the " +
-          "stage's columns). The transform-stage form filters BEFORE the " +
-          "following stages (an ingest-batch cut ahead of a maintenance " +
-          "verb, a serving view ahead of a knn); the spec-level `filter` " +
-          "field applies AFTER every transform")
-    case "parse_json" =>
-      require(column.isDefined && jsonSchema.isDefined && outputField.isDefined,
-        s"[$where] parse_json requires column (the JSON string), " +
-          "jsonSchema (the parsed struct's DDL, e.g. \"k INT, name STRING\") " +
-          "and outputField (the struct column appended)")
-      jsonSchema.foreach { ddl =>
-        val ok = scala.util.Try(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl)).isSuccess
-        require(ok, s"[$where] parse_json jsonSchema '$ddl' is not valid " +
-          "struct DDL (example: \"k INT, name STRING\")")
-      }
-      require(parseMode.forall(Set("PERMISSIVE", "FAILFAST", "DLQ")),
-        s"[$where] parse_json parseMode '${parseMode.getOrElse("")}' unknown " +
-          "(PERMISSIVE — malformed input parses to null fields, the " +
-          "reference's lenient default; FAILFAST — throw on the first " +
-          "malformed record; DLQ — drop malformed rows from the output and " +
-          "write their raw payloads to dlqPath)")
-      require(parseMode.contains("DLQ") == dlqPath.isDefined,
-        s"[$where] parse_json dlqPath and parseMode=DLQ go together: DLQ " +
-          "needs the dead-letter directory, and a declared dlqPath under " +
-          "any other mode would silently never be written")
-    case "dedup_exact" =>
-      require(dupColumns.nonEmpty && tieBreak.isDefined,
-        s"[$where] dedup_exact requires dupColumns and tieBreak")
-    case "quality_filter" =>
-      require(column.isDefined, s"[$where] quality_filter requires column")
-      require(minTokens.isDefined || minAvgTokenLen.isDefined || maxAvgTokenLen.isDefined,
-        s"[$where] quality_filter requires at least one threshold " +
-          "(minTokens / minAvgTokenLen / maxAvgTokenLen)")
-    case "redact_pii" =>
-      require(column.isDefined || (expression.isDefined && outputField.isDefined),
-        s"[$where] redact_pii requires column, or expression with outputField")
-    case "dedup_near" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] dedup_near requires column and idColumn")
-      require(threshold.exists(t => t > 0.0 && t <= 1.0),
-        s"[$where] dedup_near requires threshold in (0, 1]")
-      val dm = method.getOrElse("jaccard")
-      require(Set("jaccard", "embedding")(dm),
-        s"[$where] dedup_near method '$dm' unknown " +
-          "(supported: jaccard, embedding)")
-      require(historyPath.isEmpty || dm == "jaccard",
-        s"[$where] dedup_near historyPath (the stored shingle_index " +
-          "artifact) is the exact-Jaccard incremental screen — " +
-          "method=embedding has its own stored artifact (the knn_index " +
-          "machinery); drop historyPath or declare method=jaccard")
-      if (dm == "embedding") {
-        // column is the vector column; dim drives the hyperplane matrix
-        require(dim.exists(_ >= 1),
-          s"[$where] dedup_near method=embedding requires dim >= 1 " +
-            "(the embedding width)")
-      } else {
-        require(shingleSize.exists(_ >= 1),
-          s"[$where] dedup_near requires shingleSize >= 1")
-        // streaming-form knobs: the banding arithmetic needs bands | numHashes
-        val nh = numHashes.getOrElse(128)
-        val nb = bands.getOrElse(32)
-        require(nh >= 1 && nb >= 1 && nh % nb == 0,
-          s"[$where] dedup_near numHashes ($nh) must be a positive multiple " +
-            s"of bands ($nb)")
-        require(maxBucketDocs.forall(_ >= 1),
-          s"[$where] dedup_near maxBucketDocs must be >= 1")
-      }
-    case "shingle_index" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] shingle_index requires column (the text) and idColumn")
-      require(shingleSize.exists(_ >= 1),
-        s"[$where] shingle_index requires shingleSize >= 1 (the artifact " +
-          "pins it — the consuming dedup_near screen must declare the " +
-          "same width)")
-    case "shingle_index_append" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] shingle_index_append requires column (the text) and " +
-          "idColumn")
-      require(shingleSize.exists(_ >= 1),
-        s"[$where] shingle_index_append requires shingleSize >= 1 (must " +
-          "match the stored artifact's pinned width — preflighted at build)")
-      require(historyPath.isDefined,
-        s"[$where] shingle_index_append requires historyPath (the stored " +
-          "shingle_index artifact to extend; to START an artifact use " +
-          "shingle_index and sink its rows)")
-    case "shingle_index_retract" =>
-      require(idColumn.isDefined && historyPath.isDefined,
-        s"[$where] shingle_index_retract requires idColumn (the frame is " +
-          "the takedown id list — no text needed) and historyPath (the " +
-          "stored artifact to tombstone)")
-      require(column.isEmpty && shingleSize.isEmpty,
-        s"[$where] shingle_index_retract takes only idColumn + " +
-          "historyPath — it tombstones the frame's ids (screens anti-join " +
-          "them; shingle_index_compact physically drops the rows and " +
-          "clears the set)")
-    case "shingle_index_compact" =>
-      require(historyPath.isDefined,
-        s"[$where] shingle_index_compact requires historyPath (the stored " +
-          "artifact whose accumulated append files to fold)")
-      require(column.isEmpty && idColumn.isEmpty && shingleSize.isEmpty,
-        s"[$where] shingle_index_compact takes only historyPath — it " +
-          "rewrites the artifact's file layout (rows, widths and screen " +
-          "verdicts are bit-identical); the source frame is ignored, so " +
-          "declare it over any topic")
-    case "chunk" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] chunk requires column and idColumn")
-      require(size.exists(_ >= 1) && stride.exists(_ >= 1) &&
-          stride.get <= size.get,
-        s"[$where] chunk requires size >= stride >= 1 " +
-          "(stride > size would drop tokens)")
-    case "contamination_screen" =>
-      require(column.isDefined && idColumn.isDefined && benchPath.isDefined,
-        s"[$where] contamination_screen requires column, idColumn and benchPath")
-      require(shingleSize.exists(_ >= 1),
-        s"[$where] contamination_screen requires shingleSize >= 1")
-    case "lang_id" =>
-      require(column.isDefined, s"[$where] lang_id requires column")
-    case "text_stats" =>
-      require(column.isDefined, s"[$where] text_stats requires column")
-    case "stratified_sample" =>
-      require(stratumColumns.nonEmpty && idColumn.isDefined,
-        s"[$where] stratified_sample requires stratumColumns and idColumn")
-      require(interval.exists(_ >= 1),
-        s"[$where] stratified_sample requires interval >= 1")
-    case "top_k" =>
-      require(byColumn.isDefined && idColumn.isDefined,
-        s"[$where] top_k requires byColumn and idColumn")
-      require(k.exists(_ >= 1), s"[$where] top_k requires k >= 1")
-      validateWindowDecl(where)
-    case "heavy_hitters" =>
-      require(column.isDefined, s"[$where] heavy_hitters requires column")
-      if (validateWindowDecl(where)) {
-        // windowed = exact per-window counts under an ABSOLUTE threshold; a
-        // per-window fraction needs the window total — a second stateful
-        // aggregation a stream cannot chain
-        require(minCount.exists(_ >= 1) && minFraction.isEmpty,
-          s"[$where] windowed heavy_hitters requires minCount >= 1 " +
-            "(and no minFraction — a per-window fraction needs the window " +
-            "total, a second stateful aggregation)")
-      } else {
-        require(minFraction.exists(f => f > 0 && f <= 1) && minCount.isEmpty,
-          s"[$where] global heavy_hitters requires minFraction in (0, 1] " +
-            "(minCount belongs to the windowed form: declare timeColumn + every)")
-      }
-    case "resample" =>
-      require(idColumn.isDefined && timeColumn.isDefined && valueColumns.nonEmpty,
-        s"[$where] resample requires idColumn (the series key), timeColumn " +
-          "and valueColumns")
-      // same arithmetic AsOfJoin.resample enforces, surfaced as a config
-      // error with the [id] prefix instead of a mid-query require
-      val ev = every.getOrElse(
-        throw new IllegalArgumentException(s"[$where] resample requires every"))
-      val iv =
-        try org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-          org.apache.spark.unsafe.types.UTF8String.fromString(ev))
-        catch { case scala.util.control.NonFatal(_) => null }
-      require(iv != null && iv.months == 0,
-        s"[$where] resample every '$ev' is unparseable or month-based " +
-          "(months are irregular; use days)")
-      val micros = iv.days * 86_400_000_000L + iv.microseconds
-      require(micros > 0 && micros % 1_000_000L == 0,
-        s"[$where] resample every '$ev' must be a positive whole number " +
-          "of seconds")
-      require(maxGridRowsPerKey.forall(_ >= 1),
-        s"[$where] resample maxGridRowsPerKey must be positive")
-    case "profile" =>
-      require(columns.nonEmpty, s"[$where] profile requires columns")
-      require(columns.distinct == columns,
-        s"[$where] profile columns has duplicates: " +
-          columns.diff(columns.distinct).distinct.mkString(", "))
-    case "pack" =>
-      require(column.isDefined,
-        s"[$where] pack requires column (the per-row token count)")
-      require(budget.exists(_ >= 1), s"[$where] pack requires budget >= 1")
-      require(orderColumns.nonEmpty,
-        s"[$where] pack requires orderColumns (the deterministic " +
-          "within-partition visit order)")
-    case "distinct_rollup" =>
-      require(column.isDefined && groupColumns.nonEmpty,
-        s"[$where] distinct_rollup requires column (the counted item) and " +
-          "groupColumns")
-      validateWindowDecl(where)
-    case "quantile_rollup" =>
-      require(column.isDefined && groupColumns.nonEmpty,
-        s"[$where] quantile_rollup requires column (the measure) and " +
-          "groupColumns")
-      require(quantiles.nonEmpty,
-        s"[$where] quantile_rollup requires quantiles")
-      require(numericQuantiles.forall(q => q >= 0.0 && q <= 1.0),
-        s"[$where] quantile_rollup quantiles must be fractions in [0, 1]")
-      validateWindowDecl(where)
-    case "knn" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] knn requires column (the vector) and idColumn")
-      require(queryPath.isDefined || indexPath.isDefined,
-        s"[$where] knn requires queryPath (the batch query artifact; the " +
-          "frame is the corpus) — or indexPath ALONE for the query-frame " +
-          "route, where the frame IS the query set (batch or streaming) " +
-          "scored against the stored index")
-      require(k.exists(_ >= 1), s"[$where] knn requires k >= 1")
-      val m = method.getOrElse("exact")
-      require(Set("exact", "quantized", "ivf", "lsh")(m),
-        s"[$where] knn method '$m' unknown " +
-          "(supported: exact, quantized, ivf, lsh)")
-      // the windowed declaration belongs to the query-frame stored-index
-      // route (it keys the per-query heaps by window so streaming state
-      // evicts); on the corpus-frame route it would be silently ignored
-      require(timeColumn.isEmpty ||
-          (indexPath.isDefined && queryPath.isEmpty),
-        s"[$where] knn windowed form (timeColumn + every) belongs to the " +
-          "query-frame stored-index route — declare indexPath and drop " +
-          "queryPath (the frame is then the query set)")
-      // quantized's propose-then-re-rank is TWO chained aggregations — the
-      // windowed (and streaming) form cannot run it; refuse here with a
-      // config-grade message instead of deep inside indexedTopK
-      require(timeColumn.isEmpty || !method.contains("quantized"),
-        s"[$where] knn windowed form supports stored ivf/lsh indexes only " +
-          "— quantized's int8-propose + exact-re-rank is two chained " +
-          "aggregations (a batch construct); drop timeColumn or store an " +
-          "ivf/lsh index")
-      validateWindowDecl(where)
-      // with indexPath the stored artifact carries dim (and all geometry) —
-      // a declared dim is then an optional cross-check against the meta
-      if (m == "lsh" && indexPath.isEmpty) require(dim.exists(_ >= 1),
-        s"[$where] knn method=lsh requires dim (the embedding width " +
-          "drives the hyperplane matrix) unless indexPath supplies the " +
-          "stored hyperplanes")
-      require(indexPath.isEmpty || m != "exact",
-        s"[$where] knn method=exact takes no indexPath — there is nothing " +
-          "to store for an exact scan (the scan IS the plan); use " +
-          "method=quantized for a stored 4x-smaller sketch index")
-      require(refine.forall(_ >= 1), s"[$where] knn refine must be >= 1")
-      Seq("nCells" -> nCells, "nProbe" -> nProbe, "nAssign" -> nAssign,
-        "nTables" -> nTables, "planesPerTable" -> planesPerTable).foreach {
-        case (n, v) => require(v.forall(_ >= 1), s"[$where] knn $n must be >= 1")
-      }
-      require(attributeColumns.isEmpty,
-        s"[$where] knn takes no attributeColumns — they are a knn_index " +
-          "BUILD-time declaration (the artifact pins what is stored); " +
-          "declare candidateFilter here to predicate on them")
-    case "knn_index" =>
-      require(column.isDefined && idColumn.isDefined && indexPath.isDefined,
-        s"[$where] knn_index requires column (the vector), idColumn and " +
-          "indexPath (the artifact directory to write)")
-      require(method.isDefined,
-        s"[$where] knn_index requires method (quantized, ivf, lsh — exact " +
-          "has no index to store: the scan is the plan)")
-      require(Set("quantized", "ivf", "lsh")(method.get),
-        s"[$where] knn_index method '${method.get}' unknown (quantized, " +
-          "ivf, lsh; exact has no index to store)")
-      if (method.contains("ivf")) {
-        // geometry is DECLARED, never auto-sized: the artifact pins it, and
-        // an auto-sized build would derive different geometry per snapshot,
-        // breaking stored==rebuilt reproducibility
-        require(nCells.exists(_ >= 1),
-          s"[$where] knn_index method=ivf requires nCells >= 1 (the " +
-            "artifact pins geometry; ceil(sqrt(corpus rows)) is the " +
-            "standard sizing)")
-        require(nAssign.forall(a => a >= 1 && a <= nCells.get),
-          s"[$where] knn_index nAssign must be in [1, nCells]")
-      }
-      if (method.contains("lsh")) {
-        require(dim.exists(_ >= 1),
-          s"[$where] knn_index method=lsh requires dim (the embedding " +
-            "width drives the hyperplane matrix)")
-        require(nTables.forall(_ >= 1),
-          s"[$where] knn_index nTables must be >= 1")
-        require(planesPerTable.forall(p => p >= 1 && p <= 31),
-          s"[$where] knn_index planesPerTable must be in [1, 31] (Int " +
-            "bucket packing)")
-      }
-      require(candidateFilter.isEmpty,
-        s"[$where] knn_index takes no candidateFilter — it is a SEARCH-" +
-          "time knob (declare it on the consuming knn); declare " +
-          "attributeColumns here to store the predicate surface")
-      val reservedAttr = Seq("id", "vec", "q", "gen", "cell", "tbl", "bucket")
-        .filter(attributeColumns.contains)
-      require(reservedAttr.isEmpty,
-        s"[$where] knn_index attributeColumns may not use reserved index " +
-          s"column name(s) ${reservedAttr.mkString(", ")}")
-      require(attributeColumns.distinct == attributeColumns,
-        s"[$where] knn_index attributeColumns has duplicates")
-      require(partitionByAttribute.forall(attributeColumns.contains),
-        s"[$where] knn_index partitionByAttribute " +
-          s"'${partitionByAttribute.getOrElse("")}' must be one of " +
-          "attributeColumns (the routed equality filter predicates on the " +
-          "stored attribute)")
-    case "knn_index_append" =>
-      require(column.isDefined && idColumn.isDefined && indexPath.isDefined,
-        s"[$where] knn_index_append requires column (the vector), idColumn " +
-          "and indexPath (the stored artifact to extend)")
-      require(method.isEmpty && nCells.isEmpty && nAssign.isEmpty &&
-          nTables.isEmpty && planesPerTable.isEmpty && dim.isEmpty &&
-          seed.isEmpty && attributeColumns.isEmpty && candidateFilter.isEmpty,
-        s"[$where] knn_index_append takes no method or geometry — the " +
-          "stored artifact pins them (new rows are assigned with the " +
-          "STORED centroids/hyperplanes/codes, never retrained; to change " +
-          "geometry rebuild with knn_index)")
-    case "knn_index_delete" =>
-      require(idColumn.isDefined && indexPath.isDefined,
-        s"[$where] knn_index_delete requires idColumn (the frame is the " +
-          "takedown id list — no vectors needed) and indexPath (the " +
-          "stored artifact to tombstone)")
-      require(column.isEmpty && method.isEmpty && nCells.isEmpty &&
-          nAssign.isEmpty && nTables.isEmpty && planesPerTable.isEmpty &&
-          dim.isEmpty && seed.isEmpty,
-        s"[$where] knn_index_delete takes only idColumn + indexPath — it " +
-          "commits the frame's ids as one tombstone generation under the " +
-          "stored artifact's fence (searches anti-join it; " +
-          "knn_index_compact physically drops the rows and clears the set)")
-    case "knn_index_compact" =>
-      require(indexPath.isDefined,
-        s"[$where] knn_index_compact requires indexPath (the stored " +
-          "artifact whose accumulated append generations to fold)")
-      require(column.isEmpty && idColumn.isEmpty && method.isEmpty &&
-          nCells.isEmpty && nAssign.isEmpty && nTables.isEmpty &&
-          planesPerTable.isEmpty && dim.isEmpty && seed.isEmpty,
-        s"[$where] knn_index_compact takes only indexPath — it folds the " +
-          "artifact's committed posting generations into one (a pure " +
-          "copy: rows, geometry and search results are bit-identical); " +
-          "the source frame is ignored, so declare it over any topic")
-    case "snapshot_drift" =>
-      require(numericColumns.nonEmpty || categoricalColumns.nonEmpty ||
-          heavyHitterColumns.nonEmpty || histograms.nonEmpty ||
-          embeddingColumns.nonEmpty || sketchPath.isDefined ||
-          quantilePath.isDefined || statsPath.isDefined,
-        s"[$where] snapshot_drift requires numericColumns, " +
-          "categoricalColumns, heavyHitterColumns, histograms, " +
-          "embeddingColumns, sketchPath, quantilePath and/or statsPath")
-      // a duplicated measure would alias the same agg twice and die in an
-      // ambiguous-column AnalysisException deep in the report build —
-      // refuse at config grade like scalar_summary does
-      require(numericColumns.distinct == numericColumns,
-        s"[$where] snapshot_drift numericColumns has duplicates: " +
-          numericColumns.diff(numericColumns.distinct).distinct.mkString(", "))
-      // WINDOWED form (timeColumn + every [+ watermark on a stream]): the
-      // per-window drift MONITOR — evaluates each (window, stratum?) cell
-      // against a STORED baseline artifact (a windowed monitor rescanning
-      // old raw data per window is exactly what the artifact discipline
-      // forbids). Three legs, one per baseline kind: summaryPath (the
-      // embedding leg), statsPath (the scalar leg — count/null_rate/mean/
-      // stddev/min/max per cell), quantilePath (the percentile leg over
-      // the stored X26 sketch table). Exactly ONE baseline per
-      // declaration — each leg's row shape and state layout differ, and a
-      // pipeline monitoring several legs declares several transforms.
-      val windowed = validateWindowDecl(where)
-      require(baselineRefresh.isEmpty || windowed,
-        s"[$where] snapshot_drift baselineRefresh is a WINDOWED-monitor " +
-          "knob (how the live monitor binds its stored baseline); the " +
-          "batch form re-reads artifacts on every run already")
-      require(baselineRefresh.forall(_ == "perBatch"),
-        s"[$where] snapshot_drift baselineRefresh " +
-          s"'${baselineRefresh.getOrElse("")}' unknown — the one supported " +
-          "mode is \"perBatch\" (re-read the stored baseline every " +
-          "micro-batch via StreamRunner.startRefreshingMonitor); omit the " +
-          "field for the default read-once-at-start binding")
-      if (windowed) {
-        val declaredBaselines = Seq(
-          "summaryPath" -> summaryPath.isDefined,
-          "statsPath" -> statsPath.isDefined,
-          "quantilePath" -> quantilePath.isDefined).filter(_._2).map(_._1)
-        require(declaredBaselines.size == 1,
-          s"[$where] windowed snapshot_drift (the per-window drift " +
-            "monitor) requires exactly ONE stored baseline — summaryPath " +
-            "(embedding leg), statsPath (scalar leg) or quantilePath " +
-            "(percentile leg); the monitor compares each window cell " +
-            "against a stored artifact, never against raw old data " +
-            s"(declared: ${if (declaredBaselines.isEmpty) "none"
-              else declaredBaselines.mkString(", ")})")
-        require(categoricalColumns.isEmpty && heavyHitterColumns.isEmpty &&
-            histograms.isEmpty && sketchPath.isEmpty &&
-            newSummaryPath.isEmpty && newStatsPath.isEmpty &&
-            newSketchPath.isEmpty && newQuantilePath.isEmpty &&
-            comparePath.isEmpty,
-          s"[$where] windowed snapshot_drift monitors exactly its " +
-            "baseline's leg — categorical/heavy-hitter/histogram legs, " +
-            "sketchPath, the new*Path both-sides-stored forms and " +
-            "comparePath belong to the batch form (for windowed " +
-            "categorical signals use the windowed sketch ops, which " +
-            "maintain their own tables)")
-        declaredBaselines.head match {
-          case "summaryPath" =>
-            require(embeddingColumns.nonEmpty && numericColumns.isEmpty,
-              s"[$where] windowed snapshot_drift with summaryPath is the " +
-                "EMBEDDING monitor — declare embeddingColumns (and no " +
-                "numericColumns; the scalar monitor is statsPath)")
-          case "statsPath" =>
-            require(numericColumns.nonEmpty,
-              s"[$where] windowed snapshot_drift with statsPath is the " +
-                "SCALAR monitor — declare numericColumns (the measures; " +
-                "groupColumns are the artifact dims, may be empty for a " +
-                "global baseline)")
-            require(embeddingColumns.isEmpty && embeddingGroupBy.isEmpty,
-              s"[$where] windowed snapshot_drift with statsPath takes no " +
-                "embedding leg (that monitor is summaryPath); strata ride " +
-                "groupColumns, the artifact dims")
-          case _ =>
-            require(column.isDefined,
-              s"[$where] windowed snapshot_drift with quantilePath is the " +
-                "PERCENTILE monitor — declare column (the measure); " +
-                "groupColumns are the stored sketch table's dims, and may " +
-                "be empty for a GLOBAL baseline (corpus-wide percentiles " +
-                "per window)")
-            require(quantiles.nonEmpty &&
-                numericQuantiles.forall(q => q >= 0.0 && q <= 1.0),
-              s"[$where] windowed snapshot_drift with quantilePath " +
-                "requires quantiles (fractions in [0, 1])")
-            require(embeddingColumns.isEmpty && numericColumns.isEmpty,
-              s"[$where] windowed snapshot_drift with quantilePath takes " +
-                "no embedding or scalar leg (those monitors are " +
-                "summaryPath / statsPath)")
-        }
-      }
-      // BATCH statsPath (the round-18 stored no-rescan form of the numeric
-      // compare): reroutes the scalar leg's OLD side to the artifact —
-      // numericColumns are the measures, groupColumns the artifact dims
-      // (empty = the global report shape; non-empty = per-cell rows the
-      // rescanning form does not have)
-      if (!windowed && statsPath.isDefined) {
-        require(numericColumns.nonEmpty,
-          s"[$where] batch snapshot_drift with statsPath is the stored " +
-            "scalar leg — declare numericColumns (the measures; " +
-            "groupColumns are the artifact dims, may be empty for a " +
-            "global baseline)")
-      }
-      require(newStatsPath.isEmpty || statsPath.isDefined,
-        s"[$where] snapshot_drift newStatsPath (the NEW side's stored " +
-          "scalar summary) requires statsPath (the OLD side's) — the " +
-          "both-sides-stored form compares two artifacts; to compare a " +
-          "stored artifact against the live frame, declare statsPath alone")
-      require(newSketchPath.isEmpty || sketchPath.isDefined,
-        s"[$where] snapshot_drift newSketchPath (the NEW side's stored " +
-          "sketch table) requires sketchPath (the OLD side's) — the " +
-          "both-sides-stored form compares two artifacts; to sketch the " +
-          "live frame, declare sketchPath alone")
-      require(newQuantilePath.isEmpty || quantilePath.isDefined,
-        s"[$where] snapshot_drift newQuantilePath (the NEW side's stored " +
-          "quantile-sketch table) requires quantilePath (the OLD side's) " +
-          "— the both-sides-stored form compares two artifacts; to sketch " +
-          "the live frame, declare quantilePath alone")
-      // comparePath (the OLD snapshot's raw parquet) is needed only by the
-      // legs that RESCAN it; a drift declared purely against stored
-      // artifacts (summaryPath / statsPath / sketchPath) never touches old
-      // raw data — that is the point of the artifact discipline
-      val rescans = !windowed && (
-        (numericColumns.nonEmpty && statsPath.isEmpty) ||
-        categoricalColumns.nonEmpty ||
-        heavyHitterColumns.nonEmpty || histograms.nonEmpty ||
-        (embeddingColumns.nonEmpty && summaryPath.isEmpty))
-      require(comparePath.isDefined || !rescans,
-        s"[$where] snapshot_drift requires comparePath (the OLD snapshot " +
-          "parquet; the frame is the NEW snapshot) — only a purely " +
-          "artifact-backed declaration (summaryPath / sketchPath / " +
-          "quantilePath legs alone) may omit it")
-      // the converse trap: comparePath on a purely artifact-backed
-      // declaration is NEVER read (the artifact legs are the whole point),
-      // so a user declaring both would believe old raw data is being
-      // compared when it is not — refuse rather than silently ignore
-      require(comparePath.isEmpty || rescans,
-        s"[$where] snapshot_drift comparePath is declared but NO leg " +
-          "rescans old raw data (every declared leg is artifact-backed " +
-          "via summaryPath / statsPath / sketchPath / quantilePath) — " +
-          "the path would never be read. " +
-          "Drop comparePath, or declare a rescanning leg " +
-          "(numericColumns without statsPath / categoricalColumns / " +
-          "heavyHitterColumns / histograms, or embeddingColumns without " +
-          "summaryPath)")
-      summaryPath.foreach { _ =>
-        require(embeddingColumns.size == 1,
-          s"[$where] snapshot_drift summaryPath routes the embedding leg " +
-            "through ONE stored embedding_summary artifact, which " +
-            "summarizes exactly one vector column — declare exactly one " +
-            s"embeddingColumns entry (got ${embeddingColumns.size})")
-      }
-      require(newSummaryPath.isEmpty || summaryPath.isDefined,
-        s"[$where] snapshot_drift newSummaryPath (the NEW side's stored " +
-          "summary) requires summaryPath (the OLD side's) — the " +
-          "both-sides-stored form compares two artifacts; to compare a " +
-          "stored artifact against the live frame, declare summaryPath " +
-          "alone")
-      sketchPath.foreach { _ =>
-        require(groupColumns.nonEmpty && column.isDefined,
-          s"[$where] snapshot_drift sketchPath (the stored distinct-" +
-            "sketch table) requires groupColumns (the sketch dimensions) " +
-            "and column (the counted item on the new snapshot)")
-      }
-      quantilePath.foreach { _ =>
-        // groupColumns may be EMPTY on both forms — the GLOBAL percentile
-        // drift (windowed: cells are windows alone; batch: one row per
-        // quantile between the two crawls' one-row global rollups)
-        require(column.isDefined,
-          s"[$where] snapshot_drift quantilePath (the stored quantile-" +
-            "sketch table) requires column (the measure on the new " +
-            "snapshot); groupColumns are the sketch dimensions and may " +
-            "be empty for a GLOBAL baseline")
-        require(quantiles.nonEmpty,
-          s"[$where] snapshot_drift quantilePath requires quantiles " +
-            "(the percentiles to compare)")
-        require(numericQuantiles.forall(q => q >= 0.0 && q <= 1.0),
-          s"[$where] snapshot_drift quantiles must be fractions in [0, 1]")
-      }
-      histograms.foreach { h =>
-        require(h.column.nonEmpty,
-          s"[$where] snapshot_drift histogram entry needs a column")
-        require(h.bins >= 1,
-          s"[$where] snapshot_drift histogram '${h.column}' bins must be " +
-            s">= 1, got ${h.bins}")
-        require(h.hi > h.lo,
-          s"[$where] snapshot_drift histogram '${h.column}' needs hi > lo, " +
-            s"got [${h.lo}, ${h.hi})")
-      }
-      require(embeddingGroupBy.isEmpty || embeddingColumns.nonEmpty,
-        s"[$where] snapshot_drift embeddingGroupBy needs embeddingColumns " +
-          "to group")
-      if (heavyHitterColumns.nonEmpty)
-        require(minFraction.exists(f => f > 0 && f <= 1),
-          s"[$where] snapshot_drift heavyHitterColumns requires " +
-            "minFraction in (0, 1] (the heavy-key threshold)")
-      // validate the two bound maps SEPARATELY: `++` merges them, so a key
-      // present in both would have its abs value shadowed by the rel one —
-      // a negative maxAbsDelta masked by a valid same-key maxRelDelta
-      // would escape here and make every matching row violate at runtime
-      Seq("maxAbsDelta" -> numericMaxAbsDelta,
-          "maxRelDelta" -> numericMaxRelDelta).foreach { case (which, bs) =>
-        bs.foreach { case (k, v) =>
-          require(v >= 0,
-            s"[$where] snapshot_drift $which bound '$k' must be >= 0, got $v")
-        }
-      }
-    case "scalar_summary" =>
-      require(columns.nonEmpty,
-        s"[$where] scalar_summary requires columns (the numeric measures " +
-          "to summarize); optional groupColumns strata the artifact")
-      require(columns.distinct == columns,
-        s"[$where] scalar_summary columns has duplicates: " +
-          columns.diff(columns.distinct).distinct.mkString(", "))
-      validateWindowDecl(where)
-    case "embedding_summary" =>
-      require(column.isDefined,
-        s"[$where] embedding_summary requires column (the vector to " +
-          "summarize); optional embeddingGroupBy strata the artifact")
-      validateWindowDecl(where)
-    case "merge_embedding_summaries" =>
-      // no declared fields: the frame IS the artifact union, and
-      // grouped-ness is inferred from its schema (a `category` column) —
-      // the Interpreter preflights that the schema is a summary's
-      ()
-    case "merge_scalar_summaries" =>
-      // no declared fields either: the frame is a UNION of scalar_summary
-      // artifacts, and the dims are inferred from its schema (every column
-      // that is not the fixed long-shape payload) — the Interpreter
-      // preflights that the payload columns are present
-      ()
-    case "weighted_mix" =>
-      require(column.isDefined && idColumn.isDefined,
-        s"[$where] weighted_mix requires column (the stratum) and idColumn")
-      require(weights.exists(_.nonEmpty),
-        s"[$where] weighted_mix requires a non-empty weights map")
-      require((numericWeights.values ++ Seq(numericDefaultWeight))
-          .forall(w => w >= 0 && w <= 1),
-        s"[$where] weighted_mix weights must be fractions in [0, 1]")
-    case other => throw new IllegalArgumentException(
-      s"[$where] unknown transform op '$other' (supported: " +
-        SpecSurface.transformOps.mkString(", ") + ")")
-  }
-}
 
 /** Predicate-routed output branch — the KStream.split()/branch() analogue
   * (the reference has no branch operator: SURVEY §2A declared-absent list).
@@ -1580,35 +467,84 @@ case class PipelineSpec(
 }
 
 object PipelineSpec {
-  private val mapper: ObjectMapper = {
-    val m = new ObjectMapper()
+  /** Per-op strictness under the lenient document posture: a field that
+    * does not belong to its transform op is refused (it would otherwise be
+    * silently ignored — `{op: filter, shingleSize: 3}` builds a filter);
+    * every other unknown field keeps the schema-on-read leniency below.
+    */
+  private object StrictOps extends DeserializationProblemHandler {
+    override def handleUnknownProperty(ctxt: DeserializationContext,
+        p: JsonParser, deser: JsonDeserializer[_], beanOrClass: AnyRef,
+        name: String): Boolean = {
+      val cls = beanOrClass match { case c: Class[_] => c; case b => b.getClass }
+      if (classOf[TransformOp].isAssignableFrom(cls)) {
+        val fields = fieldsOf(cls)
+        throw new IllegalArgumentException(s"${TransformOp.nameOf(cls)} " +
+          s"takes no field '$name' (its fields: " +
+          s"${if (fields.isEmpty) "none" else fields.mkString(", ")})")
+      }
+      false
+    }
+  }
+
+  private def configured(m: ObjectMapper): ObjectMapper = {
     m.registerModule(DefaultScalaModule)
     // FAIL_ON_UNKNOWN_PROPERTIES=false matches the reference's lenient
     // schema-on-read (SerdeFactory.java:30).
     m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
+    m.addHandler(StrictOps)
   }
 
-  def fromJson(json: String): PipelineSpec = {
-    val spec = mapper.readValue(json, classOf[PipelineSpec])
-    spec.validate()
-    spec
-  }
+  private val mapper: ObjectMapper = configured(new ObjectMapper())
 
   // The reference's AggregationDefinition binds from Spring YAML config in
   // practice (application.yml aggregation lists) — same object model, same
   // lenient unknown-field posture, only the syntax differs. Jackson's YAML
   // dataformat ships with Spark, so the binding costs one factory swap.
-  private val yamlMapper: ObjectMapper = {
-    val m = new ObjectMapper(
-      new com.fasterxml.jackson.dataformat.yaml.YAMLFactory())
-    m.registerModule(DefaultScalaModule)
-    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
+  private val yamlMapper: ObjectMapper = configured(new ObjectMapper(
+    new com.fasterxml.jackson.dataformat.yaml.YAMLFactory()))
+
+  /** The fields a transform op class decodes, in declaration order. */
+  private[config] def fieldsOf(cls: Class[_]): Seq[String] =
+    mapper.getDeserializationConfig.introspect(mapper.constructType(cls))
+      .findProperties().asScala.map(_.getName).toSeq
+
+  /** Decode, turning a transform op's decode-time refusal (an unknown op,
+    * a field of another op) into the [id]-prefixed config error every
+    * other misdeclaration gets.
+    */
+  private def decode[T](m: ObjectMapper, text: String, cls: Class[T]): T =
+    try m.readValue(text, cls)
+    catch {
+      case e: JsonMappingException =>
+        lazy val where = {
+          val root = m.readTree(text)
+          val spec = if (root.isArray && !e.getPath.isEmpty)
+            root.path(e.getPath.get(0).getIndex) else root
+          spec.path("id").asText("?")
+        }
+        e match {
+          case t: InvalidTypeIdException if t.getBaseType != null &&
+              t.getBaseType.isTypeOrSubTypeOf(classOf[TransformOp]) =>
+            throw new IllegalArgumentException(s"[$where] unknown transform " +
+              s"op '${t.getTypeId}' (supported: " +
+              SpecSurface.transformOps.mkString(", ") + ")", e)
+          case _ => e.getCause match {
+            case iae: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"[$where] ${iae.getMessage}", e)
+            case _ => throw e
+          }
+        }
+    }
+
+  def fromJson(json: String): PipelineSpec = {
+    val spec = decode(mapper, json, classOf[PipelineSpec])
+    spec.validate()
+    spec
   }
 
   def fromYaml(yaml: String): PipelineSpec = {
-    val spec = yamlMapper.readValue(yaml, classOf[PipelineSpec])
+    val spec = decode(yamlMapper, yaml, classOf[PipelineSpec])
     spec.validate()
     spec
   }
@@ -1619,8 +555,7 @@ object PipelineSpec {
     * checkpoint/state paths downstream.
     */
   def listFromYaml(yaml: String): Seq[PipelineSpec] = {
-    val specs = yamlMapper.readValue(
-      yaml, classOf[Array[PipelineSpec]]).toSeq
+    val specs = decode(yamlMapper, yaml, classOf[Array[PipelineSpec]]).toSeq
     specs.foreach(_.validate())
     val ids = specs.map(_.id)
     require(ids.distinct.size == ids.size,

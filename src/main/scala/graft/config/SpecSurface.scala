@@ -2,34 +2,25 @@ package graft.config
 
 /** The machine-readable inventory of the declarative config surface — the
   * single source of truth that `docs/SPEC_REFERENCE.md` (the user-facing
-  * reference), `PipelineSpec.validate`'s unknown-op error, and the
-  * SpecFuzzProperties coverage check are all tested against
-  * (SpecSurfaceSpec): adding a transform op or a config field without
-  * updating the doc — or documenting something the code doesn't carry —
-  * fails the build instead of shipping drift.
+  * reference), the unknown-op error and the SpecFuzzProperties coverage
+  * check are all tested against (SpecSurfaceSpec): adding a transform op
+  * or a config field without updating the doc — or documenting something
+  * the code doesn't carry — fails the build instead of shipping drift.
   *
-  * Field inventories are derived REFLECTIVELY from the case classes
-  * (productElementNames of a minimal instance), so they cannot lag the
-  * code by construction; only the op list is declared, and the validator
-  * handshake test proves every listed op is actually dispatched.
+  * Everything here is DERIVED: the op list and each op's fields from the
+  * [[TransformOp]] registration Jackson decodes with, the other config
+  * case classes' fields reflectively (productElementNames of a minimal
+  * instance), so none of it can lag the code.
   */
 object SpecSurface {
 
-  /** Every transform op `PipelineSpec.validateOp` dispatches (and the
-    * Interpreter executes). Order is the documentation order.
-    */
-  val transformOps: Seq[String] = Seq(
-    "filter", "parse_json",
-    "dedup_exact", "quality_filter", "redact_pii", "dedup_near",
-    "shingle_index", "shingle_index_append", "shingle_index_retract",
-    "shingle_index_compact", "chunk",
-    "contamination_screen", "lang_id", "text_stats", "stratified_sample",
-    "weighted_mix", "top_k", "heavy_hitters", "knn", "knn_index",
-    "knn_index_append", "knn_index_delete", "knn_index_compact", "resample",
-    "profile",
-    "quantile_rollup", "distinct_rollup", "pack", "snapshot_drift",
-    "scalar_summary", "embedding_summary", "merge_embedding_summaries",
-    "merge_scalar_summaries")
+  /** Every transform op, in documentation order. */
+  val transformOps: Seq[String] = TransformOp.registered.map(_._1)
+
+  /** op → the fields it decodes (a field outside this list is refused). */
+  def opFields: Seq[(String, Seq[String])] = TransformOp.registered.map {
+    case (op, cls) => op -> PipelineSpec.fieldsOf(cls)
+  }
 
   /** knn method family members (PipelineSpec knn validation). */
   val knnMethods: Seq[String] = Seq("exact", "quantized", "ivf", "lsh")
@@ -38,7 +29,6 @@ object SpecSurface {
   def fields: Map[String, Seq[String]] = Map(
     "PipelineSpec" -> PipelineSpec(id = "s", processingMode = "SIMPLE_STREAM",
       sourceTopic = TopicConfig("t")).productElementNames.toSeq,
-    "TransformOp" -> TransformOp(op = "lang_id").productElementNames.toSeq,
     "TopicConfig" -> TopicConfig("t").productElementNames.toSeq,
     "KeyExtraction" -> KeyExtraction("KEY").productElementNames.toSeq,
     "FieldMapping" -> FieldMapping(outputFieldName = "o")

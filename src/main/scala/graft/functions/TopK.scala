@@ -58,7 +58,10 @@ final class TopKBuffer(val k: Int, val distinctPairs: Boolean) {
 
   def add(score: Double, id: Long): Unit = {
     ensure(1)
-    scores(n) = score; ids(n) = id; n += 1
+    // distinct mode stores -0.0 as 0.0: the two are one score, and only
+    // bit-identical pairs end up adjacent after the sort (see trimInPlace)
+    scores(n) = if (distinctPairs) score + 0.0 else score
+    ids(n) = id; n += 1
     if (n >= 4 * k) trimInPlace()
   }
 
@@ -71,12 +74,16 @@ final class TopKBuffer(val k: Int, val distinctPairs: Boolean) {
   }
 
   /** Compaction: sort best-first ((score desc, id asc) — [[PairSort.topK]],
-    * the exact order the former tuple Ordering imposed), collapse exact
-    * duplicate pairs in distinct mode (primitive ==, so NaN pairs never
-    * collapse — matching tuple equality), keep the k best. The surviving
-    * multiset is identical to the previous distinct-then-sorted-take form:
-    * compare-equal non-NaN pairs are bit-identical, so the unstable sort
-    * cannot change which values survive.
+    * the exact order the former tuple Ordering imposed), collapse duplicate
+    * pairs in distinct mode, keep the k best. Duplicates collapse by
+    * primitive ==, which is the boxed tuple equality the former
+    * `ArrayBuffer[(Double, Long)].distinct` used: NaN pairs never collapse,
+    * and 0.0/-0.0 pairs do — the sort puts equal pairs side by side because
+    * [[add]] stored -0.0 as 0.0. SketchProperties checks the result equals
+    * that boxed distinct-then-sort-then-take reference over scores from
+    * {NaN, ±0.0, ±1}, run on the same pairs with -0.0 read as 0.0 (the
+    * boxed form kept whichever zero arrived first, so its order among
+    * zero-score pairs depended on arrival order).
     */
   private def trimInPlace(): Unit = {
     PairSort.topK.sort(scores, ids, n)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, NullType, StringType}
 
 import graft.config._
+import graft.config.TransformOp._
 import graft.sources.SourceResolver
 
 /** PipelineSpec → DataFrame interpreter — the Spark-native equivalent of
@@ -140,15 +141,14 @@ object Interpreter extends Logging {
   def buildRefreshingMonitor(spark: SparkSession, spec: PipelineSpec,
       sources: SourceResolver): (DataFrame, DataFrame => DataFrame) = {
     spec.validate()
-    val t = spec.transform.lastOption.getOrElse(throw
-      new IllegalArgumentException(s"[${spec.id}] buildRefreshingMonitor " +
-        "needs a transform chain ending in the windowed snapshot_drift"))
-    require(t.op == "snapshot_drift" && t.timeColumn.isDefined &&
-        t.baselineRefresh.contains("perBatch"),
-      s"[${spec.id}] buildRefreshingMonitor serves ONLY the windowed " +
-        "snapshot_drift with baselineRefresh: \"perBatch\" as the final " +
-        "transform — every other spec starts through the ordinary entry " +
-        "points")
+    val t = spec.transform.lastOption match {
+      case Some(d: SnapshotDrift)
+          if d.windowed && d.baselineRefresh.contains("perBatch") => d
+      case _ => throw new IllegalArgumentException(s"[${spec.id}] " +
+        "buildRefreshingMonitor serves ONLY the windowed snapshot_drift " +
+        "with baselineRefresh: \"perBatch\" as the final transform — every " +
+        "other spec starts through the ordinary entry points")
+    }
     // the head spec KEEPS the declared planAudit gate (the pre-monitor
     // stages' spec-level findings refuse/warn exactly as through the
     // ordinary entry points), and the monitor stage's own findings are
@@ -165,6 +165,7 @@ object Interpreter extends Logging {
         msg + " — fix the declaration or declare planAudit: \"warn\"")
       else logWarning(msg)
     }
+    refuseStreaming(built, t.windowBatchOnly, spec.id)
     val (src, win) = eventWindow(built, t)
     val specId = spec.id
     val dataDir = sources.dataDir
@@ -181,18 +182,17 @@ object Interpreter extends Logging {
       (graft.operators.Drift.windowedScalarCells(src, t.numericColumns,
         t.groupColumns, win),
         (batch: DataFrame) => post(graft.operators.Drift.windowedScalarEval(
-          batch, t.groupColumns, baseline(), t.numericMaxAbsDelta,
-          t.numericMaxRelDelta)))
+          batch, t.groupColumns, baseline(), t.maxAbsDelta, t.maxRelDelta)))
     } else if (t.quantilePath.isDefined) {
       val p = resolvePath(t.quantilePath.get, dataDir, specId)
       def baseline(): DataFrame =
         readQuantileArtifact(spark, p, t.groupColumns, specId)
       baseline()
       (graft.operators.Drift.windowedQuantileCells(src, t.column.get,
-        t.groupColumns, win, t.numericQuantiles),
+        t.groupColumns, win, t.quantiles),
         (batch: DataFrame) => post(graft.operators.Drift.windowedQuantileEval(
           batch, t.column.get, t.groupColumns, baseline(),
-          t.numericQuantiles, t.numericMaxAbsDelta, t.numericMaxRelDelta)))
+          t.quantiles, t.maxAbsDelta, t.maxRelDelta)))
     } else {
       val grouped = t.embeddingGroupBy.isDefined
       val p = resolvePath(t.summaryPath.get, dataDir, specId)
@@ -203,8 +203,41 @@ object Interpreter extends Logging {
         t.embeddingColumns.head, t.embeddingGroupBy, win),
         (batch: DataFrame) => post(graft.operators.Drift.windowedEmbeddingEval(
           batch, t.embeddingColumns.head, grouped, baseline(),
-          t.numericMaxAbsDelta, t.numericMaxRelDelta)))
+          t.maxAbsDelta, t.maxRelDelta)))
     }
+  }
+
+  /** Windowed-state pricing for every windowed op, closed-form from the
+    * DECLARATION alone: live state ≈ |dims cells| × (watermark + every) /
+    * slide window generations (DEPLOY's sizing formula), and each event
+    * WRITES into every/slide overlapping cells — so a sliding declaration
+    * with slide ≪ every multiplies state and emission volume silently.
+    * Only the per-dims-cell MULTIPLIER is priced (dims cardinality would
+    * need a data probe); session windows are exempt (gap-merged
+    * variable-width cells — no generation arithmetic).
+    */
+  private def windowedStateFindings(t: TransformOp)
+      : Seq[graft.observe.PlanAudit.Finding] = t match {
+    case w: Windowed if w.windowed && !w.session =>
+      // spec.validate has guaranteed every/slide parse positive, and a
+      // declared ZERO watermark legitimately parses to None → 0
+      val everyUs = durationMicros(w.every.get).get
+      val slideUs = w.slide.flatMap(durationMicros).getOrElse(everyUs)
+      val wmUs = w.watermark.flatMap(durationMicros).getOrElse(0L)
+      val generations = (wmUs + everyUs).toDouble / slideUs
+      val cellsPerEvent = everyUs.toDouble / slideUs
+      if (generations <= WindowGenerationsWarn) Nil
+      else Seq(graft.observe.PlanAudit.Finding("warn",
+        WindowedStateAmplification,
+        f"windowed ${w.op} keeps ~$generations%.0f window generations of " +
+          s"state LIVE per dims cell ((watermark ${w.watermark.getOrElse("0")} " +
+          s"+ every ${w.every.get}) / slide ${w.slide.getOrElse(w.every.get)}" +
+          f") and writes each event into $cellsPerEvent%.0f overlapping " +
+          "cells — state and update-mode emission scale by those factors " +
+          "vs the tumbling baseline (DEPLOY.md: live cells ~= dims cells " +
+          "x generations, one aggregation buffer each). Widen slide or " +
+          "every, or shrink the watermark (the eviction horizon)"))
+    case _ => Nil
   }
 
   /** Config-detectable scale findings for one transform declaration — the
@@ -219,42 +252,8 @@ object Interpreter extends Logging {
     */
   private def specAudit(df: DataFrame, t: TransformOp,
       dataDir: Option[String], specId: String)
-      : Seq[graft.observe.PlanAudit.Finding] = t.op match {
-    // windowed stateful ops (the sketch/top-k family + the drift monitor):
-    // closed-form state-cell pricing from the DECLARATION alone (round-16
-    // judge directive #5). DEPLOY's sizing formula: live state ≈ |dims
-    // cells| × (watermark + every)/slide window generations, and each
-    // event WRITES into every/slide overlapping cells — so a sliding
-    // declaration with slide ≪ every multiplies state and emission volume
-    // exactly the way LSH geometry multiplied candidates, silently. Only
-    // the per-dims-cell MULTIPLIER is priced (it is declaration-closed;
-    // dims cardinality would need a data probe); session windows are
-    // exempt (gap-merged variable-width cells — no generation arithmetic).
-    case op if t.timeColumn.isDefined && t.every.isDefined &&
-        !t.windowType.contains("session") &&
-        Set("top_k", "heavy_hitters", "distinct_rollup", "quantile_rollup",
-          "embedding_summary", "snapshot_drift")(op) =>
-      // ONE duration parse (TransformOp.durationMicros — the same one the
-      // validator's positivity/divisibility checks read); spec.validate has
-      // guaranteed every/slide parse positive, and a declared ZERO
-      // watermark legitimately parses to None → 0
-      val everyUs = t.durationMicros(t.every.get).get
-      val slideUs = t.slide.flatMap(t.durationMicros).getOrElse(everyUs)
-      val wmUs = t.watermark.flatMap(t.durationMicros).getOrElse(0L)
-      val generations = (wmUs + everyUs).toDouble / slideUs
-      val cellsPerEvent = everyUs.toDouble / slideUs
-      if (generations <= WindowGenerationsWarn) Nil
-      else Seq(graft.observe.PlanAudit.Finding("warn",
-        WindowedStateAmplification,
-        f"windowed $op keeps ~$generations%.0f window generations of " +
-          s"state LIVE per dims cell ((watermark ${t.watermark.getOrElse("0")} " +
-          s"+ every ${t.every.get}) / slide ${t.slide.getOrElse(t.every.get)}" +
-          f") and writes each event into $cellsPerEvent%.0f overlapping " +
-          "cells — state and update-mode emission scale by those factors " +
-          "vs the tumbling baseline (DEPLOY.md: live cells ~= dims cells " +
-          "x generations, one aggregation buffer each). Widen slide or " +
-          "every, or shrink the watermark (the eviction horizon)"))
-    case "dedup_near" if t.historyPath.isDefined && !df.isStreaming =>
+      : Seq[graft.observe.PlanAudit.Finding] = windowedStateFindings(t) ++ (t match {
+    case t: DedupNear if t.historyPath.isDefined && !df.isStreaming =>
       // pending-retraction advisory for the stored-history screen — the
       // knn_pending_tombstones discipline on the text side: every screen
       // anti-joins the `_tombstones` set, and retracted rows hold their
@@ -297,7 +296,7 @@ object Interpreter extends Logging {
             s"(${e.getClass.getSimpleName})")
           Nil
       }
-    case "dedup_near" if t.method.contains("embedding") && !df.isStreaming =>
+    case t: DedupNear if t.embedding && !df.isStreaming =>
       // corpus estimate from the optimizer's size statistic (compressed
       // bytes / packed vector width — a LOWER bound, the conservative
       // direction for a warn-only check); no data is touched
@@ -324,7 +323,7 @@ object Interpreter extends Logging {
           "threshold into the near-dup regime (>= ~0.7), or use the exact " +
           "pair join for full recall (auto-routed only below the " +
           "cost-model break-even)"))
-    case "knn" if t.indexPath.isDefined =>
+    case t: Knn if t.indexPath.isDefined =>
       // staleness preflight for the stored-index route: the artifact's
       // meta pins how many corpus rows it indexed — a frame whose count
       // diverged means rows the search CANNOT see (or ghosts it still
@@ -511,7 +510,7 @@ object Interpreter extends Logging {
               df.sparkSession, p, meta, f)
             val total = math.max(1L, meta.n_rows)
             val sel = matched.toDouble / total
-            val kk = t.k.getOrElse(10)
+            val kk = t.k
             if (sel >= KnnFilterSelWarn) Nil
             else {
               val route =
@@ -545,7 +544,7 @@ object Interpreter extends Logging {
             "when the stage builds")
           Nil
       }
-    case "knn" if t.method.exists(m => m == "lsh" || m == "ivf") =>
+    case t: Knn if t.method.exists(m => m == "lsh" || m == "ivf") =>
       // geometry pricing for the approximate knn declarations (round-15
       // judge directive #4): the candidate volume each query re-ranks is
       // closed-form from the declaration — no data probe needed — and a
@@ -593,7 +592,7 @@ object Interpreter extends Logging {
           "or method=quantized for 4x less memory traffic) is cheaper at " +
           "any query-set size and has full recall — tighten the geometry " +
           "or drop the index"))
-    case "snapshot_drift"
+    case t: SnapshotDrift
         if t.categoricalColumns.nonEmpty || t.embeddingGroupBy.isDefined =>
       // cardinality preflight for the per-distinct-key legs (round-14
       // judge directive #4): freq_l1 shuffles one row per DISTINCT
@@ -685,7 +684,7 @@ object Interpreter extends Logging {
         }
       }
     case _ => Nil
-  }
+  })
 
   /** Distinct-count bar for the [[specAudit]] `snapshot_drift` check: a
     * genuine enum dimension (language, source, event type, country,
@@ -789,12 +788,6 @@ object Interpreter extends Logging {
     */
   private val CandsPerPointWarn = 4096.0
 
-  /** One declared transform op → the corresponding X-operator. The quality
-    * filter compares the ROUNDED (6 dp) mean token length so the boundary
-    * decision is order-independent (same discipline as the x5/x14 queries
-    * and their oracles); redaction accepts either a source column or a
-    * computed SQL expression.
-    */
   /** Substitute the literal `<dataDir>` placeholder in a spec path field
     * with the bound resolver's base directory — checked-in example configs
     * stay portable across environments (see SourceResolver.dataDir).
@@ -1214,7 +1207,7 @@ object Interpreter extends Logging {
     * query-time recall/scan knob, not index state).
     */
   private def requireIndexMeta(spark: SparkSession, path: String,
-      t: TransformOp, specId: String): graft.operators.AnnIndexMeta = {
+      t: Knn, specId: String): graft.operators.AnnIndexMeta = {
     val meta =
       try graft.operators.Similarity.readIndexMeta(spark, path)
       catch {
@@ -1266,15 +1259,33 @@ object Interpreter extends Logging {
     meta
   }
 
-  private[graft] def applyTransform(df: DataFrame, t: TransformOp,
-      dataDir: Option[String], specId: String): DataFrame = t.op match {
-    case "filter" =>
+  /** Refuse a streaming frame for a declaration that cannot run on one. */
+  private def refuseStreaming(df: DataFrame, reason: Option[String],
+      specId: String): Unit =
+    reason.foreach(r => require(!df.isStreaming, s"[$specId] $r"))
+
+  private[graft] def applyTransform(df: DataFrame, decl: TransformOp,
+      dataDir: Option[String], specId: String): DataFrame = {
+    refuseStreaming(df, decl.batchOnly, specId)
+    applyChecked(df, decl, dataDir, specId)
+  }
+
+  /** One declared transform op → the corresponding X-operator, once the
+    * declaration's streaming refusal has passed. The quality filter
+    * compares the ROUNDED (6 dp) mean token length so the boundary decision
+    * is order-independent (same discipline as the x5/x14 queries and their
+    * oracles); redaction accepts either a source column or a computed SQL
+    * expression.
+    */
+  private def applyChecked(df: DataFrame, decl: TransformOp,
+      dataDir: Option[String], specId: String): DataFrame = decl match {
+    case t: Filter =>
       // the STAGE-ordered predicate (vs the spec-level `filter` field,
       // which applies after every transform): an ingest-batch cut ahead
       // of a maintenance verb, a serving view ahead of a knn. Row-
       // preserving, streaming-legal, and Catalyst pushes it into the scan
-      df.filter(expr(t.expression.get))
-    case "parse_json" =>
+      df.filter(expr(t.expression))
+    case t: ParseJson =>
       // R16's JSON-string → object boundary as a declarable stage, with
       // the reference's BOTH postures: lenient (JsonStringToObjectMapper's
       // Jackson-default analogue — malformed input parses to null fields)
@@ -1286,19 +1297,14 @@ object Interpreter extends Logging {
       // dlqPath — an eager batch side-write (a stream cannot fork an
       // eager reject sink; declare FAILFAST or PERMISSIVE there).
       // Row-preserving under PERMISSIVE/FAILFAST; DLQ drops only rejects.
-      val schema = org.apache.spark.sql.types.StructType
-        .fromDDL(t.jsonSchema.get)
-      val src = col(t.column.get)
-      val out = t.outputField.get
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(t.jsonSchema)
+      val src = col(t.column)
+      val out = t.outputField
       t.parseMode.getOrElse("PERMISSIVE") match {
         case "FAILFAST" =>
           df.withColumn(out,
             from_json(src, schema, Map("mode" -> "FAILFAST")))
         case "DLQ" =>
-          require(!df.isStreaming,
-            "parse_json parseMode=DLQ is batch-only (the dead-letter " +
-              "side-write is an eager second sink a streaming stage " +
-              "cannot fork); declare FAILFAST or PERMISSIVE on a stream")
           // reject detection via the parser's own corrupt-record channel
           // (PERMISSIVE parses a malformed record to a struct with NULL
           // fields, indistinguishable from a legitimately-null document
@@ -1347,49 +1353,25 @@ object Interpreter extends Logging {
         case _ =>
           df.withColumn(out, from_json(src, schema))
       }
-    case "dedup_exact" if df.isStreaming =>
-      // the unbounded-state commitment must be EXPLICIT (round-8 judge):
-      // either bound it with a TTL or acknowledge it with unboundedOk
-      require(t.stateTtl.isDefined || t.unboundedOk,
-        "streaming dedup_exact holds one state entry per distinct " +
-          "dupColumns group FOREVER; declare stateTtl (bounded " +
-          "first-arrival dedup, state expires after idle TTL) or " +
-          "unboundedOk:true to acknowledge the history-wide commitment")
-      if (t.stateTtl.isDefined)
-        graft.streaming.StreamingDedup.exactFirstArrival(
-          df, t.dupColumns, t.tieBreak.get, t.stateTtl.get)
-      else graft.operators.Dedup.exact(df, t.dupColumns, t.tieBreak.get)
-    case "dedup_exact" =>
-      graft.operators.Dedup.exact(df, t.dupColumns, t.tieBreak.get)
-    case "quality_filter" =>
-      val m = graft.operators.TextAnalysis.qualityMetrics(col(t.column.get)).toMap
+    case t: DedupExact if df.isStreaming && t.stateTtl.isDefined =>
+      // the unbounded-state commitment is EXPLICIT (round-8 judge): a TTL
+      // bounds it here, or batchOnly refused the stream unless unboundedOk
+      graft.streaming.StreamingDedup.exactFirstArrival(
+        df, t.dupColumns, t.tieBreak, t.stateTtl.get)
+    case t: DedupExact =>
+      graft.operators.Dedup.exact(df, t.dupColumns, t.tieBreak)
+    case t: QualityFilter =>
+      val m = graft.operators.TextAnalysis.qualityMetrics(col(t.column)).toMap
       val conds =
         t.minTokens.map(n => m("n_tokens") >= n).toSeq ++
         t.minAvgTokenLen.map(v => round(m("avg_token_len"), 6) >= v) ++
         t.maxAvgTokenLen.map(v => round(m("avg_token_len"), 6) <= v)
       df.filter(conds.reduce(_ && _))
-    case "redact_pii" =>
+    case t: RedactPii =>
       val src = t.expression.map(expr).getOrElse(col(t.column.get))
       df.withColumn(t.outputField.orElse(t.column).get,
         graft.operators.TextAnalysis.redactPii(src))
-    case "dedup_near" if df.isStreaming =>
-      require(!t.method.contains("embedding"),
-        "streaming dedup_near supports method=jaccard only (the embedding " +
-          "path's multi-table hyperplane index and exact-route decision " +
-          "are batch constructs); dedup the stored batch snapshot instead")
-      require(t.historyPath.isEmpty,
-        "streaming dedup_near keeps its own keyed-state LSH history — " +
-          "historyPath (the stored shingle_index screen) is the BATCH " +
-          "incremental form; screen the stored ingest batch instead")
-      // same EXPLICIT unbounded-state posture as streaming dedup_exact —
-      // and the commitment here is heavier: the LSH index holds
-      // 8 + 8*numHashes bytes PER DOC (signature + id), not one Boolean
-      // per group
-      require(t.stateTtl.isDefined || t.unboundedOk,
-        "streaming dedup_near holds the keyed-state LSH signature index " +
-          "(8 + 8*numHashes bytes per ingested doc) FOREVER without a " +
-          "TTL; declare stateTtl (idle buckets expire) or unboundedOk:true " +
-          "to acknowledge the history-wide commitment")
+    case t: DedupNear if df.isStreaming =>
       // STREAMING form: the batch self-join + iterative CC cannot run on a
       // stream, but the semantics an ingest pipeline declares — "flag each
       // arriving doc against everything already ingested" — can: the
@@ -1403,20 +1385,20 @@ object Interpreter extends Logging {
       // minhash path), not the batch op's exact shingle Jaccard — same
       // trade as batch minhashCandidates vs jaccardPairs.
       val matches = graft.streaming.StreamingDedup.nearDupMatches(df,
-        t.idColumn.get, t.column.get,
+        t.idColumn, t.column,
         shingleSize = t.shingleSize.get,
         numHashes = t.numHashes.getOrElse(128),
         bands = t.bands.getOrElse(32),
         threshold = t.threshold.get,
         maxBucketDocs = t.maxBucketDocs.getOrElse(64),
         stateTtl = t.stateTtl.orNull)
-        .toDF(t.idColumn.get, "dup_of", "est_jaccard")
+        .toDF(t.idColumn, "dup_of", "est_jaccard")
       // each match derives from exactly one arriving record — re-key by the
       // arriving doc so a topic sink writes a keyed duplicate changelog
       if (df.columns.contains(KeyCol))
-        matches.withColumn(KeyCol, col(t.idColumn.get))
+        matches.withColumn(KeyCol, col(t.idColumn))
       else matches
-    case "dedup_near" if t.historyPath.isDefined =>
+    case t: DedupNear if t.historyPath.isDefined =>
       // the INCREMENTAL screen (X2's stored-artifact route): the frame is
       // the NEW ingest batch, historyPath the corpus's stored shingle_index
       // — only the batch is tokenized; the history is never re-shingled
@@ -1430,46 +1412,42 @@ object Interpreter extends Logging {
       // arrival, exactly as if its rows were already physically dropped
       val screened = shingleTombstones(df.sparkSession, p)
         .fold(hist)(tb => sizeAwareIdJoin(hist, tb, "left_anti"))
-      graft.operators.Dedup.incrementalNovelPrepared(df, t.idColumn.get,
-        t.column.get, t.shingleSize.get, t.threshold.get,
+      graft.operators.Dedup.incrementalNovelPrepared(df, t.idColumn,
+        t.column, t.shingleSize.get, t.threshold.get,
         screened.drop("shingle_size"))
-    case "dedup_near" =>
+    case t: DedupNear =>
       // the frame feeds pair generation AND the representative anti-join —
       // persist it for the double consumption (the x14 measured win) and
       // register for the shared release hook
       val persisted = graft.operators.Dedup.registerCache(
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val pairs =
-        if (t.method.contains("embedding"))
+        if (t.embedding)
           // auto-sized multi-probe LSH with the exact-join auto-route;
           // the declaration's scale trap (low threshold × large corpus)
           // is preflight-visible via specAudit
           graft.operators.Dedup.embeddingCosinePairs(persisted,
-            t.idColumn.get, t.column.get, dim = t.dim.get,
+            t.idColumn, t.column, dim = t.dim.get,
             nTables = t.nTables.getOrElse(16),
             planesPerTable = t.planesPerTable.getOrElse(4),
             threshold = t.threshold.get)
         else graft.operators.Dedup.jaccardPairs(persisted,
-          t.idColumn.get, t.column.get,
+          t.idColumn, t.column,
           shingleSize = t.shingleSize.get, threshold = t.threshold.get)
-      graft.operators.Dedup.keepRepresentatives(persisted, t.idColumn.get, pairs)
-    case "shingle_index" =>
+      graft.operators.Dedup.keepRepresentatives(persisted, t.idColumn, pairs)
+    case t: ShingleIndex =>
       // the crawl/publish-time BUILD verb of the incremental-screen loop
       // (embedding_summary's REPLACE-the-rows convention): the row set
       // becomes the (id, sh, n, shingle_size) history artifact — sink it
       // next to the corpus and every later ingest batch screens against
       // it via dedup_near historyPath without re-tokenizing the history
-      require(!df.isStreaming,
-        "shingle_index is batch-only (it snapshots a complete corpus's " +
-          "shingle sets; the streaming ingest screen is dedup_near's " +
-          "keyed-state form)")
-      val result = graft.operators.Dedup.shingleIndex(df, t.idColumn.get,
-        t.column.get, t.shingleSize.get)
+      val result = graft.operators.Dedup.shingleIndex(df, t.idColumn,
+        t.column, t.shingleSize)
       // one artifact row per doc — keyed by the doc id (compacted-topic
       // semantics)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("id"))
       else result
-    case "shingle_index_append" =>
+    case t: ShingleIndexAppend =>
       // the INCREMENTAL-MAINTENANCE verb of the screen loop (knn_index_
       // append's text analogue): appends the batch's (id, sh, n,
       // shingle_size) rows to the STORED history artifact — the history is
@@ -1483,23 +1461,19 @@ object Interpreter extends Logging {
       // history rows only widen the candidate join, whose matches feed a
       // left_anti (pinned in OperatorsSpec) — so retry-after-crash is safe
       // without a meta swap.
-      require(!df.isStreaming,
-        "shingle_index_append is batch-only (it extends the stored corpus " +
-          "history with a completed ingest batch; the streaming ingest " +
-          "screen is dedup_near's keyed-state form)")
-      val p = resolvePath(t.historyPath.get, dataDir, specId)
+      val p = resolvePath(t.historyPath, dataDir, specId)
       // the artifact must exist and pin the SAME width — appending foreign-
       // width shingles would poison the artifact into the mixed-width
       // config error on every later read
       val histForAppend = readShingleArtifact(df.sparkSession, p,
-        t.shingleSize.get, specId)
+        t.shingleSize, specId)
       // a batch id with a PENDING retraction is refused loudly: its
       // appended rows would be silently re-killed by the tombstone at
       // every screen and physically dropped at the next compact — the
       // exact data loss a re-publisher would never notice. Compact first
       // (it clears the retractions), then re-publish.
       shingleTombstones(df.sparkSession, p).foreach { tb =>
-        val pending = sizeAwareIdJoin(df.select(col(t.idColumn.get)
+        val pending = sizeAwareIdJoin(df.select(col(t.idColumn)
             .cast(histForAppend.schema("id").dataType).as("id")),
           tb, "left_semi").distinct().count()
         require(pending == 0L,
@@ -1511,8 +1485,8 @@ object Interpreter extends Logging {
             "clears the tombstones), then re-publish")
       }
       val batch = graft.operators.Dedup.registerCache(
-        graft.operators.Dedup.shingleIndex(df, t.idColumn.get,
-          t.column.get, t.shingleSize.get)
+        graft.operators.Dedup.shingleIndex(df, t.idColumn,
+          t.column, t.shingleSize)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val fsRoot = new org.apache.hadoop.fs.Path(p)
       val fsA = fsRoot.getFileSystem(
@@ -1551,7 +1525,7 @@ object Interpreter extends Logging {
             "writer raced the append; invalidating the width-pin cache " +
             "so the next build re-verifies the width from the data")
           fsA.delete(graft.sinks.Commit.manifestDir(fsRoot), true)
-        } else writeShinglePin(df.sparkSession, p, t.shingleSize.get,
+        } else writeShinglePin(df.sparkSession, p, t.shingleSize,
           Some(shingleListingSig(after)))
       }
       // the write-landed verification stays O(batch)+O(#files): the batch
@@ -1569,12 +1543,12 @@ object Interpreter extends Logging {
       logInfo(s"[$specId] shingle_index_append: +$appended docs -> " +
         s"$histDocs history rows at $p")
       import df.sparkSession.implicits._
-      val report = Seq((t.shingleSize.get, appended, histDocs))
+      val report = Seq((t.shingleSize, appended, histDocs))
         .toDF("shingle_size", "appended_docs", "history_docs")
       if (df.columns.contains(KeyCol))
         report.withColumn(KeyCol, col("shingle_size"))
       else report
-    case "shingle_index_retract" =>
+    case t: ShingleIndexRetract =>
       // the REMOVAL verb of the screen loop (knn_index_delete's text
       // analogue — the reference's compacted-topic null-payload deletion):
       // the frame is the id list to retract (a takedown/opt-out batch);
@@ -1591,12 +1565,8 @@ object Interpreter extends Logging {
       // the set (shingle_index_append refuses pending ids loudly);
       // re-publish after the compact. REPLACES the row set with a
       // one-row report.
-      require(!df.isStreaming,
-        "shingle_index_retract is batch-only (it commits a completed " +
-          "takedown batch's tombstones; retract the stored id list, not " +
-          "a stream)")
       val spark = df.sparkSession
-      val p = resolvePath(t.historyPath.get, dataDir, specId)
+      val p = resolvePath(t.historyPath, dataDir, specId)
       val hist = spark.read.parquet(p)
       val missingRt = Seq("id", "sh", "n", "shingle_size")
         .filterNot(hist.columns.contains)
@@ -1605,7 +1575,7 @@ object Interpreter extends Logging {
           s"missing column(s) ${missingRt.mkString(", ")} (found: " +
           s"${hist.columns.mkString(", ")})")
       val ids = graft.operators.Dedup.registerCache(
-        df.select(col(t.idColumn.get)
+        df.select(col(t.idColumn)
             .cast(hist.schema("id").dataType).as("id")).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val batchN = ids.count()
@@ -1636,7 +1606,7 @@ object Interpreter extends Logging {
       if (df.columns.contains(KeyCol))
         report.withColumn(KeyCol, col("retracted_docs"))
       else report
-    case "shingle_index_compact" =>
+    case t: ShingleIndexCompact =>
       // the screen loop's CLOSING maintenance verb (knn_index_compact's
       // text analogue): every shingle_index_append adds a file set, so the
       // screen's history scan degrades to one small file per publish —
@@ -1646,11 +1616,8 @@ object Interpreter extends Logging {
       // is preflighted from the artifact's OWN pin (no declared width —
       // there are no new rows), and the pin manifest is refreshed over the
       // folded layout. REPLACES the row set with a one-row report.
-      require(!df.isStreaming,
-        "shingle_index_compact is batch-only (it rewrites a stored " +
-          "artifact's file layout; run it between publish rounds)")
       val spark = df.sparkSession
-      val p = resolvePath(t.historyPath.get, dataDir, specId)
+      val p = resolvePath(t.historyPath, dataDir, specId)
       // crash recovery BEFORE the first read (round-18 review): a
       // predecessor compaction killed between its two renames leaves only
       // '<p>.old' — the retry (re-running this verb) restores it before
@@ -1731,18 +1698,18 @@ object Interpreter extends Logging {
       if (df.columns.contains(KeyCol))
         report.withColumn(KeyCol, col("shingle_size"))
       else report
-    case "chunk" =>
-      graft.operators.TextAnalysis.chunk(df, t.idColumn.get, t.column.get,
-        t.size.get, t.stride.get, carryCols = keyCarry(df))
-    case "lang_id" =>
+    case t: Chunk =>
+      graft.operators.TextAnalysis.chunk(df, t.idColumn, t.column,
+        t.size, t.stride, carryCols = keyCarry(df))
+    case t: LangId =>
       df.withColumn(t.outputField.getOrElse("lang_pred"),
-        graft.operators.TextAnalysis.langId(col(t.column.get)))
-    case "text_stats" =>
+        graft.operators.TextAnalysis.langId(col(t.column)))
+    case t: TextStats =>
       // the same rounded-6dp metric set as the x5_text_stats query —
       // rounding makes the boundary values order-independent and the
       // columns oracle-mirrorable; same-named columns are overwritten
       // (documented contract: computed from the text beats metadata)
-      val m = graft.operators.TextAnalysis.qualityMetrics(col(t.column.get)).toMap
+      val m = graft.operators.TextAnalysis.qualityMetrics(col(t.column)).toMap
       // foldLeft, not withColumns(Map(...)): a Map's iteration order would
       // make the appended column order (and thus sink JSON field order)
       // hash-dependent instead of the documented n_chars..n_lex_tokens
@@ -1753,33 +1720,27 @@ object Interpreter extends Logging {
         "punct_ratio" -> round(m("punct_ratio"), 6),
         "stopword_ratio" -> round(m("stopword_ratio"), 6),
         "n_lex_tokens" ->
-          size(graft.operators.TextAnalysis.lexTokens(col(t.column.get))).cast("long")
+          size(graft.operators.TextAnalysis.lexTokens(col(t.column))).cast("long")
       ).foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-    case "stratified_sample" =>
-      require(!df.isStreaming,
-        "stratified_sample is batch-only (row_number window); use the " +
-          "hash-threshold form for streams — see TextAnalysis.stratifiedSample")
+    case t: StratifiedSample =>
       graft.operators.TextAnalysis.stratifiedSample(df, t.stratumColumns,
-        t.idColumn.get, t.interval.get)
-    case "weighted_mix" =>
-      require(!df.isStreaming,
-        "weighted_mix is batch-only (row_number window); use the " +
-          "hash-threshold form for streams — see TextAnalysis.weightedMix")
-      graft.operators.TextAnalysis.weightedMix(df, t.column.get,
-        t.idColumn.get, t.numericWeights, t.numericDefaultWeight)
-    case "top_k" if t.timeColumn.isDefined =>
+        t.idColumn, t.interval)
+    case t: WeightedMix =>
+      graft.operators.TextAnalysis.weightedMix(df, t.column,
+        t.idColumn, t.weights, t.defaultWeight.getOrElse(0.0))
+    case t: TopK if t.windowed =>
       // WINDOWED form: cells are (tumbling window, groups...) — the shape
       // that runs on a stream with bounded, watermark-evicted heap state
       // (and on batch produces the identical table, so the two builds are
       // directly comparable). The TopK heap aggregates partially map-side
       // exactly like the global form.
       val (src, win) = eventWindow(df, t)
-      val byCol = t.byColumn.get
-      val idCol = t.idColumn.get
+      val byCol = t.byColumn
+      val idCol = t.idColumn
       val groups = t.groupColumns
       val agged = src.groupBy(win.as("__w") +: groups.map(col): _*)
         .agg(graft.functions.TopK.topk(
-          col(byCol).cast("double"), col(idCol).cast("long"), t.k.get).as("__top"))
+          col(byCol).cast("double"), col(idCol).cast("long"), t.k).as("__top"))
       val result = agged
         .select((col("__w.start").as("window_start") +: groups.map(col)) :+
           posexplode(col("__top")).as(Seq("__rank0", "__p")): _*)
@@ -1792,20 +1753,15 @@ object Interpreter extends Logging {
       // able to overwrite rank r specifically) — same reasoning as the
       // windowed heavy_hitters (window, item) key
       windowedKey(result, df, groups :+ "rank")
-    case "top_k" =>
-      // GLOBAL grouped top-k on a stream would be an unwatermarked stateful
-      // aggregation (the heap state never evicts) — reject pointing at the
-      // windowed form, which is the same op with bounded state
-      require(!df.isStreaming,
-        "global top_k is batch-only (unbounded heap state on a stream); " +
-          "declare timeColumn + every + watermark for the windowed " +
-          "streaming form")
-      val byCol = t.byColumn.get
-      val idCol = t.idColumn.get
+    case t: TopK =>
+      // GLOBAL grouped top-k (batch-only: on a stream its heap state would
+      // never evict — the windowed form is the same op with bounded state)
+      val byCol = t.byColumn
+      val idCol = t.idColumn
       val groups = t.groupColumns
       val agged = df.groupBy(groups.map(col): _*)
         .agg(graft.functions.TopK.topk(
-          col(byCol).cast("double"), col(idCol).cast("long"), t.k.get).as("__top"))
+          col(byCol).cast("double"), col(idCol).cast("long"), t.k).as("__top"))
       val result = agged
         .select(groups.map(col) :+ posexplode(col("__top")).as(Seq("__rank0", "__p")): _*)
         .select(groups.map(col) ++ Seq(
@@ -1821,7 +1777,7 @@ object Interpreter extends Logging {
       if (df.columns.contains(KeyCol))
         result.withColumn(KeyCol, struct((groups :+ "rank").map(col): _*))
       else result
-    case "heavy_hitters" if t.timeColumn.isDefined =>
+    case t: HeavyHitters if t.windowed =>
       // WINDOWED form: EXACT per-window counts over an ABSOLUTE minCount
       // threshold — one stateful aggregation (streaming-legal in update
       // mode), no sketch needed because the window bounds the key domain.
@@ -1832,8 +1788,8 @@ object Interpreter extends Logging {
       val items =
         if (t.tokenize)
           src.select(col(ts), explode(
-            graft.operators.TextAnalysis.tokens(col(t.column.get))).as("__item"))
-        else src.select(col(ts), col(t.column.get).as("__item"))
+            graft.operators.TextAnalysis.tokens(col(t.column))).as("__item"))
+        else src.select(col(ts), col(t.column).as("__item"))
       val result = items.filter(col("__item").isNotNull)
         .groupBy(win.as("__w"), col("__item"))
         .agg(count(lit(1)).as("cnt"))
@@ -1845,27 +1801,20 @@ object Interpreter extends Logging {
       if (df.columns.contains(KeyCol))
         result.withColumn(KeyCol, struct(col("window_start"), col("item")))
       else result
-    case "heavy_hitters" =>
-      require(!df.isStreaming,
-        "global heavy_hitters is batch-only (two passes: Misra-Gries " +
-          "sketch + exact recount); declare timeColumn + every + watermark " +
-          "+ minCount for the windowed streaming form")
+    case t: HeavyHitters =>
       val result =
         if (t.tokenize)
           graft.operators.Profile.heavyHittersFromArrays(
-            df.select(graft.operators.TextAnalysis.tokens(col(t.column.get)).as("__toks")),
+            df.select(graft.operators.TextAnalysis.tokens(col(t.column)).as("__toks")),
             "__toks", minFraction = t.minFraction.get)
         else
-          graft.operators.Profile.heavyHitters(df, t.column.get,
+          graft.operators.Profile.heavyHitters(df, t.column,
             minFraction = t.minFraction.get)
       // a count table is keyed by its item (compacted-topic semantics)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("item"))
       else result
-    case "resample" =>
-      require(!df.isStreaming,
-        "resample is batch-only (the grid needs each key's min/max time); " +
-          "for streams aggregate into tumbling windows instead")
-      val key = t.idColumn.get; val ts = t.timeColumn.get
+    case t: Resample =>
+      val key = t.idColumn; val ts = t.timeColumn
       // collapse simultaneous observations (max per value column) BEFORE
       // gap-filling: the as-of tie rule over duplicate (key, ts) rows would
       // otherwise be arbitrary — this keeps the declared op deterministic
@@ -1874,22 +1823,19 @@ object Interpreter extends Logging {
         .agg(max(col(t.valueColumns.head)).as(t.valueColumns.head),
           t.valueColumns.tail.map(c => max(col(c)).as(c)): _*)
       val result = graft.operators.AsOfJoin.resample(
-        obs, key, ts, t.valueColumns, t.every.get,
+        obs, key, ts, t.valueColumns, t.every,
         maxGridRowsPerKey = t.maxGridRowsPerKey.getOrElse(0L))
       // one series per key: the record key is the series key
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col(key))
       else result
-    case "profile" =>
-      require(!df.isStreaming,
-        "profile is batch-only (global exact distinct counts); use windowed " +
-          "aggregations or approx_count_distinct streams for live profiles")
+    case t: Profile =>
       val result = graft.operators.Profile.columnStats(df, t.columns,
         approxDistinct = t.approx)
       // a profile table is keyed by the profiled column's name
       // (compacted-topic semantics, same rule as heavy_hitters' item)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("col_name"))
       else result
-    case "snapshot_drift" if t.timeColumn.isDefined =>
+    case t: SnapshotDrift if t.windowed =>
       // WINDOWED drift MONITOR (the X29 streaming form): per (window,
       // stratum?) cell, the four embedding-drift metrics against a STORED
       // baseline summary (summaryPath — validated present by the spec).
@@ -1900,17 +1846,8 @@ object Interpreter extends Logging {
       // mid-batch — and the batch twin of the same declaration produces
       // the identical flagged table (stream==batch pinned in
       // StreamRunnerSpec; the batch-read-back form is oracle-checked).
-      // perBatch baseline binding needs the foreachBatch split — the
-      // ordinary build would bake the baseline read into the static plan,
-      // silently giving the read-once semantics the declaration opted out
-      // of. Batch runs re-read artifacts per run anyway, so the knob is
-      // only meaningful (and only refused) on a stream.
-      require(!df.isStreaming || !t.baselineRefresh.contains("perBatch"),
-        s"[$specId] snapshot_drift baselineRefresh: \"perBatch\" on a " +
-          "stream must start through StreamRunner.startRefreshingMonitor " +
-          "(the foreachBatch form that re-reads the baseline each " +
-          "micro-batch); the ordinary entry points bind the baseline once " +
-          "at query start")
+      // a perBatch baseline binding on a stream starts through
+      // StreamRunner.startRefreshingMonitor (batchOnly refuses it here)
       val (src, win) = eventWindow(df, t)
       if (t.summaryPath.isDefined) {
         // EMBEDDING monitor (summaryPath — the original windowed form)
@@ -1919,7 +1856,7 @@ object Interpreter extends Logging {
           resolvePath(t.summaryPath.get, dataDir, specId), grouped, specId)
         val result = graft.operators.Drift.windowedEmbeddingDrift(
           src, t.embeddingColumns.head, t.embeddingGroupBy, win, baseline,
-          t.numericMaxAbsDelta, t.numericMaxRelDelta)
+          t.maxAbsDelta, t.maxRelDelta)
         // cell identity: (window, stratum?, col_name, metric)
         windowedKey(result, df,
           t.embeddingGroupBy.map(_ => "category").toSeq ++
@@ -1936,7 +1873,7 @@ object Interpreter extends Logging {
         requireStatsCover(baseline, t.numericColumns, p, specId)
         val result = graft.operators.Drift.windowedScalarDrift(
           src, t.numericColumns, t.groupColumns, win, baseline,
-          t.numericMaxAbsDelta, t.numericMaxRelDelta)
+          t.maxAbsDelta, t.maxRelDelta)
         windowedKey(result, df, Seq("col_name", "category", "metric"))
       } else {
         // PERCENTILE monitor (quantilePath — round-17 directive #2b): each
@@ -1947,17 +1884,11 @@ object Interpreter extends Logging {
           resolvePath(t.quantilePath.get, dataDir, specId),
           t.groupColumns, specId)
         val result = graft.operators.Drift.windowedQuantileDrift(
-          src, t.column.get, t.groupColumns, win, oldSk, t.numericQuantiles,
-          t.numericMaxAbsDelta, t.numericMaxRelDelta)
+          src, t.column.get, t.groupColumns, win, oldSk, t.quantiles,
+          t.maxAbsDelta, t.maxRelDelta)
         windowedKey(result, df, Seq("col_name", "category", "metric"))
       }
-    case "snapshot_drift" =>
-      require(!df.isStreaming,
-        "snapshot_drift is batch-only (it compares two complete corpus " +
-          "snapshots; a stream has no final distribution to compare — run " +
-          "it between ingest rounds on the materialized snapshots; for a " +
-          "LIVE per-window monitor declare timeColumn + every + watermark " +
-          "with summaryPath — the windowed streaming form)")
+    case t: SnapshotDrift =>
       // the frame is the NEW snapshot, comparePath the OLD — the natural
       // reading of "drift of the incoming snapshot against the last one".
       // Lazy: a purely artifact-backed declaration (summaryPath /
@@ -2090,7 +2021,7 @@ object Interpreter extends Logging {
           else concat_ws("/", t.groupColumns.map(c =>
             col(c).cast(StringType)): _*)
         graft.operators.Drift.driftFromQuantileSketches(
-            oldSk, newSk, t.groupColumns, t.numericQuantiles)
+            oldSk, newSk, t.groupColumns, t.quantiles)
           .select(lit(t.column.get).as("col_name"), col("metric"),
             cat.as("category"),
             col("old_value"), col("new_value"), col("delta"))
@@ -2134,12 +2065,12 @@ object Interpreter extends Logging {
               "old_value", "new_value", "delta")) ++ withCat)
           .reduce(_.unionByName(_))
       val result = graft.operators.Drift.gated(combined,
-        t.numericMaxAbsDelta, t.numericMaxRelDelta)
+        t.maxAbsDelta, t.maxRelDelta)
       // a drift table is keyed by the inspected column (compacted-topic
       // semantics, same rule as profile's col_name)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("col_name"))
       else result
-    case "embedding_summary" if t.timeColumn.isDefined =>
+    case t: EmbeddingSummary if t.windowed =>
       // WINDOWED form — the incrementally-maintained drift artifact: one
       // ≤ dim-row summary per (tumbling window, stratum?) cell, built by
       // one stateful aggregation on a watermarked stream (update mode
@@ -2151,29 +2082,24 @@ object Interpreter extends Logging {
       // global crawl artifact.
       val (src, win) = eventWindow(df, t)
       val result = graft.operators.Drift.embeddingSummaryWindowed(
-        src, t.column.get, t.embeddingGroupBy, win)
+        src, t.column, t.embeddingGroupBy, win)
       // the record key is the cell identity: (window, stratum?, dimension)
       windowedKey(result, df,
         t.embeddingGroupBy.map(_ => "category").toSeq :+ "i")
-    case "embedding_summary" =>
-      require(!df.isStreaming,
-        "global embedding_summary is batch-only (one artifact per complete " +
-          "snapshot); declare timeColumn + every + watermark for the " +
-          "windowed streaming form (an incrementally-maintained summary " +
-          "table)")
+    case t: EmbeddingSummary =>
       // the crawl-time artifact step (X29 stored-artifact discipline):
       // REPLACES the row set with the ≤ (groups ×) dim-row summary — sink
       // it to parquet and later snapshot_drift declarations answer via
       // summaryPath without rescanning this snapshot
       val result = graft.operators.Drift.embeddingSummary(
-        df, t.column.get, t.embeddingGroupBy)
+        df, t.column, t.embeddingGroupBy)
       if (df.columns.contains(KeyCol))
         result.withColumn(KeyCol, t.embeddingGroupBy match {
           case Some(_) => struct(col("category"), col("i"))
           case None    => col("i")
         })
       else result
-    case "scalar_summary" if t.timeColumn.isDefined =>
+    case t: ScalarSummary if t.windowed =>
       // WINDOWED form — the incrementally-maintained NUMERIC summary table
       // (the scalar analogue of windowed embedding_summary, same linearity
       // argument): one native stateful aggregation per (window, dims) cell,
@@ -2182,12 +2108,7 @@ object Interpreter extends Logging {
       val result = graft.operators.Drift.scalarSummaryWindowed(
         src, t.columns, t.groupColumns, win)
       windowedKey(result, df, t.groupColumns :+ "col_name")
-    case "scalar_summary" =>
-      require(!df.isStreaming,
-        "global scalar_summary is batch-only (one artifact per complete " +
-          "snapshot); declare timeColumn + every + watermark for the " +
-          "windowed streaming form (an incrementally-maintained summary " +
-          "table)")
+    case t: ScalarSummary =>
       // the crawl-time artifact step for the NUMERIC drift legs: REPLACES
       // the row set with the ≤ cells × columns long-shape summary — sink it
       // to parquet and later windowed snapshot_drift monitors answer via
@@ -2200,11 +2121,7 @@ object Interpreter extends Logging {
           case dims  => struct((dims :+ "col_name").map(col): _*)
         })
       else result
-    case "merge_embedding_summaries" =>
-      require(!df.isStreaming,
-        "merge_embedding_summaries is batch-only (it folds stored " +
-          "artifacts; maintain a LIVE summary with the windowed " +
-          "embedding_summary form instead)")
+    case _: MergeEmbeddingSummaries =>
       // maintenance verb over stored artifacts: the frame is a UNION of
       // embedding_summary outputs (daily crawls, per-shard jobs) and the
       // fold is exact summation — grouped-ness is inferred from the
@@ -2218,11 +2135,7 @@ object Interpreter extends Logging {
         result.withColumn(KeyCol,
           if (grouped) struct(col("category"), col("i")) else col("i"))
       else result
-    case "merge_scalar_summaries" =>
-      require(!df.isStreaming,
-        "merge_scalar_summaries is batch-only (it folds stored artifacts; " +
-          "maintain a LIVE summary with the windowed scalar_summary form " +
-          "instead)")
+    case _: MergeScalarSummaries =>
       // maintenance verb over stored scalar_summary artifacts: the frame
       // is a UNION of them (shards, daily crawls, windowed cells) and the
       // fold is exact summation. Dims are inferred from the schema —
@@ -2247,18 +2160,14 @@ object Interpreter extends Logging {
           case ds    => struct((ds :+ "col_name").map(col): _*)
         })
       else result
-    case "pack" =>
+    case t: Pack =>
       // row-PRESERVING (appends pack_id/pack_slot), so the record key
       // rides through untouched; partition-local running bins make the
       // assignment partitioning-dependent — declared rows-only, invariants
       // (every row packed once, budget respected, slots contiguous) pinned
       // in tests exactly like the code-path x5_pack
-      require(!df.isStreaming,
-        "pack is batch-only (partition-local running-bin state has no " +
-          "streaming analogue); pack the stored batch output instead")
-      graft.operators.Packing.pack(df, t.column.get, t.budget.get,
-        t.orderColumns)
-    case "distinct_rollup" if t.timeColumn.isDefined =>
+      graft.operators.Packing.pack(df, t.column, t.budget, t.orderColumns)
+    case t: DistinctRollup if t.windowed =>
       // WINDOWED form — the INCREMENTALLY-MAINTAINED sketch table: one HLL
       // sketch per (tumbling window, dims...) cell, built by Spark's
       // stateful aggregation on a stream (update mode emits each refreshed
@@ -2270,20 +2179,16 @@ object Interpreter extends Logging {
       val (src, win) = eventWindow(df, t)
       val dims = t.groupColumns
       val g = src.groupBy(win.as("__w") +: dims.map(col): _*)
-        .agg(hll_sketch_agg(col(t.column.get)).as("sketch"),
-          count(col(t.column.get)).as("n_rows"))
+        .agg(hll_sketch_agg(col(t.column)).as("sketch"),
+          count(col(t.column)).as("n_rows"))
       val result = g.select((col("__w.start").as("window_start") +: dims.map(col)) ++ Seq(
         col("sketch"),
         hll_sketch_estimate(col("sketch")).as("n_distinct"),
         col("n_rows")): _*)
       windowedKey(result, df, dims)
-    case "distinct_rollup" =>
-      require(!df.isStreaming,
-        "global distinct_rollup is batch-only on the config path; declare " +
-          "timeColumn + every + watermark for the windowed streaming form " +
-          "(an incrementally-maintained sketch table)")
+    case t: DistinctRollup =>
       val sk = graft.operators.Profile.distinctSketches(
-        df, t.groupColumns, t.column.get)
+        df, t.groupColumns, t.column)
       // keepSketch → the STORED X25 artifact form: the mergeable sketch
       // column stays in the output (the windowed form's convention), so
       // the written table feeds Profile.rollupDistinct and snapshot_drift's
@@ -2298,7 +2203,7 @@ object Interpreter extends Logging {
         case Seq(g) => col(g)
         case many   => struct(many.map(col): _*)
       }) else result
-    case "quantile_rollup" if t.timeColumn.isDefined =>
+    case t: QuantileRollup if t.windowed =>
       // WINDOWED form — same maintained-table pattern as windowed
       // distinct_rollup: one mergeable centroid sketch per (window, dims)
       // cell (the native QuantileSketchBuild aggregate carries its state
@@ -2309,9 +2214,9 @@ object Interpreter extends Logging {
       val dims = t.groupColumns
       val g = src.groupBy(win.as("__w") +: dims.map(col): _*)
         .agg(graft.functions.QuantileSketch.sketch(
-            col(t.column.get).cast("double")).as("qsketch"),
-          count(col(t.column.get)).as("n_rows"))
-      val qs = t.numericQuantiles
+            col(t.column).cast("double")).as("qsketch"),
+          count(col(t.column)).as("n_rows"))
+      val qs = t.quantiles
       // materialize the UDF's array ONCE per cell, then fan out per-quantile
       // items from the named column: Spark does not reliably CSE a
       // nondeterministic-wrapped UDF repeated across projection items, so
@@ -2325,13 +2230,9 @@ object Interpreter extends Logging {
       val result = withEst.select((col("__w.start").as("window_start") +: dims.map(col)) ++
         (col("qsketch") +: qCols) :+ col("n_rows"): _*)
       windowedKey(result, df, dims)
-    case "quantile_rollup" =>
-      require(!df.isStreaming,
-        "global quantile_rollup is batch-only (merging sketch state on a " +
-          "stream is an unwatermarked aggregation); declare timeColumn + " +
-          "every + watermark for the windowed streaming form")
+    case t: QuantileRollup =>
       val sk = graft.operators.Profile.quantileSketches(
-        df, t.groupColumns, t.column.get)
+        df, t.groupColumns, t.column)
       // keepSketch → the STORED X26 artifact form (mirrors
       // distinct_rollup's): the mergeable centroid sketch stays in the
       // output (the windowed form's convention), so the written table
@@ -2339,7 +2240,7 @@ object Interpreter extends Logging {
       // quantilePath leg without ever rescanning this snapshot
       val result =
         if (t.keepSketch) {
-          val qs = t.numericQuantiles
+          val qs = t.quantiles
           val withEst = sk.withColumn("__est",
             graft.functions.QuantileSketch.estimateSketch(col("qsketch"), qs))
           val qCols = qs.zipWithIndex.map { case (q, i) =>
@@ -2348,13 +2249,13 @@ object Interpreter extends Logging {
           withEst.select(t.groupColumns.map(col) ++
             (col("qsketch") +: qCols) :+ col("n_rows"): _*)
         } else graft.operators.Profile.rollupQuantiles(
-          sk, t.groupColumns, t.numericQuantiles)
+          sk, t.groupColumns, t.quantiles)
       // an aggregation's output key IS the group key (same rule as top_k)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, t.groupColumns match {
         case Seq(g) => col(g)
         case many   => struct(many.map(col): _*)
       }) else result
-    case "knn" if t.indexPath.isDefined && t.queryPath.isEmpty =>
+    case t: Knn if t.queryPath.isEmpty =>
       // QUERY-FRAME route against the STORED index (the streaming
       // retrieval leg — round-17 directive #6 — and its batch twin): with
       // no queryPath, the FRAME is the query set. The artifact is
@@ -2363,7 +2264,7 @@ object Interpreter extends Logging {
       // ONE stateful top-k aggregation; the windowed declaration keys
       // heaps by (window, query) so state finalizes and evicts past the
       // watermark.
-      val idC = t.idColumn.get; val vecC = t.column.get; val kk = t.k.get
+      val idC = t.idColumn; val vecC = t.column; val kk = t.k
       val p = resolvePath(t.indexPath.get, dataDir, specId)
       val meta = requireIndexMeta(df.sparkSession, p, t, specId)
       require(!df.isStreaming || meta.method != "quantized",
@@ -2372,18 +2273,10 @@ object Interpreter extends Logging {
           "which a stream cannot run); store an ivf or lsh index for " +
           "streaming retrieval")
       val (src, win) =
-        if (t.timeColumn.isDefined) {
+        if (t.windowed) {
           val (s, w) = eventWindow(df, t)
           (s, Some((t.timeColumn.get, w)))
-        } else {
-          require(!df.isStreaming || t.unboundedOk,
-            "streaming knn holds one top-k heap per DISTINCT query id in " +
-              "state forever without a window — declare timeColumn + " +
-              "every + watermark (cells finalize and evict past the " +
-              "watermark) or unboundedOk:true to acknowledge the " +
-              "commitment")
-          (df, None)
-        }
+        } else (df, None)
       val queries = src.withColumn(vecC, col(vecC).cast("array<double>"))
       val result = graft.operators.Similarity.indexedTopK(queries, idC,
         vecC, kk, p, nProbe = t.nProbe.getOrElse(0),
@@ -2397,7 +2290,7 @@ object Interpreter extends Logging {
         case Some(_) => struct(col("window_start"), col("query_id"), col("rank"))
         case None    => struct(col("query_id"), col("rank"))
       })
-    case "knn" if t.indexPath.isDefined =>
+    case t: Knn if t.indexPath.isDefined =>
       // the STORED-INDEX route (X3's stored-artifact discipline): the
       // artifact at indexPath is SELF-CONTAINED (postings carry the
       // vectors), so the corpus frame is not trained on, hashed, or even
@@ -2405,13 +2298,7 @@ object Interpreter extends Logging {
       // broadcast query set, at any corpus size. Declared geometry must
       // match the artifact (the meta preflight below); nProbe stays a
       // query-time recall/scan knob.
-      require(!df.isStreaming,
-        "knn with queryPath is batch-only: the frame is the CORPUS side, " +
-          "and a per-query top-k over an unbounded corpus never finalizes; " +
-          "for streaming retrieval declare indexPath WITHOUT queryPath — " +
-          "the frame is then the query stream, scored against the stored " +
-          "index (with timeColumn + every + watermark so heap state evicts)")
-      val idC = t.idColumn.get; val vecC = t.column.get; val kk = t.k.get
+      val idC = t.idColumn; val vecC = t.column; val kk = t.k
       val p = resolvePath(t.indexPath.get, dataDir, specId)
       val meta = requireIndexMeta(df.sparkSession, p, t, specId)
       val q0 = df.sparkSession.read.parquet(
@@ -2429,19 +2316,13 @@ object Interpreter extends Logging {
         else raw
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("query_id"))
       else result
-    case "knn" =>
+    case t: Knn =>
       // declarative similarity search: the FRAME is the corpus (the big
       // side — it stays distributed, scored map-side, reduced by the
       // partial-aggregating TopK heap), the query set is a small batch
       // parquet artifact read once at build time (same second-frame
       // pattern as contamination_screen's benchPath) and broadcast.
-      require(!df.isStreaming,
-        "knn with queryPath is batch-only: the frame is the CORPUS side, " +
-          "and a per-query top-k over an unbounded corpus never finalizes; " +
-          "for streaming retrieval declare indexPath WITHOUT queryPath — " +
-          "the frame is then the query stream, scored against the stored " +
-          "index (with timeColumn + every + watermark so heap state evicts)")
-      val idC = t.idColumn.get; val vecC = t.column.get; val kk = t.k.get
+      val idC = t.idColumn; val vecC = t.column; val kk = t.k
       // vectors are stored array<float> (4-byte storage form); score in
       // double like every x3 query so the config path hash-matches them.
       // candidateFilter pre-filters the CORPUS side (the frame carries its
@@ -2483,24 +2364,19 @@ object Interpreter extends Logging {
       // semantics, same rule as top_k's group key)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("query_id"))
       else result
-    case "knn_index" =>
+    case t: KnnIndex =>
       // the crawl-time BUILD verb (the artifact half of the stored-index
       // loop, mirroring embedding_summary / distinct_rollup keepSketch):
       // trains/hashes the corpus ONCE, writes the self-contained index
       // under indexPath, and REPLACES the row set with a one-row build
       // report. Eager by design (the write IS the op), the sanctioned
       // posture for build-time transforms (dedup collapse, profile).
-      require(!df.isStreaming,
-        "knn_index is batch-only (it trains and stores a complete corpus " +
-          "index at crawl time; index the stored batch snapshot, not a " +
-          "stream)")
-      val vecC = t.column.get
+      val vecC = t.column
       // vectors stored array<float> cast to the double scoring form ONCE at
       // build — the stored index then hash-matches the direct x3 routes
       val corpus = df.withColumn(vecC, col(vecC).cast("array<double>"))
       val result = graft.operators.Similarity.buildIndex(corpus,
-        t.idColumn.get, vecC, t.method.get,
-        resolvePath(t.indexPath.get, dataDir, specId),
+        t.idColumn, vecC, t.method, resolvePath(t.indexPath, dataDir, specId),
         nCells = t.nCells.getOrElse(0), nAssign = t.nAssign.getOrElse(2),
         nTables = t.nTables.getOrElse(16),
         planesPerTable = t.planesPerTable.getOrElse(4),
@@ -2511,37 +2387,29 @@ object Interpreter extends Logging {
       // semantics, same rule as profile's col_name)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("method"))
       else result
-    case "knn_index_append" =>
+    case t: KnnIndexAppend =>
       // the INCREMENTAL-MAINTENANCE verb of the stored-index loop: the
       // frame is the NEW ingest batch's vectors, assigned with the STORED
       // geometry (no retraining — meta pins centroids/hyperplanes/codes)
       // and committed as one new posting generation, meta last
       // (Similarity.appendIndex owns the crash ordering). Eager like
       // knn_index; REPLACES the row set with a one-row append report.
-      require(!df.isStreaming,
-        "knn_index_append is batch-only (it extends a stored corpus index " +
-          "with a completed ingest batch; append the stored batch " +
-          "snapshot, not a stream)")
       val result = graft.operators.Similarity.appendIndex(df,
-        t.idColumn.get, t.column.get,
-        resolvePath(t.indexPath.get, dataDir, specId))
+        t.idColumn, t.column, resolvePath(t.indexPath, dataDir, specId))
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("method"))
       else result
-    case "knn_index_compact" =>
+    case t: KnnIndexCompact =>
       // the append lifecycle's closing maintenance verb: fold the
       // artifact's accumulated posting generations into one (a pure copy —
       // search results are bit-identical; Similarity.compactIndex owns the
       // crash ordering). The source frame is ignored (the artifact is the
       // operand); REPLACES the row set with a one-row compaction report.
-      require(!df.isStreaming,
-        "knn_index_compact is batch-only (it rewrites a stored artifact's " +
-          "posting layout; run it between ingest rounds)")
       val result = graft.operators.Similarity.compactIndex(df.sparkSession,
-        resolvePath(t.indexPath.get, dataDir, specId),
+        resolvePath(t.indexPath, dataDir, specId),
         retainFolded = t.retainFolded)
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("method"))
       else result
-    case "knn_index_delete" =>
+    case t: KnnIndexDelete =>
       // the REMOVAL verb of the stored-index loop (takedown/opt-out/
       // post-hoc dedup pruning — the reference's compacted-topic null-
       // payload deletion, TopicProvisioner.java:37-43): the frame is the
@@ -2550,28 +2418,23 @@ object Interpreter extends Logging {
       // searches anti-join it, and the next knn_index_compact physically
       // drops the rows and clears the set. Eager like the other
       // maintenance verbs; REPLACES the row set with a one-row report.
-      require(!df.isStreaming,
-        "knn_index_delete is batch-only (it commits a completed takedown " +
-          "batch's tombstone generation; delete the stored id list, not " +
-          "a stream)")
       val result = graft.operators.Similarity.deleteIndex(df,
-        t.idColumn.get, resolvePath(t.indexPath.get, dataDir, specId))
+        t.idColumn, resolvePath(t.indexPath, dataDir, specId))
       if (df.columns.contains(KeyCol)) result.withColumn(KeyCol, col("method"))
       else result
-    case "contamination_screen" =>
+    case t: ContaminationScreen =>
       // the benchmark side is a BATCH parquet read even under a streaming
       // spec (an eval set is a fixed artifact, not a stream), compiled once
       // at build time to its distinct shingle hashes — bounded by
       // construction (eval sets are small; the corpus side never collects).
       // The projection form keeps the op stateless → streaming-legal in
       // any output mode, and shuffle-free in batch.
-      val bench0 = df.sparkSession.read.parquet(resolvePath(t.benchPath.get, dataDir, specId))
+      val bench0 = df.sparkSession.read.parquet(resolvePath(t.benchPath, dataDir, specId))
       val bench = t.benchFilter.fold(bench0)(f => bench0.filter(expr(f)))
       val hashes = graft.operators.TextAnalysis.benchShingleHashes(
-        bench, t.column.get, t.shingleSize.get)
+        bench, t.column, t.shingleSize)
       graft.operators.TextAnalysis.contaminationStream(df, hashes,
-        t.idColumn.get, t.column.get, t.shingleSize.get, carryCols = keyCarry(df))
-    case other => throw new IllegalArgumentException(s"unknown transform op $other")
+        t.idColumn, t.column, t.shingleSize, carryCols = keyCarry(df))
   }
 
   /** Tumbling event-time window for the sketch/top-k family's windowed
@@ -2581,23 +2444,17 @@ object Interpreter extends Logging {
     * expression. One helper so stream-built and batch-built cells are the
     * same by construction.
     */
-  private def eventWindow(df: DataFrame, t: TransformOp): (DataFrame, Column) = {
+  private def eventWindow(df: DataFrame, t: Windowed): (DataFrame, Column) = {
     val ts = t.timeColumn.get
-    val src =
-      if (df.isStreaming) {
-        require(t.watermark.isDefined,
-          s"streaming ${t.op} requires watermark alongside timeColumn/every " +
-            "— unbounded window state is the exact commitment the windowed " +
-            "form exists to avoid")
-        df.withWatermark(ts, t.watermark.get)
-      } else df
+    // the streaming watermark is present: batchOnly refused a stream without
+    val src = if (df.isStreaming) df.withWatermark(ts, t.watermark.get) else df
     // slide declared → overlapping windows (each event in every/slide
     // cells; state and emission volume scale by the same factor);
     // windowType session → `every` is the inactivity gap, cells are
     // gap-merged sessions per dims group (Append emission — see
     // StreamRunner.outputModeFor)
     val win =
-      if (t.windowType.contains("session")) session_window(col(ts), t.every.get)
+      if (t.session) session_window(col(ts), t.every.get)
       else window(col(ts), t.every.get, t.slide.getOrElse(t.every.get))
     (src, win)
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.config.{PipelineSpec, ProcessingMode, SchemaCatalog, TopicConfig}
+import graft.config.{StateBounded, TransformOp, Windowed}
+import graft.config.TransformOp.{DedupExact, DedupNear, Knn}
 import graft.pipeline.Interpreter
 import graft.sources.SourceResolver
 
@@ -47,35 +49,32 @@ object StreamRunner extends Logging {
     // emission, state ∝ groups active within the TTL). build() logs the
     // unbounded commitment once per start so it is explicit, not
     // discovered from a state-store OOM.
-    case _ if spec.transform.exists(t =>
-      t.op == "dedup_exact" && t.stateTtl.isEmpty) => OutputMode.Update()
-    // session-windowed sketch ops: same Spark restriction as session
+    case _ if has(spec) { case t: DedupExact => t.stateTtl.isEmpty } =>
+      OutputMode.Update()
+    // session-windowed ops: same Spark restriction as session
     // AGGREGATION — merging sessions cannot be per-key upserts, so Append
     // (each session emits once, finalized past the watermark)
-    case _ if spec.transform.exists(t => t.timeColumn.isDefined &&
-      t.windowType.contains("session") &&
-      Set("top_k", "heavy_hitters", "distinct_rollup", "quantile_rollup",
-        "embedding_summary", "scalar_summary", "snapshot_drift",
-        "knn").contains(t.op)) => OutputMode.Append()
-    // the windowed sketch/top-k transform family is a stateful aggregation
-    // whose emission is a per-cell changelog (each micro-batch refreshes
-    // the touched (window, dims) cells; the snapshot sink upserts them).
-    // Append would hold every cell until its window passes the watermark —
-    // correct for fire-once delivery, but it defeats the continuously-
-    // maintained-table semantics these ops declare.
-    case _ if spec.transform.exists(t => t.timeColumn.isDefined &&
-      Set("top_k", "heavy_hitters", "distinct_rollup", "quantile_rollup",
-        "embedding_summary", "scalar_summary", "snapshot_drift",
-        "knn").contains(t.op)) => OutputMode.Update()
+    case _ if has(spec) { case w: Windowed => w.windowed && w.session } =>
+      OutputMode.Append()
+    // a windowed op is a stateful aggregation whose emission is a per-cell
+    // changelog (each micro-batch refreshes the touched (window, dims)
+    // cells; the snapshot sink upserts them). Append would hold every cell
+    // until its window passes the watermark — correct for fire-once
+    // delivery, but it defeats the continuously-maintained-table semantics
+    // these ops declare.
+    case _ if has(spec) { case w: Windowed => w.windowed } => OutputMode.Update()
     // UNWINDOWED streaming knn (the unboundedOk escape hatch): an
     // unwatermarked per-query top-k aggregation — Append would reject it
     // at start exactly like unbounded dedup_exact; its emission is a
     // per-query changelog, so Update (round-18 review)
-    case _ if spec.transform.exists(t => t.op == "knn" &&
-      t.indexPath.isDefined && t.queryPath.isEmpty &&
-      t.timeColumn.isEmpty) => OutputMode.Update()
+    case _ if has(spec) { case t: Knn => t.queryPath.isEmpty && !t.windowed } =>
+      OutputMode.Update()
     case _ => OutputMode.Append()
   }
+
+  /** Whether any transform of `spec` matches `p`. */
+  private def has(spec: PipelineSpec)(p: PartialFunction[TransformOp, Boolean]): Boolean =
+    spec.transform.exists(p.applyOrElse(_, (_: TransformOp) => false))
 
   /** Build the spec's plan; on a streaming frame also attach the R13 peek
     * channel as named observed metrics (`<spec.id>_peek`: row count +
@@ -89,14 +88,12 @@ object StreamRunner extends Logging {
   def build(spark: SparkSession, spec: PipelineSpec, sources: SourceResolver): DataFrame = {
     val df = Interpreter.build(spark, spec, sources)
     import org.apache.spark.sql.functions.{col, count, lit, when}
-    if (df.isStreaming && spec.transform.exists(t =>
-        t.op == "dedup_exact" && t.stateTtl.isEmpty))
+    if (df.isStreaming && has(spec) { case t: DedupExact => t.stateTtl.isEmpty })
       logWarning(s"[${spec.id}] streaming dedup_exact keeps state per distinct " +
         "dup group with NO eviction (history-wide dedup semantics) — size the " +
         "state store for the group cardinality, or declare stateTtl; see " +
         "outputModeFor")
-    if (df.isStreaming && spec.transform.exists(t =>
-        t.op == "dedup_near" && t.stateTtl.isEmpty))
+    if (df.isStreaming && has(spec) { case t: DedupNear => t.stateTtl.isEmpty })
       logWarning(s"[${spec.id}] streaming dedup_near keeps the LSH signature " +
         "index (8 + 8*numHashes bytes per doc) with NO eviction — budget " +
         "the state store for the full corpus, or declare stateTtl")
@@ -130,7 +127,7 @@ object StreamRunner extends Logging {
   private def applyTrigger[T](spec: PipelineSpec,
       w: org.apache.spark.sql.streaming.DataStreamWriter[T])
       : org.apache.spark.sql.streaming.DataStreamWriter[T] =
-    if (spec.transform.exists(_.stateTtl.isDefined))
+    if (has(spec) { case t: StateBounded => t.stateTtl.isDefined })
       w.trigger(Trigger.ProcessingTime("500 milliseconds"))
     else w
 

@@ -450,6 +450,28 @@ class DoctorSpec extends SparkSuite {
     assert(!outOk.contains("windowed_state_amplification"), outOk)
   }
 
+  test("windowed-state pricing covers a sliding scalar_summary (every windowed op is priced)") {
+    // the same 360-generation declaration on the scalar artifact op, which
+    // the pricing used to skip: its per-cell buffers follow the same formula
+    def spec(slide: String) =
+      s"""{"id":"win-scalar","processingMode":"SIMPLE_STREAM",
+         |"sourceTopic":{"name":"events","keyClass":"java.lang.Long"},
+         |"planAudit":"fail",
+         |"transform":[{"op":"scalar_summary","columns":["value"],
+         |  "groupColumns":["event_type"],"timeColumn":"ts","every":"1 hour",
+         |  "watermark":"2 hours","slide":"$slide"}],
+         |"outputTopic":{"enabled":true,"name":"win-scalar-out"}}""".stripMargin
+    val (codeBad, outBad) = runDoctor(write("win_scalar_bad.json",
+      spec("30 seconds")), sf())
+    assert(codeBad == 1, outBad)
+    assert(outBad.contains("windowed_state_amplification") &&
+      outBad.contains("windowed scalar_summary") && outBad.contains("360"), outBad)
+    val (codeOk, outOk) = runDoctor(write("win_scalar_ok.json",
+      spec("15 minutes")), sf())
+    assert(codeOk == 0, outOk)
+    assert(!outOk.contains("windowed_state_amplification"), outOk)
+  }
+
   test("knn stored-index preflight: a stale index warns with both counts named; a fresh one audits clean") {
     // round-16 directive #1c: the staleness story — the artifact's meta
     // pins the indexed corpus row count; a frame whose count diverged

@@ -1262,9 +1262,8 @@ class InterpreterSpec extends SparkSuite {
       "vec_id", "embedding", "quantized", s"$dir/idx")
     val report = graft.pipeline.Interpreter.applyTransform(
       e.filter(col("vec_id") > cut),
-      graft.config.TransformOp(op = "knn_index_append",
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some(s"$dir/idx")),
+      graft.config.TransformOp.KnnIndexAppend(column = "embedding",
+        idColumn = "vec_id", indexPath = s"$dir/idx"),
       None, "t-append").head()
     assert(report.getString(0) == "quantized" &&
       report.getLong(3) == e.count(), report.toString)
@@ -1302,16 +1301,15 @@ class InterpreterSpec extends SparkSuite {
       .write.mode("overwrite").parquet(p)
     def append(df: org.apache.spark.sql.DataFrame, width: Int = 3) =
       graft.pipeline.Interpreter.applyTransform(df,
-        graft.config.TransformOp(op = "shingle_index_append",
-          column = Some("text"), idColumn = Some("doc_id"),
-          shingleSize = Some(width), historyPath = Some(p)),
+        graft.config.TransformOp.ShingleIndexAppend(column = "text",
+          idColumn = "doc_id", shingleSize = width, historyPath = p),
         None, "t-shingle-append")
     val rep = append(mid).head()
     assert(rep.getInt(0) == 3 && rep.getLong(1) == mid.count() &&
       rep.getLong(2) == hist.count() + mid.count(), rep.toString)
     def screen(): Set[Long] = graft.pipeline.Interpreter.applyTransform(batch,
-        graft.config.TransformOp(op = "dedup_near", method = Some("jaccard"),
-          column = Some("text"), idColumn = Some("doc_id"),
+        graft.config.TransformOp.DedupNear(method = Some("jaccard"),
+          column = "text", idColumn = "doc_id",
           shingleSize = Some(3), threshold = Some(0.8),
           historyPath = Some(p)),
         None, "t-screen")
@@ -1580,7 +1578,7 @@ class InterpreterSpec extends SparkSuite {
       s"both-sides-stored diverged from the frame-scanned route:\n$scanned\nvs\n$stored")
     // a WINDOWED scalar_summary artifact is refused with the merge fix named
     graft.pipeline.Interpreter.applyTransform(ev,
-        graft.config.TransformOp(op = "scalar_summary", columns = Seq("value"),
+        graft.config.TransformOp.ScalarSummary(columns = Seq("value"),
           groupColumns = Seq("event_type"), timeColumn = Some("ts"),
           every = Some("1 hour")),
         None, "t-win-stats")
@@ -2183,6 +2181,38 @@ class InterpreterSpec extends SparkSuite {
           |""".stripMargin)
     }
     assert(dup.getMessage.contains("duplicate pipeline ids"), dup.getMessage)
+  }
+
+  test("whole-number YAML literals in weights, quantiles and drift bounds decode as Doubles") {
+    // YAML `1` is an integer token; Jackson erases the element type of the
+    // Map/Seq, so without contentAs these would arrive as boxed Integers and
+    // throw at the first unbox (in validate or deep inside the build)
+    val specs = PipelineSpec.listFromYaml(
+      """- id: y-mix
+        |  processingMode: SIMPLE_STREAM
+        |  sourceTopic: {name: documents}
+        |  transform:
+        |    - {op: weighted_mix, column: lang, idColumn: doc_id,
+        |       weights: {en: 1, de: 0}, defaultWeight: 0}
+        |- id: y-quant
+        |  processingMode: SIMPLE_STREAM
+        |  sourceTopic: {name: events}
+        |  transform:
+        |    - {op: quantile_rollup, column: value, groupColumns: [event_type],
+        |       quantiles: [0, 1]}
+        |- id: y-drift
+        |  processingMode: SIMPLE_STREAM
+        |  sourceTopic: {name: events}
+        |  transform:
+        |    - {op: snapshot_drift, comparePath: "<dataDir>/events.parquet",
+        |       numericColumns: [value], maxAbsDelta: {null_rate: 1}}
+        |""".stripMargin)
+    val resolver = new ParquetSourceResolver(sf(), TestdataCatalog)
+    specs.foreach(s => assert(
+      graft.pipeline.Interpreter.build(spark, s, resolver).collect().nonEmpty, s.id))
+    val quant = graft.pipeline.Interpreter.build(spark, specs(1), resolver)
+    assert(quant.columns.contains("p0") && quant.columns.contains("p100"),
+      quant.columns.mkString(", "))
   }
 
   test("runAll: one YAML document drives many topologies over ONE shared source registry (KTableRegistry semantic)") {

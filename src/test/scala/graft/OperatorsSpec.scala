@@ -1640,7 +1640,7 @@ class OperatorsSpec extends SparkSuite {
       s"sharded merge $merged != one-shot $direct")
     // windowed cells (hourly) fold to the same global artifact
     val windowed = graft.pipeline.Interpreter.applyTransform(ev,
-      graft.config.TransformOp(op = "scalar_summary", columns = Seq("value"),
+      graft.config.TransformOp.ScalarSummary(columns = Seq("value"),
         groupColumns = Seq("event_type"), timeColumn = Some("ts"),
         every = Some("1 hour")),
       None, "t-scalar-win")

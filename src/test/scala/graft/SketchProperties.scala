@@ -154,6 +154,36 @@ object SketchProperties extends Properties("sketches") {
       run(k, true, pairs, parts) == run(k, false, pairs.distinct, parts)
     }
 
+  // degenerate scores: NaN and both zeros, few ids so the same pair recurs —
+  // and recurs non-adjacently ((0.0,2), (0.0,3), (-0.0,2) interleave)
+  private val degenerateGen: Gen[List[(Double, Long)]] = Gen.listOf(Gen.zip(
+    Gen.oneOf(Double.NaN, 0.0, -0.0, 1.0, -1.0), Gen.chooseNum(0L, 3L)))
+
+  /** The former boxed form: `ArrayBuffer[(Double, Long)].distinct` (tuple
+    * equality: NaN != NaN, 0.0 == -0.0), sorted (score desc, id asc) under
+    * the total Double order, first k.
+    */
+  private def boxedTopK(k: Int, pairs: List[(Double, Long)]): Seq[(Double, Long)] =
+    pairs.to(scala.collection.mutable.ArrayBuffer).distinct.toSeq
+      .sortBy(p => (-p._1, p._2))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(k)
+
+  property("topkDistinct == the boxed distinct-sort-take reference on NaN / ±0.0 scores") =
+    // (0.0,2) and (-0.0,2) are one pair, but sort apart around (0.0,3)
+    (Prop(run(8, true, List((0.0, 2L), (0.0, 3L), (-0.0, 2L)), 1).size == 2) :|
+      "a non-adjacent 0.0/-0.0 pair of one id collapses") &&
+    Prop.forAll(degenerateGen, Gen.chooseNum(1, 8), Gen.chooseNum(1, 4)) {
+      (pairs, k, parts) =>
+        val got = run(k, true, pairs, parts)
+        // the reference reads -0.0 as 0.0: which zero it kept (and so its
+        // order among zero-score pairs) depended on arrival order
+        val want = boxedTopK(k, pairs.map { case (s, i) => (s + 0.0, i) })
+        Prop(got.size == want.size && got.zip(want).forall { case (g, w) =>
+          java.lang.Double.compare(g._1, w._1) == 0 && g._2 == w._2
+        }) :| s"got $got, want $want"
+    }
+
   // ------------------------------------------------------------ quantization
 
   private val vecGen: Gen[List[Double]] = for {

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.config._
+import graft.config.TransformOp._
 import graft.pipeline.Interpreter
 import graft.sources.ParquetSourceResolver
 
@@ -94,21 +95,16 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Gen.oneOf("20 minutes", "45 minutes").map(gap =>
       WindowDecl(Some("ts"), Some(gap), None, Some("session"), Some("5 minutes"))))
 
-  private def withWindow(op: TransformOp, w: WindowDecl): TransformOp =
-    op.copy(timeColumn = w.timeColumn, every = w.every, slide = w.slide,
-      windowType = w.windowType, watermark = w.watermark)
-
   // ------------------------------------------- valid transform.op generators
 
   property("valid dedup_exact analyzes") = Prop.forAll(docCols) { cols =>
-    analyzes(simple("fz-dedup-exact", "documents", TransformOp(op = "dedup_exact",
-      dupColumns = cols, tieBreak = Some("doc_id"))))
+    analyzes(simple("fz-dedup-exact", "documents", DedupExact(dupColumns = cols,
+      tieBreak = "doc_id")))
   }
 
   property("valid quality_filter analyzes (any nonempty threshold subset)") =
     Prop.forAll(Gen.chooseNum(1, 7)) { mask =>
-      analyzes(simple("fz-quality", "documents", TransformOp(op = "quality_filter",
-        column = Some("text"),
+      analyzes(simple("fz-quality", "documents", QualityFilter(column = "text",
         minTokens = if ((mask & 1) != 0) Some(10L) else None,
         minAvgTokenLen = if ((mask & 2) != 0) Some(2.0) else None,
         maxAvgTokenLen = if ((mask & 4) != 0) Some(12.0) else None)))
@@ -117,18 +113,17 @@ object SpecFuzzProperties extends Properties("specfuzz") {
   property("valid redact_pii analyzes (column and expression forms)") =
     Prop.forAll(Gen.oneOf(true, false)) { viaExpr =>
       val op = if (viaExpr)
-        TransformOp(op = "redact_pii",
-          expression = Some("concat(text, ' mail x@y.zz')"),
+        RedactPii(expression = Some("concat(text, ' mail x@y.zz')"),
           outputField = Some("scrubbed"))
-      else TransformOp(op = "redact_pii", column = Some("text"))
+      else RedactPii(column = Some("text"))
       analyzes(simple("fz-redact", "documents", op))
     }
 
   property("valid dedup_near analyzes (banding arithmetic respected)") =
     Prop.forAll(Gen.chooseNum(1, 5), Gen.chooseNum(0.5, 0.95),
         Gen.oneOf(16, 32, 64)) { (sh, th, nb) =>
-      analyzes(simple("fz-neardup", "documents", TransformOp(op = "dedup_near",
-        column = Some("text"), idColumn = Some("doc_id"),
+      analyzes(simple("fz-neardup", "documents", DedupNear(column = "text",
+        idColumn = "doc_id",
         shingleSize = Some(sh), threshold = Some(th),
         numHashes = Some(nb * 4), bands = Some(nb))))
     }
@@ -136,65 +131,65 @@ object SpecFuzzProperties extends Properties("specfuzz") {
   property("valid chunk analyzes (size >= stride >= 1)") =
     Prop.forAll(Gen.chooseNum(1, 64)) { size =>
       Prop.forAll(Gen.chooseNum(1, size)) { stride =>
-        analyzes(simple("fz-chunk", "documents", TransformOp(op = "chunk",
-          column = Some("text"), idColumn = Some("doc_id"),
-          size = Some(size), stride = Some(stride))))
+        analyzes(simple("fz-chunk", "documents", Chunk(column = "text",
+          idColumn = "doc_id",
+          size = size, stride = stride)))
       }
     }
 
   property("valid contamination_screen analyzes") =
     Prop.forAll(Gen.chooseNum(1, 4)) { sh =>
-      analyzes(simple("fz-contam", "documents", TransformOp(
-        op = "contamination_screen", column = Some("text"),
-        idColumn = Some("doc_id"), shingleSize = Some(sh),
-        benchPath = Some(docsParquet), benchFilter = Some("doc_id % 50 = 0"))))
+      analyzes(simple("fz-contam", "documents", ContaminationScreen(column = "text",
+        idColumn = "doc_id", shingleSize = sh,
+        benchPath = docsParquet, benchFilter = Some("doc_id % 50 = 0"))))
     }
 
   property("valid lang_id / text_stats analyze") =
     Prop.forAll(Gen.oneOf("lang_id", "text_stats"),
         Gen.option(Gen.const("out_col"))) { (opName, out) =>
-      analyzes(simple("fz-text", "documents", TransformOp(op = opName,
-        column = Some("text"),
-        outputField = if (opName == "lang_id") out else None)))
+      analyzes(simple("fz-text", "documents",
+        if (opName == "lang_id") LangId(column = "text", outputField = out)
+        else TextStats(column = "text")))
     }
 
   property("valid stratified_sample analyzes") =
     Prop.forAll(docCols, posSmall) { (cols, interval) =>
-      analyzes(simple("fz-sample", "documents", TransformOp(
-        op = "stratified_sample", stratumColumns = cols,
-        idColumn = Some("doc_id"), interval = Some(interval))))
+      analyzes(simple("fz-sample", "documents", StratifiedSample(stratumColumns = cols,
+        idColumn = "doc_id", interval = interval)))
     }
 
   property("valid weighted_mix analyzes") =
     Prop.forAll(fraction, Gen.chooseNum(0.0, 1.0)) { (w, dw) =>
-      analyzes(simple("fz-mix", "documents", TransformOp(op = "weighted_mix",
-        column = Some("lang"), idColumn = Some("doc_id"),
-        weights = Some(Map("en" -> w)), defaultWeight = Some(dw))))
+      analyzes(simple("fz-mix", "documents", WeightedMix(column = "lang",
+        idColumn = "doc_id",
+        weights = Map("en" -> w), defaultWeight = Some(dw))))
     }
 
   property("valid top_k analyzes (global + all three window types)") =
     Prop.forAll(posSmall, windowDecls, Gen.oneOf(Nil, Seq("event_type"))) {
       (k, w, groups) =>
-        analyzes(simple("fz-topk", "events", withWindow(TransformOp(op = "top_k",
-          byColumn = Some("value"), idColumn = Some("event_id"),
-          k = Some(k), groupColumns = groups), w)))
+        analyzes(simple("fz-topk", "events", TopK(byColumn = "value",
+          idColumn = "event_id", k = k, groupColumns = groups,
+          timeColumn = w.timeColumn, every = w.every, slide = w.slide,
+          windowType = w.windowType, watermark = w.watermark)))
     }
 
   property("valid heavy_hitters analyzes (global fraction / windowed count)") =
     Prop.forAll(windowDecls, fraction, Gen.chooseNum(1L, 20L)) { (w, mf, mc) =>
-      val base = TransformOp(op = "heavy_hitters", column = Some("event_type"))
       val op =
-        if (w.timeColumn.isDefined) withWindow(base.copy(minCount = Some(mc)), w)
-        else base.copy(minFraction = Some(mf))
+        if (w.timeColumn.isDefined) HeavyHitters(column = "event_type",
+          minCount = Some(mc), timeColumn = w.timeColumn, every = w.every,
+          slide = w.slide, windowType = w.windowType, watermark = w.watermark)
+        else HeavyHitters(column = "event_type", minFraction = Some(mf))
       analyzes(simple("fz-heavy", "events", op))
     }
 
   property("valid knn analyzes (all four methods)") =
     Prop.forAll(Gen.oneOf("exact", "quantized", "ivf", "lsh"), posSmall) {
       (method, k) =>
-        analyzes(simple("fz-knn", "embeddings", TransformOp(op = "knn",
-          column = Some("embedding"), idColumn = Some("vec_id"),
-          k = Some(k), method = Some(method),
+        analyzes(simple("fz-knn", "embeddings", Knn(column = "embedding",
+          idColumn = "vec_id",
+          k = k, method = Some(method),
           queryPath = Some(embParquet), queryFilter = Some("vec_id < 3"),
           dim = if (method == "lsh") Some(64) else None,
           nCells = if (method == "ivf") Some(8) else None)))
@@ -210,13 +205,13 @@ object SpecFuzzProperties extends Properties("specfuzz") {
           spark.read.parquet(docsParquet), "doc_id", "text", k)
         .write.mode("overwrite").parquet(s"$dir/shingles.parquet")
       analyzes(simple("fz-shingle-screen", "documents",
-        TransformOp(op = "dedup_near", method = Some("jaccard"),
-          column = Some("text"), idColumn = Some("doc_id"),
+        DedupNear(method = Some("jaccard"),
+          column = "text", idColumn = "doc_id",
           shingleSize = Some(k), threshold = Some(0.8),
           historyPath = Some(s"$dir/shingles.parquet")))) &&
       analyzes(simple("fz-shingle-index", "documents",
-        TransformOp(op = "shingle_index", column = Some("text"),
-          idColumn = Some("doc_id"), shingleSize = Some(k))))
+        ShingleIndex(column = "text",
+          idColumn = "doc_id", shingleSize = k)))
     }
 
   property("valid knn_index analyzes (all three storable methods)") =
@@ -226,10 +221,9 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Prop.forAll(Gen.oneOf("quantized", "ivf", "lsh")) { method =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft_fz_knn_index").toString
-      analyzes(simple("fz-knn-index", "embeddings", TransformOp(
-        op = "knn_index", method = Some(method),
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some(s"$dir/idx"),
+      analyzes(simple("fz-knn-index", "embeddings", KnnIndex(method = method,
+        column = "embedding", idColumn = "vec_id",
+        indexPath = s"$dir/idx",
         nCells = if (method == "ivf") Some(8) else None,
         dim = if (method == "lsh") Some(64) else None)))
     }
@@ -246,25 +240,24 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         "vec_id", "embedding", method, s"$dir/idx",
         nCells = if (method == "ivf") 8 else 0,
         dim = if (method == "lsh") 64 else 0)
-      analyzes(simple("fz-knn-append", "embeddings", TransformOp(
-        op = "knn_index_append",
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some(s"$dir/idx"))))
+      analyzes(simple("fz-knn-append", "embeddings",
+        KnnIndexAppend(column = "embedding", idColumn = "vec_id",
+        indexPath = s"$dir/idx")))
     }
 
   property("valid filter analyzes (stage-ordered predicate)") =
     Prop.forAll(Gen.oneOf("value > 100", "event_type = 'purchase'",
         "user_id % 2 = 0 AND value IS NOT NULL")) { e =>
       analyzes(simple("fz-filter", "events",
-        TransformOp(op = "filter", expression = Some(e))))
+        Filter(expression = e)))
     }
 
   property("valid parse_json analyzes (lenient and strict postures)") =
     Prop.forAll(Gen.oneOf[Option[String]](None, Some("PERMISSIVE"),
         Some("FAILFAST"))) { mode =>
-      analyzes(simple("fz-parse", "events", TransformOp(op = "parse_json",
-        column = Some("props"), jsonSchema = Some("k INT"),
-        outputField = Some("props_v"), parseMode = mode)))
+      analyzes(simple("fz-parse", "events", ParseJson(column = "props",
+        jsonSchema = "k INT",
+        outputField = "props_v", parseMode = mode)))
     }
 
   property("valid knn_index_delete analyzes (tombstones a stored index, all methods)") =
@@ -280,9 +273,8 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         "vec_id", "embedding", method, s"$dir/idx",
         nCells = if (method == "ivf") 8 else 0,
         dim = if (method == "lsh") 64 else 0)
-      analyzes(simple("fz-knn-delete", "embeddings", TransformOp(
-        op = "knn_index_delete", idColumn = Some("vec_id"),
-        indexPath = Some(s"$dir/idx"))))
+      analyzes(simple("fz-knn-delete", "embeddings", KnnIndexDelete(idColumn = "vec_id",
+        indexPath = s"$dir/idx")))
     }
 
   property("valid shingle_index_append analyzes (extends a stored artifact)") =
@@ -297,9 +289,9 @@ object SpecFuzzProperties extends Properties("specfuzz") {
           "doc_id", "text", k)
         .write.mode("overwrite").parquet(s"$dir/shingles.parquet")
       analyzes(simple("fz-shingle-append", "documents",
-        TransformOp(op = "shingle_index_append", column = Some("text"),
-          idColumn = Some("doc_id"), shingleSize = Some(k),
-          historyPath = Some(s"$dir/shingles.parquet"))))
+        ShingleIndexAppend(column = "text",
+          idColumn = "doc_id", shingleSize = k,
+          historyPath = s"$dir/shingles.parquet")))
     }
 
   property("valid shingle_index_retract analyzes (tombstones a stored artifact)") =
@@ -313,9 +305,8 @@ object SpecFuzzProperties extends Properties("specfuzz") {
           "doc_id", "text", k)
         .write.mode("overwrite").parquet(s"$dir/shingles.parquet")
       analyzes(simple("fz-shingle-retract", "documents",
-        TransformOp(op = "shingle_index_retract",
-          idColumn = Some("doc_id"),
-          historyPath = Some(s"$dir/shingles.parquet"))))
+        ShingleIndexRetract(idColumn = "doc_id",
+          historyPath = s"$dir/shingles.parquet")))
     }
 
   property("valid shingle_index_compact analyzes (folds a stored artifact's files)") =
@@ -329,8 +320,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
           "doc_id", "text", k)
         .write.mode("overwrite").parquet(s"$dir/shingles.parquet")
       analyzes(simple("fz-shingle-compact", "documents",
-        TransformOp(op = "shingle_index_compact",
-          historyPath = Some(s"$dir/shingles.parquet"))))
+        ShingleIndexCompact(historyPath = s"$dir/shingles.parquet")))
     }
 
   property("valid resample analyzes (whole-second grid)") =
@@ -339,17 +329,17 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         // dense-grid guard's whole contract, pinned in OperatorsSpec) — the
         // valid side declares caps comfortably above span/every
         Gen.option(Gen.chooseNum(100_000_000L, 1_000_000_000L))) { (every, cap) =>
-      analyzes(simple("fz-resample", "events", TransformOp(op = "resample",
-        idColumn = Some("user_id"), timeColumn = Some("ts"),
-        valueColumns = Seq("value"), every = Some(every),
+      analyzes(simple("fz-resample", "events", Resample(idColumn = "user_id",
+        timeColumn = "ts",
+        valueColumns = Seq("value"), every = every,
         maxGridRowsPerKey = cap)))
     }
 
   property("valid profile analyzes (exact and approx)") =
     Prop.forAll(Gen.someOf(Seq("lang", "source", "n_chars")).suchThat(_.nonEmpty),
         Gen.oneOf(true, false)) { (cols, approx) =>
-      analyzes(simple("fz-profile", "documents", TransformOp(op = "profile",
-        columns = cols.toSeq, approx = approx)))
+      analyzes(simple("fz-profile", "documents", Profile(columns = cols.toSeq,
+        approx = approx)))
     }
 
   property("valid quantile_rollup analyzes (incl. windowed forms)") =
@@ -358,22 +348,23 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         // shrinking can hand back an empty list; an empty quantiles decl is
         // the invalid-side's territory, not this property's
         val qs = if (qs0.isEmpty) Seq(0.5) else qs0.distinct
-        analyzes(simple("fz-quant", "events", withWindow(TransformOp(
-          op = "quantile_rollup", column = Some("value"),
-          groupColumns = Seq("event_type"), quantiles = qs), w)))
+        analyzes(simple("fz-quant", "events", QuantileRollup(column = "value",
+          groupColumns = Seq("event_type"), quantiles = qs,
+          timeColumn = w.timeColumn, every = w.every, slide = w.slide,
+          windowType = w.windowType, watermark = w.watermark)))
     }
 
   property("valid distinct_rollup analyzes (incl. windowed forms)") =
     Prop.forAll(windowDecls, Gen.oneOf(false, true)) { (w, keep) =>
-      analyzes(simple("fz-distinct", "events", withWindow(TransformOp(
-        op = "distinct_rollup", column = Some("user_id"),
-        groupColumns = Seq("event_type"), keepSketch = keep), w)))
+      analyzes(simple("fz-distinct", "events", DistinctRollup(column = "user_id",
+        groupColumns = Seq("event_type"), keepSketch = keep,
+        timeColumn = w.timeColumn, every = w.every, slide = w.slide,
+        windowType = w.windowType, watermark = w.watermark)))
     }
 
   property("valid pack analyzes") =
     Prop.forAll(Gen.chooseNum(100L, 10000L)) { budget =>
-      analyzes(simple("fz-pack", "documents", TransformOp(op = "pack",
-        column = Some("n_chars"), budget = Some(budget),
+      analyzes(simple("fz-pack", "documents", Pack(column = "n_chars", budget = budget,
         orderColumns = Seq("doc_id"))))
     }
 
@@ -383,16 +374,16 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         (Seq.empty[String], Seq("event_type")),
         (Seq("value"), Seq("event_type"))),
         Gen.option(Gen.const("user_id IS NOT NULL"))) { case ((num, cat), cf) =>
-      analyzes(simple("fz-drift", "events", TransformOp(op = "snapshot_drift",
-        comparePath = Some("<dataDir>/events.parquet"), compareFilter = cf,
+      analyzes(simple("fz-drift", "events",
+        SnapshotDrift(comparePath = Some("<dataDir>/events.parquet"),
+          compareFilter = cf,
         numericColumns = num, categoricalColumns = cat)))
     }
 
   property("valid snapshot_drift embedding leg analyzes (global / grouped)") =
     Prop.forAll(Gen.option(Gen.const("label"))) { groupBy =>
       analyzes(simple("fz-embed-drift", "embeddings",
-        TransformOp(op = "snapshot_drift",
-          comparePath = Some("<dataDir>/embeddings.parquet"),
+        SnapshotDrift(comparePath = Some("<dataDir>/embeddings.parquet"),
           compareFilter = Some("label < 8"),
           embeddingColumns = Seq("embedding"), embeddingGroupBy = groupBy)))
     }
@@ -434,8 +425,8 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       val res = new ParquetSourceResolver(artifactDir, TestdataCatalog)
       val spec = simple("fz-knn-qframe",
         if (windowed) "emb_ts" else "embeddings",
-        TransformOp(op = "knn", method = Some("ivf"),
-          column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5),
+        Knn(method = Some("ivf"),
+          column = "embedding", idColumn = "vec_id", k = 5,
           indexPath = Some(s"$artifactDir/ivf_idx"),
           timeColumn = if (windowed) Some("ts") else None,
           every = if (windowed) Some("1 hour") else None))
@@ -447,7 +438,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
   property("valid embedding_summary analyzes (global / grouped)") =
     Prop.forAll(Gen.option(Gen.const("label"))) { g =>
       analyzes(simple("fz-embed-summary", "embeddings",
-        TransformOp(op = "embedding_summary", column = Some("embedding"),
+        EmbeddingSummary(column = "embedding",
           embeddingGroupBy = g)))
     }
 
@@ -455,7 +446,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Prop.forAll(Gen.oneOf("summary_global", "summary_grouped")) { t =>
       val res = new ParquetSourceResolver(artifactDir, TestdataCatalog)
       val spec = simple("fz-merge-summaries", t,
-        TransformOp(op = "merge_embedding_summaries"))
+        MergeEmbeddingSummaries())
       val df = Interpreter.build(spark, spec, res)
       Prop(df.queryExecution.analyzed.schema.nonEmpty) :| s"spec ${spec.id}"
     }
@@ -464,8 +455,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Prop.forAll(Gen.oneOf(false, true)) { grouped =>
       val art = if (grouped) "summary_grouped" else "summary_global"
       analyzes(simple("fz-drift-summary", "embeddings",
-        TransformOp(op = "snapshot_drift",
-          summaryPath = Some(s"$artifactDir/$art.parquet"),
+        SnapshotDrift(summaryPath = Some(s"$artifactDir/$art.parquet"),
           embeddingColumns = Seq("embedding"),
           embeddingGroupBy = if (grouped) Some("label") else None)))
     }
@@ -475,12 +465,10 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         Gen.oneOf(false, true)) { (slide, bounded) =>
       val res = new ParquetSourceResolver(artifactDir, TestdataCatalog)
       val spec = simple("fz-windowed-drift", "emb_ts",
-        TransformOp(op = "snapshot_drift",
-          summaryPath = Some(s"$artifactDir/summary_global.parquet"),
+        SnapshotDrift(summaryPath = Some(s"$artifactDir/summary_global.parquet"),
           embeddingColumns = Seq("embedding"),
           timeColumn = Some("ts"), every = Some("1 hour"), slide = slide,
-          maxAbsDelta = if (bounded) Some(Map("centroid_shift" -> 0.5))
-            else None))
+          maxAbsDelta = if (bounded) Map("centroid_shift" -> 0.5) else Map.empty))
       val df = Interpreter.build(spark, spec, res)
       Prop(df.queryExecution.analyzed.schema.nonEmpty) :| s"spec ${spec.id}"
     }
@@ -489,7 +477,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Prop.forAll(Gen.oneOf(Seq.empty[String], Seq("event_type")),
         Gen.oneOf(false, true)) { (dims, windowed) =>
       analyzes(simple("fz-scalar-summary", "events",
-        TransformOp(op = "scalar_summary", columns = Seq("value"),
+        ScalarSummary(columns = Seq("value"),
           groupColumns = dims,
           timeColumn = if (windowed) Some("ts") else None,
           every = if (windowed) Some("1 hour") else None)))
@@ -500,25 +488,21 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       (grouped, bounded) =>
         val art = if (grouped) "stats_grouped" else "stats_global"
         analyzes(simple("fz-scalar-monitor", "events",
-          TransformOp(op = "snapshot_drift",
-            statsPath = Some(s"$artifactDir/$art.parquet"),
+          SnapshotDrift(statsPath = Some(s"$artifactDir/$art.parquet"),
             numericColumns = Seq("value"),
             groupColumns = if (grouped) Seq("event_type") else Nil,
             timeColumn = Some("ts"), every = Some("1 hour"),
-            maxAbsDelta = if (bounded) Some(Map("value.mean" -> 100.0))
-              else None)))
+            maxAbsDelta = if (bounded) Map("value.mean" -> 100.0) else Map.empty)))
     }
 
   property("valid snapshot_drift windowed quantile monitor analyzes (quantilePath)") =
     Prop.forAll(Gen.oneOf(false, true)) { bounded =>
       analyzes(simple("fz-quantile-monitor", "events",
-        TransformOp(op = "snapshot_drift",
-          quantilePath = Some(s"$artifactDir/qsketches.parquet"),
+        SnapshotDrift(quantilePath = Some(s"$artifactDir/qsketches.parquet"),
           groupColumns = Seq("event_type"), column = Some("value"),
           quantiles = Seq(0.5, 0.9),
           timeColumn = Some("ts"), every = Some("1 hour"),
-          maxAbsDelta = if (bounded) Some(Map("value.p50" -> 1000.0))
-            else None)))
+          maxAbsDelta = if (bounded) Map("value.p50" -> 1000.0) else Map.empty)))
     }
 
   property("valid snapshot_drift batch statsPath route analyzes (global / grouped; both-sides-stored optional)") =
@@ -526,8 +510,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       (grouped, bothStored) =>
         val art = if (grouped) "stats_grouped" else "stats_global"
         analyzes(simple("fz-drift-stats", "events",
-          TransformOp(op = "snapshot_drift",
-            statsPath = Some(s"$artifactDir/$art.parquet"),
+          SnapshotDrift(statsPath = Some(s"$artifactDir/$art.parquet"),
             newStatsPath =
               if (bothStored) Some(s"$artifactDir/$art.parquet") else None,
             numericColumns = Seq("value"),
@@ -538,7 +521,7 @@ object SpecFuzzProperties extends Properties("specfuzz") {
     Prop.forAll(Gen.oneOf("stats_global", "stats_grouped")) { t =>
       val res = new ParquetSourceResolver(artifactDir, TestdataCatalog)
       val spec = simple("fz-merge-stats", t,
-        TransformOp(op = "merge_scalar_summaries"))
+        MergeScalarSummaries())
       val df = Interpreter.build(spark, spec, res)
       Prop(df.queryExecution.analyzed.schema.nonEmpty) :| s"spec ${spec.id}"
     }
@@ -557,18 +540,18 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         graft.operators.Similarity.appendIndex(
           e.filter("vec_id >= 30 and vec_id < 40"), "vec_id", "embedding",
           s"$dir/idx")
-      analyzes(simple("fz-knn-compact", "embeddings", TransformOp(
-        op = "knn_index_compact", indexPath = Some(s"$dir/idx"))))
+      analyzes(simple("fz-knn-compact", "embeddings",
+        KnnIndexCompact(indexPath = s"$dir/idx")))
     }
 
   property("valid transform CHAINS analyze (filter + multiple ops in order)") =
     Prop.forAll(Gen.chooseNum(10L, 50L), Gen.chooseNum(20, 60)) { (mt, size) =>
       val spec = simple("fz-chain", "documents",
-        TransformOp(op = "quality_filter", column = Some("text"),
+        QualityFilter(column = "text",
           minTokens = Some(mt)),
-        TransformOp(op = "text_stats", column = Some("text")),
-        TransformOp(op = "chunk", column = Some("text"),
-          idColumn = Some("doc_id"), size = Some(size), stride = Some(size)))
+        TextStats(column = "text"),
+        Chunk(column = "text",
+          idColumn = "doc_id", size = size, stride = size))
         .copy(filter = Some("n_chunk_tokens > 1"))
       analyzes(spec)
     }
@@ -624,7 +607,8 @@ object SpecFuzzProperties extends Properties("specfuzz") {
           Seq(AggSpec("sum", Some("value")), AggSpec("max", Some("value"))),
           Seq(AggSpec("avg", Some("value")), AggSpec("min", Some("value"))))) {
       (wt, aggs) =>
-        val spec = PipelineSpec(id = "fz-agg", processingMode = ProcessingMode.Aggregation,
+        val spec = PipelineSpec(id = "fz-agg",
+          processingMode = ProcessingMode.Aggregation,
           sourceTopic = topic("events"),
           groupByKeyExtraction = Some(KeyExtraction("VALUE", Some("event_type"))),
           groupByKeyType = Some("java.lang.String"),
@@ -716,7 +700,8 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       "asOf duplicate RIGHT outputs" -> asOfJoin(asOfOk, maps = Seq(
         FieldMapping("RIGHT", "value", "v"), FieldMapping("RIGHT", "props", "v"))),
       "asOf RIGHT output colliding with LEFT source" -> asOfJoin(asOfOk, maps = Seq(
-        FieldMapping("LEFT", "event_id", "e"), FieldMapping("RIGHT", "value", "event_id"))),
+        FieldMapping("LEFT", "event_id", "e"), FieldMapping("RIGHT", "value",
+          "event_id"))),
       // eventTime rules
       "eventTime outside AGGREGATION" ->
         simple("fz-bad", "events").copy(eventTime =
@@ -767,8 +752,10 @@ object SpecFuzzProperties extends Properties("specfuzz") {
         branches = Seq(BranchSpec("doc_id > 0",
           OutputTopic(enabled = true, name = "same")))),
       // transform.op rules — one per op's validation class (split into a
-      // second method: the single Seq outgrew the JVM 64KB method limit)
-      "unknown transform op" -> t(TransformOp(op = "transmogrify"))) ++
+      // second method: the single Seq outgrew the JVM 64KB method limit);
+      // an omitted required field decodes as null (0 for a number)
+      "planAudit bad mode" ->
+        simple("fz-bad", "documents").copy(planAudit = Some("maybe"))) ++
     invalidTransformSpecs(t, te)
   }
 
@@ -776,185 +763,138 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       t: TransformOp => PipelineSpec,
       te: TransformOp => PipelineSpec): Seq[(String, PipelineSpec)] = {
     Seq(
-      "dedup_exact without tieBreak" -> t(TransformOp(op = "dedup_exact",
-        dupColumns = Seq("lang"))),
-      "quality_filter without thresholds" -> t(TransformOp(op = "quality_filter",
-        column = Some("text"))),
-      "redact_pii expression without outputField" -> t(TransformOp(
-        op = "redact_pii", expression = Some("text"))),
-      "dedup_near threshold out of range" -> t(TransformOp(op = "dedup_near",
-        column = Some("text"), idColumn = Some("doc_id"), shingleSize = Some(3),
+      "dedup_exact without tieBreak" ->
+        t(DedupExact(dupColumns = Seq("lang"), tieBreak = null)),
+      "quality_filter without thresholds" -> t(QualityFilter(column = "text")),
+      "redact_pii expression without outputField" ->
+        t(RedactPii(expression = Some("text"))),
+      "dedup_near threshold out of range" -> t(DedupNear(column = "text",
+        idColumn = "doc_id", shingleSize = Some(3),
         threshold = Some(1.5))),
-      "dedup_near numHashes not multiple of bands" -> t(TransformOp(
-        op = "dedup_near", column = Some("text"), idColumn = Some("doc_id"),
+      "dedup_near numHashes not multiple of bands" -> t(DedupNear(column = "text",
+        idColumn = "doc_id",
         shingleSize = Some(3), threshold = Some(0.8),
         numHashes = Some(100), bands = Some(32))),
-      "dedup_near bad stateTtl duration" -> t(TransformOp(op = "dedup_near",
-        column = Some("text"), idColumn = Some("doc_id"), shingleSize = Some(3),
+      "dedup_near bad stateTtl duration" -> t(DedupNear(column = "text",
+        idColumn = "doc_id", shingleSize = Some(3),
         threshold = Some(0.8), stateTtl = Some("a fortnight-ish"))),
-      "chunk stride exceeding size" -> t(TransformOp(op = "chunk",
-        column = Some("text"), idColumn = Some("doc_id"),
-        size = Some(10), stride = Some(20))),
-      "contamination_screen without benchPath" -> t(TransformOp(
-        op = "contamination_screen", column = Some("text"),
-        idColumn = Some("doc_id"), shingleSize = Some(3))),
-      "lang_id without column" -> t(TransformOp(op = "lang_id")),
-      "text_stats without column" -> t(TransformOp(op = "text_stats")),
-      "stratified_sample zero interval" -> t(TransformOp(op = "stratified_sample",
-        stratumColumns = Seq("lang"), idColumn = Some("doc_id"),
-        interval = Some(0))),
-      "weighted_mix weight above one" -> t(TransformOp(op = "weighted_mix",
-        column = Some("lang"), idColumn = Some("doc_id"),
-        weights = Some(Map("en" -> 1.5)))),
-      "top_k zero k" -> t(TransformOp(op = "top_k", byColumn = Some("n_chars"),
-        idColumn = Some("doc_id"), k = Some(0))),
-      "top_k slide not dividing every" -> te(TransformOp(op = "top_k",
-        byColumn = Some("value"), idColumn = Some("event_id"), k = Some(3),
+      "chunk stride exceeding size" -> t(Chunk(column = "text", idColumn = "doc_id",
+        size = 10, stride = 20)),
+      "contamination_screen without benchPath" -> t(ContaminationScreen(
+        column = "text", idColumn = "doc_id", benchPath = null, shingleSize = 3)),
+      "lang_id without column" -> t(LangId(column = null)),
+      "text_stats without column" -> t(TextStats(column = null)),
+      "stratified_sample zero interval" -> t(StratifiedSample(
+        stratumColumns = Seq("lang"), idColumn = "doc_id", interval = 0)),
+      "weighted_mix weight above one" -> t(WeightedMix(column = "lang",
+        idColumn = "doc_id",
+        weights = Map("en" -> 1.5))),
+      "top_k zero k" -> t(TopK(byColumn = "n_chars",
+        idColumn = "doc_id", k = 0)),
+      "top_k slide not dividing every" -> te(TopK(byColumn = "value",
+        idColumn = "event_id", k = 3,
         timeColumn = Some("ts"), every = Some("1 hour"),
         slide = Some("25 minutes"))),
-      "top_k session with slide" -> te(TransformOp(op = "top_k",
-        byColumn = Some("value"), idColumn = Some("event_id"), k = Some(3),
+      "top_k session with slide" -> te(TopK(byColumn = "value",
+        idColumn = "event_id", k = 3,
         timeColumn = Some("ts"), every = Some("1 hour"),
         windowType = Some("session"), slide = Some("30 minutes"))),
-      "top_k watermark without window" -> te(TransformOp(op = "top_k",
-        byColumn = Some("value"), idColumn = Some("event_id"), k = Some(3),
+      "top_k watermark without window" -> te(TopK(byColumn = "value",
+        idColumn = "event_id", k = 3,
         watermark = Some("10 minutes"))),
-      "top_k every without timeColumn" -> te(TransformOp(op = "top_k",
-        byColumn = Some("value"), idColumn = Some("event_id"), k = Some(3),
+      "top_k every without timeColumn" -> te(TopK(byColumn = "value",
+        idColumn = "event_id", k = 3,
         every = Some("1 hour"))),
-      "heavy_hitters global with minCount" -> te(TransformOp(op = "heavy_hitters",
-        column = Some("event_type"), minCount = Some(5L))),
-      "heavy_hitters windowed with minFraction" -> te(TransformOp(
-        op = "heavy_hitters", column = Some("event_type"),
+      "heavy_hitters global with minCount" -> te(HeavyHitters(column = "event_type",
+        minCount = Some(5L))),
+      "heavy_hitters windowed with minFraction" -> te(HeavyHitters(column = "event_type",
         timeColumn = Some("ts"), every = Some("1 hour"),
         minFraction = Some(0.1))),
-      "heavy_hitters unknown windowType" -> te(TransformOp(op = "heavy_hitters",
-        column = Some("event_type"), timeColumn = Some("ts"),
+      "heavy_hitters unknown windowType" -> te(HeavyHitters(column = "event_type",
+        timeColumn = Some("ts"),
         every = Some("1 hour"), minCount = Some(3L),
         windowType = Some("jumping"))),
-      "knn unknown method" -> te(TransformOp(op = "knn",
-        column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5),
+      "knn unknown method" -> te(Knn(column = "embedding", idColumn = "vec_id", k = 5,
         queryPath = Some(embParquet), method = Some("sublinear-magic"))),
-      "knn lsh without dim" -> te(TransformOp(op = "knn",
-        column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5),
+      "knn lsh without dim" -> te(Knn(column = "embedding", idColumn = "vec_id", k = 5,
         queryPath = Some(embParquet), method = Some("lsh"))),
-      "knn nonpositive nProbe" -> te(TransformOp(op = "knn",
-        column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5),
+      "knn nonpositive nProbe" -> te(Knn(column = "embedding", idColumn = "vec_id", k = 5,
         queryPath = Some(embParquet), method = Some("ivf"), nProbe = Some(0))),
       "shingle_index without shingleSize (the artifact pins it)" -> te(
-        TransformOp(op = "shingle_index", column = Some("text"),
-          idColumn = Some("doc_id"))),
+        ShingleIndex(column = "text", idColumn = "doc_id", shingleSize = 0)),
       "dedup_near historyPath with method=embedding (jaccard-only screen)" ->
-        te(TransformOp(op = "dedup_near", method = Some("embedding"),
-          column = Some("embedding"), idColumn = Some("vec_id"),
+        te(DedupNear(method = Some("embedding"),
+          column = "embedding", idColumn = "vec_id",
           dim = Some(64), threshold = Some(0.8),
           historyPath = Some("/nowhere/shingles.parquet"))),
-      "knn_index without indexPath" -> te(TransformOp(op = "knn_index",
-        method = Some("quantized"), column = Some("embedding"),
-        idColumn = Some("vec_id"))),
-      "knn_index_append without indexPath" -> te(TransformOp(
-        op = "knn_index_append", column = Some("embedding"),
-        idColumn = Some("vec_id"))),
-      "knn_index_append with declared geometry (the artifact pins it)" ->
-        te(TransformOp(op = "knn_index_append", column = Some("embedding"),
-          idColumn = Some("vec_id"), indexPath = Some("/nowhere/idx"),
-          nCells = Some(8))),
-      "filter without expression" -> te(TransformOp(op = "filter")),
-      "knn attributeColumns (a build-time declaration)" -> te(TransformOp(
-        op = "knn", column = Some("embedding"), idColumn = Some("vec_id"),
-        k = Some(10), queryPath = Some("/tmp/q"),
-        attributeColumns = Seq("label"))),
-      "knn_index candidateFilter (a search-time knob)" -> te(TransformOp(
-        op = "knn_index", method = Some("quantized"),
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some("/tmp/idx"), candidateFilter = Some("label < 4"))),
-      "knn_index attributeColumns with a reserved name" -> te(TransformOp(
-        op = "knn_index", method = Some("quantized"),
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some("/tmp/idx"), attributeColumns = Seq("gen"))),
-      "shingle_index_retract without historyPath" -> te(TransformOp(
-        op = "shingle_index_retract", idColumn = Some("doc_id"))),
-      "shingle_index_retract without idColumn" -> te(TransformOp(
-        op = "shingle_index_retract", historyPath = Some("/tmp/hist"))),
-      "shingle_index_retract with declared width (ids only)" ->
-        te(TransformOp(op = "shingle_index_retract",
-          idColumn = Some("doc_id"), historyPath = Some("/tmp/hist"),
-          shingleSize = Some(3))),
-      "knn_index_delete without indexPath" -> te(TransformOp(
-        op = "knn_index_delete", idColumn = Some("vec_id"))),
-      "knn_index_delete without idColumn" -> te(TransformOp(
-        op = "knn_index_delete", indexPath = Some("/tmp/idx"))),
-      "knn_index_delete with declared geometry (ids only)" ->
-        te(TransformOp(op = "knn_index_delete", idColumn = Some("vec_id"),
-          indexPath = Some("/tmp/idx"), method = Some("ivf"),
-          nCells = Some(8))),
+      "knn_index without indexPath" -> te(KnnIndex(method = "quantized",
+        column = "embedding", idColumn = "vec_id", indexPath = null)),
+      "knn_index_append without indexPath" -> te(KnnIndexAppend(
+        column = "embedding", idColumn = "vec_id", indexPath = null)),
+      "filter without expression" -> te(Filter(expression = null)),
+      "knn_index attributeColumns with a reserved name" -> te(KnnIndex(
+        method = "quantized", column = "embedding", idColumn = "vec_id",
+        indexPath = "/tmp/idx", attributeColumns = Seq("gen"))),
+      "shingle_index_retract without historyPath" ->
+        te(ShingleIndexRetract(idColumn = "doc_id", historyPath = null)),
+      "shingle_index_retract without idColumn" ->
+        te(ShingleIndexRetract(idColumn = null, historyPath = "/tmp/hist")),
+      "knn_index_delete without indexPath" ->
+        te(KnnIndexDelete(idColumn = "vec_id", indexPath = null)),
+      "knn_index_delete without idColumn" ->
+        te(KnnIndexDelete(idColumn = null, indexPath = "/tmp/idx")),
       "knn_index_compact without indexPath" ->
-        te(TransformOp(op = "knn_index_compact")),
-      "knn_index_compact with declared geometry (it only folds)" ->
-        te(TransformOp(op = "knn_index_compact",
-          indexPath = Some("/nowhere/idx"), nCells = Some(8))),
+        te(KnnIndexCompact(indexPath = null)),
       "snapshot_drift newStatsPath without statsPath" ->
-        te(TransformOp(op = "snapshot_drift", numericColumns = Seq("value"),
+        te(SnapshotDrift(numericColumns = Seq("value"),
           newStatsPath = Some("/nowhere/stats.parquet"))),
       "snapshot_drift batch statsPath without numericColumns" ->
-        te(TransformOp(op = "snapshot_drift",
-          statsPath = Some("/nowhere/stats.parquet"))),
+        te(SnapshotDrift(statsPath = Some("/nowhere/stats.parquet"))),
       "snapshot_drift comparePath never read (statsPath covers the only leg)" ->
-        te(TransformOp(op = "snapshot_drift", numericColumns = Seq("value"),
+        te(SnapshotDrift(numericColumns = Seq("value"),
           statsPath = Some("/nowhere/stats.parquet"),
           comparePath = Some("/nowhere/old.parquet"))),
       "snapshot_drift duplicate numericColumns" ->
-        te(TransformOp(op = "snapshot_drift",
-          numericColumns = Seq("value", "value"),
+        te(SnapshotDrift(numericColumns = Seq("value", "value"),
           comparePath = Some("/nowhere/old.parquet"))),
       "snapshot_drift newSketchPath without sketchPath" ->
-        te(TransformOp(op = "snapshot_drift",
-          groupColumns = Seq("event_type"), column = Some("user_id"),
+        te(SnapshotDrift(groupColumns = Seq("event_type"), column = Some("user_id"),
           numericColumns = Seq("value"),
           comparePath = Some("<dataDir>/events.parquet"),
           newSketchPath = Some("/nowhere/sketches.parquet"))),
       "snapshot_drift newQuantilePath without quantilePath" ->
-        te(TransformOp(op = "snapshot_drift",
-          groupColumns = Seq("event_type"), column = Some("value"),
+        te(SnapshotDrift(groupColumns = Seq("event_type"), column = Some("value"),
           numericColumns = Seq("value"),
           comparePath = Some("<dataDir>/events.parquet"),
           newQuantilePath = Some("/nowhere/qsketches.parquet"))),
-      "shingle_index_append without historyPath" -> te(TransformOp(
-        op = "shingle_index_append", column = Some("text"),
-        idColumn = Some("doc_id"), shingleSize = Some(3))),
-      "shingle_index_compact without historyPath" -> te(TransformOp(
-        op = "shingle_index_compact")),
-      "shingle_index_compact with a declared width (the artifact pins it)" ->
-        te(TransformOp(op = "shingle_index_compact", shingleSize = Some(3),
-          historyPath = Some("/nowhere/shingles.parquet"))),
-      "knn_index without method" -> te(TransformOp(op = "knn_index",
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some("/nowhere/idx"))),
-      "knn_index method=exact (nothing to store)" -> te(TransformOp(
-        op = "knn_index", method = Some("exact"),
-        column = Some("embedding"), idColumn = Some("vec_id"),
-        indexPath = Some("/nowhere/idx"))),
+      "shingle_index_append without historyPath" -> te(ShingleIndexAppend(
+        column = "text", idColumn = "doc_id", shingleSize = 3, historyPath = null)),
+      "shingle_index_compact without historyPath" ->
+        te(ShingleIndexCompact(historyPath = null)),
+      "knn_index without method" -> te(KnnIndex(column = "embedding",
+        idColumn = "vec_id", indexPath = "/nowhere/idx", method = null)),
+      "knn_index method=exact (nothing to store)" -> te(KnnIndex(method = "exact",
+        column = "embedding", idColumn = "vec_id",
+        indexPath = "/nowhere/idx")),
       "knn_index ivf without nCells (the artifact pins geometry)" -> te(
-        TransformOp(op = "knn_index", method = Some("ivf"),
-          column = Some("embedding"), idColumn = Some("vec_id"),
-          indexPath = Some("/nowhere/idx"))),
-      "knn_index lsh without dim" -> te(TransformOp(op = "knn_index",
-        method = Some("lsh"), column = Some("embedding"),
-        idColumn = Some("vec_id"), indexPath = Some("/nowhere/idx"))),
+        KnnIndex(method = "ivf",
+          column = "embedding", idColumn = "vec_id",
+          indexPath = "/nowhere/idx")),
+      "knn_index lsh without dim" -> te(KnnIndex(method = "lsh", column = "embedding",
+        idColumn = "vec_id", indexPath = "/nowhere/idx")),
       "knn method=exact with indexPath (the scan is the plan)" -> te(
-        TransformOp(op = "knn", column = Some("embedding"),
-          idColumn = Some("vec_id"), k = Some(5),
+        Knn(column = "embedding",
+          idColumn = "vec_id", k = 5,
           queryPath = Some(embParquet), indexPath = Some("/nowhere/idx"))),
       "knn windowed form with queryPath (belongs to the query-frame route)" ->
-        te(TransformOp(op = "knn", method = Some("ivf"),
-          column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5),
+        te(Knn(method = Some("ivf"),
+          column = "embedding", idColumn = "vec_id", k = 5,
           queryPath = Some(embParquet), indexPath = Some("/nowhere/idx"),
           timeColumn = Some("ts"), every = Some("1 hour"))),
-      "knn without queryPath or indexPath" -> te(TransformOp(op = "knn",
-        column = Some("embedding"), idColumn = Some("vec_id"), k = Some(5))),
-      "knn windowed quantized (two chained aggregations)" -> te(TransformOp(
-        op = "knn", method = Some("quantized"), column = Some("embedding"),
-        idColumn = Some("vec_id"), k = Some(5),
+      "knn without queryPath or indexPath" -> te(Knn(column = "embedding",
+        idColumn = "vec_id", k = 5)),
+      "knn windowed quantized (two chained aggregations)" -> te(Knn(
+        method = Some("quantized"), column = "embedding", idColumn = "vec_id", k = 5,
         indexPath = Some("/nowhere/idx"),
         timeColumn = Some("ts"), every = Some("1 hour")))) ++
     invalidParseAndFamilySpecs(t, te) ++
@@ -967,26 +907,23 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       t: TransformOp => PipelineSpec,
       te: TransformOp => PipelineSpec): Seq[(String, PipelineSpec)] = {
     Seq(
-      "parse_json without jsonSchema" -> t(TransformOp(op = "parse_json",
-        column = Some("props"), outputField = Some("v"))),
-      "parse_json malformed jsonSchema DDL" -> t(TransformOp(
-        op = "parse_json", column = Some("props"),
-        jsonSchema = Some("k INT,"), outputField = Some("v"))),
-      "parse_json unknown parseMode" -> t(TransformOp(op = "parse_json",
-        column = Some("props"), jsonSchema = Some("k INT"),
-        outputField = Some("v"), parseMode = Some("LENIENTISH"))),
-      "parse_json dlqPath without DLQ mode" -> t(TransformOp(
-        op = "parse_json", column = Some("props"),
-        jsonSchema = Some("k INT"), outputField = Some("v"),
+      "parse_json without jsonSchema" ->
+        t(ParseJson(column = "props", jsonSchema = null, outputField = "v")),
+      "parse_json malformed jsonSchema DDL" -> t(ParseJson(column = "props",
+        jsonSchema = "k INT,", outputField = "v")),
+      "parse_json unknown parseMode" -> t(ParseJson(column = "props",
+        jsonSchema = "k INT",
+        outputField = "v", parseMode = Some("LENIENTISH"))),
+      "parse_json dlqPath without DLQ mode" -> t(ParseJson(column = "props",
+        jsonSchema = "k INT", outputField = "v",
         parseMode = Some("FAILFAST"), dlqPath = Some("/tmp/dlq"))),
-      "parse_json DLQ mode without dlqPath" -> t(TransformOp(
-        op = "parse_json", column = Some("props"),
-        jsonSchema = Some("k INT"), outputField = Some("v"),
+      "parse_json DLQ mode without dlqPath" -> t(ParseJson(column = "props",
+        jsonSchema = "k INT", outputField = "v",
         parseMode = Some("DLQ"))),
       "knn_index partitionByAttribute not in attributeColumns" -> t(
-        TransformOp(op = "knn_index", method = Some("quantized"),
-          column = Some("embedding"), idColumn = Some("vec_id"),
-          indexPath = Some("/tmp/idx"), attributeColumns = Seq("label"),
+        KnnIndex(method = "quantized",
+          column = "embedding", idColumn = "vec_id",
+          indexPath = "/tmp/idx", attributeColumns = Seq("label"),
           partitionByAttribute = Some("lang"))))
   }
 
@@ -994,108 +931,121 @@ object SpecFuzzProperties extends Properties("specfuzz") {
       t: TransformOp => PipelineSpec,
       te: TransformOp => PipelineSpec): Seq[(String, PipelineSpec)] = {
     Seq(
-      "snapshot_drift without comparePath" -> te(TransformOp(
-        op = "snapshot_drift", numericColumns = Seq("value"))),
-      "snapshot_drift without any columns" -> te(TransformOp(
-        op = "snapshot_drift",
-        comparePath = Some("<dataDir>/events.parquet"))),
+      "snapshot_drift without comparePath" ->
+        te(SnapshotDrift(numericColumns = Seq("value"))),
+      "snapshot_drift without any columns" ->
+        te(SnapshotDrift(comparePath = Some("<dataDir>/events.parquet"))),
       "snapshot_drift embeddingGroupBy without embeddingColumns" -> te(
-        TransformOp(op = "snapshot_drift",
-          comparePath = Some("<dataDir>/embeddings.parquet"),
+        SnapshotDrift(comparePath = Some("<dataDir>/embeddings.parquet"),
           numericColumns = Seq("vec_id"),
           embeddingGroupBy = Some("label"))),
       "snapshot_drift summaryPath with several embeddingColumns" -> te(
-        TransformOp(op = "snapshot_drift",
-          summaryPath = Some("/nowhere/summary.parquet"),
+        SnapshotDrift(summaryPath = Some("/nowhere/summary.parquet"),
           embeddingColumns = Seq("embedding", "embedding2"))),
       "snapshot_drift sketchPath without groupColumns/column" -> te(
-        TransformOp(op = "snapshot_drift",
-          sketchPath = Some("/nowhere/sketches.parquet"))),
+        SnapshotDrift(sketchPath = Some("/nowhere/sketches.parquet"))),
       "windowed snapshot_drift without a stored baseline (the monitor never rescans raw old data)" ->
-        te(TransformOp(op = "snapshot_drift",
-          comparePath = Some("<dataDir>/embeddings.parquet"),
+        te(SnapshotDrift(comparePath = Some("<dataDir>/embeddings.parquet"),
           embeddingColumns = Seq("embedding"),
           timeColumn = Some("ts"), every = Some("1 hour"))),
       "windowed snapshot_drift with TWO baselines (one leg per declaration)" ->
-        te(TransformOp(op = "snapshot_drift",
-          summaryPath = Some("/nowhere/summary.parquet"),
+        te(SnapshotDrift(summaryPath = Some("/nowhere/summary.parquet"),
           statsPath = Some("/nowhere/stats.parquet"),
           embeddingColumns = Seq("embedding"),
           numericColumns = Seq("value"),
           timeColumn = Some("ts"), every = Some("1 hour"))),
       "windowed snapshot_drift summaryPath with a scalar leg mixed in" ->
-        te(TransformOp(op = "snapshot_drift",
-          summaryPath = Some("/nowhere/summary.parquet"),
+        te(SnapshotDrift(summaryPath = Some("/nowhere/summary.parquet"),
           embeddingColumns = Seq("embedding"),
           numericColumns = Seq("value"),
           timeColumn = Some("ts"), every = Some("1 hour"))),
       "windowed snapshot_drift statsPath without numericColumns" ->
-        te(TransformOp(op = "snapshot_drift",
-          statsPath = Some("/nowhere/stats.parquet"),
+        te(SnapshotDrift(statsPath = Some("/nowhere/stats.parquet"),
           timeColumn = Some("ts"), every = Some("1 hour"))),
-      "scalar_summary without columns" -> te(TransformOp(
-        op = "scalar_summary", groupColumns = Seq("event_type"))),
+      "scalar_summary without columns" -> te(ScalarSummary(groupColumns = Seq("event_type"))),
       "snapshot_drift quantilePath without groupColumns/column" -> te(
-        TransformOp(op = "snapshot_drift",
-          quantilePath = Some("/nowhere/qsketches.parquet"),
+        SnapshotDrift(quantilePath = Some("/nowhere/qsketches.parquet"),
           quantiles = Seq(0.5))),
       "snapshot_drift quantilePath without quantiles" -> te(
-        TransformOp(op = "snapshot_drift",
-          quantilePath = Some("/nowhere/qsketches.parquet"),
+        SnapshotDrift(quantilePath = Some("/nowhere/qsketches.parquet"),
           groupColumns = Seq("event_type"), column = Some("value"))),
       "snapshot_drift quantilePath with out-of-range quantile" -> te(
-        TransformOp(op = "snapshot_drift",
-          quantilePath = Some("/nowhere/qsketches.parquet"),
+        SnapshotDrift(quantilePath = Some("/nowhere/qsketches.parquet"),
           groupColumns = Seq("event_type"), column = Some("value"),
           quantiles = Seq(1.5))),
       "snapshot_drift rescanning leg without comparePath (artifact legs alone may omit it)" ->
-        te(TransformOp(op = "snapshot_drift",
-          summaryPath = Some("/nowhere/summary.parquet"),
+        te(SnapshotDrift(summaryPath = Some("/nowhere/summary.parquet"),
           embeddingColumns = Seq("embedding"),
           numericColumns = Seq("value"))),
       "snapshot_drift comparePath with only artifact legs (path would never be read)" ->
-        te(TransformOp(op = "snapshot_drift",
-          comparePath = Some("<dataDir>/embeddings.parquet"),
+        te(SnapshotDrift(comparePath = Some("<dataDir>/embeddings.parquet"),
           summaryPath = Some("/nowhere/summary.parquet"),
           embeddingColumns = Seq("embedding"))),
       "embedding_summary without column" -> te(
-        TransformOp(op = "embedding_summary")),
+        EmbeddingSummary(column = null)),
       "snapshot_drift newSummaryPath without summaryPath" -> te(
-        TransformOp(op = "snapshot_drift",
-          comparePath = Some("<dataDir>/embeddings.parquet"),
+        SnapshotDrift(comparePath = Some("<dataDir>/embeddings.parquet"),
           newSummaryPath = Some("/nowhere/new_summary.parquet"),
           embeddingColumns = Seq("embedding"))),
-      "resample fractional-second every" -> te(TransformOp(op = "resample",
-        idColumn = Some("user_id"), timeColumn = Some("ts"),
-        valueColumns = Seq("value"), every = Some("500 milliseconds"))),
-      "resample month-based every" -> te(TransformOp(op = "resample",
-        idColumn = Some("user_id"), timeColumn = Some("ts"),
-        valueColumns = Seq("value"), every = Some("1 month"))),
-      "resample nonpositive maxGridRowsPerKey" -> te(TransformOp(op = "resample",
-        idColumn = Some("user_id"), timeColumn = Some("ts"),
-        valueColumns = Seq("value"), every = Some("1 hour"),
+      "resample fractional-second every" -> te(Resample(idColumn = "user_id",
+        timeColumn = "ts",
+        valueColumns = Seq("value"), every = "500 milliseconds")),
+      "resample month-based every" -> te(Resample(idColumn = "user_id", timeColumn = "ts",
+        valueColumns = Seq("value"), every = "1 month")),
+      "resample nonpositive maxGridRowsPerKey" -> te(Resample(idColumn = "user_id",
+        timeColumn = "ts",
+        valueColumns = Seq("value"), every = "1 hour",
         maxGridRowsPerKey = Some(0L))),
-      "profile duplicate columns" -> t(TransformOp(op = "profile",
-        columns = Seq("lang", "lang"))),
-      "quantile_rollup quantile above one" -> te(TransformOp(
-        op = "quantile_rollup", column = Some("value"),
+      "profile duplicate columns" -> t(Profile(columns = Seq("lang", "lang"))),
+      "quantile_rollup quantile above one" -> te(QuantileRollup(column = "value",
         groupColumns = Seq("event_type"), quantiles = Seq(0.5, 1.2))),
-      "quantile_rollup without quantiles" -> te(TransformOp(
-        op = "quantile_rollup", column = Some("value"),
+      "quantile_rollup without quantiles" -> te(QuantileRollup(column = "value",
         groupColumns = Seq("event_type"))),
-      "distinct_rollup without groupColumns" -> te(TransformOp(
-        op = "distinct_rollup", column = Some("user_id"))),
-      "distinct_rollup bad every duration" -> te(TransformOp(
-        op = "distinct_rollup", column = Some("user_id"),
+      "distinct_rollup without groupColumns" -> te(DistinctRollup(column = "user_id")),
+      "distinct_rollup bad every duration" -> te(DistinctRollup(column = "user_id",
         groupColumns = Seq("event_type"), timeColumn = Some("ts"),
         every = Some("whenever"))),
-      "pack zero budget" -> t(TransformOp(op = "pack", column = Some("n_chars"),
-        budget = Some(0L), orderColumns = Seq("doc_id"))),
-      "pack without orderColumns" -> t(TransformOp(op = "pack",
-        column = Some("n_chars"), budget = Some(100L))),
-      "planAudit bad mode" ->
-        simple("fz-bad", "documents").copy(planAudit = Some("maybe")))
+      "pack zero budget" -> t(Pack(column = "n_chars",
+        budget = 0L, orderColumns = Seq("doc_id"))),
+      "pack without orderColumns" -> t(Pack(column = "n_chars", budget = 100L)))
   }
+
+  /** Declarations no op class can express — an unknown op, a field of
+    * another op — refused at DECODE with an IAE naming the spec id.
+    */
+  private def invalidDecodes: Seq[(String, String)] = Seq(
+    "unknown transform op" -> """{"op":"transmogrify"}""",
+    "knn_index_append with declared geometry (the artifact pins it)" ->
+      """{"op":"knn_index_append","column":"embedding","idColumn":"vec_id",
+        |"indexPath":"/nowhere/idx","nCells":8}""".stripMargin,
+    "knn attributeColumns (a build-time declaration)" ->
+      """{"op":"knn","column":"embedding","idColumn":"vec_id","k":10,
+        |"queryPath":"/tmp/q","attributeColumns":["label"]}""".stripMargin,
+    "knn_index candidateFilter (a search-time knob)" ->
+      """{"op":"knn_index","method":"quantized","column":"embedding",
+        |"idColumn":"vec_id","indexPath":"/tmp/idx",
+        |"candidateFilter":"label < 4"}""".stripMargin,
+    "shingle_index_retract with declared width (ids only)" ->
+      """{"op":"shingle_index_retract","idColumn":"doc_id",
+        |"historyPath":"/tmp/hist","shingleSize":3}""".stripMargin,
+    "knn_index_delete with declared geometry (ids only)" ->
+      """{"op":"knn_index_delete","idColumn":"vec_id","indexPath":"/tmp/idx",
+        |"method":"ivf","nCells":8}""".stripMargin,
+    "knn_index_compact with declared geometry (it only folds)" ->
+      """{"op":"knn_index_compact","indexPath":"/nowhere/idx","nCells":8}""",
+    "shingle_index_compact with a declared width (the artifact pins it)" ->
+      """{"op":"shingle_index_compact","shingleSize":3,
+        |"historyPath":"/nowhere/shingles.parquet"}""".stripMargin)
+
+  property("every undecodable transform fails at decode with IAE naming the id") =
+    Prop.all(invalidDecodes.map { case (desc, op) =>
+      val json = s"""{"id":"fz-bad","processingMode":"SIMPLE_STREAM",
+        |"sourceTopic":{"name":"documents"},"transform":[$op]}""".stripMargin
+      val refused =
+        try { PipelineSpec.fromJson(json); false }
+        catch { case e: IllegalArgumentException => e.getMessage.contains("fz-bad") }
+      Prop(refused) :| desc
+    }: _*)
 
   property("every invalid spec class fails at build with IAE naming the id") =
     Prop.all(invalidSpecs.map { case (desc, spec) =>

@@ -4,15 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.config.{SpecSurface, TransformOp}
+import graft.config.{PipelineSpec, SpecSurface, TransformOp}
 
 /** Drift enforcement between the config surface, its user-facing reference
   * doc, and the spec fuzzer (round-13 directive #8): `SpecSurface` is the
   * single source of truth; this suite fails when
-  *   - an op is listed but not dispatched by the validator (or vice versa),
+  *   - a TransformOp case class is not registered for decoding,
+  *   - a transform op accepts a field of another op, or an omitted
+  *     required field escapes as anything but the [id]-prefixed error,
   *   - `docs/SPEC_REFERENCE.md` documents a different op set than the code,
-  *   - any config field (reflectively enumerated per case class) is absent
-  *     from the doc,
+  *   - an op's field is absent from that op's section of the doc, or any
+  *     other config field (reflectively enumerated) from the doc,
   *   - SpecFuzzProperties carries no valid-spec generator for a listed op.
   */
 class SpecSurfaceSpec extends AnyFunSuite {
@@ -20,23 +22,58 @@ class SpecSurfaceSpec extends AnyFunSuite {
   private lazy val doc: String =
     Files.readString(Paths.get("docs/SPEC_REFERENCE.md"))
 
-  test("every listed op is dispatched by the validator; unknown ops name the full list") {
-    SpecSurface.transformOps.foreach { op =>
-      // an empty TransformOp of a KNOWN op fails on its own required-field
-      // message (never the unknown-op fallthrough); a validator that no
-      // longer dispatches the op would hit the fallthrough and fail here
-      val msg =
-        try { TransformOp(op = op).validate("spec"); "" }
-        catch { case e: IllegalArgumentException => e.getMessage }
-      assert(!msg.contains("unknown transform op"),
-        s"op '$op' is listed in SpecSurface but not dispatched: $msg")
+  private def spec(ops: String): String =
+    s"""{"id":"spec","processingMode":"SIMPLE_STREAM",
+       |"sourceTopic":{"name":"documents"},"transform":[$ops]}""".stripMargin
+
+  private def refusal(json: String): String =
+    intercept[IllegalArgumentException](PipelineSpec.fromJson(json)).getMessage
+
+  test("every TransformOp case class is registered; unknown ops name the full list") {
+    import scala.reflect.runtime.{universe => ru}
+    val mirror = ru.runtimeMirror(getClass.getClassLoader)
+    def leaves(c: ru.ClassSymbol): Set[ru.ClassSymbol] = {
+      val subs = c.knownDirectSubclasses.map(_.asClass)
+      if (subs.isEmpty) Set(c) else subs.flatMap(leaves)
     }
-    val unknown = intercept[IllegalArgumentException] {
-      TransformOp(op = "no_such_op").validate("spec")
-    }.getMessage
-    assert(unknown.contains("unknown transform op"))
+    val classes = leaves(mirror.classSymbol(classOf[TransformOp]))
+      .map(c => mirror.runtimeClass(c): Class[_])
+    assert(classes.size == 33 &&
+      classes == TransformOp.registered.map(_._2: Class[_]).toSet)
+    val unknown = refusal(spec("""{"op":"no_such_op"}"""))
+    assert(unknown.startsWith("[spec] unknown transform op 'no_such_op'"))
     SpecSurface.transformOps.foreach(op => assert(unknown.contains(op),
       s"unknown-op error no longer lists '$op'"))
+  }
+
+  test("each op refuses a field that belongs only to other ops, naming both") {
+    val fields = SpecSurface.opFields
+    val foreign = fields.flatMap(_._2).distinct
+    fields.foreach { case (op, own) =>
+      val f = foreign.filterNot(own.contains).head
+      val msg = refusal(spec(s"""{"op":"$op","$f":"x"}"""))
+      assert(msg.startsWith(s"[spec] $op takes no field '$f'"), msg)
+    }
+    // the same strictness through YAML; fields of the spec itself stay lenient
+    val yaml = intercept[IllegalArgumentException](PipelineSpec.fromYaml(
+      """id: y
+        |processingMode: SIMPLE_STREAM
+        |someFutureField: 1
+        |sourceTopic: {name: documents}
+        |transform:
+        |  - {op: filter, expression: "doc_id > 0", shingleSize: 3}
+        |""".stripMargin)).getMessage
+    assert(yaml.startsWith("[y] filter takes no field 'shingleSize'"), yaml)
+  }
+
+  test("an omitted required field is the [id]-prefixed config error, never an NPE") {
+    SpecSurface.transformOps.foreach { op =>
+      try PipelineSpec.fromJson(spec(s"""{"op":"$op"}"""))
+      catch {
+        case e: IllegalArgumentException =>
+          assert(e.getMessage.contains(s"[spec] $op"), e.getMessage)
+      }
+    }
   }
 
   test("SPEC_REFERENCE.md op headings match SpecSurface.transformOps exactly, in order") {
@@ -54,6 +91,18 @@ class SpecSurfaceSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"undocumented config fields (add to docs/SPEC_REFERENCE.md): " +
         missing.mkString(", "))
+  }
+
+  test("every op's fields appear under that op's heading in SPEC_REFERENCE.md") {
+    val missing = SpecSurface.opFields.flatMap { case (op, fields) =>
+      val from = doc.indexOf(s"\n### $op\n")
+      assert(from >= 0, s"no '### $op' heading")
+      val next = "\n##".r.findFirstMatchIn(doc.substring(from + 1))
+      val section = next.fold(doc.substring(from))(m => doc.substring(from, from + 1 + m.start))
+      fields.filterNot(f => section.contains(s"`$f`")).map(f => s"$op.$f")
+    }
+    assert(missing.isEmpty,
+      s"op fields undocumented in their op's section: ${missing.mkString(", ")}")
   }
 
   test("every spec-level audit finding is documented") {
