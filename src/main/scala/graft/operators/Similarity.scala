@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 
 import graft.functions.VectorFunctions
-import graft.sinks.Commit
+import graft.sinks.{Commit, Generations}
+import graft.sinks.Generations.observedOr
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §2B X3).
@@ -489,7 +490,7 @@ object Similarity extends Logging {
     // category set is data-derived; a stale sub-directory would serve a
     // vanished category)
     val fs0 = hpath(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(Commit.manifestDir(hpath(indexPath)), hpath(tombDir(indexPath)),
+    Seq(Commit.manifestDir(hpath(indexPath)), hpath(layoutOf(indexPath).tombs),
         hpath(s"$indexPath/_family_stage_postings"))
       .foreach(fs0.delete(_, true))
     if (fs0.exists(hpath(indexPath)))
@@ -898,23 +899,6 @@ object Similarity extends Logging {
     * directory (a second pass over the index at any scale).
     */
 
-  /** Observation metric read with a zero-default for the AQE
-    * empty-prune window: when a runtime stage is proven EMPTY, AQE's
-    * empty-relation propagation can replace the plan subtree holding the
-    * CollectMetrics node, so the observation's metrics never surface.
-    * That prune fires only when zero rows flowed through the observed
-    * point — exactly what the default encodes. Every default taken is
-    * still logged and counted (`Fallbacks`, site `similarity.observed_or`)
-    * so a metric lost any other way cannot pass as an empty answer.
-    */
-  private def observedOr[T](obs: org.apache.spark.sql.Observation,
-      key: String, default: T): T =
-    obs.get.get(key).fold {
-      graft.observe.Fallbacks.record("similarity.observed_or",
-        s"observation metric '$key' did not surface; using $default")
-      default
-    }(_.asInstanceOf[T])
-
   private def writePostings(c: DataFrame, meta: AnnIndexMeta, gen: Int,
       idxDir: String, overwrite: Boolean, partitionLeaves: Boolean): Long = {
     val mode = if (overwrite) "overwrite" else "append"
@@ -1027,39 +1011,29 @@ object Similarity extends Logging {
       col(idCol).cast(postings.schema("id").dataType).as("id") +:
       col(vecCol).cast(postings.schema("vec").dataType).as("vec") +:
       attrCols.map(a => col(a).cast(postings.schema(a).dataType).as(a)): _*)
-    val newGen = meta.generation + 1
-    // retract a crashed predecessor's orphan generations (invisible to
-    // readers, but a blind re-append would duplicate them at commit), and
-    // finish a completed-but-uncleaned compaction's stale-gen removal
-    // (invisible too — base_gen fences them — but they hold disk forever
-    // otherwise)
-    deleteGensAbove(spark, idxDir, meta.generation)
-    deleteGensBelow(spark, idxDir, meta.base_gen)
-    // The batch probe — count, the order-independent content SIGNATURE
-    // (retry identity, see below), and the dim preflight bounds (min ==
-    // max == meta.dim over non-null vectors) — is OBSERVED during the
-    // write pass itself: ONE job over the batch where probe-then-write was
-    // two full batch passes per append (guide §1.2). The write therefore
-    // lands BEFORE validation; on a refused or retried batch the
-    // just-written generation is retracted (one gen-directory delete, the
-    // standard orphan sweep) with the meta untouched, so the committed
-    // contract is unchanged: nothing becomes visible unless validation
-    // passed and the meta advanced. bit_xor, not sum: an id-hash SUM
-    // overflows long under ANSI mode; xor is order-independent and
-    // overflow-free (a within-batch id duplicated an even number of times
-    // cancels, but the row count keeps the signature distinct).
+    val fs = indexFs(spark, indexPath)
+    val gl = layoutOf(indexPath)
+    // retract a crashed predecessor's orphans and a completed compaction's
+    // uncleaned folded generations (Generations.sweep)
+    Generations.sweep(fs, gl, meta.fence)
+    // The batch probe — count, the content SIGNATURE (the retry identity),
+    // and the dim preflight bounds (min == max == meta.dim over non-null
+    // vectors) — is OBSERVED during the write pass itself: ONE job over the
+    // batch. The write therefore lands BEFORE validation; on a refused or
+    // retried batch the just-written generation is retracted (the sweep)
+    // with the meta untouched, so nothing becomes visible unless
+    // validation passed and the meta advanced.
     val probeObs = org.apache.spark.sql.Observation()
-    val cObserved = c.observe(probeObs, count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(id))"), lit(0L)).as("h"),
+    val cObserved = Generations.signed(c, probeObs,
       min(when(col("vec").isNotNull, size(col("vec")))).as("lo"),
       max(when(col("vec").isNotNull, size(col("vec")))).as("hi"))
     // follow the COMMITTED leaf layout (decided once at build time) —
     // mixed directory depths across generations would break partition
     // discovery
-    val idxRows = writePostings(cObserved, meta, newGen, idxDir,
+    val idxRows = writePostings(cObserved, meta, meta.generation + 1, idxDir,
       overwrite = false,
       partitionLeaves = leafPartitionedOnDisk(spark, idxDir))
-    val n = observedOr(probeObs, "n", 0L)
+    val (n, sig) = Generations.signature(probeObs)
     val loObs = observedOr[Any](probeObs, "lo", null)
     if (loObs != null) {
       val lo = loObs.asInstanceOf[Int]
@@ -1067,41 +1041,30 @@ object Similarity extends Logging {
       if (lo != meta.dim || hi != meta.dim) {
         // retract the orphan generation before refusing — the artifact
         // reads exactly as it did before the verb ran
-        deleteGensAbove(spark, idxDir, meta.generation)
+        Generations.sweep(fs, gl, meta.fence)
         require(false,
           s"appendIndex: new rows carry dims $lo..$hi " +
             s"but the index at '$indexPath' pins dim ${meta.dim}")
       }
     }
-    // RETRY IDENTITY: the one crash window the generation fence alone
-    // cannot disambiguate is "postings AND manifest committed, the verb
-    // killed before it returned" — a blind re-append of the same batch
-    // would then DUPLICATE it. The meta records
-    // the last committed batch's signature (count ⊕ id-hash sum); a retry
-    // of that exact batch reads as already-committed, retracts the
-    // generation it just (redundantly) wrote, and no-ops. (Two deliberate,
-    // consecutive appends of a bit-identical id set are indistinguishable
-    // from a retry by design — give rows fresh ids.)
-    val sig = observedOr(probeObs, "h", 0L) * 31L + n
-    if (n > 0 && meta.batch_sig.contains(sig)) {
-      logWarning(s"appendIndex: batch signature matches the LAST committed " +
-        s"append at $indexPath — treating as a retry of a completed append " +
-        "(no-op)")
-      deleteGensAbove(spark, idxDir, meta.generation)
-      return Seq((meta.method, meta.dim, 0L, meta.n_rows, 0L))
-        .toDF("method", "dim", "appended_rows", "corpus_rows", "index_rows")
+    // RETRY IDENTITY: "postings AND manifest committed, the verb killed
+    // before it returned" — a retry of that exact batch reads as
+    // already-committed, retracts the generation it just wrote, and no-ops
+    val updated = meta.fence.appended(n, sig) match {
+      case Some(f) => meta.withFence(f).copy(n_rows = meta.n_rows + n)
+      case None =>
+        logWarning(s"appendIndex: batch signature matches the LAST committed " +
+          s"append at $indexPath — treating as a retry of a completed append " +
+          "(no-op)")
+        Generations.sweep(fs, gl, meta.fence)
+        return Seq((meta.method, meta.dim, 0L, meta.n_rows, 0L))
+          .toDF("method", "dim", "appended_rows", "corpus_rows", "index_rows")
     }
-    // an EMPTY append commits a generation but identifies no batch — keep
-    // the previous signature so the retry identity of the last REAL batch
-    // survives an interleaved empty commit
-    val updated = meta.copy(n_rows = meta.n_rows + n, generation = newGen,
-      batch_sig = if (n > 0) Some(sig) else meta.batch_sig)
     commitMeta(spark, indexPath, updated)
     // idxRows is the Observation-measured posting count from the write
-    // pass — O(batch) like the old gen-directory recount, minus the
-    // second pass over the appended generation
-    logInfo(s"appendIndex committed gen $newGen at $indexPath: +$n corpus " +
-      s"rows -> ${updated.n_rows} total ($idxRows new index rows)")
+    // pass — O(batch), no second pass over the appended generation
+    logInfo(s"appendIndex committed gen ${updated.generation} at $indexPath: " +
+      s"+$n corpus rows -> ${updated.n_rows} total ($idxRows new index rows)")
     Seq((meta.method, meta.dim, n, updated.n_rows, idxRows))
       .toDF("method", "dim", "appended_rows", "corpus_rows", "index_rows")
   }
@@ -1128,7 +1091,7 @@ object Similarity extends Logging {
     *    becoming visible;
     *  - the folded directories are deleted AFTER the commit; killed
     *    mid-cleanup they stay invisible (base_gen fences them) and every
-    *    later append/compact sweeps them ([[deleteGensBelow]]).
+    *    later maintenance verb sweeps them ([[Generations.sweep]]).
     *
     * A single-generation index (or a retry landing after a completed
     * compaction) is a no-op — nothing to fold. `n_rows`, geometry and
@@ -1139,8 +1102,8 @@ object Similarity extends Logging {
     * invisible — the `base_gen` fence — but a long-running query that
     * listed its files before the commit can still read them to
     * completion instead of failing on a missing file). The NEXT
-    * maintenance verb's sweep ([[deleteGensBelow]] at the top of every
-    * append/delete/compact — a compact retry included) reclaims the disk;
+    * maintenance verb's sweep ([[Generations.sweep]], the first step of
+    * every append/delete/compact — a compact retry included) reclaims the disk;
     * schedule compaction runs as that sweep cadence.
     *
     * On a PER-CATEGORY family the compact CASCADES to every sub-index
@@ -1156,151 +1119,69 @@ object Similarity extends Logging {
       compactIndex(spark, subIndexPath(indexPath, v), retainFolded)
     }
     val idxDir = s"$indexPath/index.parquet"
-    val tombP = tombDir(indexPath)
-    val tombsActive = meta.tomb_gen >= meta.tomb_base
-    if (meta.base_gen == meta.generation && !tombsActive) {
+    val fs = indexFs(spark, indexPath)
+    val gl = layoutOf(indexPath)
+    val f = meta.fence
+    if (meta.base_gen == meta.generation && !f.tombsActive) {
       // one committed generation and no pending deletions (also: a retry
-      // landing after a completed compaction) — nothing to fold, but
-      // STILL sweep a predecessor's leftovers: a compaction killed
-      // between its meta commit and its cleanup leaves invisible
-      // duplicates below base_gen (and a crashed consolidation an orphan
-      // above generation) that the natural retry — re-running this very
-      // verb — must remove (round-18 review: the early return used to
-      // skip the sweep, holding ~2x the index's disk on a compacted index
-      // that receives no further appends)
-      deleteGensAbove(spark, idxDir, meta.generation)
-      deleteGensBelow(spark, idxDir, meta.base_gen)
-      deleteGensAbove(spark, tombP, meta.tomb_gen)
-      deleteGensBelow(spark, tombP, meta.tomb_base)
+      // landing after a completed compaction) — nothing to fold, but STILL
+      // sweep a predecessor's leftovers, which the natural retry (re-running
+      // this very verb) must remove
+      Generations.sweep(fs, gl, f)
       logInfo(s"compactIndex: index at $indexPath holds one committed " +
         s"generation (gen ${meta.generation}) — nothing to fold")
       return Seq((meta.method, meta.dim, meta.n_rows, 0, meta.generation))
         .toDF("method", "dim", "corpus_rows", "folded_generations",
           "generation")
     }
-    val newGen = meta.generation + 1
-    // retract a crashed predecessor's orphans above the committed ranges
-    // (postings AND tombstones) and an earlier compaction's uncleaned
-    // leftovers below them — BEFORE the file listing below, so the copy
-    // job never references a file the retract just deleted (and the
-    // consolidated copy folds exactly the committed range once)
-    deleteGensAbove(spark, idxDir, meta.generation)
-    deleteGensBelow(spark, idxDir, meta.base_gen)
-    deleteGensAbove(spark, tombP, meta.tomb_gen)
-    deleteGensBelow(spark, tombP, meta.tomb_base)
-    // the committed fenced postings MINUS active tombstones: the fold is
-    // where deleted rows are physically dropped (until here they were only
-    // anti-joined away at read time)
-    val live = livePostings(spark, indexPath, meta)
-    // liveRows is OBSERVED during the copy pass itself (the count used to
-    // be a separate full pass over the live postings BEFORE the copy —
-    // two reads of the whole index per compaction). A committed range
-    // holding ZERO live postings (an empty build plus empty appends — or
-    // every posting deleted) folds to an EMPTY generation, and the
-    // partitioned copy write of an empty frame creates no gen=<newGen>
-    // directory at all, so the landed check would read -1, never equal 0,
-    // and EVERY retry of the abort would fail identically (round-18
-    // ADVICE: a scheduled maintenance pipeline on such an index could
-    // never recover). The empty fold instead writes ONE schema-only
-    // marker file below (layout-uniform), keeping the folded index
-    // readable — a search over it returns zero rows, which IS the corpus
-    // state.
+    // a PURE COPY of the live postings (fenced, minus active tombstones —
+    // the fold is where deleted rows are physically dropped), repartitioned
+    // on the layout columns so each cell's accumulated small files land as
+    // one; an empty fold's marker mirrors the hive layout exactly (uniform
+    // partition depth, so discovery never sees conflicting structures)
     val partLeaves = leafPartitionedOnDisk(spark, idxDir)
-    val obs = org.apache.spark.sql.Observation()
-    def counted(df: DataFrame): DataFrame =
-      df.observe(obs, count(lit(1)).as("rows"))
-    val g = lit(newGen).as("gen")
-    val attrs = meta.attr_cols.getOrElse(Nil).map(col)
-    meta.method match {
-      case "quantized" =>
-        // flat layout: read-coalescing packs the accumulated small files
-        // into maxPartitionBytes-sized tasks, which IS the compaction
-        counted(live.select(g +: col("id") +: col("q") +: col("vec") +:
-            attrs: _*))
-          .write.mode("append").partitionBy("gen").parquet(idxDir)
+    val attrNames = meta.attr_cols.getOrElse(Nil)
+    val attrs = attrNames.map(col)
+    val (emptyLeaf, dataCols) = meta.method match {
+      case "quantized" => ("", Seq("id", "q", "vec"))
       case "ivf" =>
-        val sel = live.select(g +: col("cell") +: col("id") +: col("vec") +:
-            attrs: _*)
-        val w = counted(
-          if (partLeaves) sel.repartition(col("cell")) else sel)
-          .write.mode("append")
-        (if (partLeaves) w.partitionBy("gen", "cell")
-         else w.partitionBy("gen")).parquet(idxDir)
+        if (partLeaves) ("cell=0", Seq("id", "vec")) else ("", Seq("cell", "id", "vec"))
       case "lsh" =>
-        val sel = live.select(g +: col("tbl") +: col("bucket") +: col("id") +:
-            col("vec") +: attrs: _*)
-        val w = counted(
-          if (partLeaves) sel.repartition(col("tbl"), col("bucket")) else sel)
-          .write.mode("append")
-        (if (partLeaves) w.partitionBy("gen", "tbl", "bucket")
-         else w.partitionBy("gen")).parquet(idxDir)
+        if (partLeaves) ("tbl=0/bucket=0", Seq("id", "vec"))
+        else ("", Seq("tbl", "bucket", "id", "vec"))
     }
-    val liveRows = observedOr(obs, "rows", 0L)
-    // EMPTY fold: the partitioned writes above produced no files (dynamic
-    // partitioning writes nothing for zero rows) — materialize the
-    // consolidated generation as ONE schema-only parquet file under a
-    // synthetic empty leaf that mirrors the hive layout exactly (uniform
-    // partition depth, so discovery never sees conflicting structures in
-    // any crash window), keeping the folded index readable and searchable
-    if (liveRows == 0L &&
-        !hpath(s"$idxDir/gen=$newGen").getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-          .exists(hpath(s"$idxDir/gen=$newGen"))) {
-      val attrNames = meta.attr_cols.getOrElse(Nil)
-      val (leaf, dataCols) = meta.method match {
+    Generations.fold(spark, fs, gl, f, emptyLeaf, dataCols ++ attrNames,
+        retainFolded) { (live, g) =>
+      meta.method match {
         case "quantized" =>
-          (s"$idxDir/gen=$newGen", Seq("id", "q", "vec") ++ attrNames)
+          // flat layout: read-coalescing packs the accumulated small files
+          // into maxPartitionBytes-sized tasks, which IS the compaction
+          live.select(g +: col("id") +: col("q") +: col("vec") +: attrs: _*)
+            .write.mode("append").partitionBy("gen").parquet(idxDir)
         case "ivf" =>
-          if (partLeaves)
-            (s"$idxDir/gen=$newGen/cell=0", Seq("id", "vec") ++ attrNames)
-          else (s"$idxDir/gen=$newGen", Seq("cell", "id", "vec") ++ attrNames)
+          val sel = live.select(g +: col("cell") +: col("id") +: col("vec") +:
+              attrs: _*)
+          val w = (if (partLeaves) sel.repartition(col("cell")) else sel)
+            .write.mode("append")
+          (if (partLeaves) w.partitionBy("gen", "cell")
+           else w.partitionBy("gen")).parquet(idxDir)
         case "lsh" =>
-          if (partLeaves)
-            (s"$idxDir/gen=$newGen/tbl=0/bucket=0",
-              Seq("id", "vec") ++ attrNames)
-          else (s"$idxDir/gen=$newGen",
-            Seq("tbl", "bucket", "id", "vec") ++ attrNames)
+          val sel = live.select(g +: col("tbl") +: col("bucket") +: col("id") +:
+              col("vec") +: attrs: _*)
+          val w = (if (partLeaves) sel.repartition(col("tbl"), col("bucket"))
+            else sel).write.mode("append")
+          (if (partLeaves) w.partitionBy("gen", "tbl", "bucket")
+           else w.partitionBy("gen")).parquet(idxDir)
       }
-      live.select(dataCols.map(col): _*).limit(0)
-        .write.mode("overwrite").parquet(leaf)
-    }
+    } { (folded, _) => commitMeta(spark, indexPath, meta.withFence(folded)) }
     val folded = meta.generation - meta.base_gen + 1
-    // write-landed check BEFORE the point of no return: the consolidated
-    // generation's parquet FOOTERS (driver-side metadata, no data scan —
-    // genuinely so now; this used to be a spark count() job re-reading
-    // the whole copy) must hold exactly the observed live posting count.
-    // A mismatch aborts with the orphan generation still invisible and
-    // the OLD index fully intact.
-    val copiedRows = Commit.footerRowCount(spark.sessionState.newHadoopConf(),
-      hpath(s"$idxDir/gen=$newGen"))
-    require(copiedRows == liveRows,
-      s"compactIndex: consolidated generation holds $copiedRows postings " +
-        s"but the committed range holds $liveRows — aborting before the " +
-        "meta commit (the old index reads unchanged; the orphan gen=" +
-        s"$newGen is retracted by the next maintenance verb)")
-    // ONE commit advances the posting fence AND clears the tombstones:
-    // the folded duplicates and the physically-dropped deleted rows turn
-    // invisible atomically with the consolidated copy becoming visible
-    val updated = meta.copy(generation = newGen, base_gen = newGen,
-      tomb_base = meta.tomb_gen + 1, tomb_rows = 0L)
-    commitMeta(spark, indexPath, updated)
-    // cleanup AFTER the commit — a crash here leaves invisible duplicates
-    // for the next maintenance verb's sweep, never a half-visible index.
-    // With retainFolded the cleanup is DEFERRED to that same sweep by
-    // design: in-flight readers that listed the folded files before the
-    // commit read them to completion instead of failing mid-query
-    if (retainFolded) {
-      logInfo(s"compactIndex: retainFolded — folded generations below gen " +
-        s"$newGen at $indexPath outlive this commit (invisible to new " +
-        "readers; the next maintenance verb's sweep reclaims the disk)")
-    } else {
-      deleteGensBelow(spark, idxDir, newGen)
-      deleteGensBelow(spark, tombP, meta.tomb_gen + 1)
-    }
+    val newGen = meta.generation + 1
     logInfo(s"compactIndex folded $folded generations at $indexPath into " +
       s"gen $newGen (${meta.n_rows} corpus rows" +
-      (if (tombsActive) s"; dropped + cleared tombstone generations " +
-        s"${meta.tomb_base}..${meta.tomb_gen}" else "") + ")")
+      (if (f.tombsActive) s"; dropped + cleared tombstone generations " +
+        s"${meta.tomb_base}..${meta.tomb_gen}" else "") + ")" +
+      (if (retainFolded) " — retainFolded: the folded generations outlive " +
+        "this commit until the next maintenance verb's sweep" else ""))
     Seq((meta.method, meta.dim, meta.n_rows, folded, newGen))
       .toDF("method", "dim", "corpus_rows", "folded_generations",
         "generation")
@@ -1353,14 +1234,11 @@ object Similarity extends Logging {
     val spark = ids.sparkSession
     import spark.implicits._
     val meta = readIndexMeta(spark, indexPath)
-    val idxDir = s"$indexPath/index.parquet"
-    val tombP = tombDir(indexPath)
-    val postings = spark.read.parquet(idxDir)
+    val postings = spark.read.parquet(s"$indexPath/index.parquet")
     // persist the distinct batch only when a per-category family will
     // cascade it into every sub-index (multiple consumers); the plain
     // single-index delete consumes it exactly once — inside the one
-    // observed tombstone-write job below — so a persist would only add a
-    // materialization pass
+    // observed tombstone-write job below
     val isFamily = meta.part_values.exists(_.nonEmpty)
     val d0 = ids.select(col(idCol)
         .cast(postings.schema("id").dataType).as("id"))
@@ -1370,103 +1248,45 @@ object Similarity extends Logging {
         d0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else d0
     try {
-      // No up-front batch count() job: an empty batch falls through to the
-      // matchedPostings==0 no-op below (identical report frame), so the
-      // only cost of not knowing |batch| early is a harmless gen sweep —
-      // while every NON-empty delete (and each cascaded sub-delete on a
-      // family) saves one full pass over the takedown batch
-      // retract a crashed predecessor's orphan tombstone generations and a
-      // completed compaction's not-yet-cleaned committed ones — exactly the
-      // posting-generation sweep, on the tombstone directory
-      deleteGensAbove(spark, tombP, meta.tomb_gen)
-      deleteGensBelow(spark, tombP, meta.tomb_base)
+      // no up-front batch count() job: an empty batch falls through to the
+      // zero-match no-op below (identical report frame)
+      val fs = indexFs(spark, indexPath)
+      val gl = layoutOf(indexPath)
+      Generations.sweep(fs, gl, meta.fence)
       // PER-CATEGORY family: cascade the takedown into every sub-index
       // FIRST — a routed (equality-filtered) search reads ONLY its
       // sub-index, so a tombstone committed on the top index alone would
       // keep serving the deleted rows there. The cascade runs BEFORE the
-      // top-index commit and UNCONDITIONALLY (even when the top matches
-      // no live posting): sub-deletes are idempotent, so a crash — or a
-      // predecessor's crash between the old post-commit cascade and its
-      // completion — is healed by simply retrying the verb, where the
-      // old ordering left the family permanently desynchronized (the
-      // top's matchedPostings==0 retry path never reached the cascade).
-      // Each sub writes only ITS OWN matched ids, so the family's
-      // tombstone disk totals ~the takedown's true footprint, not
-      // batch × categories.
+      // top-index commit and UNCONDITIONALLY: sub-deletes are idempotent,
+      // so a crash anywhere in the cascade is healed by retrying the verb.
+      // Each sub writes only ITS OWN matched ids.
       meta.part_values.getOrElse(Nil).foreach { v =>
         deleteIndex(d, "id", subIndexPath(indexPath, v))
       }
-      // LIVE postings matching the batch (gen-fenced, not already
-      // tombstoned), in CORPUS-row units: each corpus row produced exactly
-      // `mult` posting rows (the method's assignment multiplicity), so
-      // matched-posting-rows / mult is the n_rows adjustment — exact even
-      // when the corpus carried duplicate ids, where a distinct-id count
-      // would drift against build/append's raw-row increments. A
-      // column-pruned scan of (id, gen); vectors never read. NO broadcast
-      // hint on the batch side: the verb's stated use case is the mass
-      // takedown, and Spark's own sizing broadcasts a small list while a
-      // GDPR-scale batch rides a shuffle semi-join instead of OOMing the
-      // verb that exists to absorb it.
-      val mult = postingMultiplicity(meta)
-      // ONE observed job does the whole verb's data work: the column-pruned
-      // live-postings semi-join, both counts (posting rows AND distinct
-      // ids, measured by an Observation during the pass), the distinct,
-      // and the tombstone write — where semi-join-agg then distinct-write
-      // was two jobs over a persisted matched frame. Writing before
-      // knowing matchedPostings is safe: a zero-match batch's dynamic
-      // partitioned write lands NO files (nothing for zero rows), and a
-      // non-zero write above the committed tomb_gen stays invisible until
-      // the meta commits — the standard generation fence.
-      val newTombGen = math.max(meta.tomb_gen + 1, meta.tomb_base)
-      // two plain-count observations bracket the dedup (DISTINCT aggregates
-      // are not allowed inside observed metrics): posting rows before,
-      // distinct matched ids after
-      val pObs = org.apache.spark.sql.Observation()
-      val dObs = org.apache.spark.sql.Observation()
-      // write ONLY the matched ids (semantically identical — unmatched
-      // ids could never kill a posting — and it right-sizes the
-      // anti-join set, the tomb_rows bookkeeping, and the per-sub-index
-      // cascade's tombstone disk on a family)
-      livePostings(spark, indexPath, meta)
-        .select("id").join(d, Seq("id"), "left_semi")
-        .observe(pObs, count(lit(1)).as("p"))
-        .distinct()
-        .observe(dObs, count(lit(1)).as("d"))
-        .select(lit(newTombGen).as("gen"), col("id"),
-          lit(meta.generation).as("upto"))
-        .write.mode("append").partitionBy("gen").parquet(tombP)
-      val matchedPostings = observedOr(pObs, "p", 0L)
+      // LIVE postings matching the batch, in CORPUS-row units: each corpus
+      // row produced exactly `mult` posting rows, so matched-posting-rows /
+      // mult is the n_rows adjustment — exact even when the corpus carried
+      // duplicate ids. A column-pruned scan of (id, gen); vectors never
+      // read. NO broadcast hint on the batch side: Spark's own sizing
+      // broadcasts a small list while a GDPR-scale batch rides a shuffle
+      // semi-join.
+      val (matchedPostings, matchedN, f) = Generations.tombstone(fs, gl,
+        meta.fence, livePostings(spark, indexPath, meta)
+          .select("id").join(d, Seq("id"), "left_semi"))
       if (matchedPostings == 0L) {
-        // nothing live matches — commit NOTHING, and leave no trace: the
-        // empty partitioned write landed no gen directory, but it may have
-        // created an empty tombstone root, which goes again. A tombstone
-        // for an id with no live posting can never kill anything (later
-        // appends take higher generations than its `upto` fence), so
-        // committing the batch would only widen every search's anti-join
-        // and inflate tomb_rows for free. This is also what makes a
-        // committed delete's RETRY a true no-op: the retry re-matches
-        // nothing and leaves meta and disk untouched.
-        val tfs = indexFs(spark, indexPath)
-        if (tfs.exists(hpath(tombP)) && !tfs.listStatus(hpath(tombP))
-            .exists(_.getPath.getName.startsWith("gen=")))
-          tfs.delete(hpath(tombP), true)
         logInfo(s"deleteIndex: no live postings match the id " +
           s"batch at $indexPath — no-op (nothing to tombstone)")
         return Seq((meta.method, meta.dim, 0L, meta.n_rows, meta.tomb_gen))
           .toDF("method", "dim", "deleted_rows", "corpus_rows",
             "tombstone_gen")
       }
-      val removed = matchedPostings / mult
-      val matchedN = observedOr(dObs, "d", 0L)
-      val updated = meta.copy(n_rows = meta.n_rows - removed,
-        tomb_gen = newTombGen,
-        tomb_base = math.min(meta.tomb_base, newTombGen),
-        tomb_rows = meta.tomb_rows + matchedN)
+      val removed = matchedPostings / postingMultiplicity(meta)
+      val updated = meta.withFence(f).copy(n_rows = meta.n_rows - removed)
       commitMeta(spark, indexPath, updated)
-      logInfo(s"deleteIndex committed tombstone gen $newTombGen at " +
+      logInfo(s"deleteIndex committed tombstone gen ${f.tomb_gen} at " +
         s"$indexPath: $matchedN batch ids matched, $removed " +
         s"corpus rows removed -> ${updated.n_rows} corpus rows")
-      Seq((meta.method, meta.dim, removed, updated.n_rows, newTombGen))
+      Seq((meta.method, meta.dim, removed, updated.n_rows, f.tomb_gen))
         .toDF("method", "dim", "deleted_rows", "corpus_rows",
           "tombstone_gen")
     } finally { if (isFamily) d.unpersist(); () }
@@ -1484,94 +1304,20 @@ object Similarity extends Logging {
     case _     => 1L
   }
 
-  private def tombDir(indexPath: String) = s"$indexPath/tombstones.parquet"
-
-  /** Row bar under which the active tombstone set is BROADCAST into the
-    * anti-join (map-side, below the exchanges — the right plan for
-    * ordinary takedown lists); above it the screen becomes a plain
-    * shuffle anti-join, because a mass takedown (a GDPR-scale batch, a
-    * licensing purge of a large corpus share) between compactions would
-    * otherwise ship an arbitrarily large broadcast to every executor on
-    * EVERY search — a driver/executor OOM at 100 TB, not a slowdown.
-    * 1M (id, upto) rows ≈ 16 MB serialized, comfortably inside default
-    * executor headroom. Query-time-overridable (it is a plan-shape knob,
-    * not artifact state) via `spark.graft.knn.tombBroadcastMaxRows`.
+  /** The index's generation layout: postings under `index.parquet`,
+    * tombstones under `tombstones.parquet`.
     */
-  private val TombBroadcastMaxRows = 1_000_000L
+  private def layoutOf(indexPath: String) = Generations.Layout(
+    s"$indexPath/index.parquet", s"$indexPath/tombstones.parquet")
 
-  /** The postings a reader may see: gen-fenced to the committed range and
-    * anti-joined against the ACTIVE tombstone set. The anti-join is
-    * SIZE-AWARE (the meta's `tomb_rows` bookkeeping — closed-form, no
-    * probe job): broadcast below [[TombBroadcastMaxRows]], plain shuffle
-    * anti-join above it, so a mass takedown degrades to one extra
-    * exchange instead of an unbounded broadcast. A tombstone kills only
-    * postings with gen <= its `upto` (the posting generation committed
-    * when the delete ran), so re-appended ids stay live. The `gen` column
-    * is dropped on the way out.
+  /** The postings a reader may see ([[Generations.live]]): gen-fenced to
+    * the committed range and anti-joined against the active tombstones.
     */
   private[graft] def livePostings(spark: SparkSession, indexPath: String,
-      meta: AnnIndexMeta): DataFrame = {
-    val fenced = spark.read.parquet(s"$indexPath/index.parquet")
-      .filter(col("gen") >= meta.base_gen &&
-      col("gen") <= meta.generation)
-    val screened =
-      if (meta.tomb_gen < meta.tomb_base) fenced
-      else {
-        val bar = spark.conf.getOption("spark.graft.knn.tombBroadcastMaxRows")
-          .map(_.toLong).getOrElse(TombBroadcastMaxRows)
-        val tombs0 = spark.read.parquet(tombDir(indexPath))
-          .filter(col("gen") >= meta.tomb_base && col("gen") <= meta.tomb_gen)
-          .select(col("id").as("__tid"), col("upto").as("__tupto"))
-        val tombs =
-          if (meta.tomb_rows <= bar) broadcast(tombs0)
-          else {
-            logInfo(s"livePostings: ${meta.tomb_rows} active tombstone rows " +
-              s"at $indexPath exceed the broadcast bar ($bar) — shuffle " +
-              "anti-join route (compact to fold the set away)")
-            tombs0
-          }
-        fenced.join(tombs,
-          fenced("id") === col("__tid") && fenced("gen") <= col("__tupto"),
-          "left_anti")
-      }
-    screened.drop("gen")
-  }
+      meta: AnnIndexMeta): DataFrame =
+    Generations.live(spark, layoutOf(indexPath), meta.fence)
 
   private def hpath(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  /** Delete posting generation directories ABOVE the committed generation —
-    * a crashed append's orphans — and the scratch of a write job killed
-    * before its commit ([[Commit.clearScratch]]). Readers never see
-    * either (the gen fence; `_temporary` is hidden), but a RETRY would
-    * duplicate them the moment its own write and meta commit, so every
-    * append retracts first.
-    */
-  private def deleteGensAbove(spark: SparkSession, idxDir: String,
-      g: Int): Unit = {
-    Commit.clearScratch(indexFs(spark, idxDir), hpath(idxDir))
-    deleteGensWhere(spark, idxDir, _ > g)
-  }
-
-  /** Delete posting generation directories BELOW the live floor — a
-    * completed compaction's folded duplicates. Readers never see them
-    * (the base_gen fence); every maintenance verb sweeps them so a
-    * compaction killed between meta commit and cleanup doesn't hold the
-    * folded copies' disk forever.
-    */
-  private def deleteGensBelow(spark: SparkSession, idxDir: String,
-      g: Int): Unit = deleteGensWhere(spark, idxDir, _ < g)
-
-  private def deleteGensWhere(spark: SparkSession, idxDir: String,
-      cond: Int => Boolean): Unit = {
-    val p = hpath(idxDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("gen=") &&
-          scala.util.Try(name.stripPrefix("gen=").toInt).toOption.exists(cond))
-        fs.delete(st.getPath, true)
-    }
-  }
 
   /** The manifest body of a stored index: the scalar [[AnnIndexMeta]]
     * (its `vectors` left empty) plus the name of the sidecar holding the
@@ -1917,4 +1663,11 @@ case class AnnIndexMeta(method: String, dim: Int, n_rows: Long,
     // that sub-index: full recall at the sub-corpus's scan cost, no
     // probe widening. None = a plain single index
     part_attr: Option[String] = None,
-    part_values: Option[Seq[String]] = None)
+    part_values: Option[Seq[String]] = None) {
+  /** The generation fence these flat fields carry ([[Generations]]). */
+  def fence: Generations.Fence =
+    Generations.Fence(generation, base_gen, tomb_gen, tomb_base, tomb_rows, batch_sig)
+  def withFence(f: Generations.Fence): AnnIndexMeta = copy(generation = f.generation,
+    base_gen = f.base_gen, tomb_gen = f.tomb_gen, tomb_base = f.tomb_base,
+    tomb_rows = f.tomb_rows, batch_sig = f.batch_sig)
+}

@@ -255,47 +255,21 @@ object Interpreter extends Logging {
       : Seq[graft.observe.PlanAudit.Finding] = windowedStateFindings(t) ++ (t match {
     case t: DedupNear if t.historyPath.isDefined && !df.isStreaming =>
       // pending-retraction advisory for the stored-history screen — the
-      // knn_pending_tombstones discipline on the text side: every screen
-      // anti-joins the `_tombstones` set, and retracted rows hold their
-      // disk until a shingle_index_compact drops them. NORMAL between
-      // weekly compacts, so the bar is a retraction set reaching 10% of
-      // the history's rows (one small side-file read + a parquet footer
-      // count, behind the same probe flag as the knn staleness count).
-      val probeOn = df.sparkSession.conf
-        .get("spark.graft.preflightProbe", "true").toBoolean
-      if (!probeOn) Nil
-      else try {
-        val p = resolvePath(t.historyPath.get, dataDir, specId)
-        shingleTombstones(df.sparkSession, p) match {
-          case Some(tb) =>
-            val tombs = tb.count()
-            // genuinely a parquet FOOTER count (driver-side metadata) —
-            // this used to be a spark count() job over the whole history
-            // artifact, on EVERY screen's preflight
-            val histRows = graft.sinks.Commit.footerRowCount(
-              df.sparkSession.sessionState.newHadoopConf(),
-              new org.apache.hadoop.fs.Path(p))
-            // -1 = history path not readable (the old spark count() threw
-            // into the NonFatal handler below) — skip the advisory rather
-            // than warn against a nonsense 1-row denominator
-            if (histRows < 0L || tombs == 0L || tombs * 10 < histRows) Nil
-            else Seq(graft.observe.PlanAudit.Finding("warn",
-              ShinglePendingRetractions,
-              s"historyPath '$p' carries $tombs pending retraction(s) " +
-                f"against $histRows history rows (${tombs * 100.0 / math.max(1L, histRows)}%.0f%%)" +
-                " — every screen anti-joins the set, re-publishing any of " +
-                "those ids is refused, and the rows hold their disk. Fold " +
-                "with shingle_index_compact (it physically drops the " +
-                "retracted rows and clears the set)"))
-          case None => Nil
+      // knn_tombstone_fraction discipline on the text side, closed-form
+      // from the history's manifest (no Spark job): every screen
+      // anti-joins the retraction set, and retracted rows hold their disk
+      // until a shingle_index_compact drops them. NORMAL between
+      // compactions, so the bar is a set reaching 10% of the history's rows
+      val p = resolvePath(t.historyPath.get, dataDir, specId)
+      graft.operators.ShingleHistory.pendingRetractions(df.sparkSession, p)
+        .toSeq.collect { case (tombs, rows) if tombs > 0 && tombs * 10 >= rows =>
+          graft.observe.PlanAudit.Finding("warn", ShinglePendingRetractions,
+            s"historyPath '$p' carries $tombs pending retraction(s) " +
+              f"against $rows history rows (${tombs * 100.0 / math.max(1L, rows)}%.0f%%)" +
+              " — every screen anti-joins the set, and the rows hold their " +
+              "disk. Fold with shingle_index_compact (it physically drops " +
+              "the retracted rows and clears the set)")
         }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          logInfo(s"[$specId] shingle retraction preflight skipped: " +
-            s"historyPath not readable at build time " +
-            s"(${e.getClass.getSimpleName})")
-          Nil
-      }
     case t: DedupNear if t.embedding && !df.isStreaming =>
       // corpus estimate from the optimizer's size statistic (compressed
       // bytes / packed vector width — a LOWER bound, the conservative
@@ -748,10 +722,10 @@ object Interpreter extends Logging {
   private val KnnFilterLowSelectivity = "knn_filter_low_selectivity"
 
   /** Stored-history pending retractions (the knn tombstone advisory's
-    * text-side twin): shingle_index_retract tombstones accumulate in the
-    * `_tombstones` side file until a shingle_index_compact drops the rows
-    * and clears the set — every screen pays the anti-join meanwhile.
-    * Fires when the set reaches 10% of the history's rows.
+    * text-side twin): shingle_index_retract tombstone generations
+    * accumulate until a shingle_index_compact drops the rows and clears
+    * the set — every screen pays the anti-join meanwhile. Fires when the
+    * set reaches 10% of the history's rows (manifest figures).
     */
   private val ShinglePendingRetractions = "shingle_pending_retractions"
 
@@ -965,239 +939,6 @@ object Interpreter extends Logging {
         "artifact with scalar_summary over those columns, or drop them")
   }
 
-  /** Config-grade preflight for a stored [[graft.operators.Dedup.shingleIndex]]
-    * artifact: the shingle-frame columns must be present, and the
-    * artifact's pinned `shingle_size` must equal the declared one —
-    * hashed shingles of different widths never meaningfully collide, so a
-    * mismatch would silently screen NOTHING (every doc "novel"). An empty
-    * artifact (no rows to read the pin from) legitimately screens against
-    * an empty history.
-    */
-  private def readShingleArtifact(spark: SparkSession, path: String,
-      declared: Int, specId: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val missing = Seq("id", "sh", "n", "shingle_size")
-      .filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"[$specId] historyPath '$path' is not a shingle_index artifact: " +
-        s"missing column(s) ${missing.mkString(", ")} (found: " +
-        s"${df.columns.mkString(", ")}). Build the history artifact with " +
-        "the shingle_index op (or Dedup.shingleIndex) at publish time")
-    // the pin is checked over the artifact's DISTINCT widths, not one
-    // sampled row: the natural publish loop APPENDS each ingest's novel
-    // shingles, and one mis-widthed append would otherwise hide behind a
-    // lucky sample while its rows silently never collide. Cast-tolerant
-    // (a hand-built artifact may carry BIGINT or null shingle_size —
-    // those must surface as this config error, not a ClassCastException).
-    // The distinct scan grows with history size and runs at EVERY pipeline
-    // build (round-17 ADVICE) — so a HEALTHY verdict is cached in the
-    // artifact's `_manifest` (graft.sinks.Commit; underscore-prefixed:
-    // plain parquet reads of the artifact ignore it), keyed on the data
-    // files' listing
-    // signature; an out-of-band append changes the signature and the next
-    // build re-scans once and re-caches (self-healing, hand-built
-    // artifacts included). Unhealthy artifacts are never cached — they
-    // fail the requires below on every build, as they should.
-    val widths = shinglePinWidths(spark, path, df)
-    require(!widths.contains(None),
-      s"[$specId] historyPath '$path' carries null (or non-numeric) " +
-        "shingle_size values — the artifact's width pin is unreadable; " +
-        "rebuild it with the shingle_index op")
-    val distinctW = widths.flatten.toSeq.sorted
-    require(distinctW.size <= 1,
-      s"[$specId] historyPath '$path' mixes shingle widths " +
-        s"(${distinctW.mkString(", ")}) — an appended publish used a " +
-        "different shingleSize, and its rows can never collide with the " +
-        "batch's shingles (they would silently screen as novel). Rebuild " +
-        "the artifact at one width")
-    distinctW.headOption.foreach { stored =>
-      require(stored == declared,
-        s"[$specId] declared shingleSize=$declared does not match " +
-          s"historyPath '$path' (built with shingle_size=$stored) — " +
-          "declare shingleSize=" + stored + ", or rebuild the artifact " +
-          "with shingle_index (mismatched shingle widths never collide: " +
-          "the screen would silently pass everything as novel)")
-    }
-    df
-  }
-
-  /** The shingle artifact's distinct-width probe with its manifest
-    * cache (see [[readShingleArtifact]]): returns the artifact's distinct
-    * `shingle_size` values (≤ 3 sampled, None = null/non-numeric), reading
-    * them from the committed [[ShinglePin]] when its stored listing
-    * signature still matches the data files, else from one column scan
-    * (the shingle_size column is a constant — RLE'd, so the rebuild scan
-    * is cheap even when the history is not).
-    */
-  private def shinglePinWidths(spark: SparkSession, path: String,
-      df: DataFrame): Seq[Option[Int]] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sig = shinglePinSignature(fs, root)
-    // a DRIVER-SIDE read (a listing plus one small JSON file) — no Spark job
-    // per screen/append/compact preflight; a missing pin is the normal
-    // first-build state
-    val cached: Option[Int] =
-      graft.sinks.Commit.readManifest(fs, root, classOf[ShinglePin]).collect {
-        case (_, pin) if (pin.n_files, pin.total_bytes, pin.max_mtime) == sig =>
-          pin.shingle_size
-      }
-    cached match {
-      case Some(w) => Seq(Some(w))
-      case None =>
-        val widths = df.select(col("shingle_size").cast("int").as("w"))
-          .distinct().limit(3).collect().toSeq.map(r =>
-            if (r.isNullAt(0)) None else Some(r.getInt(0)))
-        // cache only the HEALTHY verdict (exactly one non-null width) —
-        // best-effort: a read-only artifact location just skips the cache.
-        // The stored signature is the one captured BEFORE the width scan
-        // (round-18 review): re-listing here would pair the scanned width
-        // with a signature that postdates it, so an out-of-band foreign-
-        // width append landing DURING the scan would be masked forever —
-        // with the pre-scan signature that append changes the listing and
-        // the next build re-scans
-        widths match {
-          case Seq(Some(w)) => writeShinglePin(spark, path, w, Some(sig))
-          case _            => ()
-        }
-        widths
-    }
-  }
-
-  /** Recursive listing of the artifact's DATA files (hidden `_`/`.` path
-    * segments excluded — the pin itself, _SUCCESS, checkpoints) as
-    * (relative path, length, mtime) rows: the same metadata walk the
-    * parquet read does anyway — never a data scan.
-    */
-  private def shingleDataListing(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[(String, Long, Long)]
-    val rootUri = root.toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(rootUri)
-      val hidden = rel.split('/').exists(s =>
-        s.startsWith("_") || s.startsWith("."))
-      if (st.isFile && !hidden)
-        out += ((rel, st.getLen, st.getModificationTime))
-    }
-    out.result()
-  }
-
-  /** The pin's listing signature, folded from [[shingleDataListing]]:
-    * (file count, total bytes, max mtime).
-    */
-  private def shingleListingSig(
-      listing: Seq[(String, Long, Long)]): (Long, Long, Long) =
-    (listing.size.toLong, listing.map(_._2).sum,
-      if (listing.isEmpty) 0L else listing.map(_._3).max)
-
-  private def shinglePinSignature(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): (Long, Long, Long) =
-    shingleListingSig(shingleDataListing(fs, root))
-
-  /** The append-window race check (round-18 ADVICE): given the data-file
-    * listings bracketing a NON-EMPTY append write, decide whether the
-    * delta is exactly that one write job's own files. Spark stamps every
-    * file of one write job with one job UUID (`part-NNNNN-<uuid>...`), so
-    * the delta is "ours alone" iff no pre-existing file vanished, at
-    * least one file is new, every new file parses, and all new files
-    * share ONE UUID. Anything else means an out-of-band writer raced the
-    * window and the width pin must be invalidated, not refreshed.
-    * Returns (foreignDetected, human note).
-    */
-  private[graft] def appendRaceVerdict(before: Seq[String],
-      after: Seq[String]): (Boolean, String) = {
-    val beforeSet = before.toSet
-    val newFiles = after.filterNot(beforeSet)
-    val removed = beforeSet -- after.toSet
-    val uuidRe = "part-\\d+-([0-9a-fA-F-]{36})".r
-    val uuids = newFiles.map(f =>
-      uuidRe.findFirstMatchIn(f.split('/').last).map(_.group(1)))
-    val foreign = removed.nonEmpty || newFiles.isEmpty ||
-      uuids.exists(_.isEmpty) || uuids.flatten.distinct.size > 1
-    (foreign, s"${removed.size} removed, ${newFiles.size} new across " +
-      s"${uuids.flatten.distinct.size} write jobs")
-  }
-
-  /** The width pin's manifest body: the data-file listing signature the
-    * width was verified against, and the verified width.
-    */
-  private[graft] case class ShinglePin(n_files: Long, total_bytes: Long,
-      max_mtime: Long, shingle_size: Int)
-
-  /** Write the width-pin manifest for a KNOWN-healthy width — an
-    * O(#files) listing plus one small driver-side file, never a data scan.
-    * Used by the maintenance verbs after they change the layout (the
-    * append verified the batch width against the pin BEFORE writing; the
-    * compactor rewrites rows unchanged — both list fresh, their layout
-    * being settled under the single-maintainer rule), and by the probe's
-    * cache-miss path, which passes the signature it captured BEFORE its
-    * width scan so a concurrent out-of-band write invalidates rather
-    * than hides. Best-effort: a read-only artifact location just skips
-    * the cache.
-    */
-  private def writeShinglePin(spark: SparkSession, path: String,
-      width: Int, preSig: Option[(Long, Long, Long)] = None): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sig = preSig.getOrElse(shinglePinSignature(fs, root))
-    scala.util.Try(graft.sinks.Commit.writeManifest(fs, root,
-      ShinglePin(sig._1, sig._2, sig._3, width)))
-    ()
-  }
-
-  /** The shingle artifact's PENDING-RETRACTION set (`_tombstones.parquet`
-    * — underscore-prefixed, so plain parquet reads of the artifact ignore
-    * it, exactly like the width pin): distinct ids committed by
-    * shingle_index_retract, KILLED from every screen by an anti-join
-    * until shingle_index_compact physically drops their rows and clears
-    * the file. None = no retractions pending. The set's part files are
-    * listed and read by name: handing Spark the underscore directory
-    * itself logs a spurious "All paths were ignored" WARN on every read.
-    */
-  private def shingleTombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones.parquet")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(tp)) Nil
-      else fs.listStatus(tp).toSeq.map(_.getPath).filter { f =>
-        val n = f.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-    if (parts.isEmpty) None
-    else Some(spark.read.parquet(parts.map(_.toString): _*).select("id").distinct())
-  }
-
-  /** Size-aware id-set join against a shingle artifact's tombstone set (or
-    * a takedown batch): broadcast below the byte bar — a map-side screen
-    * below the exchanges, the right plan for ordinary takedown lists — and
-    * a plain shuffle join above it, so a MASS retraction (a GDPR-scale
-    * batch between compactions) degrades to one extra exchange instead of
-    * an unbounded broadcast OOM on every screen (the knn livePostings cost
-    * rule, on the text side). The bar reads the id side's optimizer size
-    * statistic (parquet file bytes — no probe job); 32 MB ≈ 4M long ids.
-    * Override via `spark.graft.shingleTombBroadcastMaxBytes`.
-    */
-  private def sizeAwareIdJoin(left: DataFrame, ids: DataFrame,
-      joinType: String): DataFrame = {
-    val bar = BigInt(left.sparkSession.conf
-      .getOption("spark.graft.shingleTombBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(32L << 20))
-    val sz = ids.queryExecution.optimizedPlan.stats.sizeInBytes
-    val right =
-      if (sz <= bar) broadcast(ids)
-      else {
-        logInfo(s"sizeAwareIdJoin: id set is ~$sz bytes (> broadcast bar " +
-          s"$bar) — shuffle ${joinType} route (compact to fold the " +
-          "tombstones away)")
-        ids
-      }
-    left.join(right, Seq("id"), joinType)
-  }
-
   /** Config-grade preflight for a stored ANN index: the artifact must
     * exist and be an index meta (readIndexMeta's own errors), the declared
     * method must be the stored one, and any DECLARED geometry must match
@@ -1403,18 +1144,13 @@ object Interpreter extends Logging {
       // the NEW ingest batch, historyPath the corpus's stored shingle_index
       // — only the batch is tokenized; the history is never re-shingled
       // (the knn indexPath economics for text dedup). Row-PRESERVING: the
-      // novel survivors pass through with their record key.
+      // novel survivors pass through with their record key. Retracted docs
+      // are screened out of the history, exactly as if never published.
       val p = resolvePath(t.historyPath.get, dataDir, specId)
-      val hist = readShingleArtifact(df.sparkSession, p, t.shingleSize.get,
-        specId)
-      // pending retractions (shingle_index_retract) are anti-joined out of
-      // the history — a retracted doc can no longer suppress a novel
-      // arrival, exactly as if its rows were already physically dropped
-      val screened = shingleTombstones(df.sparkSession, p)
-        .fold(hist)(tb => sizeAwareIdJoin(hist, tb, "left_anti"))
       graft.operators.Dedup.incrementalNovelPrepared(df, t.idColumn,
         t.column, t.shingleSize.get, t.threshold.get,
-        screened.drop("shingle_size"))
+        graft.operators.ShingleHistory.screenRows(df.sparkSession, p,
+          t.shingleSize.get, specId).drop("shingle_size"))
     case t: DedupNear =>
       // the frame feeds pair generation AND the representative anti-join —
       // persist it for the double consumption (the x14 measured win) and
@@ -1449,97 +1185,15 @@ object Interpreter extends Logging {
       else result
     case t: ShingleIndexAppend =>
       // the INCREMENTAL-MAINTENANCE verb of the screen loop (knn_index_
-      // append's text analogue): appends the batch's (id, sh, n,
-      // shingle_size) rows to the STORED history artifact — the history is
-      // never re-tokenized, and the daily loop becomes screen (dedup_near
-      // historyPath) → publish survivors → shingle_index_append them.
-      // Eager like knn_index (the write IS the op); REPLACES the row set
-      // with a one-row report. Crash/retry contract: the append job
-      // commits atomically through the output committer (a killed job's
-      // task files stay under _temporary, invisible to readers), and a
-      // DOUBLE append is verdict-invariant by construction — duplicated
-      // history rows only widen the candidate join, whose matches feed a
-      // left_anti (pinned in OperatorsSpec) — so retry-after-crash is safe
-      // without a meta swap.
+      // append's text analogue): the batch's (id, sh, n, shingle_size) rows
+      // become one new generation of the STORED history — the daily loop
+      // is screen (dedup_near historyPath) → publish survivors →
+      // shingle_index_append them. Eager like knn_index (the write IS the
+      // op); REPLACES the row set with a one-row report. A retry of the
+      // last committed batch no-ops (graft.sinks.Generations).
       val p = resolvePath(t.historyPath, dataDir, specId)
-      // the artifact must exist and pin the SAME width — appending foreign-
-      // width shingles would poison the artifact into the mixed-width
-      // config error on every later read
-      val histForAppend = readShingleArtifact(df.sparkSession, p,
-        t.shingleSize, specId)
-      // a batch id with a PENDING retraction is refused loudly: its
-      // appended rows would be silently re-killed by the tombstone at
-      // every screen and physically dropped at the next compact — the
-      // exact data loss a re-publisher would never notice. Compact first
-      // (it clears the retractions), then re-publish.
-      shingleTombstones(df.sparkSession, p).foreach { tb =>
-        val pending = sizeAwareIdJoin(df.select(col(t.idColumn)
-            .cast(histForAppend.schema("id").dataType).as("id")),
-          tb, "left_semi").distinct().count()
-        require(pending == 0L,
-          s"[$specId] shingle_index_append: $pending batch id(s) have a " +
-            s"PENDING retraction at '$p' (shingle_index_retract tombstoned " +
-            "them) — appending them now would be silently screened away " +
-            "and physically dropped at the next compact. Run " +
-            "shingle_index_compact first (it drops the retracted rows and " +
-            "clears the tombstones), then re-publish")
-      }
-      val batch = graft.operators.Dedup.registerCache(
-        graft.operators.Dedup.shingleIndex(df, t.idColumn,
-          t.column, t.shingleSize)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val fsRoot = new org.apache.hadoop.fs.Path(p)
-      val fsA = fsRoot.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      // re-pin the width over the grown artifact: the pre-append preflight
-      // verified the batch width equals the stored pin, so the post-append
-      // width set is unchanged by construction — the refresh is an
-      // O(#files) listing + one manifest write (round-18 review: re-reading
-      // the artifact here would have paid an accumulated-history column
-      // scan on every append). The refresh must not MASK an out-of-band
-      // foreign-width append landing in the write window (round-18
-      // ADVICE: a post-write blind re-list would fold the foreign files
-      // into the fresh signature forever): the pre/post listings bracket
-      // the write, and the delta must be exactly this job's own files —
-      // Spark stamps every file of one write job with one job UUID
-      // (part-NNNNN-<uuid>...), so a second UUID among the new files, a
-      // vanished pre-existing file, or an unparseable name means a
-      // foreign writer raced the append; the pin is then INVALIDATED
-      // (deleted) so the next build re-scans the width column once and
-      // re-caches through the probe's pre-scan-signature rule.
-      val before = shingleDataListing(fsA, fsRoot)
-      // an EMPTY batch appends nothing — skip the write (the single-UUID
-      // rule below needs "our job wrote >= 1 file" to hold, which only a
-      // non-empty batch guarantees) and leave the still-valid pin alone
-      val batchRows = batch.count()
-      if (batchRows > 0) {
-        graft.sinks.Commit.clearScratch(fsA, fsRoot)
-        batch.write.mode("append").parquet(p)
-        val after = shingleDataListing(fsA, fsRoot)
-        val (foreign, raceNote) = Interpreter.appendRaceVerdict(
-          before.map(_._1), after.map(_._1))
-        if (foreign) {
-          logWarning(s"[$specId] shingle_index_append: the artifact at " +
-            s"'$p' changed by more than this append's own files " +
-            s"($raceNote) — an out-of-band " +
-            "writer raced the append; invalidating the width-pin cache " +
-            "so the next build re-verifies the width from the data")
-          fsA.delete(graft.sinks.Commit.manifestDir(fsRoot), true)
-        } else writeShinglePin(df.sparkSession, p, t.shingleSize,
-          Some(shingleListingSig(after)))
-      }
-      // the write-landed verification stays O(batch)+O(#files): the batch
-      // count scans the batch once, and the post-append history count is a
-      // parquet FOOTER count — now genuinely driver-side metadata reads
-      // (this used to be a spark count() job over the accumulated history)
-      val histDocs = graft.sinks.Commit.footerRowCount(
-        df.sparkSession.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(p))
-      // shingleIndex is row-preserving (one (id, sh, n) row per input doc,
-      // no filter), so the already-counted batch IS the appended-docs count
-      // — the separate df.count() here was a second full pass over the
-      // batch's upstream chain per append
-      val appended = batchRows
+      val (appended, histDocs) = graft.operators.ShingleHistory.append(df,
+        t.idColumn, t.column, t.shingleSize, p, specId)
       logInfo(s"[$specId] shingle_index_append: +$appended docs -> " +
         s"$histDocs history rows at $p")
       import df.sparkSession.implicits._
@@ -1551,56 +1205,17 @@ object Interpreter extends Logging {
     case t: ShingleIndexRetract =>
       // the REMOVAL verb of the screen loop (knn_index_delete's text
       // analogue — the reference's compacted-topic null-payload deletion):
-      // the frame is the id list to retract (a takedown/opt-out batch);
-      // the verb appends the distinct ids to the artifact's
-      // `_tombstones.parquet` side file (hidden from plain reads like the
-      // width pin, so the pin's listing signature is untouched), every
-      // screen anti-joins the set, and the next shingle_index_compact
-      // physically drops the rows and clears the file. Crash/retry
-      // contract: the append commits atomically through the output
-      // committer, and a DOUBLE retract is verdict-invariant (the
-      // anti-join ignores duplicates) — `retracted_docs` counts ids with
-      // live not-yet-tombstoned history rows, so a committed retract's
-      // retry reports 0. A retracted id stays dead until a compact clears
-      // the set (shingle_index_append refuses pending ids loudly);
-      // re-publish after the compact. REPLACES the row set with a
-      // one-row report.
-      val spark = df.sparkSession
+      // the frame is the id list to retract (a takedown/opt-out batch); one
+      // tombstone generation kills the ids' live rows in every screen until
+      // shingle_index_compact drops them. An id published again afterwards
+      // is live. REPLACES the row set with a one-row report.
       val p = resolvePath(t.historyPath, dataDir, specId)
-      val hist = spark.read.parquet(p)
-      val missingRt = Seq("id", "sh", "n", "shingle_size")
-        .filterNot(hist.columns.contains)
-      require(missingRt.isEmpty,
-        s"[$specId] historyPath '$p' is not a shingle_index artifact: " +
-          s"missing column(s) ${missingRt.mkString(", ")} (found: " +
-          s"${hist.columns.mkString(", ")})")
-      val ids = graft.operators.Dedup.registerCache(
-        df.select(col(t.idColumn)
-            .cast(hist.schema("id").dataType).as("id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val batchN = ids.count()
-      // newly retracted = batch ids with >= 1 history row, minus already-
-      // tombstoned ones — an id-column-pruned scan, never the shingles
-      val liveMatched = sizeAwareIdJoin(hist.select("id"), ids, "left_semi")
-        .distinct()
-      val newly = shingleTombstones(spark, p)
-        .fold(liveMatched)(tb => sizeAwareIdJoin(liveMatched, tb, "left_anti"))
-      val retracted = newly.count()
-      if (batchN > 0) {
-        val tp = new org.apache.hadoop.fs.Path(s"$p/_tombstones.parquet")
-        graft.sinks.Commit.clearScratch(
-          tp.getFileSystem(spark.sparkContext.hadoopConfiguration), tp)
-        ids.write.mode("append").parquet(tp.toString)
-      }
-      val tombTotal = shingleTombstones(spark, p).fold(0L)(_.count())
-      // footer count (driver-side metadata), not a spark count() job —
-      // same number, no history scan
-      val histRows = graft.sinks.Commit.footerRowCount(
-        spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(p))
-      logInfo(s"[$specId] shingle_index_retract: $batchN batch ids, " +
-        s"$retracted newly retracted -> $tombTotal pending tombstones " +
-        s"over $histRows history rows at $p")
-      import spark.implicits._
+      val (retracted, tombTotal, histRows) = graft.operators.ShingleHistory
+        .retract(df, t.idColumn, p, specId)
+      logInfo(s"[$specId] shingle_index_retract: $retracted newly " +
+        s"retracted -> $tombTotal pending retractions over $histRows " +
+        s"history rows at $p")
+      import df.sparkSession.implicits._
       val report = Seq((retracted, tombTotal, histRows))
         .toDF("retracted_docs", "tombstone_docs", "history_rows")
       if (df.columns.contains(KeyCol))
@@ -1608,91 +1223,15 @@ object Interpreter extends Logging {
       else report
     case t: ShingleIndexCompact =>
       // the screen loop's CLOSING maintenance verb (knn_index_compact's
-      // text analogue): every shingle_index_append adds a file set, so the
-      // screen's history scan degrades to one small file per publish —
-      // fold them with the snapshot compactor's staging+aside rewrite
-      // (rows, widths and screen verdicts are bit-identical; the rewrite
-      // sorts by id so per-doc row groups stay contiguous). The width pin
-      // is preflighted from the artifact's OWN pin (no declared width —
-      // there are no new rows), and the pin manifest is refreshed over the
-      // folded layout. REPLACES the row set with a one-row report.
-      val spark = df.sparkSession
+      // text analogue): folds the history's generations into one,
+      // physically dropping retracted rows — screen verdicts are
+      // unchanged. REPLACES the row set with a one-row report.
       val p = resolvePath(t.historyPath, dataDir, specId)
-      // crash recovery BEFORE the first read (round-18 review): a
-      // predecessor compaction killed between its two renames leaves only
-      // '<p>.old' — the retry (re-running this verb) restores it before
-      // the preflight reads would fail on the missing path
-      val fsP = new org.apache.hadoop.fs.Path(p)
-      val fsH = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.sinks.Commit.recover(fsH, fsP, 0)
-      val hist = spark.read.parquet(p)
-      val missingCols = Seq("id", "sh", "n", "shingle_size")
-        .filterNot(hist.columns.contains)
-      require(missingCols.isEmpty,
-        s"[$specId] historyPath '$p' is not a shingle_index artifact: " +
-          s"missing column(s) ${missingCols.mkString(", ")} (found: " +
-          s"${hist.columns.mkString(", ")})")
-      val widths = shinglePinWidths(spark, p, hist)
-      // an EMPTY artifact (zero rows, no width to pin) is a healthy state
-      // readShingleArtifact blesses — compact it like anything else and
-      // report shingle_size 0 (round-18 review: it used to be refused as
-      // "mixed widths ()", a false corruption diagnosis that would fail a
-      // scheduled maintenance pipeline on every run)
-      require(widths.size <= 1 && !widths.contains(None),
-        s"[$specId] historyPath '$p' carries mixed or unreadable shingle " +
-          s"widths (${widths.map(_.fold("null")(_.toString)).mkString(", ")})" +
-          " — compacting would bake the corruption in; rebuild the " +
-          "artifact at one width with shingle_index first")
-      val width = widths.headOption.flatten.getOrElse(0)
-      def dataFileCount: Long = fsH.listStatus(fsP).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      val filesBefore = dataFileCount
-      shingleTombstones(spark, p) match {
-        case Some(tombs) =>
-          // PENDING RETRACTIONS: the fold must physically drop the
-          // tombstoned rows, so compactSnapshot's healthy-layout no-op
-          // (file count already small enough) must not apply — run the
-          // same staged swap (graft.sinks.Commit) with the anti-join
-          // inside the rewrite. The artifact directory swap carries
-          // `_tombstones.parquet` into the deleted aside, so the
-          // retraction set clears ATOMICALLY with the drop becoming
-          // visible; killed between the renames, the recovery above
-          // brings back the OLD artifact WITH its tombstones and the
-          // retry re-runs the drop.
-          val bytes = fsH.listStatus(fsP).filter(s => s.isFile &&
-              !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".")).map(_.getLen).sum
-          val needed = math.max(1L,
-            (bytes + (128L << 20) - 1) / (128L << 20)).toInt
-          sizeAwareIdJoin(hist, tombs, "left_anti")
-            .repartitionByRange(needed, col("id"))
-            .sortWithinPartitions("id")
-            .write.mode("overwrite").parquet(graft.sinks.Commit.staging(p))
-          // retainFolded: the pre-compaction artifact (WITH its tombstone
-          // side file) outlives the swap as `<p>.old` — a recovery /
-          // slow-reader grace window; the next compact's recovery sweeps it
-          graft.sinks.Commit.install(fsH, fsP, Nil, t.retainFolded)
-        case None =>
-          graft.sinks.BatchSink.compactSnapshot(spark, p, sortCols = Seq("id"),
-            retainAside = t.retainFolded)
-          ()
-      }
-      val filesAfter = dataFileCount
-      // the report's row count is a parquet FOOTER count over the folded
-      // layout (compactSnapshot's own return value is the number of files
-      // it removed — a different quantity) — driver-side metadata, not a
-      // spark count() job
-      val rows = graft.sinks.Commit.footerRowCount(
-        spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(p))
-      // the rewrite replaced the file set — re-pin the width over the
-      // folded layout (the width is UNCHANGED by a rewrite, so this is a
-      // listing + one manifest write, not a rescan) so later builds stay
-      // at manifest-read cost; an artifact emptied by the drop (or empty to
-      // begin with) has no width to pin
-      if (width > 0 && rows > 0) writeShinglePin(spark, p, width)
+      val (width, rows, filesBefore, filesAfter) = graft.operators
+        .ShingleHistory.compact(df.sparkSession, p, t.retainFolded, specId)
       logInfo(s"[$specId] shingle_index_compact: $filesBefore -> " +
         s"$filesAfter files, $rows rows at $p")
-      import spark.implicits._
+      import df.sparkSession.implicits._
       val report = Seq((width, rows, filesBefore, filesAfter))
         .toDF("shingle_size", "history_rows", "files_before", "files_after")
       if (df.columns.contains(KeyCol))

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * shingle history, knn index). Two primitives:
   *
   *  - a STAGED DIRECTORY SWAP for data that readers open directly as a
-  *    plain parquet directory (snapshots, shingle history): a rewrite is
+  *    plain parquet directory (snapshots): a rewrite is
   *    staged under `<path>.staging`, and [[install]] moves the live copy
   *    aside to `<path>.old` before renaming the staged copy in — per
   *    partition directory when the data is hive-partitioned. The live data
@@ -17,13 +17,17 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    window leaves either `<path>` or its aside recoverable, and
   *    [[recover]] (run at the top of every writer) heals it;
   *  - a NUMBERED MANIFEST for artifact state the engine reads itself
-  *    (knn index geometry and fences, the shingle width pin):
+  *    (knn index geometry, the shingle history's width and row count, and
+  *    both artifacts' [[Generations]] fences):
   *    `<path>/_manifest/N.json`, written by the driver to a temp file and
   *    renamed into place, so a manifest is either absent or complete. The
   *    highest readable N is the committed state; older manifests are
   *    pruned after each commit. Bulky state written once per build
   *    (centroids, hyperplanes) goes in a [[writeSidecar]] file the
   *    manifest names, so later commits write scalars only.
+  *
+  * The appendable artifacts (knn postings, shingle history) build their
+  * generation protocol on the manifest ([[Generations]]).
   *
   * Single-writer contract: one maintainer per artifact; nothing here
   * guards concurrent writers. The underscore-prefixed `_manifest`
@@ -133,22 +137,29 @@ object Commit {
 
   private def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
 
+  /** The data files under `dir` (recursive; hidden `_`/`.` files AND
+    * directories skipped — the file set Spark's parquet reader sees); Nil
+    * when `dir` is absent.
+    */
+  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      if (hidden(st.getPath.getName)) Nil
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Seq(st)
+    }
+
   /** Row count of a parquet directory from its FOOTERS — driver-side
     * metadata reads, parallel over files, no Spark job and no data scan.
     * Hidden (`_`/`.`) files AND directories are skipped, exactly the file
-    * set Spark's parquet reader sees (`_manifest`, `_tombstones.parquet`,
+    * set Spark's parquet reader sees (`_manifest`, `_tombstones`,
     * `_temporary` are not data). -1 when `dir` is absent.
     */
   def footerRowCount(conf: Configuration, dir: Path): Long = {
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return -1L
-    def files(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
-      if (hidden(st.getPath.getName)) Nil
-      else if (st.isDirectory) files(st.getPath)
-      else Seq(st)
-    }
     import scala.jdk.CollectionConverters._
-    files(dir).asJava.parallelStream().mapToLong { st =>
+    dataFiles(fs, dir).asJava.parallelStream().mapToLong { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()

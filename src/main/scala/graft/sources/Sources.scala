@@ -34,23 +34,32 @@ trait SourceResolver {
   def dataDir: Option[String] = None
 }
 
-/** Batch resolver over the driver-provisioned parquet tables.
-  *
-  * Table views are *latest-per-key*: the reference's KTable is last-write-wins
-  * per key (KTableRegistry.java:48). "Latest" is defined by the catalog's
-  * explicit order columns (FIXTURES.md §C) — never file order. When a topic
-  * has no order columns its rows are key-unique dims and the view is the scan
-  * itself (no shuffle at all — important at 100 TB: a dimension load must not
-  * pay a window shuffle it doesn't need).
-  *
-  * The memoization mirrors KTableRegistry's ConcurrentHashMap dedup
-  * (KTableRegistry.java:26-30): repeated references to one topic share a single
-  * DataFrame, so Catalyst sees one scan it can reuse.
+/** The batch resolvers' table view: latest-per-key over the topic's
+  * stream by the catalog's explicit order columns (FIXTURES.md §C) —
+  * never file order; a topic without order columns is key-unique dims and
+  * its view is the scan itself (no window shuffle — a dimension load must
+  * not pay one at 100 TB). Memoized per topic, like KTableRegistry's
+  * ConcurrentHashMap dedup (KTableRegistry.java:26-30): repeated
+  * references share one DataFrame, so Catalyst sees one scan it can reuse.
   */
-class ParquetSourceResolver(dir: String, val catalog: SchemaCatalog) extends SourceResolver {
-  override def dataDir: Option[String] = Some(dir)
+trait LatestPerKeyTables extends SourceResolver {
   private val tables = TrieMap.empty[String, DataFrame]
 
+  override def table(spark: SparkSession, topic: TopicConfig): DataFrame =
+    tables.getOrElseUpdate(topic.name, {
+      val df = stream(spark, topic)
+      val order = catalog.orderOf(topic.name)
+      if (order.isEmpty) df
+      else Tables.latestPerKey(df, catalog.keyOf(topic.name), order)
+    })
+}
+
+/** Batch resolver over the driver-provisioned parquet tables; table views
+  * are latest-per-key ([[LatestPerKeyTables]] — the reference's KTable is
+  * last-write-wins per key, KTableRegistry.java:48).
+  */
+class ParquetSourceResolver(dir: String, val catalog: SchemaCatalog) extends LatestPerKeyTables {
+  override def dataDir: Option[String] = Some(dir)
   def path(name: String) = s"$dir/$name.parquet"
 
   private def fixNanos(df: DataFrame, topicName: String): DataFrame =
@@ -65,14 +74,6 @@ class ParquetSourceResolver(dir: String, val catalog: SchemaCatalog) extends Sou
 
   override def stream(spark: SparkSession, topic: TopicConfig): DataFrame =
     fixNanos(spark.read.parquet(path(topic.name)), topic.name)
-
-  override def table(spark: SparkSession, topic: TopicConfig): DataFrame =
-    tables.getOrElseUpdate(topic.name, {
-      val df = fixNanos(spark.read.parquet(path(topic.name)), topic.name)
-      val order = catalog.orderOf(topic.name)
-      if (order.isEmpty) df
-      else Tables.latestPerKey(df, catalog.keyOf(topic.name), order)
-    })
 }
 
 /** Batch resolver over JSONL topic dumps (`<dir>/<topic>.jsonl`) — the
@@ -92,14 +93,12 @@ class JsonSourceResolver(dir: String, val catalog: SchemaCatalog,
     // matches the reference's throw posture (JsonStringToObjectMapper
     // .java:46-55 / SerdeFactory.java:208) — the read RAISES on the first
     // malformed record instead of silently nulling a corrupt ingest
-    parseMode: String = "PERMISSIVE") extends SourceResolver {
+    parseMode: String = "PERMISSIVE") extends LatestPerKeyTables {
   require(Set("PERMISSIVE", "FAILFAST")(parseMode),
     s"JsonSourceResolver parseMode '$parseMode' unknown (PERMISSIVE — " +
       "malformed records read as null fields; FAILFAST — the read raises " +
       "on the first malformed record)")
   override def dataDir: Option[String] = Some(dir)
-  private val tables = TrieMap.empty[String, DataFrame]
-
   def path(name: String) = s"$dir/$name.jsonl"
 
   override def stream(spark: SparkSession, topic: TopicConfig): DataFrame = {
@@ -117,14 +116,6 @@ class JsonSourceResolver(dir: String, val catalog: SchemaCatalog,
       .option("timestampFormat", JsonSourceResolver.TimestampFormat)
       .json(path(topic.name))
   }
-
-  override def table(spark: SparkSession, topic: TopicConfig): DataFrame =
-    tables.getOrElseUpdate(topic.name, {
-      val df = stream(spark, topic)
-      val order = catalog.orderOf(topic.name)
-      if (order.isEmpty) df
-      else Tables.latestPerKey(df, catalog.keyOf(topic.name), order)
-    })
 }
 
 object JsonSourceResolver {
@@ -146,13 +137,11 @@ object JsonSourceResolver {
 class CsvSourceResolver(dir: String, val catalog: SchemaCatalog,
     schemas: Map[String, org.apache.spark.sql.types.StructType],
     // same deserialization-failure posture dial as [[JsonSourceResolver]]
-    parseMode: String = "PERMISSIVE") extends SourceResolver {
+    parseMode: String = "PERMISSIVE") extends LatestPerKeyTables {
   require(Set("PERMISSIVE", "FAILFAST")(parseMode),
     s"CsvSourceResolver parseMode '$parseMode' unknown (PERMISSIVE or " +
       "FAILFAST)")
   override def dataDir: Option[String] = Some(dir)
-  private val tables = TrieMap.empty[String, DataFrame]
-
   def path(name: String) = s"$dir/$name.csv"
 
   override def stream(spark: SparkSession, topic: TopicConfig): DataFrame = {
@@ -164,14 +153,6 @@ class CsvSourceResolver(dir: String, val catalog: SchemaCatalog,
       .option("mode", parseMode)
       .csv(path(topic.name))
   }
-
-  override def table(spark: SparkSession, topic: TopicConfig): DataFrame =
-    tables.getOrElseUpdate(topic.name, {
-      val df = stream(spark, topic)
-      val order = catalog.orderOf(topic.name)
-      if (order.isEmpty) df
-      else Tables.latestPerKey(df, catalog.keyOf(topic.name), order)
-    })
 }
 
 /** Run pipeline specs over ORC topic dumps (`<dir>/<name>.orc`) — the
@@ -183,22 +164,12 @@ class CsvSourceResolver(dir: String, val catalog: SchemaCatalog,
   * TIMESTAMP is microsecond-safe on both sides of the write, so the
   * parquet nanos workaround does not apply here.
   */
-class OrcSourceResolver(dir: String, val catalog: SchemaCatalog) extends SourceResolver {
+class OrcSourceResolver(dir: String, val catalog: SchemaCatalog) extends LatestPerKeyTables {
   override def dataDir: Option[String] = Some(dir)
-  private val tables = TrieMap.empty[String, DataFrame]
-
   def path(name: String) = s"$dir/$name.orc"
 
   override def stream(spark: SparkSession, topic: TopicConfig): DataFrame =
     spark.read.orc(path(topic.name))
-
-  override def table(spark: SparkSession, topic: TopicConfig): DataFrame =
-    tables.getOrElseUpdate(topic.name, {
-      val df = stream(spark, topic)
-      val order = catalog.orderOf(topic.name)
-      if (order.isEmpty) df
-      else Tables.latestPerKey(df, catalog.keyOf(topic.name), order)
-    })
 }
 
 object Sources {

@@ -6,9 +6,8 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.config.{PipelineSpec, TestdataCatalog}
+import graft.config.TransformOp
 import graft.operators.Similarity
-import graft.sources.ParquetSourceResolver
 
 /** The local filesystem under the `crash://` scheme, dying at a chosen
   * point: once [[CrashFS.arm]]ed with n, the first n create/rename/delete
@@ -160,37 +159,82 @@ class CrashPointSpec extends SparkSuite {
       idx => (knnState(idx), Similarity.readIndexMeta(spark, idx).generation)))
   }
 
+  private lazy val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    .filter(col("doc_id") < 60).coalesce(1)
+
+  private def shingleVerb(op: String => TransformOp, df: DataFrame = docs) =
+    (hist: String) => {
+      graft.pipeline.Interpreter.applyTransform(df, op(hist), None, "crash").collect()
+      ()
+    }
+  private def append(hist: String) = TransformOp.ShingleIndexAppend(
+    column = "text", idColumn = "doc_id", shingleSize = 3, historyPath = hist)
+  private def retract(hist: String) =
+    TransformOp.ShingleIndexRetract(idColumn = "doc_id", historyPath = hist)
+  private def compact(hist: String) = TransformOp.ShingleIndexCompact(historyPath = hist)
+
+  /** A shingle history's logical state: its committed manifest and the ids
+    * a screen sees — for a plain history, its rows minus the older format's
+    * pending retractions. A killed adoption is rolled forward first, as
+    * every verb does.
+    */
+  private def historyState(hist: String): Any = {
+    graft.operators.ShingleHistory.recover(fs, hist)
+    val root = new Path(hist)
+    val m = graft.sinks.Commit.readManifest(fs, root,
+      classOf[graft.operators.ShingleHistory.Manifest]).map(_._2).filter(_.fence != null)
+    val rows =
+      if (m.isDefined) graft.operators.ShingleHistory.screenRows(spark, hist, 3, "crash")
+      else {
+        val gone = Seq(s"$hist/_tombstones.parquet", s"$hist/gen=0/_tombstones.parquet")
+          .filter(t => fs.exists(new Path(t)))
+          .map(t => spark.read.parquet(s"$t/*.parquet"))
+        gone.foldLeft(spark.read.parquet(hist))(_.join(_, Seq("id"), "left_anti"))
+      }
+    (m, rows.select("id").collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  private def plainHistory(hist: String, upTo: Long = 60L): Unit =
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < upTo),
+      "doc_id", "text", 3).write.parquet(hist)
+
+  test("shingle append, retract and adoption: a kill after ANY filesystem mutation reads as before or after, and the retry converges") {
+    // adoption alone (a retraction matching nothing) of a plain history
+    // carrying the older format's retractions
+    check(Case("shingle_adopt",
+      hist => {
+        plainHistory(hist)
+        docs.filter(col("doc_id") % 4 === 0).select(col("doc_id").as("id"))
+          .write.parquet(s"$hist/_tombstones.parquet")
+      },
+      shingleVerb(retract, docs.filter(col("doc_id") < 0)),
+      historyState))
+    check(Case("shingle_append",
+      hist => { plainHistory(hist, 40L); shingleVerb(compact)(hist) },
+      shingleVerb(append, docs.filter(col("doc_id") >= 40)),
+      historyState))
+    check(Case("shingle_retract",
+      hist => { plainHistory(hist); shingleVerb(compact)(hist) },
+      shingleVerb(retract, docs.filter(col("doc_id") % 4 === 0)),
+      historyState))
+  }
+
   test("shingle compact and flat snapshot upsert: a kill after ANY filesystem mutation recovers to before or after, and the retry converges") {
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-      .filter(col("doc_id") < 60).coalesce(1)
-    def compact(hist: String): Unit =
-      graft.pipeline.Interpreter.build(spark, PipelineSpec.fromJson(
-        s"""{"id":"crash-compact","processingMode":"SIMPLE_STREAM",
-           |"sourceTopic":{"name":"documents","keyClass":"java.lang.Long"},
-           |"transform":[{"op":"shingle_index_compact","historyPath":"$hist"}],
-           |"outputTopic":{"enabled":true,"name":"crash-out"}}""".stripMargin),
-        new ParquetSourceResolver(sf(), TestdataCatalog))
+    check(Case("shingle_compact",
+      hist => {
+        plainHistory(hist, 40L)
+        shingleVerb(append, docs.filter(col("doc_id") >= 40))(hist)
+        shingleVerb(retract, docs.filter(col("doc_id") % 4 === 0))(hist)
+      },
+      shingleVerb(compact),
+      historyState))
+
     // the staged-swap artifacts' readers heal first (Commit.recover is
     // what every writer runs before reading)
     def healed(p: String)(read: => Any): Any = {
       graft.sinks.Commit.recover(fs, new Path(p), 0)
       read
     }
-    check(Case("shingle_compact",
-      hist => {
-        graft.operators.Dedup.shingleIndex(docs, "doc_id", "text", 3)
-          .write.parquet(hist)
-        docs.filter(col("doc_id") % 4 === 0).select(col("doc_id").as("id"))
-          .write.parquet(s"$hist/_tombstones.parquet")
-      },
-      compact,
-      hist => healed(hist) {
-        val tomb = new Path(s"$hist/_tombstones.parquet")
-        (spark.read.parquet(hist).select("id").collect().map(_.getLong(0)).sorted.toSeq,
-          if (fs.exists(tomb)) spark.read.parquet(s"$tomb/*.parquet")
-            .collect().map(_.getLong(0)).sorted.toSeq else Nil)
-      }))
-
     def batch(rows: Seq[(Long, Long, String)]): DataFrame =
       spark.createDataFrame(rows).toDF("k", "ver", "v").coalesce(1)
     check(Case("snapshot_upsert",

@@ -267,8 +267,9 @@ class DoctorSpec extends SparkSuite {
     val (c0, o0) = runDoctor(screenSpec, sf(), "--audit-fail")
     assert(c0 == 0 && !o0.contains("shingle_pending_retractions"), o0)
     // retract ~a third of the history -> the advisory fires
-    docs.filter(col("doc_id") < 30).select(col("doc_id").as("id"))
-      .write.mode("append").parquet(s"$base/hist/_tombstones.parquet")
+    graft.pipeline.Interpreter.applyTransform(docs.filter(col("doc_id") < 30),
+      graft.config.TransformOp.ShingleIndexRetract(idColumn = "doc_id",
+        historyPath = s"$base/hist"), None, "rt-takedown").collect()
     val (c1, o1) = runDoctor(screenSpec, sf())
     assert(c1 == 0, o1)
     assert(o1.contains("shingle_pending_retractions") &&

@@ -7,13 +7,40 @@ import graft.sources.ParquetSourceResolver
 
 class InterpreterSpec extends SparkSuite {
 
-  /** The committed shingle width pin of a history artifact, if any. */
-  private def pinManifest(path: String) = {
+  /** The committed manifest of a maintained shingle history, if any. */
+  private def historyManifest(path: String) = {
     val root = new org.apache.hadoop.fs.Path(path)
     graft.sinks.Commit.readManifest(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
-      classOf[graft.pipeline.Interpreter.ShinglePin]).map(_._2)
+      classOf[graft.operators.ShingleHistory.Manifest]).map(_._2)
+      .filter(_.fence != null)
   }
+
+  /** The shingle maintenance verbs and the screen, straight through
+    * applyTransform against the history at `p`.
+    */
+  private def shingleAppend(df: org.apache.spark.sql.DataFrame, p: String) =
+    graft.pipeline.Interpreter.applyTransform(df,
+      graft.config.TransformOp.ShingleIndexAppend(column = "text",
+        idColumn = "doc_id", shingleSize = 3, historyPath = p),
+      None, "t-append").head()
+  private def shingleRetract(df: org.apache.spark.sql.DataFrame, p: String) =
+    graft.pipeline.Interpreter.applyTransform(df,
+      graft.config.TransformOp.ShingleIndexRetract(idColumn = "doc_id",
+        historyPath = p),
+      None, "t-retract").head()
+  private def shingleCompact(df: org.apache.spark.sql.DataFrame, p: String) =
+    graft.pipeline.Interpreter.applyTransform(df,
+      graft.config.TransformOp.ShingleIndexCompact(historyPath = p),
+      None, "t-compact").head()
+  private def shingleScreen(df: org.apache.spark.sql.DataFrame, p: String): Set[Long] =
+    graft.pipeline.Interpreter.applyTransform(df,
+        graft.config.TransformOp.DedupNear(method = Some("jaccard"),
+          column = "text", idColumn = "doc_id",
+          shingleSize = Some(3), threshold = Some(0.8),
+          historyPath = Some(p)),
+        None, "t-screen")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
 
   test("PipelineSpec JSON parse fills defaults and tolerates unknown fields") {
     val spec = PipelineSpec.fromJson(
@@ -1633,113 +1660,153 @@ class InterpreterSpec extends SparkSuite {
       absent.getMessage)
   }
 
-  test("shingle width pin side cache: written on first healthy read, invisible to plain reads, invalidated by an out-of-band append") {
-    val resolver = new ParquetSourceResolver(sf(), TestdataCatalog)
-    val dir = tempDirPath("graft_shingle_pin").toString
-    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 50),
-        "doc_id", "text", 3)
-      .write.mode("overwrite").parquet(s"$dir/hist.parquet")
-    def screen(width: Int): Unit =
-      graft.pipeline.Interpreter.build(spark, PipelineSpec.fromJson(
-        s"""{"id":"pin-screen","processingMode":"SIMPLE_STREAM",
-           |"sourceTopic":{"name":"documents","keyClass":"java.lang.Long"},
-           |"transform":[{"op":"dedup_near","method":"jaccard",
-           |  "column":"text","idColumn":"doc_id","shingleSize":$width,
-           |  "threshold":0.8,"historyPath":"$dir/hist.parquet"}],
-           |"outputTopic":{"enabled":true,"name":"pin-out"}}""".stripMargin),
-        resolver)
-    screen(3)
-    val pinned = pinManifest(s"$dir/hist.parquet")
-    assert(pinned.isDefined, "first healthy read must write the pin cache")
-    assert(pinned.get.shingle_size == 3, pinned.toString)
-    // the underscore prefix hides the cache from plain parquet reads of
-    // the artifact — the columns (and row count) are unchanged
-    val plain = spark.read.parquet(s"$dir/hist.parquet")
-    assert(plain.columns.toSet ==
-      Set("id", "sh", "n", "shingle_size"), plain.columns.mkString(", "))
-    // a cache HIT still enforces the declared-width match
-    val wrong = intercept[IllegalArgumentException] { screen(4) }
-    assert(wrong.getMessage.contains("does not match"), wrong.getMessage)
-    // an OUT-OF-BAND mis-widthed append changes the listing signature →
-    // the stale pin is bypassed, the re-scan sees the mixed widths, and
-    // the config error fires (the pin must never mask corruption)
-    graft.operators.Dedup.shingleIndex(
-        docs.filter(col("doc_id") >= 50 && col("doc_id") < 60),
-        "doc_id", "text", 4)
-      .write.mode("append").parquet(s"$dir/hist.parquet")
-    val mixed = intercept[IllegalArgumentException] { screen(3) }
-    assert(mixed.getMessage.contains("mixes shingle widths"), mixed.getMessage)
-  }
-
-  test("appendRaceVerdict: the post-append pin refresh only trusts a single-job delta (round-18 ADVICE)") {
-    import graft.pipeline.Interpreter.appendRaceVerdict
-    def part(n: Int, uuid: String) =
-      f"part-$n%05d-$uuid-c000.snappy.parquet"
-    val u1 = "11111111-2222-3333-4444-555555555555"
-    val u2 = "99999999-8888-7777-6666-555555555555"
-    val pre = Seq(part(0, u1))
-    // our own write (one job UUID, possibly several part files) is clean
-    assert(!appendRaceVerdict(pre, pre ++ Seq(part(0, u2)))._1)
-    assert(!appendRaceVerdict(pre,
-      pre ++ Seq(part(0, u2), part(1, u2)))._1)
-    // a second write job landing in the window is foreign
-    val two = appendRaceVerdict(pre, pre ++ Seq(part(0, u2),
-      part(0, "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee")))
-    assert(two._1 && two._2.contains("2 write jobs"), two.toString)
-    // a vanished pre-existing file (an out-of-band compaction) is foreign
-    assert(appendRaceVerdict(pre, Seq(part(0, u2)))._1)
-    // a write that produced nothing visible is foreign (the caller only
-    // runs the check for a non-empty batch, which must write >= 1 file)
-    assert(appendRaceVerdict(pre, pre)._1)
-    // an unparseable new file name (a hand-copied artifact) is foreign
-    assert(appendRaceVerdict(pre, pre :+ "data_handmade.parquet")._1)
-    // partitioned layouts compare leaf names
-    assert(!appendRaceVerdict(Seq(s"w=3/${part(0, u1)}"),
-      Seq(s"w=3/${part(0, u1)}", s"w=3/${part(0, u2)}"))._1)
-  }
-
-  test("shingle_index_append: an empty batch skips the write and keeps the pin; a normal append re-pins the grown layout") {
-    val dir = tempDirPath("graft_shingle_append_pin").toString
+  test("a plain file appended into a maintained shingle history is refused at the next screen and verb, naming the file") {
+    val dir = tempDirPath("graft_shingle_oob").toString
+    val p = s"$dir/hist.parquet"
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
         "doc_id", "text", 3)
-      .write.mode("overwrite").parquet(s"$dir/hist.parquet")
-    docs.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-      .write.mode("overwrite").parquet(s"$dir/batch.parquet")
-    docs.filter(col("doc_id") < 0)
-      .write.mode("overwrite").parquet(s"$dir/none.parquet")
-    def append(src: String): Unit =
-      graft.pipeline.Interpreter.values(graft.pipeline.Interpreter.build(
-        spark, PipelineSpec.fromJson(
-          s"""{"id":"app-pin","processingMode":"SIMPLE_STREAM",
-             |"sourceTopic":{"name":"$src","keyClass":"java.lang.Long"},
-             |"transform":[{"op":"shingle_index_append","column":"text",
-             |  "idColumn":"doc_id","shingleSize":3,
-             |  "historyPath":"$dir/hist.parquet"}],
-             |"outputTopic":{"enabled":true,"name":"app-out"}}""".stripMargin),
-        new ParquetSourceResolver(dir, TestdataCatalog))).collect()
-    def pinRow() = pinManifest(s"$dir/hist.parquet").get
-    def dataFiles(): Seq[java.io.File] =
-      new java.io.File(s"$dir/hist.parquet").listFiles().toSeq
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-    append("batch")
-    val pinned = pinRow()
-    assert(pinned.shingle_size == 3, pinned.toString)
-    // the stored signature matches the POST-append listing exactly —
-    // the next build's cache check is a pin hit, no width re-scan
-    val listed = dataFiles()
-    assert(pinned.n_files == listed.size.toLong &&
-      pinned.total_bytes == listed.map(_.length).sum,
-      pinned.toString)
-    // an EMPTY batch skips the write entirely: layout and pin untouched
-    val namesBefore = listed.map(_.getName).toSet
-    append("none")
-    assert(dataFiles().map(_.getName).toSet == namesBefore,
-      "an empty append must not touch the artifact layout")
-    assert(pinRow().n_files == namesBefore.size.toLong)
+      .write.mode("overwrite").parquet(p)
+    shingleAppend(docs.filter(col("doc_id") >= 40 && col("doc_id") < 60), p)
+    assert(historyManifest(p).exists(_.fence.generation == 1))
+    // an out-of-band plain parquet append (even at the right width)
+    graft.operators.Dedup.shingleIndex(
+        docs.filter(col("doc_id") >= 60 && col("doc_id") < 70),
+        "doc_id", "text", 3)
+      .write.mode("append").parquet(p)
+    val stray = new java.io.File(p).listFiles().toSeq
+      .filter(f => f.isFile && f.getName.startsWith("part-"))
+    assert(stray.nonEmpty)
+    val batch = docs.filter(col("doc_id") >= 70)
+    Seq(() => shingleScreen(batch, p), () => shingleAppend(batch, p),
+        () => shingleRetract(batch, p), () => shingleCompact(batch, p))
+      .foreach { verb =>
+        val e = intercept[IllegalArgumentException](verb())
+        assert(e.getMessage.contains(stray.head.getName) &&
+          e.getMessage.contains("does not account for"), e.getMessage)
+      }
   }
+
+  test("a screen of a manifest-less shingle history leaves its directory byte-identical") {
+    val dir = tempDirPath("graft_shingle_plain_screen").toString
+    val p = s"$dir/hist.parquet"
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
+        "doc_id", "text", 3)
+      .write.mode("overwrite").parquet(p)
+    def tree(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))) {
+        _.iterator().asScala.toSeq.map { f =>
+          f.toString.stripPrefix(dir) ->
+            (if (java.nio.file.Files.isDirectory(f)) Seq.empty[Byte]
+             else java.nio.file.Files.readAllBytes(f).toSeq)
+        }.toMap
+      }
+    }
+    val before = tree()
+    assert(shingleScreen(docs.filter(col("doc_id") >= 40), p).nonEmpty)
+    assert(tree() == before, "a screen must not write to a plain history")
+  }
+
+  test("a legacy _tombstones.parquet is never lost: the screen refuses it with a hint, the first verb carries it over, compact drops its rows") {
+    val dir = tempDirPath("graft_shingle_legacy").toString
+    val p = s"$dir/hist.parquet"
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    val cut = (docs.agg(max(col("doc_id"))).head.getLong(0) + 1L) * 4L / 5L
+    val hist = docs.filter(col("doc_id") < cut)
+    val gone = hist.filter(col("doc_id") % 3 === 0)
+    val batch = docs.filter(col("doc_id") >= cut)
+    graft.operators.Dedup.shingleIndex(hist, "doc_id", "text", 3)
+      .write.mode("overwrite").parquet(p)
+    // the older engine's pending retractions: plain ids, one unmatched
+    gone.select(col("doc_id").as("id"))
+      .unionByName(spark.range(1).select(lit(-7L).as("id")))
+      .write.parquet(s"$p/_tombstones.parquet")
+    val refused = intercept[IllegalArgumentException](shingleScreen(batch, p))
+    assert(refused.getMessage.contains("_tombstones.parquet") &&
+      refused.getMessage.contains("shingle_index_compact"), refused.getMessage)
+    val expected = graft.operators.Dedup.incrementalNovelPrepared(batch,
+        "doc_id", "text", 3, 0.8,
+        graft.operators.Dedup.shingleIndex(hist.filter(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", 3).drop("shingle_size"))
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // any verb adopts the history; a retract of an unknown id commits
+    // nothing of its own
+    assert(shingleRetract(docs.filter(col("doc_id") < 0), p)
+      .getAs[Long]("retracted_docs") == 0L)
+    val m = historyManifest(p).get
+    assert(m.fence.tomb_rows == gone.count() && m.history_rows == hist.count(),
+      m.toString)
+    assert(!new java.io.File(s"$p/gen=0/_tombstones.parquet").exists())
+    assert(shingleScreen(batch, p) == expected)
+    // the carried-over set folds away like any other
+    val crep = shingleCompact(batch, p)
+    assert(crep.getAs[Long]("history_rows") == hist.count() - gone.count(),
+      crep.toString)
+    assert(shingleScreen(batch, p) == expected)
+  }
+
+  test("shingle_index_append: an empty batch commits nothing; a retried batch no-ops; a normal append commits one generation") {
+    val dir = tempDirPath("graft_shingle_append_gen").toString
+    val p = s"$dir/hist.parquet"
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
+        "doc_id", "text", 3)
+      .write.mode("overwrite").parquet(p)
+    val batch = docs.filter(col("doc_id") >= 40 && col("doc_id") < 60)
+    val rep = shingleAppend(batch, p)
+    assert(rep.getLong(1) == batch.count() && rep.getLong(2) == 40L + batch.count(),
+      rep.toString)
+    val m = historyManifest(p).get
+    assert(m.shingle_size == 3 && m.fence.generation == 1 &&
+      m.history_rows == rep.getLong(2), m.toString)
+    def gens(): Set[String] = new java.io.File(p).listFiles().toSeq
+      .map(_.getName).filter(_.startsWith("gen=")).toSet
+    assert(gens() == Set("gen=0", "gen=1"))
+    // an EMPTY batch and a retry of the committed batch leave the manifest
+    // and the generations as they were
+    val none = shingleAppend(docs.filter(col("doc_id") < 0), p)
+    val retry = shingleAppend(batch, p)
+    assert(none.getLong(1) == 0L && retry.getLong(1) == 0L &&
+      retry.getLong(2) == m.history_rows, retry.toString)
+    assert(historyManifest(p).contains(m) && gens() == Set("gen=0", "gen=1"))
+  }
+
+  test("shingle_index_append and shingle_index_retract on a 40-doc history stay within their Spark job counts") {
+    val dir = tempDirPath("graft_shingle_jobs").toString
+    val p = s"$dir/hist.parquet"
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
+        "doc_id", "text", 3)
+      .write.mode("overwrite").parquet(p)
+    // adopt first: the pin is on the steady-state verbs
+    shingleCompact(docs, p)
+    val sc = spark.sparkContext
+    def jobs(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(sc) }
+      finally sc.removeSparkListener(l)
+      n.get()
+    }
+    val appendJobs = jobs(shingleAppend(
+      docs.filter(col("doc_id") >= 40 && col("doc_id") < 60), p))
+    val retractJobs = jobs(shingleRetract(docs.filter(col("doc_id") < 2), p))
+    // the counts measured when the history moved onto the generation
+    // protocol; a new probe job in either verb fails here
+    assert(appendJobs <= AppendJobs && retractJobs <= RetractJobs,
+      s"shingle_index_append ran $appendJobs jobs (pin $AppendJobs), " +
+        s"shingle_index_retract $retractJobs (pin $RetractJobs)")
+  }
+  private val AppendJobs = 1
+  private val RetractJobs = 4
 
   test("a shingle screen with pending retractions logs no data-source WARN (the tombstone set is read by file, not by underscore directory)") {
     val dir = tempDirPath("graft_shingle_warn").toString
@@ -1747,8 +1814,8 @@ class InterpreterSpec extends SparkSuite {
     graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 40),
         "doc_id", "text", 3)
       .write.mode("overwrite").parquet(s"$dir/hist.parquet")
-    docs.filter(col("doc_id") < 10).select(col("doc_id").as("id"))
-      .write.parquet(s"$dir/hist.parquet/_tombstones.parquet")
+    shingleRetract(docs.filter(col("doc_id") < 10), s"$dir/hist.parquet")
+    assert(historyManifest(s"$dir/hist.parquet").exists(_.fence.tombsActive))
     docs.filter(col("doc_id") >= 40)
       .write.mode("overwrite").parquet(s"$dir/batch.parquet")
     def screen(): Long =
@@ -1784,7 +1851,7 @@ class InterpreterSpec extends SparkSuite {
     assert(warns.isEmpty, warns.asScala.mkString("\n"))
   }
 
-  test("shingle_index_retract: retracted docs stop screening; compact drops them and clears tombstones; pending append refused") {
+  test("shingle_index_retract: retracted docs stop screening; compact drops them and clears tombstones; a re-published id is live") {
     val dir = tempDirPath("graft_shingle_retract").toString
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val cut = (docs.agg(max(col("doc_id"))).head.getLong(0) + 1L) * 4L / 5L
@@ -1832,18 +1899,23 @@ class InterpreterSpec extends SparkSuite {
       "fixture sanity: retraction must change at least one verdict")
     // idempotent: the committed retract's retry matches nothing live
     assert(retract().getAs[Long]("retracted_docs") == 0L)
-    // appending a pending-retracted id is refused loudly
-    val refusal = intercept[IllegalArgumentException] { run(
-      s"""{"id":"rt-append","processingMode":"SIMPLE_STREAM",
+    // re-publishing a retracted id makes it live again (compacted-topic
+    // last-write-wins: the tombstone only kills rows up to its generation)
+    def republish() = run(
+      s"""{"id":"rt-republish","processingMode":"SIMPLE_STREAM",
          |"sourceTopic":{"name":"takedown","keyClass":"java.lang.Long"},
          |"transform":[{"op":"shingle_index_append","column":"text",
          |  "idColumn":"doc_id","shingleSize":3,
          |  "historyPath":"$dir/hist.parquet"}],
-         |"outputTopic":{"enabled":true,"name":"rt-app"}}""".stripMargin) }
-    assert(refusal.getMessage.contains("PENDING retraction"),
-      refusal.getMessage)
-    // compact physically drops the rows and clears the tombstone file
-    val preRows = spark.read.parquet(s"$dir/hist.parquet").count()
+         |"outputTopic":{"enabled":true,"name":"rt-rep"}}""".stripMargin)
+      .head()
+    assert(republish().getAs[Long]("appended_docs") == retractedDocs.count())
+    assert(screen() == before, "a re-published id must screen as live")
+    // retracting again kills the re-published rows too
+    assert(retract().getAs[Long]("retracted_docs") == retractedDocs.count())
+    assert(screen() == expected)
+    // compact physically drops the rows and clears the tombstones
+    val preRows = historyManifest(s"$dir/hist.parquet").get.history_rows
     val crep = run(
       s"""{"id":"rt-compact","processingMode":"SIMPLE_STREAM",
          |"sourceTopic":{"name":"batch","keyClass":"java.lang.Long"},
@@ -1852,21 +1924,18 @@ class InterpreterSpec extends SparkSuite {
          |"outputTopic":{"enabled":true,"name":"rt-cmp"}}""".stripMargin)
       .head()
     assert(crep.getAs[Long]("history_rows") < preRows, crep.toString)
-    assert(!new java.io.File(s"$dir/hist.parquet/_tombstones.parquet").exists(),
-      "compact must clear the tombstone side file")
+    assert(!historyManifest(s"$dir/hist.parquet").get.fence.tombsActive)
+    assert(!new java.io.File(s"$dir/hist.parquet/_tombstones").exists() ||
+      new java.io.File(s"$dir/hist.parquet/_tombstones").list()
+        .forall(!_.startsWith("gen=")),
+      "compact must clear the tombstone generations")
     assert(spark.read.parquet(s"$dir/hist.parquet")
       .join(retractedDocs.select(col("doc_id").as("id")), Seq("id"), "left_semi")
       .count() == 0L, "compact must physically drop retracted rows")
     assert(screen() == expected,
       "retract -> compact -> screen must be verdict-identical")
-    // after the compact cleared the set, the retracted ids may re-publish
-    run(
-      s"""{"id":"rt-republish","processingMode":"SIMPLE_STREAM",
-         |"sourceTopic":{"name":"takedown","keyClass":"java.lang.Long"},
-         |"transform":[{"op":"shingle_index_append","column":"text",
-         |  "idColumn":"doc_id","shingleSize":3,
-         |  "historyPath":"$dir/hist.parquet"}],
-         |"outputTopic":{"enabled":true,"name":"rt-rep2"}}""".stripMargin)
+    // after the compact, the retracted ids re-publish the same way
+    republish()
     assert(screen() == before,
       "re-publish after compact must restore the original verdicts")
   }
@@ -1965,9 +2034,15 @@ class InterpreterSpec extends SparkSuite {
              |"outputTopic":{"enabled":true,"name":"cmp-out"}}""".stripMargin),
         new ParquetSourceResolver(dir, TestdataCatalog)))
         .select("doc_id").collect().map(_.getLong(0)).toSet
-    def files(): Int = new java.io.File(s"$dir/hist.parquet").listFiles()
-      .count(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
+    // data files, wherever the layout keeps them (top level when plain,
+    // gen=N directories once maintained)
+    def files(): Int = {
+      def walk(f: java.io.File): Int =
+        if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0
+        else if (f.isDirectory) f.listFiles().toSeq.map(walk).sum
+        else 1
+      new java.io.File(s"$dir/hist.parquet").listFiles().toSeq.map(walk).sum
+    }
     val before = screen()
     val filesBefore = files()
     assert(filesBefore >= 3, s"fixture must fragment the layout: $filesBefore")
@@ -1985,28 +2060,24 @@ class InterpreterSpec extends SparkSuite {
       rep.getAs[Long]("files_before") == filesBefore &&
       rep.getAs[Long]("files_after") < filesBefore, rep.toString)
     assert(files() == rep.getAs[Long]("files_after"))
-    // the folded history screens identically, and the pin cache is fresh
+    // the folded history screens identically, and its manifest pins the
+    // width over the one folded generation
     assert(screen() == before, "compaction changed the screen verdicts")
-    assert(pinManifest(s"$dir/hist.parquet").exists(_.shingle_size == 3),
-      "compaction must refresh the width-pin side cache")
-    // the ASIDE-ONLY crash state (killed between compactSnapshot's two
-    // renames): the retry — re-running the verb — must restore the
-    // artifact before its preflight reads, then compact normally
-    val histF = new java.io.File(s"$dir/hist.parquet")
-    assert(histF.renameTo(new java.io.File(s"$dir/hist.parquet.old")))
-    graft.pipeline.Interpreter.values(graft.pipeline.Interpreter
+    assert(historyManifest(s"$dir/hist.parquet").exists(m =>
+        m.shingle_size == 3 && m.fence.base_gen == m.fence.generation),
+      "compaction must commit the folded generation with the width")
+    // a second compact has nothing to fold
+    val again = graft.pipeline.Interpreter.values(graft.pipeline.Interpreter
       .build(spark, PipelineSpec.fromJson(
-        s"""{"id":"cmp-recover","processingMode":"SIMPLE_STREAM",
+        s"""{"id":"cmp-again","processingMode":"SIMPLE_STREAM",
            |"sourceTopic":{"name":"documents","keyClass":"java.lang.Long"},
            |"transform":[{"op":"shingle_index_compact",
            |  "historyPath":"$dir/hist.parquet"}],
-           |"outputTopic":{"enabled":true,"name":"recover-out"}}""".stripMargin),
+           |"outputTopic":{"enabled":true,"name":"again-out"}}""".stripMargin),
         resolver)).head()
-    assert(histF.isDirectory &&
-      !new java.io.File(s"$dir/hist.parquet.old").exists(),
-      "the retry must restore the aside-only crash state")
-    assert(screen() == before,
-      "the recovered artifact must screen identically")
+    assert(again.getAs[Long]("files_after") == again.getAs[Long]("files_before") &&
+      files() == again.getAs[Long]("files_after"), again.toString)
+    assert(screen() == before)
     // an EMPTY artifact (a healthy state the screen blesses) compacts as
     // a no-width no-op report instead of a false corruption refusal
     graft.operators.Dedup.shingleIndex(docs.filter(lit(false)),
@@ -2023,20 +2094,22 @@ class InterpreterSpec extends SparkSuite {
     assert(repEmpty.getAs[Int]("shingle_size") == 0 &&
       repEmpty.getAs[Long]("history_rows") == 0L, repEmpty.toString)
     // a mixed-width artifact is refused rather than baked in
-    graft.operators.Dedup.shingleIndex(
+    graft.operators.Dedup.shingleIndex(docs.filter(col("doc_id") < 30),
+        "doc_id", "text", 3)
+      .unionByName(graft.operators.Dedup.shingleIndex(
         docs.filter(col("doc_id") >= 70 && col("doc_id") < 80),
-        "doc_id", "text", 4)
-      .write.mode("append").parquet(s"$dir/hist.parquet")
+        "doc_id", "text", 4))
+      .write.mode("overwrite").parquet(s"$dir/mixed.parquet")
     val err = intercept[IllegalArgumentException] {
       graft.pipeline.Interpreter.build(spark, PipelineSpec.fromJson(
         s"""{"id":"cmp-bad","processingMode":"SIMPLE_STREAM",
            |"sourceTopic":{"name":"documents","keyClass":"java.lang.Long"},
            |"transform":[{"op":"shingle_index_compact",
-           |  "historyPath":"$dir/hist.parquet"}],
+           |  "historyPath":"$dir/mixed.parquet"}],
            |"outputTopic":{"enabled":true,"name":"bad-out"}}""".stripMargin),
         resolver)
     }
-    assert(err.getMessage.contains("mixed or unreadable"), err.getMessage)
+    assert(err.getMessage.contains("mixes shingle widths"), err.getMessage)
   }
 
   test("both-sides-stored sketch and quantile legs equal the frame-scanned routes (neither raw snapshot touched)") {

@@ -120,6 +120,28 @@ class SpecSurfaceSpec extends AnyFunSuite {
       s"knn method '$m' missing from SPEC_REFERENCE.md"))
   }
 
+  test("every graft config key read in src/main is documented in DEPLOY.md or SPEC_REFERENCE.md, and every documented key is read") {
+    import scala.jdk.CollectionConverters._
+    // a key is spark.graft.<name> or graft.<section>.<name> whose section is
+    // not one of the engine's packages (graft.sink.mergeWaves is a key,
+    // graft.sinks.Commit is code)
+    val packages = Files.list(Paths.get("src/main/scala/graft")).iterator().asScala
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
+    val key = "spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9]|graft\\.[a-z][A-Za-z0-9]*\\.[A-Za-z0-9_.]*[A-Za-z0-9]"
+    def keys(text: String, pattern: String): Set[String] =
+      pattern.r.findAllMatchIn(text).map(m => m.group(m.groupCount))
+        .filter(k => k.startsWith("spark.") || !packages(k.split('.')(1))).toSet
+    val read = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }.flatMap(f => keys(Files.readString(f), "\"(" + key + ")\"")).toSet
+    val documented = Seq("DEPLOY.md", "docs/SPEC_REFERENCE.md")
+      .flatMap(d => keys(Files.readString(Paths.get(d)), key)).toSet
+    assert(read.nonEmpty && (read -- documented).isEmpty,
+      s"config keys read but undocumented: ${(read -- documented).mkString(", ")}")
+    assert((documented -- read).isEmpty,
+      s"config keys documented but never read: ${(documented -- read).mkString(", ")}")
+  }
+
   test("SpecFuzzProperties carries a valid-spec generator property per op") {
     val names = SpecFuzzProperties.properties.map(_._1).toSeq
     val uncovered = SpecSurface.transformOps.filterNot(op =>
