@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.{OutputTopic, PipelineSpec}
@@ -163,207 +163,113 @@ object BatchSink extends org.apache.spark.internal.Logging {
   }
 
   /** KTable write side: apply a changelog batch to a stored parquet
-    * snapshot — union existing + changes, keep latest-per-key, swap the
-    * result in. Spark cannot overwrite a path it is reading, so the merge
-    * writes to a staging directory and renames: the old snapshot stays
-    * readable until the atomic-within-a-filesystem swap. First call (no
-    * snapshot yet) just materializes the changes' latest view. Returns the
-    * resulting snapshot row count. Snapshot cost is one latest-per-key
-    * shuffle over |snapshot| + |changes| — at recurring cadence on 100 TB
-    * pass `partitionCols` (see the partitioned overload below) so each
-    * batch merges only the partitions its delta touches.
+    * snapshot — union the stored rows with the changes, keep latest per key,
+    * swap the result in. Spark cannot overwrite a path it is reading, so the
+    * merge writes to a staging directory and installs it under the
+    * [[Commit]] rename-aside swap: the old data stays readable until the
+    * swap, and a crash between the renames is restored on the next call.
+    * Replaying a batch re-merges the same versions to the same result
+    * (last-write-wins idempotence). The first call (no snapshot yet) just
+    * materializes the changes' latest view.
     *
-    * CONCURRENCY CONTRACT (both modes): single writer — the swap protocol
-    * has no guard against two concurrent upserts racing the renames; it is
-    * designed for the one-at-a-time foreachBatch loop
-    * (StreamRunner.startSnapshotSink). Readers: the swap leaves a transient
-    * window where `path` (or, partitioned, an individual partition dir)
-    * does not exist — an external reader hitting that window should retry;
-    * deployments needing always-consistent concurrent readers want a
+    * The merge works on the store's LEAVES. A flat store (`partitionCols`
+    * empty) has one leaf, its root, so every batch rewrites the whole table
+    * — fine for dimension-sized snapshots. A store hive-partitioned on
+    * `partitionCols` has one leaf per partition directory, and a batch
+    *
+    *  1. collects the partition tuples it touches
+    *     (`changes.select(partitionCols).distinct()`),
+    *  2. reads ONLY those directories of the stored snapshot (by path, with
+    *     `basePath`: untouched partitions are neither listed nor opened),
+    *  3. merges latest-per-key over |touched slice| + |changes|,
+    *  4. swaps ONLY the touched directories, two renames each.
+    *
+    * So a daily delta against a 100 TB snapshot costs its partitions, not
+    * the table. A batch touching more than [[WarnTouchedPartitions]] still
+    * merges in one pass, and logs one WARN with the count and the rename
+    * cost: on the recurring cadence that usually means the layout is finer
+    * than the delta.
+    *
+    * REQUIREMENT: `partitionCols` must be functionally determined by `keys`
+    * (e.g. [[keyBucket]], a key-range band, or a date that is part of the
+    * key) — otherwise a key's new version can land in a different partition
+    * than its stored one and latest-per-key cannot be resolved within a
+    * partition. A derived bucket column must be computed by the WRITER.
+    *
+    * Returns the post-merge row count of the rewritten leaves: the whole
+    * snapshot when flat, the touched partitions when partitioned (a full
+    * count would rescan the data the partitioned layout exists to skip).
+    *
+    * CONCURRENCY CONTRACT: single writer — nothing guards two concurrent
+    * upserts racing the renames; it is designed for the one-at-a-time
+    * foreachBatch loop (StreamRunner.startSnapshotSink). Readers: the swap
+    * leaves a transient window where a leaf (`path`, or one partition
+    * directory) does not exist — an external reader hitting it should
+    * retry; deployments needing always-consistent concurrent readers want a
     * manifest-based table format as the sink instead.
     */
   def upsertSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
-      changes: DataFrame, keys: Seq[String], orderCols: Seq[String]): Long = {
+      changes: DataFrame, keys: Seq[String], orderCols: Seq[String],
+      partitionCols: Seq[String] = Nil): Long = {
+    require(partitionCols.forall(changes.columns.contains),
+      s"changes frame is missing partition columns: " +
+        partitionCols.filterNot(changes.columns.contains).mkString(", "))
     requireMergeColumns(changes, keys, orderCols)
     // Hadoop FileSystem API, not java.nio: the snapshot lives wherever
     // Spark writes (hdfs://, s3a://, file:) — local-only path ops would
     // silently treat a remote snapshot as absent and clobber it
     val cur = new org.apache.hadoop.fs.Path(path)
     val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    // crash recovery BEFORE reading (Commit.recover): a previous swap's
-    // aside is restored or dropped, so the merge reads the last install
-    val exists = Commit.recover(fs, cur, 0)
-    // reverse layout guard (the partitioned overload has the mirror): a
-    // partitioned snapshot fed through this flat path would be rewritten in
-    // full AND converted to a flat layout — the silent 100 TB rewrite the
-    // partitioned mode exists to avoid, usually a restart that lost the
-    // partitionCols argument
-    require(!exists || !fs.listStatus(cur).exists(s =>
-        s.isDirectory && s.getPath.getName.contains("=")),
-      s"$path holds a PARTITIONED snapshot; pass its partitionCols instead " +
-        "of the flat upsert (a flat merge would rewrite and de-partition it)")
+    // crash recovery BEFORE reading: an interrupted swap is restored (a
+    // flat aside with cur absent wholesale at any depth, so the layout
+    // guard refuses it with instructions rather than deleting the only
+    // surviving copy)
+    val exists = Commit.recover(fs, cur, partitionCols.size)
+    if (exists) requireLayout(fs, cur, partitionCols)
+    // the stored leaves this batch merges into; a touched partition
+    // without a directory yet holds no stored rows
+    val stored =
+      if (partitionCols.isEmpty) { if (exists) Seq(path) else Nil }
+      else {
+        // touched partitions as the writer names their directories: each
+        // partition column cast to string (under the session time zone)
+        val touched = changes.select(partitionCols.map(col(_).cast("string")): _*)
+          .distinct().collect()
+        if (touched.isEmpty) return 0L // empty micro-batch: snapshot unchanged
+        if (touched.length > WarnTouchedPartitions)
+          logWarning(s"[$path] changelog batch touches ${touched.length} " +
+            s"partitions (> $WarnTouchedPartitions): merging in one pass, then " +
+            s"~${2L * touched.length} sequential renames to swap them in. On a " +
+            "recurring cadence this means partitionCols is finer than the " +
+            "delta; coarsen it (DEPLOY.md, Snapshot sink)")
+        if (!exists) Nil
+        else touched.toSeq.map { r =>
+          new org.apache.hadoop.fs.Path(cur, partitionCols.indices.map(i =>
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .getPartitionPathString(partitionCols(i), r.getString(i))).mkString("/"))
+        }.filter(fs.exists).map(_.toString)
+      }
     // allowMissingColumns: lenient schema evolution, matching the
     // reference's schema-on-read posture (SerdeFactory.java:30 — unknown
     // fields ignored, missing fields null). A changelog gaining a column
-    // widens the snapshot (history rows carry null); a column the changelog
-    // stopped sending survives as null on the new versions. Key and order
-    // columns are guarded above — silently nulling THEM would corrupt the
-    // merge (a null key collapses the batch into one group; a null order
-    // column loses every new version).
-    val merged =
-      if (exists)
-        graft.sources.Tables.latestPerKey(
-          spark.read.parquet(path).unionByName(changes, allowMissingColumns = true),
-          keys, orderCols)
-      else
-        graft.sources.Tables.latestPerKey(changes, keys, orderCols)
-    val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
-    merged.write.mode("overwrite").parquet(staged.toString)
-    val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
-    // replaying the same batch after any crash re-merges the same versions
-    // to the same result (last-write-wins idempotence)
-    Commit.install(fs, cur, Nil, retainAside = false)
-    n
-  }
-
-  /** Partition-pruned snapshot upsert — the 100 TB shape of the method
-    * above. The snapshot is stored hive-partitioned on `partitionCols`;
-    * each changelog batch
-    *
-    *  1. collects the partition tuples it touches
-    *     (`changes.select(partitionCols).distinct()` — bounded by the batch,
-    *     guarded at [[DefaultMaxTouchedPartitions]] /
-    *     `graft.sink.maxTouchedPartitions`),
-    *  2. reads ONLY those partitions' directories of the stored snapshot
-    *     (`basePath` plus the touched leaf directories — untouched
-    *     terabytes are neither listed nor opened, not even for the schema
-    *     merge),
-    *  3. merges latest-per-key over |touched snapshot slice| + |changes|,
-    *  4. swaps ONLY the touched partition directories, each under the same
-    *     [[Commit]] rename-aside protocol as the unpartitioned path (a crash
-    *     between a partition's two renames is restored from its aside copy
-    *     on the next call; replaying the batch re-merges to the same result).
-    *
-    * Untouched partitions' files are NOT rewritten — a daily delta against
-    * a 100 TB snapshot costs |delta's partitions|, not a full-table rewrite.
-    *
-    * REQUIREMENT: `partitionCols` must be functionally determined by `keys`
-    * (e.g. `pmod(hash(key), n)` buckets, a key-range band, or a date that is
-    * part of the key) — otherwise a key's new version can land in a
-    * different partition than its stored one and latest-per-key cannot be
-    * resolved within a partition. A derived bucket column must be computed
-    * by the WRITER (this method sees only the columns `changes` carries).
-    *
-    * Returns the post-merge row count of the TOUCHED partitions (a full
-    * snapshot count would rescan the very data this method exists to skip).
-    * Single-writer + reader-retry contract as documented on the
-    * unpartitioned overload; here the transient gap is per partition dir,
-    * so concurrent readers see mixed old/new partitions mid-swap.
-    */
-  def upsertSnapshot(spark: org.apache.spark.sql.SparkSession, path: String,
-      changes: DataFrame, keys: Seq[String], orderCols: Seq[String],
-      partitionCols: Seq[String]): Long = {
-    if (partitionCols.isEmpty)
-      return upsertSnapshot(spark, path, changes, keys, orderCols)
-    require(partitionCols.forall(changes.columns.contains),
-      s"changes frame is missing partition columns: " +
-        partitionCols.filterNot(changes.columns.contains).mkString(", "))
-    requireMergeColumns(changes, keys, orderCols)
-    val cur = new org.apache.hadoop.fs.Path(path)
-    val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    // crash recovery BEFORE reading: restores any partition whose swap was
-    // interrupted between its two renames — and a FLAT aside with cur
-    // absent (the unpartitioned overload's crash window) wholesale, so the
-    // layout guard below rejects the flat snapshot with instructions
-    // rather than deleting the only surviving copy
-    val exists = Commit.recover(fs, cur, partitionCols.size)
-
-    // layout guard: installing partition directories next to a flat
-    // snapshot's part-files would corrupt the table (double reads, undefined
-    // pruning) — a path must stay in one layout for its lifetime. ONE
-    // top-level listing, not a tree walk: this runs on every upsert and the
-    // snapshot may hold tens of thousands of partition directories.
-    require(!exists || fs.listStatus(cur).exists(s =>
-        s.isDirectory && s.getPath.getName.contains("=")),
-      s"$path holds an unpartitioned snapshot; the partitioned upsert cannot " +
-        "convert it in place — rewrite it once with partitionBy, or keep " +
-        "calling the unpartitioned overload")
-
-    // touched partitions as the writer names their directories: each
-    // partition column cast to string (under the session time zone)
-    val touched = changes.select(partitionCols.map(col(_).cast("string")): _*)
-      .distinct().collect()
-    if (touched.isEmpty) return 0L // empty micro-batch: snapshot unchanged
-    val maxTouched = maxTouchedPartitions(spark)
-    if (touched.length > maxTouched) {
-      // On the recurring changelog cadence this almost always means the
-      // layout is finer than the delta — fail with instructions. The
-      // sanctioned exception is a BULK BACKFILL (initial load, historical
-      // re-ingest) that legitimately touches most of the table: with
-      // graft.sink.mergeWaves=true it proceeds in sequential waves of
-      // maxTouched partitions, so per-write planning (the pruning
-      // disjunction) and the rename batch stay bounded while TOTAL swap
-      // cost remains O(touched) — inherent to touching that many
-      // partitions, not a property of the waves. Each wave recurses into
-      // this method over the cached delta slice, so it inherits the full
-      // crash-recovery + layout-guard + swap protocol; a crash mid-wave
-      // recovers that wave's partitions on the next call and replaying the
-      // batch re-merges idempotently (waves already applied are
-      // last-write-wins no-ops).
-      require(mergeWavesEnabled(spark),
-        s"changelog batch touches ${touched.length} partitions (> " +
-          s"$maxTouched) — usually the partitioning is finer than the " +
-          "delta: coarsen partitionCols or raise " +
-          "graft.sink.maxTouchedPartitions. For a legitimate bulk backfill " +
-          "set graft.sink.mergeWaves=true to merge in bounded sequential " +
-          "waves instead")
-      logWarning(s"[$path] ${touched.length} touched partitions exceed the " +
-        s"$maxTouched cap — merging in ${(touched.length + maxTouched - 1) / maxTouched} " +
-        "sequential waves (graft.sink.mergeWaves=true)")
-      val persisted = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        return touched.grouped(maxTouched).foldLeft(0L) { (acc, wave) =>
-          acc + upsertSnapshot(spark, path,
-            persisted.filter(touchedPartitionPredicate(wave.toSeq, partitionCols)),
-            keys, orderCols, partitionCols)
-        }
-      } finally { persisted.unpersist(); () }
-    }
-
-    // only the touched partitions' directories are listed and opened; a
-    // touched partition without a directory yet holds no stored rows
-    val touchedDirs = if (!exists) Seq.empty else touched.toSeq.map { r =>
-      new org.apache.hadoop.fs.Path(cur, partitionCols.indices.map(i =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(partitionCols(i), r.getString(i))).mkString("/"))
-    }.filter(fs.exists)
-    val merged =
-      if (touchedDirs.isEmpty) graft.sources.Tables.latestPerKey(changes, keys, orderCols)
-      else {
-        // mergeSchema: schema evolution makes per-partition file schemas
-        // heterogeneous (only touched partitions widen); without it, schema
-        // inference can sample an old-schema file and a rewrite would
-        // silently DROP an evolved column's data from the touched partition.
-        // Its footer read covers the touched directories only; basePath
-        // keeps their partition columns, whose re-inferred types are then
-        // aligned back to the changelog's schema before the union.
-        val slice = partitionCols.foldLeft(
-          spark.read.option("basePath", path).option("mergeSchema", "true")
-            .parquet(touchedDirs.map(_.toString): _*)) {
-          (d, c) => d.withColumn(c, col(c).cast(changes.schema(c).dataType))
-        }
-        // lenient schema evolution as in the unpartitioned overload — only
-        // TOUCHED partitions widen on this batch; untouched partitions widen
-        // (with nulls) whenever a later delta touches them, and readers of a
-        // mid-evolution snapshot should read with mergeSchema too
-        graft.sources.Tables.latestPerKey(
-          slice.unionByName(changes, allowMissingColumns = true), keys, orderCols)
-      }
+    // widens the rewritten leaves (history rows carry null); a column the
+    // changelog stopped sending survives as null on the new versions. Key
+    // and order columns are guarded above — silently nulling THEM would
+    // corrupt the merge. The partition columns re-inferred from directory
+    // names are aligned back to the changelog's types before the union.
+    val merged = graft.sources.Tables.latestPerKey(
+      if (stored.isEmpty) changes
+      else partitionCols.foldLeft(readLeaves(spark, path, stored, partitionCols)) {
+        (d, c) => d.withColumn(c, col(c).cast(changes.schema(c).dataType))
+      }.unionByName(changes, allowMissingColumns = true),
+      keys, orderCols)
     val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
     merged.write.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(staged.toString)
     val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
-    Commit.install(fs, cur, Commit.leafPartitionDirs(fs, staged, partitionCols.size),
+    Commit.install(fs, cur,
+      if (partitionCols.isEmpty) Nil
+      else Commit.leafPartitionDirs(fs, staged, partitionCols.size),
       retainAside = false)
     n
   }
@@ -375,20 +281,19 @@ object BatchSink extends org.apache.spark.internal.Logging {
     * the same growth with log compaction). Layout-only: keys/versions are
     * untouched, so it needs no merge columns.
     *
-    * Protocol: the SAME [[Commit]] staged swap as [[upsertSnapshot]] — a
-    * crash mid-compact leaves exactly the states the next upsert's (or
-    * compact's) [[Commit.recover]] already heals, and the
-    * single-writer contract is shared: run it between batches of the one
-    * snapshot writer (see `startSnapshotSink(compactEvery = ...)`), never
-    * concurrently with it.
+    * Protocol: the SAME [[Commit]] staged swap as [[upsertSnapshot]], over
+    * the same leaves (a flat store's root, or each partition directory) —
+    * a crash mid-compact leaves exactly the states the next upsert's (or
+    * compact's) [[Commit.recover]] already heals, and the single-writer
+    * contract is shared: run it between batches of the one snapshot writer
+    * (see `startSnapshotSink(compactEvery = ...)`), never concurrently with
+    * it.
     *
-    * Partitioned stores compact per partition directory, each with its own
-    * atomic swap, and ONLY directories whose file count exceeds what
-    * `targetBytes` calls for — a healthy partition's files are not even
-    * opened (their listing is; at tens of thousands of partitions that is
-    * one `listStatus` per leaf, the same order of driver work as the
-    * upsert's own pruning). Returns the number of data files removed
-    * (0 = store already compact).
+    * ONLY leaves whose file count exceeds what `targetBytes` calls for are
+    * rewritten, each swapped in on its own — a healthy partition's files
+    * are not even opened (their listing is; at tens of thousands of
+    * partitions that is one `listStatus` per leaf). Returns the number of
+    * data files removed (0 = store already compact).
     *
     * `sortCols` (typically the store key) range-partitions + sorts the
     * rewritten files so each covers a DISJOINT key range — a compaction
@@ -410,10 +315,10 @@ object BatchSink extends org.apache.spark.internal.Logging {
     require(sortCols.isEmpty || zOrderCols.isEmpty,
       "sortCols and zOrderCols are mutually exclusive layouts")
 
-    // the compacted rewrite of one store slice: plain coalesce when no
-    // layout is declared, range+sort for key-disjoint files, z-value
-    // range+sort for multi-dim clustering (min/max from one tiny agg over
-    // the slice being rewritten — same pass writeZOrdered pays)
+    // the compacted rewrite of one leaf: plain coalesce when no layout is
+    // declared, range+sort for key-disjoint files, z-value range+sort for
+    // multi-dim clustering (min/max from one tiny agg over the leaf being
+    // rewritten — same pass writeZOrdered pays)
     def rewritten(df: org.apache.spark.sql.DataFrame, needed: Int) =
       if (zOrderCols.nonEmpty)
         graft.operators.Scale.zCluster(df, zOrderCols, needed)
@@ -423,112 +328,83 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else df.repartition(needed)
     val cur = new HPath(path)
     val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = Commit.staging(path)
+    val staged = new HPath(Commit.staging(path))
+    // a leaf's directory: the root itself for a flat store ("")
+    def leaf(root: HPath, rel: String) = if (rel.isEmpty) root else new HPath(root, rel)
     def dataFiles(dir: HPath) = fs.listStatus(dir).filter(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
     def neededFiles(bytes: Long) =
       math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    // same recovery as the upserts — including the flat-aside-with-cur-
-    // absent window (the ONLY surviving copy after a flat upsert's crash):
-    // restored wholesale, never deleted
+    // same recovery and layout guard as the upsert — a partitioned store
+    // reaching the flat path would silently no-op (its root holds
+    // directories, not data files)
     require(Commit.recover(fs, cur, partitionCols.size),
       s"no snapshot at $path to compact")
+    requireLayout(fs, cur, partitionCols)
+    // stage every over-fragmented leaf, then swap just those. The
+    // partition columns live in the directory names, so they are dropped
+    // before the rewrite
+    val compacted = Commit.leafPartitionDirs(fs, cur, partitionCols.size).flatMap { rel =>
+      val files = dataFiles(leaf(cur, rel))
+      val needed = neededFiles(files.map(_.getLen).sum)
+      if (files.length <= needed) None
+      else {
+        rewritten(readLeaves(spark, path, Seq(leaf(cur, rel).toString), partitionCols)
+            .drop(partitionCols: _*), needed.toInt)
+          .write.mode("overwrite").parquet(leaf(staged, rel).toString)
+        Some(rel -> files.length)
+      }
+    }
+    // a flat store's leaf "" swaps the whole root. retainAside: the
+    // pre-compaction data outlives the swap under `<path>.old` (a grace
+    // window for recovery / slow readers pointed at it); the next
+    // writer's recovery sweeps it
+    if (compacted.nonEmpty)
+      Commit.install(fs, cur, compacted.map(_._1).filter(_.nonEmpty), retainAside)
+    compacted.map { case (rel, n) => n - dataFiles(leaf(cur, rel)).length }.sum.toLong
+  }
+
+  /** Above this many touched partitions an upsert logs one WARN (it still
+    * merges in one pass). The touched-tuple collect, the per-directory
+    * existence checks and read paths, and the post-merge swap are all
+    * O(touched) DRIVER-side work, and the swap is O(touched) SEQUENTIAL
+    * renames (two per partition; slower still on object stores where
+    * "rename" is copy+delete) — ~8k renames at this bar, seconds on HDFS.
+    */
+  val WarnTouchedPartitions = 4096
+
+  /** A path keeps one layout for life: it holds `k=v` directories iff
+    * `partitionCols` is non-empty. Installing partition directories next to
+    * a flat snapshot's part-files would corrupt the table, and a flat merge
+    * of a partitioned one would rewrite and de-partition it (usually a
+    * restart that lost the partitionCols argument). ONE top-level listing,
+    * not a tree walk: this runs on every upsert.
+    */
+  private def requireLayout(fs: org.apache.hadoop.fs.FileSystem,
+      cur: org.apache.hadoop.fs.Path, partitionCols: Seq[String]): Unit = {
     val partitioned = fs.listStatus(cur).exists(s =>
       s.isDirectory && s.getPath.getName.contains("="))
-
-    if (partitionCols.isEmpty) {
-      // same layout guard as the flat upsert: a partitioned store reaching
-      // the flat path would silently no-op (its root holds directories,
-      // not data files) — fail with instructions instead
-      require(!partitioned,
-        s"$path holds a PARTITIONED snapshot; pass its partitionCols")
-      val files = dataFiles(cur)
-      val needed = neededFiles(files.map(_.getLen).sum)
-      if (files.length <= needed) return 0L
-      rewritten(spark.read.parquet(path), needed.toInt)
-        .write.mode("overwrite").parquet(staged)
-      // retainAside: the pre-compaction snapshot outlives the swap as
-      // `<path>.old` (a grace window for recovery / slow readers pointed
-      // at it); the next writer's recovery sweeps it
-      Commit.install(fs, cur, Nil, retainAside)
-      files.length - dataFiles(cur).length
-    } else {
-      require(partitioned,
-        s"$path holds an unpartitioned snapshot; call compactSnapshot " +
-          "without partitionCols")
-      // per-directory compaction: stage every over-fragmented partition,
-      // then swap just those (per-partition atomic renames)
-      val compacted = Commit.leafPartitionDirs(fs, cur, partitionCols.size).flatMap { rel =>
-        val dir = new HPath(cur, rel)
-        val files = dataFiles(dir)
-        val needed = neededFiles(files.map(_.getLen).sum)
-        if (files.length <= needed) None
-        else {
-          // basePath keeps the partition columns on read; they are dropped
-          // on write because in this layout their values live in the
-          // directory name, not the files
-          rewritten(spark.read.option("basePath", path).parquet(dir.toString)
-              .drop(partitionCols: _*), needed.toInt)
-            .write.mode("overwrite").parquet(new HPath(staged, rel).toString)
-          Some(rel -> files.length)
-        }
-      }
-      if (compacted.nonEmpty)
-        Commit.install(fs, cur, compacted.map(_._1), retainAside)
-      compacted.map { case (rel, n) => n - dataFiles(new HPath(cur, rel)).length }.sum.toLong
-    }
+    require(partitioned == partitionCols.nonEmpty,
+      if (partitioned) s"$cur holds a PARTITIONED snapshot; pass its " +
+        "partitionCols (a flat merge would rewrite and de-partition it)"
+      else s"$cur holds an unpartitioned snapshot; it cannot be converted " +
+        "to partitions in place — rewrite it once with partitionBy, or " +
+        "drop partitionCols")
   }
 
-  /** A wave's slice of the changelog: the rows whose partition columns,
-    * rendered as strings (the form `touched` is collected in), equal one
-    * of the wave's tuples. The disjunction is reduced as a BALANCED tree:
-    * a left-deep Or chain over thousands of legitimately-touched
-    * partitions blows Catalyst's recursive transforms (StackOverflow) long
-    * before the touched-partition cap trips. Package-visible so the cap's
-    * planning cost is measurable in a test at exactly this shape.
+  /** Read stored leaves of the snapshot at `path`. A partitioned store is
+    * read with `basePath` (keeping its partition columns) and mergeSchema:
+    * a partition widens only when a batch touches it, so file schemas
+    * differ across partitions, and inference sampling an old-schema file
+    * would silently DROP an evolved column from the rewrite. The footer
+    * read covers the given directories only. A flat store is rewritten
+    * whole on every upsert, so it holds one schema and reads plain.
     */
-  private[graft] def touchedPartitionPredicate(
-      touched: Seq[org.apache.spark.sql.Row], partitionCols: Seq[String]): Column = {
-    def balancedOr(ps: Seq[Column]): Column =
-      if (ps.size == 1) ps.head
-      else balancedOr(ps.grouped(2).map(_.reduce(_ || _)).toSeq)
-    balancedOr(touched.map { row =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        col(c).cast("string") <=> lit(row.get(i)).cast("string")
-      }.reduce(_ && _)
-    })
-  }
-
-  /** Guard on how many partitions one changelog batch may touch — the
-    * touched-tuple collect, the per-directory existence checks and read
-    * paths, and the post-merge swap are all O(touched) DRIVER-side work,
-    * and the swap is O(touched) SEQUENTIAL filesystem renames (two per
-    * partition; slower still on object stores where "rename" is
-    * copy+delete). At the 4096 default that is ~8k renames worst case —
-    * seconds on HDFS — and a wave's slicing predicate analyzes+optimizes
-    * in ~2 s cold (measured in SinksSpec).
-    * A batch touching more partitions than this signals a layout finer
-    * than the delta cadence: coarsen the bucketing (DEPLOY.md sizing) —
-    * or raise `graft.sink.maxTouchedPartitions` in the session conf after
-    * accepting the rename latency, which grows linearly.
-    */
-  val DefaultMaxTouchedPartitions = 4096
-
-  /** Opt-in wave merge for deltas touching more than the cap — see the
-    * touched-guard comment in the partitioned upsert. Off by default so the
-    * cap keeps catching mis-sized layouts on the recurring cadence.
-    */
-  private def mergeWavesEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("graft.sink.mergeWaves").exists(_.trim.toBoolean)
-
-  private def maxTouchedPartitions(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("graft.sink.maxTouchedPartitions").map { s =>
-      val n = scala.util.Try(s.trim.toInt).getOrElse(throw new IllegalArgumentException(
-        s"graft.sink.maxTouchedPartitions must be a positive integer, got '$s'"))
-      require(n >= 1,
-        s"graft.sink.maxTouchedPartitions must be a positive integer, got '$s'")
-      n
-    }.getOrElse(DefaultMaxTouchedPartitions)
+  private def readLeaves(spark: org.apache.spark.sql.SparkSession, path: String,
+      dirs: Seq[String], partitionCols: Seq[String]): DataFrame =
+    (if (partitionCols.isEmpty) spark.read
+     else spark.read.option("basePath", path).option("mergeSchema", "true"))
+      .parquet(dirs: _*)
 
   /** Key-determined bucket column for the partitioned snapshot: a writer
     * computes `changes.withColumn("bucket", keyBucket(n, col(key)))` and

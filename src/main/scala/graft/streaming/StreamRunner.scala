@@ -194,12 +194,16 @@ object StreamRunner extends Logging {
     * re-merges the same versions to the same result.
     *
     * `partitionCols` (optional) stores the snapshot hive-partitioned and
-    * merges each micro-batch into ONLY the partitions it touches — the
-    * 100 TB posture; see BatchSink.upsertSnapshot's partitioned overload
-    * for the key-determinism requirement on the partition columns, and the
-    * session confs `graft.sink.maxTouchedPartitions` (bounds per-batch
-    * driver work) / `graft.sink.mergeWaves` (opt-in waved bulk backfills)
-    * which apply to every micro-batch merge of this sink (DEPLOY.md).
+    * merges each micro-batch into ONLY the partitions it touches, in one
+    * pass — the 100 TB posture; see BatchSink.upsertSnapshot for the
+    * key-determinism requirement on the partition columns. The swap costs
+    * two renames per touched partition; a batch touching more than
+    * `BatchSink.WarnTouchedPartitions` logs one WARN with that cost
+    * (DEPLOY.md, Snapshot sink).
+    *
+    * The layout arguments are checked at start() by the same
+    * `SnapshotSpec.validate` a spec's snapshot block gets (`compactEvery`
+    * 0 = never compact).
     */
   def startSnapshotSink(spark: SparkSession, spec: PipelineSpec,
       sources: SourceResolver, path: String, keys: Seq[String],
@@ -208,6 +212,11 @@ object StreamRunner extends Logging {
       compactEvery: Int = 0,
       compactZOrderBy: Seq[String] = Nil): StreamingQuery = {
     requireNoBranches(spec, "startSnapshotSink")
+    // the spec path's refusals (empty keys or order columns, a one-column
+    // or partition-overlapping zOrderBy, a negative compactEvery) hold for
+    // programmatic callers too
+    graft.config.SnapshotSpec(keys, orderCols, partitionCols,
+      Some(compactEvery).filter(_ != 0), compactZOrderBy).validate(spec.id, path)
     val planned = build(spark, spec, sources)
     // fail at start(), not on the Nth micro-batch: a typo'd key/order/
     // layout column would otherwise launch cleanly and only kill the
@@ -221,16 +230,6 @@ object StreamRunner extends Logging {
       s"[${spec.id}] snapshot sink declares columns absent from the built " +
         s"plan: ${missing.mkString(", ")} (plan columns: " +
         s"${planned.columns.mkString(", ")})")
-    // same start-time discipline for the z-order/partition overlap: the
-    // compactor drops partitionCols before the rewrite (they are
-    // directory-encoded), so an overlapping compactZOrderBy would launch
-    // cleanly and kill the query at its FIRST compaction batch instead
-    // (SnapshotSpec.validate guards only the spec-driven path)
-    require(compactZOrderBy.intersect(partitionCols).isEmpty,
-      s"[${spec.id}] snapshot sink compactZOrderBy cannot include " +
-        s"partitionBy columns (${compactZOrderBy.intersect(partitionCols)
-          .mkString(", ")}): they are directory-encoded constants within " +
-        "each rewritten slice")
     applyTrigger(spec, planned.writeStream
       .outputMode(outputModeFor(spec))
       .option("checkpointLocation", checkpoint)

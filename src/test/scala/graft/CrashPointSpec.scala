@@ -59,7 +59,9 @@ object CrashFS {
   * verb: run the verb once to count its filesystem mutations, then for
   * EVERY prefix of them, kill the verb right after it, read the artifact
   * (it must equal the pre-verb or the post-verb state), retry the verb on
-  * the plain filesystem, and require the post-verb state.
+  * the plain filesystem, and require the post-verb state. A verb that
+  * swaps a partitioned store one partition at a time is checked per
+  * partition: each must read as before or after, and none may vanish.
   */
 class CrashPointSpec extends SparkSuite {
   spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFS].getName)
@@ -69,10 +71,20 @@ class CrashPointSpec extends SparkSuite {
   /** A verb under test: `setup` builds the pre-verb artifact at a plain
     * path; `verb` runs on a path (plain or crash://); `observe` reads a
     * plain path's logical state (healing it first where the artifact's
-    * documented readers do).
+    * documented readers do). With `perLeaf`, `observe` returns a map from
+    * partition directory to that partition's state.
     */
   private case class Case(name: String, setup: String => Unit,
-      verb: String => Unit, observe: String => Any)
+      verb: String => Unit, observe: String => Any, perLeaf: Boolean = false)
+
+  private def beforeOrAfter(c: Case, killed: Any, pre: Any, post: Any): Boolean =
+    if (!c.perLeaf) killed == pre || killed == post
+    else {
+      def leaves(a: Any) = a.asInstanceOf[Map[String, Any]]
+      val (k, a, b) = (leaves(killed), leaves(pre), leaves(post))
+      a.keySet.subsetOf(k.keySet) && k.forall { case (leaf, st) =>
+        a.get(leaf).contains(st) || b.get(leaf).contains(st) }
+    }
 
   private def copy(src: String, dst: String): Unit = {
     fs.delete(new Path(dst), true)
@@ -109,7 +121,7 @@ class CrashPointSpec extends SparkSuite {
       CrashFS.disarm()
       awaitIdle()
       val killed = c.observe(work)
-      assert(killed == pre || killed == post,
+      assert(beforeOrAfter(c, killed, pre, post),
         s"${c.name}: killed after $n of $total mutations, the artifact " +
           s"reads as neither the pre- nor the post-verb state: $killed")
       c.verb(work)
@@ -219,6 +231,14 @@ class CrashPointSpec extends SparkSuite {
       historyState))
   }
 
+  /** The staged-swap artifacts' readers heal first (Commit.recover is what
+    * every writer runs before reading); `depth` is the partition depth.
+    */
+  private def healed(p: String, depth: Int): Path = {
+    graft.sinks.Commit.recover(fs, new Path(p), depth)
+    new Path(p)
+  }
+
   test("shingle compact and flat snapshot upsert: a kill after ANY filesystem mutation recovers to before or after, and the retry converges") {
     check(Case("shingle_compact",
       hist => {
@@ -229,12 +249,6 @@ class CrashPointSpec extends SparkSuite {
       shingleVerb(compact),
       historyState))
 
-    // the staged-swap artifacts' readers heal first (Commit.recover is
-    // what every writer runs before reading)
-    def healed(p: String)(read: => Any): Any = {
-      graft.sinks.Commit.recover(fs, new Path(p), 0)
-      read
-    }
     def batch(rows: Seq[(Long, Long, String)]): DataFrame =
       spark.createDataFrame(rows).toDF("k", "ver", "v").coalesce(1)
     check(Case("snapshot_upsert",
@@ -243,9 +257,60 @@ class CrashPointSpec extends SparkSuite {
       snap => graft.sinks.BatchSink.upsertSnapshot(spark, snap,
         batch(Seq((3L, 2L, "b3"), (7L, 0L, "stale"), (30L, 1L, "new"))),
         Seq("k"), Seq("ver")),
-      snap => healed(snap) {
+      snap => {
+        healed(snap, 0)
         spark.read.parquet(snap).collect()
           .map(r => (r.getLong(0), r.getString(2))).sorted.toSeq
       }))
+  }
+  test("partitioned snapshot upsert and snapshot compaction: a kill after ANY filesystem mutation recovers to before or after, and the retry converges") {
+    def rows(p: String) = spark.read.parquet(p).collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).sorted.toSeq
+    // a partitioned store's state per partition directory: its rows, and
+    // with `files` its data-file count (compaction changes no row)
+    def partitions(files: Boolean)(p: String): Any = {
+      val root = healed(p, 1)
+      graft.sinks.Commit.leafPartitionDirs(fs, root, 1).map { rel =>
+        rel -> (rows(s"$p/$rel"),
+          if (files) graft.sinks.Commit.dataFiles(fs, new Path(root, rel)).size else 0)
+      }.toMap
+    }
+    def bucketed(rows: Seq[(Long, Long, String)]): DataFrame =
+      spark.createDataFrame(rows.map { case (k, ver, v) => (k, k % 4, ver, v) })
+        .toDF("k", "bucket", "ver", "v").coalesce(1)
+    // the delta touches two stored buckets and creates a third
+    check(Case("snapshot_upsert_partitioned",
+      snap => graft.sinks.BatchSink.upsertSnapshot(spark, snap,
+        bucketed((0L until 12L).filter(_ % 4 != 3).map(k => (k, 1L, s"a$k"))),
+        Seq("k"), Seq("ver"), Seq("bucket")),
+      snap => graft.sinks.BatchSink.upsertSnapshot(spark, snap,
+        bucketed(Seq((1L, 2L, "b1"), (4L, 0L, "stale"), (8L, 2L, "b8"),
+          (3L, 1L, "new"))),
+        Seq("k"), Seq("ver"), Seq("bucket")),
+      partitions(files = false), perLeaf = true))
+    // flat compaction with a key sort: its one swap covers every window —
+    // a torn staging write, a kill between the renames, a stale aside
+    // beside the installed store
+    check(Case("snapshot_compact_flat",
+      snap => spark.createDataFrame((1L to 40L).map(k => (k, 1L, s"v$k")))
+        .toDF("k", "ver", "v").repartition(4).write.parquet(snap),
+      snap => graft.sinks.BatchSink.compactSnapshot(spark, snap, sortCols = Seq("k")),
+      snap => {
+        val root = healed(snap, 0)
+        (rows(snap), graft.sinks.Commit.dataFiles(fs, root).size)
+      }))
+    // partitioned z-order compaction: two fragmented buckets swapped one at
+    // a time (a kill between them leaves one compacted), one healthy bucket
+    check(Case("snapshot_compact_partitioned",
+      snap => {
+        val frag = (0L until 24L).filter(_ % 3 != 0).map(k => (k, k % 3, k * 7 % 24, s"v$k"))
+        spark.createDataFrame(frag).toDF("k", "bucket", "u", "v").repartition(3)
+          .write.partitionBy("bucket").parquet(snap)
+        spark.createDataFrame((0L until 24L).filter(_ % 3 == 0).map(k => (k, k * 7 % 24, s"v$k")))
+          .toDF("k", "u", "v").coalesce(1).write.parquet(s"$snap/bucket=0")
+      },
+      snap => graft.sinks.BatchSink.compactSnapshot(spark, snap, Seq("bucket"),
+        zOrderCols = Seq("k", "u")),
+      partitions(files = true), perLeaf = true))
   }
 }

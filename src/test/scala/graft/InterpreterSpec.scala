@@ -1782,23 +1782,9 @@ class InterpreterSpec extends SparkSuite {
       .write.mode("overwrite").parquet(p)
     // adopt first: the pin is on the steady-state verbs
     shingleCompact(docs, p)
-    val sc = spark.sparkContext
-    def jobs(body: => Any): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      sc.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(sc) }
-      finally sc.removeSparkListener(l)
-      n.get()
-    }
-    val appendJobs = jobs(shingleAppend(
+    val appendJobs = jobsDuring(shingleAppend(
       docs.filter(col("doc_id") >= 40 && col("doc_id") < 60), p))
-    val retractJobs = jobs(shingleRetract(docs.filter(col("doc_id") < 2), p))
+    val retractJobs = jobsDuring(shingleRetract(docs.filter(col("doc_id") < 2), p))
     // the counts measured when the history moved onto the generation
     // protocol; a new probe job in either verb fails here
     assert(appendJobs <= AppendJobs && retractJobs <= RetractJobs,

@@ -293,113 +293,47 @@ class SinksSpec extends SparkSuite {
       graft.sinks.BatchSink.compactSnapshot(spark, tempDir("graft_compact_none") + "/nope"))
   }
 
-  test("compactSnapshot crash recovery: a kill in ANY swap window neither " +
-      "loses nor doubles rows on rerun") {
-    import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-    val conf = spark.sessionState.newHadoopConf()
-    def copyDir(fs: org.apache.hadoop.fs.FileSystem, src: String, dst: String): Unit =
-      assert(FileUtil.copy(fs, new HPath(src), fs, new HPath(dst), false, conf))
-    def rows(p: String) = spark.read.parquet(p).collect()
-      .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toSeq.sorted
-    def mkFlat(name: String): (String, org.apache.hadoop.fs.FileSystem) = {
-      val flat = tempDir(name) + "/snap"
-      spark.createDataFrame((1 to 50).map(i => (i.toLong, s"v$i")))
-        .toDF("k", "v").repartition(8).write.parquet(flat)
-      (flat, new HPath(flat).getFileSystem(conf))
-    }
-    // window A — killed mid-staging-write: cur intact, .staging holds a
-    // partial fileset (including an in-flight _temporary dir)
-    locally {
-      val (flat, fs) = mkFlat("graft_crash_a")
-      val want = rows(flat)
-      val staging = new HPath(flat + ".staging")
-      fs.mkdirs(new HPath(staging, "_temporary/0"))
-      val out = fs.create(new HPath(staging, "part-00000.parquet"))
-      out.write(Array.fill(128)(0x7f.toByte)); out.close() // torn, unreadable
-      assert(graft.sinks.BatchSink.compactSnapshot(spark, flat) > 0)
-      assert(rows(flat) == want, "window-A rerun changed rows")
-    }
-    // window B — killed between the two renames: cur ABSENT, .old holds the
-    // only live copy, .staging holds the full compacted rewrite. Recovery
-    // must restore .old (never trust .staging — its write may itself have
-    // been the casualty) and recompact from it.
-    locally {
-      val (flat, fs) = mkFlat("graft_crash_b")
-      val want = rows(flat)
-      copyDir(fs, flat, flat + ".staging")
-      assert(fs.rename(new HPath(flat), new HPath(flat + ".old")))
-      assert(!fs.exists(new HPath(flat)))
-      assert(graft.sinks.BatchSink.compactSnapshot(spark, flat) > 0)
-      assert(rows(flat) == want, "window-B rerun lost or doubled rows")
-      assert(!fs.exists(new HPath(flat + ".old")) &&
-        !fs.exists(new HPath(flat + ".staging")))
-    }
-    // window C — killed after install, before the aside delete: cur is the
-    // compacted store, .old is a STALE full copy. Rerun must drop the stale
-    // copy without re-merging it (doubling) and leave cur untouched.
-    locally {
-      val (flat, fs) = mkFlat("graft_crash_c")
-      val want = rows(flat)
-      assert(graft.sinks.BatchSink.compactSnapshot(spark, flat) > 0)
-      copyDir(fs, flat, flat + ".old")
-      assert(graft.sinks.BatchSink.compactSnapshot(spark, flat) == 0L)
-      assert(rows(flat) == want, "window-C rerun changed rows")
-      assert(!fs.exists(new HPath(flat + ".old")))
-    }
-    // partitioned store — killed mid-loop between a partition's two
-    // renames: bucket=1 sits under .old, its staging rewrite exists, cur's
-    // bucket=1 is ABSENT. The preamble must restore the aside copy per
-    // partition, then compaction proceeds over the whole store.
-    locally {
-      val dir = tempDir("graft_crash_p") + "/snap"
-      val fs = new HPath(dir).getFileSystem(conf)
-      graft.sinks.BatchSink.upsertSnapshot(spark, dir,
-        spark.createDataFrame((1 to 40).map(i =>
-          (i.toLong, i.toLong % 2, 1L, s"v$i"))).toDF("k", "bucket", "ver", "v"),
-        Seq("k"), Seq("ver"), Seq("bucket"))
-      val want = spark.read.parquet(dir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("bucket"),
-          r.getAs[String]("v"))).toSeq.sorted
-      copyDir(fs, dir + "/bucket=1", dir + ".staging/bucket=1")
-      fs.mkdirs(new HPath(dir + ".old"))
-      assert(fs.rename(new HPath(dir + "/bucket=1"), new HPath(dir + ".old/bucket=1")))
-      assert(!fs.exists(new HPath(dir + "/bucket=1")))
-      graft.sinks.BatchSink.compactSnapshot(spark, dir, Seq("bucket"))
-      val got = spark.read.parquet(dir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("bucket"),
-          r.getAs[String]("v"))).toSeq.sorted
-      assert(got == want, "partitioned mid-loop rerun lost or doubled rows")
-      assert(!fs.exists(new HPath(dir + ".old")) &&
-        !fs.exists(new HPath(dir + ".staging")))
-      // the next upsert proceeds normally on the recovered store
-      graft.sinks.BatchSink.upsertSnapshot(spark, dir,
-        spark.createDataFrame(Seq((1L, 1L, 2L, "a2")))
-          .toDF("k", "bucket", "ver", "v"),
-        Seq("k"), Seq("ver"), Seq("bucket"))
-      assert(spark.read.parquet(dir).filter(col("k") === 1L)
-        .head.getAs[String]("v") == "a2")
-    }
-    // z-order compaction recovers through the same windows (window B, the
-    // hairiest): clustering layout + crash recovery compose
-    locally {
-      val zdir = tempDir("graft_crash_z") + "/snap"
-      val fs = new HPath(zdir).getFileSystem(conf)
-      spark.createDataFrame((1 to 400).map(i =>
-        (i.toLong, (i * 37 % 400).toLong, s"v$i"))).toDF("k", "u", "v")
-        .repartition(8).write.parquet(zdir)
-      val want = spark.read.parquet(zdir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("u"),
-          r.getAs[String]("v"))).toSeq.sorted
-      copyDir(fs, zdir, zdir + ".staging")
-      assert(fs.rename(new HPath(zdir), new HPath(zdir + ".old")))
-      assert(graft.sinks.BatchSink.compactSnapshot(spark, zdir,
-        zOrderCols = Seq("k", "u")) > 0)
-      val got = spark.read.parquet(zdir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("u"),
-          r.getAs[String]("v"))).toSeq.sorted
-      assert(got == want, "z-order window-B rerun lost or doubled rows")
-    }
+  test("flat upsert, partitioned upsert and compactSnapshot stay within their Spark job counts") {
+    def batch(rows: Seq[(Long, Long, String)]) =
+      spark.createDataFrame(rows.map { case (k, ver, v) => (k, k % 4, ver, v) })
+        .toDF("k", "bucket", "ver", "v")
+    val seed = batch((0L until 40L).map(k => (k, 1L, s"a$k")))
+    val delta = batch(Seq((1L, 2L, "b1"), (5L, 2L, "b5"), (41L, 1L, "n41")))
+    // steady state: each verb runs against a store that already exists
+    val flat = tempDir("graft_jobs_flat") + "/snap"
+    graft.sinks.BatchSink.upsertSnapshot(spark, flat, seed.drop("bucket"),
+      Seq("k"), Seq("ver"))
+    val flatJobs = jobsDuring(graft.sinks.BatchSink.upsertSnapshot(spark, flat,
+      delta.drop("bucket"), Seq("k"), Seq("ver")))
+    val part = tempDir("graft_jobs_part") + "/snap"
+    graft.sinks.BatchSink.upsertSnapshot(spark, part, seed,
+      Seq("k"), Seq("ver"), Seq("bucket"))
+    val partJobs = jobsDuring(graft.sinks.BatchSink.upsertSnapshot(spark, part,
+      delta, Seq("k"), Seq("ver"), Seq("bucket")))
+    // compaction: fragmented flat and partitioned stores
+    val fragFlat = tempDir("graft_jobs_cflat") + "/snap"
+    seed.drop("bucket").repartition(6).write.parquet(fragFlat)
+    val flatCompactJobs = jobsDuring(assert(graft.sinks.BatchSink.compactSnapshot(
+      spark, fragFlat, sortCols = Seq("k")) > 0))
+    val fragPart = tempDir("graft_jobs_cpart") + "/snap"
+    seed.repartition(3).write.partitionBy("bucket").parquet(fragPart)
+    val partCompactJobs = jobsDuring(assert(graft.sinks.BatchSink.compactSnapshot(
+      spark, fragPart, Seq("bucket"), sortCols = Seq("k")) > 0))
+    info(s"jobs: flat upsert $flatJobs, partitioned upsert $partJobs, " +
+      s"flat compact $flatCompactJobs, partitioned compact $partCompactJobs")
+    // the counts measured before the flat and partitioned upserts shared
+    // one body; a new probe job on any of these paths fails here
+    assert(flatJobs <= FlatUpsertJobs && partJobs <= PartitionedUpsertJobs &&
+      flatCompactJobs <= FlatCompactJobs && partCompactJobs <= PartitionedCompactJobs,
+      s"flat upsert ran $flatJobs jobs (pin $FlatUpsertJobs), partitioned " +
+        s"upsert $partJobs ($PartitionedUpsertJobs), flat compact " +
+        s"$flatCompactJobs ($FlatCompactJobs), partitioned compact " +
+        s"$partCompactJobs ($PartitionedCompactJobs)")
   }
+  private val FlatUpsertJobs = 3
+  private val PartitionedUpsertJobs = 5
+  private val FlatCompactJobs = 3
+  private val PartitionedCompactJobs = 12
 
   test("compactSnapshot sortCols keeps per-file key ranges DISJOINT (footer pruning preserved)") {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -527,150 +461,65 @@ class SinksSpec extends SparkSuite {
     assert(bucket1 == Map(1L -> "a2", 3L -> "c1"), s"$bucket1")
   }
 
-  test("touched-partition predicate at the default cap plans in bounded time") {
-    // DefaultMaxTouchedPartitions bounds driver-side work: the pruning
-    // disjunction at the cap (~4 Catalyst nodes per tuple) must stay cheap
-    // to analyze + optimize — this measures exactly the predicate shape the
-    // merge builds, at the full cap, and bounds it. (Measured ~2 s at
-    // 4096 tuples on local[4] cold; the 30 s assert absorbs CI noise while
-    // still failing on the quadratic blowup this guards against.)
-    import org.apache.spark.sql.functions.col
-    val n = graft.sinks.BatchSink.DefaultMaxTouchedPartitions
-    val touched = (0 until n).map(i => org.apache.spark.sql.Row(i.toLong))
-    val pred = graft.sinks.BatchSink.touchedPartitionPredicate(touched, Seq("bucket"))
-    val df = spark.range(16).withColumn("bucket", col("id") % 8)
-    val t0 = System.nanoTime()
-    val optimized = df.filter(pred).queryExecution.optimizedPlan
-    val secs = (System.nanoTime() - t0) / 1e9
-    info(f"predicate over $n touched partitions planned in $secs%.2f s")
-    assert(optimized != null)
-    assert(secs < 30.0,
-      f"predicate over $n touched partitions took $secs%.1f s to plan — " +
-        "lower the cap or chunk the merge into waves")
-  }
-
-  test("wave merge: over-cap backfill proceeds in bounded waves when opted in, fails fast otherwise") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = tempDir("graft_upsert_wave") + "/snap"
-    val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    def batch(rows: Seq[(Long, Long, String)]) =
-      spark.createDataFrame(rows.map { case (k, ver, v) => (k, k % 4, ver, v) })
-        .toDF("k", "bucket", "ver", "v")
-    // seed all four buckets under the default cap
-    graft.sinks.BatchSink.upsertSnapshot(spark, dir,
-      batch(Seq((0L, 1L, "a1"), (1L, 1L, "b1"), (2L, 1L, "c1"), (3L, 1L, "d1"))),
-      Seq("k"), Seq("ver"), Seq("bucket"))
-    def files(p: String) = fs.listStatus(new HPath(p)).toSeq
-      .filter(_.isFile).map(s => (s.getPath.getName, s.getModificationTime)).sorted
-    val untouched = files(dir + "/bucket=0")
-    // a "backfill" touching 3 buckets under a cap of 2: without the opt-in
-    // it must fail fast with instructions, leaving the snapshot unchanged
-    spark.conf.set("graft.sink.maxTouchedPartitions", "2")
-    try {
-      val backfill = batch(Seq((1L, 2L, "b2"), (2L, 0L, "stale"), (3L, 2L, "d2"),
-        (5L, 1L, "f1"), (7L, 1L, "h1")))
-      val e = intercept[IllegalArgumentException] {
-        graft.sinks.BatchSink.upsertSnapshot(spark, dir, backfill,
-          Seq("k"), Seq("ver"), Seq("bucket"))
-      }
-      assert(e.getMessage.contains("mergeWaves"))
-      // opted in: two sequential waves, same converged result as one merge
-      spark.conf.set("graft.sink.mergeWaves", "true")
-      val n = graft.sinks.BatchSink.upsertSnapshot(spark, dir, backfill,
-        Seq("k"), Seq("ver"), Seq("bucket"))
-      assert(n == 5, s"waved merge row count over touched partitions: $n")
-      val got = spark.read.parquet(dir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
-      assert(got == Map(0L -> "a1", 1L -> "b2", 2L -> "c1", 3L -> "d2",
-        5L -> "f1", 7L -> "h1"), s"$got")
-      // bucket=0 was in no wave — its files must carry over unrewritten
-      assert(files(dir + "/bucket=0") == untouched,
-        "wave merge rewrote a partition no wave touched")
-      assert(!fs.exists(new HPath(dir + ".old")) && !fs.exists(new HPath(dir + ".staging")))
-      // replaying the whole backfill is a no-op (idempotence across waves)
-      val n2 = graft.sinks.BatchSink.upsertSnapshot(spark, dir, backfill,
-        Seq("k"), Seq("ver"), Seq("bucket"))
-      assert(n2 == 5)
-      assert(spark.read.parquet(dir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap == got)
-    } finally {
-      spark.conf.unset("graft.sink.maxTouchedPartitions")
-      spark.conf.unset("graft.sink.mergeWaves")
-    }
-  }
-
   test("partitioned upsert over random batches equals one-shot latestPerKey; replay idempotent") {
-    // the KTable-sink equivalence law: any sequence of changelog batches
-    // (with stale versions and immediate replays mixed in) must converge to
-    // latestPerKey over the concatenation of everything ingested — the
-    // same law the reference's RocksDB-backed KTable provides
-    val rng = new scala.util.Random(7)
-    val dir = tempDir("graft_upsert_prop") + "/snap"
-    val ingested = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
-    var version = 0L
-    for (b <- 1 to 6) {
-      val rows = Seq.fill(1 + rng.nextInt(20)) {
-        val k = rng.nextInt(12).toLong
-        version += 1
-        // ~20% stale versions; the value is a pure function of (k, ver) so
-        // an accidental (k, ver) tie cannot make "latest" ambiguous
-        val v = if (rng.nextInt(5) == 0) math.max(1, version - 10) else version
-        (k, k % 3, v, s"$k-$v")
-      }
-      ingested ++= rows
-      val df = spark.createDataFrame(rows).toDF("k", "bucket", "ver", "v")
-      graft.sinks.BatchSink.upsertSnapshot(spark, dir, df,
-        Seq("k"), Seq("ver"), Seq("bucket"))
-      if (b % 2 == 0) // redelivery: replaying the same batch must be a no-op
-        graft.sinks.BatchSink.upsertSnapshot(spark, dir, df,
-          Seq("k"), Seq("ver"), Seq("bucket"))
-      val got = spark.read.parquet(dir).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
-      val want = graft.sources.Tables.latestPerKey(
-        spark.createDataFrame(ingested.toSeq).toDF("k", "bucket", "ver", "v"),
-        Seq("k"), Seq("ver")).collect()
-        .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
-      assert(got == want, s"batch $b diverged: got $got want $want")
-    }
-  }
-
-  test("wave merge preserves the equivalence law under randomized batches (cap=1: every merge waved)") {
-    // the strongest wave pin: with the cap forced to 1, EVERY multi-bucket
-    // batch splits into one wave per partition — the snapshot must still
-    // converge to one-shot latestPerKey over everything ingested, with
-    // stale versions and replays mixed in, exactly like the unwaved law
-    val rng = new scala.util.Random(13)
-    val dir = tempDir("graft_upsert_wave_prop") + "/snap"
-    spark.conf.set("graft.sink.maxTouchedPartitions", "1")
-    spark.conf.set("graft.sink.mergeWaves", "true")
-    try {
+    // the KTable-sink equivalence law, over both layouts: any sequence of
+    // changelog batches (with stale versions and immediate replays mixed
+    // in) must converge to latestPerKey over the concatenation of
+    // everything ingested — the same law the reference's RocksDB-backed
+    // KTable provides. One batch is a backfill that touches every bucket;
+    // in the partitioned layout, every partition a batch does not touch
+    // keeps its files unrewritten
+    import org.apache.hadoop.fs.{Path => HPath}
+    for (partitionCols <- Seq(Seq("bucket"), Nil)) {
+      val rng = new scala.util.Random(7)
+      val dir = tempDir("graft_upsert_prop") + "/snap"
+      val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      def files(): Map[String, Seq[(String, Long)]] =
+        if (partitionCols.isEmpty || !fs.exists(new HPath(dir))) Map.empty
+        else fs.listStatus(new HPath(dir)).toSeq.filter(_.isDirectory).map { d =>
+          d.getPath.getName -> fs.listStatus(d.getPath).toSeq
+            .map(s => (s.getPath.getName, s.getModificationTime)).sorted
+        }.toMap
       val ingested = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
       var version = 0L
-      for (b <- 1 to 4) {
-        val rows = Seq.fill(1 + rng.nextInt(16)) {
-          val k = rng.nextInt(10).toLong
+      var untouchedChecked = 0
+      for (b <- 1 to 7) {
+        val backfill = b == 4
+        val rows = Seq.fill(if (backfill) 40 else 1 + rng.nextInt(8)) {
+          val k = rng.nextInt(12).toLong
           version += 1
-          val v = if (rng.nextInt(5) == 0) math.max(1, version - 8) else version
-          (k, k % 3, v, s"$k-$v")
-        }
+          // ~20% stale versions; the value is a pure function of (k, ver) so
+          // an accidental (k, ver) tie cannot make "latest" ambiguous
+          val v = if (rng.nextInt(5) == 0) math.max(1, version - 10) else version
+          (k, k % 4, v, s"$k-$v")
+        } ++ (if (backfill) (0L until 4L).map { k => version += 1; (k, k, version, s"$k-$version") }
+              else Nil)
         ingested ++= rows
         val df = spark.createDataFrame(rows).toDF("k", "bucket", "ver", "v")
+        val before = files()
         graft.sinks.BatchSink.upsertSnapshot(spark, dir, df,
-          Seq("k"), Seq("ver"), Seq("bucket"))
-        if (b % 2 == 0)
+          Seq("k"), Seq("ver"), partitionCols)
+        if (b % 2 == 0) // redelivery: replaying the same batch must be a no-op
           graft.sinks.BatchSink.upsertSnapshot(spark, dir, df,
-            Seq("k"), Seq("ver"), Seq("bucket"))
+            Seq("k"), Seq("ver"), partitionCols)
+        val touched = rows.map(r => s"bucket=${r._2}").toSet
+        if (backfill && partitionCols.nonEmpty)
+          assert(touched.size == 4, "fixture: the backfill must touch every bucket")
+        val untouched = before -- touched
+        untouchedChecked += untouched.size
+        assert(untouched.forall { case (p, fp) => files().get(p).contains(fp) },
+          s"${partitionCols.mkString} batch $b rewrote a partition it does not touch")
         val got = spark.read.parquet(dir).collect()
           .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
         val want = graft.sources.Tables.latestPerKey(
           spark.createDataFrame(ingested.toSeq).toDF("k", "bucket", "ver", "v"),
           Seq("k"), Seq("ver")).collect()
           .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
-        assert(got == want, s"waved batch $b diverged: got $got want $want")
+        assert(got == want,
+          s"${partitionCols.mkString} batch $b diverged: got $got want $want")
       }
-    } finally {
-      spark.conf.unset("graft.sink.maxTouchedPartitions")
-      spark.conf.unset("graft.sink.mergeWaves")
+      if (partitionCols.nonEmpty)
+        assert(untouchedChecked > 0, "fixture: no batch left a stored partition untouched")
     }
   }
 
@@ -698,9 +547,9 @@ class SinksSpec extends SparkSuite {
     assert(w(3L).contains("wide"),
       s"evolved column lost when its partition was re-touched: $w")
     assert(w(5L).isEmpty && w(1L).isEmpty)
-    // cross-overload crash: a FLAT aside (the unpartitioned overload's crash
-    // window) with cur absent must be restored, never deleted — then the
-    // layout guard rejects the flat snapshot with instructions
+    // cross-layout crash: a FLAT aside (a flat upsert's crash window) with
+    // cur absent must be restored, never deleted — then the layout guard
+    // rejects the flat snapshot with instructions
     val flat2 = tempDir("graft_upsert_x") + "/snap"
     graft.sinks.BatchSink.upsertSnapshot(spark, flat2,
       spark.createDataFrame(Seq((1L, 1L, "a1"))).toDF("k", "ver", "v"), Seq("k"), Seq("ver"))
@@ -715,7 +564,7 @@ class SinksSpec extends SparkSuite {
     val restored = spark.read.parquet(flat2).collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"))).toMap
     assert(restored == Map(1L -> "a1"), s"flat aside was not restored: $restored")
-    // reverse layout guard: the flat overload must refuse a partitioned
+    // reverse layout guard: a flat upsert must refuse a partitioned
     // snapshot (a restart that lost the partitionCols argument) rather than
     // silently rewrite and de-partition it
     val e3 = intercept[IllegalArgumentException] {

@@ -27,6 +27,26 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   def tempDir(prefix: String): String = tempDirPath(prefix).toString
 
+  /** The number of Spark jobs started while `body` runs — the unit the
+    * job-count pins are written in. Queued listener events are drained on
+    * both sides, so jobs of earlier work are not counted and jobs of
+    * `body` are not missed.
+    */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graftbridge.ListenerBridge.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get()
+  }
+
   override protected def afterAll(): Unit = {
     try {
       val dirs = synchronized(tempDirs.toSeq)

@@ -123,8 +123,8 @@ class SpecSurfaceSpec extends AnyFunSuite {
   test("every graft config key read in src/main is documented in DEPLOY.md or SPEC_REFERENCE.md, and every documented key is read") {
     import scala.jdk.CollectionConverters._
     // a key is spark.graft.<name> or graft.<section>.<name> whose section is
-    // not one of the engine's packages (graft.sink.mergeWaves is a key,
-    // graft.sinks.Commit is code)
+    // not one of the engine's packages (spark.graft.preflightProbe is a
+    // key, graft.sinks.Commit is code)
     val packages = Files.list(Paths.get("src/main/scala/graft")).iterator().asScala
       .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
     val key = "spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9]|graft\\.[a-z][A-Za-z0-9]*\\.[A-Za-z0-9_.]*[A-Za-z0-9]"

@@ -284,6 +284,39 @@ class StreamRunnerSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("startSnapshotSink refuses at start what a spec's snapshot block refuses") {
+    val ss = spark
+    import ss.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val input = MemoryStream[(Long, Long, Long, String)](ss, 2) // (k, bucket, ver, v)
+    val mem = new graft.sources.SourceResolver {
+      override def stream(s: org.apache.spark.sql.SparkSession, topic: graft.config.TopicConfig) =
+        input.toDF().toDF("event_id", "bucket", "ver", "v")
+      override def table(s: org.apache.spark.sql.SparkSession, topic: graft.config.TopicConfig) =
+        throw new IllegalArgumentException("no table side")
+      override def catalog = TestdataCatalog
+    }
+    val spec = graft.config.PipelineSpec.fromJson(
+      """{"id":"snap-refused","processingMode":"SIMPLE_STREAM",
+        |"sourceTopic":{"name":"events","keyClass":"java.lang.Long"},
+        |"outputTopic":{"enabled":true,"name":"snap-out"}}""".stripMargin)
+    val base = tempDir("graft_snap_refused")
+    val active = spark.streams.active.length
+    def refused(keys: Seq[String] = Seq("event_id"), order: Seq[String] = Seq("ver"),
+        partitionCols: Seq[String] = Nil, compactEvery: Int = 0,
+        zOrder: Seq[String] = Nil): String =
+      intercept[IllegalArgumentException](StreamRunner.startSnapshotSink(spark, spec, mem,
+        s"$base/table", keys, order, s"$base/ckpt", partitionCols, compactEvery, zOrder))
+        .getMessage
+    assert(refused(keys = Nil).contains("requires keyColumns"))
+    assert(refused(order = Nil).contains("requires orderColumns"))
+    assert(refused(zOrder = Seq("ver")).contains("at least two columns"))
+    assert(refused(compactEvery = -1).contains("compactEvery must be >= 1"))
+    assert(refused(partitionCols = Seq("bucket"), compactEvery = 2,
+      zOrder = Seq("bucket", "ver")).contains("cannot include partitionBy"))
+    assert(spark.streams.active.length == active, "a refused sink started a query")
+  }
+
   test("snapshot sink streams an AGGREGATION spec: counts upsert continuously (update mode)") {
     val ss = spark
     import ss.implicits._
