@@ -11,9 +11,12 @@ import java.util.concurrent.atomic.LongAdder
 object Fallbacks extends org.apache.spark.internal.Logging {
   private val counts = new ConcurrentHashMap[String, LongAdder]()
 
-  def record(site: String, message: String): Unit = {
+  /** Count one default taken at `site`; `warn = false` counts a repeat the
+    * caller has already reported.
+    */
+  def record(site: String, message: String, warn: Boolean = true): Unit = {
     counts.computeIfAbsent(site, _ => new LongAdder).increment()
-    logWarning(s"[$site] $message")
+    if (warn) logWarning(s"[$site] $message")
   }
 
   def count(site: String): Long = Option(counts.get(site)).fold(0L)(_.sum)

@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.sinks.{Commit, Generations}
+import graft.sinks.{Commit, Generations, Reads}
 
 /** The stored shingle history ([[Dedup.shingleIndex]] rows: id, sh, n,
   * shingle_size) that `dedup_near historyPath` screens against, and its
@@ -130,7 +131,7 @@ object ShingleHistory extends Logging {
         Generations.live(spark, layout(p), m.fence)
       case None =>
         // (`gen` only appears inside a killed adoption's window)
-        val df = spark.read.parquet(p).drop("gen")
+        val df = Reads.parquet(spark, p).drop("gen")
         requireWidth(plainWidth(df, p, where), declared, p, where)
         require(Seq(LegacyTombs, s"gen=0/$LegacyTombs")
             .forall(t => !fs.exists(new Path(p, t))),
@@ -168,37 +169,42 @@ object ShingleHistory extends Logging {
     val root = new Path(p)
     val gen0 = new Path(root, "gen=0")
     recover(fs, p)
-    val m = manifest(fs, p).getOrElse {
-      val moved = fs.exists(gen0)
-      val width = plainWidth(spark.read.parquet(if (moved) gen0.toString else p),
-        p, where)
-      if (!moved) {
-        require(fs.rename(root, aside(p)), s"cannot move $root aside")
-        recover(fs, p)
-      }
-      val l = layout(p)
-      val base = Generations.Fence()
-      Generations.sweep(fs, l, base)
-      val legacy = new Path(gen0, LegacyTombs)
-      val legacyParts =
-        if (!fs.exists(legacy)) Nil
-        else fs.listStatus(legacy).toSeq.map(_.getPath)
-          .filter(f => !hidden(f.getName) && f.getName.endsWith(".parquet"))
-      val fence =
-        if (legacyParts.isEmpty) base
-        else Generations.tombstone(fs, l, base,
-          Generations.live(spark, l, base).select("id").join(
-            spark.read.parquet(legacyParts.map(_.toString): _*).select("id"),
-            Seq("id"), "left_semi"))._3
-      val adopted = Manifest(width,
-        Commit.footerRowCount(spark.sessionState.newHadoopConf(), gen0), fence)
-      Commit.writeManifest(fs, root, adopted)
-      // the older format's side files are committed state now, or stale
-      Seq(legacy, Commit.manifestDir(gen0)).foreach(fs.delete(_, true))
-      logInfo(s"[$where] adopted the plain shingle history at $p as " +
-        s"generation 0 (${adopted.history_rows} rows, width $width, " +
-        s"${fence.tomb_rows} carried-over retractions)")
-      adopted
+    val l = layout(p)
+    val m = manifest(fs, p) match {
+      case Some(m) => m.copy(fence = Generations.schemed(spark, l, m.fence))
+      case None =>
+        val moved = fs.exists(gen0)
+        val plain = Reads.parquet(spark, if (moved) gen0.toString else p)
+        val width = plainWidth(plain, p, where)
+        if (!moved) {
+          require(fs.rename(root, aside(p)), s"cannot move $root aside")
+          recover(fs, p)
+        }
+        // the adopted rows read back as they were, plus the int `gen`
+        val base = Generations.Fence(schema = Some(Reads.readBack(
+          StructType(plain.schema.filterNot(_.name == "gen") :+
+            StructField("gen", IntegerType)), Seq("gen")).json))
+        Generations.sweep(fs, l, base)
+        val legacy = new Path(gen0, LegacyTombs)
+        val legacyParts =
+          if (!fs.exists(legacy)) Nil
+          else fs.listStatus(legacy).toSeq.map(_.getPath)
+            .filter(f => !hidden(f.getName) && f.getName.endsWith(".parquet"))
+        val fence =
+          if (legacyParts.isEmpty) base
+          else Generations.tombstone(fs, l, base,
+            Generations.live(spark, l, base).select("id").join(
+              Reads.parquet(spark, legacyParts.map(_.toString)).select("id"),
+              Seq("id"), "left_semi"))._3
+        val adopted = Manifest(width,
+          Commit.footerRowCount(spark.sessionState.newHadoopConf(), gen0), fence)
+        Commit.writeManifest(fs, root, adopted)
+        // the older format's side files are committed state now, or stale
+        Seq(legacy, Commit.manifestDir(gen0)).foreach(fs.delete(_, true))
+        logInfo(s"[$where] adopted the plain shingle history at $p as " +
+          s"generation 0 (${adopted.history_rows} rows, width $width, " +
+          s"${fence.tomb_rows} carried-over retractions)")
+        adopted
     }
     requireAccounted(fs, p, where)
     (fs, m)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 
 import graft.functions.VectorFunctions
-import graft.sinks.{Commit, Generations}
+import graft.sinks.{Commit, Generations, Reads}
 import graft.sinks.Generations.observedOr
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -505,7 +505,7 @@ object Similarity extends Logging {
     val corpusObs =
       if (meta.n_rows < 0) Some(org.apache.spark.sql.Observation()) else None
     val cWrite = corpusObs.fold(c)(o => c.observe(o, count(lit(1)).as("n")))
-    val idxRows = writePostings(cWrite, meta, gen = 0, idxDir,
+    val (idxRows, schema) = writePostings(cWrite, meta, gen = 0, idxDir,
       overwrite = true,
       partitionLeaves = shouldPartitionLeaves(spark, meta, meta.n_rows))
     val n = corpusObs.fold(meta.n_rows)(observedOr(_, "n", 0L))
@@ -564,13 +564,11 @@ object Similarity extends Logging {
           .withColumn("__ap", hex(xxhash64(col(a).cast("string"))))
         val g = lit(0).as("gen")
         val attrCols2 = attributeColumns.map(col)
-        method match {
+        val staged = method match {
           case "quantized" =>
             fc.select(col("__ap") +: g +: col("id") +:
                 VectorFunctions.quantize_vec(col("vec")).as("q") +:
                 col("vec") +: attrCols2: _*)
-              .write.mode("overwrite").partitionBy("__ap", "gen")
-              .parquet(stageP)
           case "lsh" =>
             val ppt = meta.planes_per_table.get
             fc.select(col("__ap") +: col("id") +: col("vec") +:
@@ -579,9 +577,13 @@ object Similarity extends Logging {
                 attrCols2: _*)
               .select(col("__ap") +: g +: col("tbl") +: col("bucket") +:
                 col("id") +: col("vec") +: attrCols2: _*)
-              .write.mode("overwrite").partitionBy("__ap", "gen")
-              .parquet(stageP)
         }
+        staged.write.mode("overwrite").partitionBy("__ap", "gen").parquet(stageP)
+        // each renamed category directory reads as a flat gen-partitioned
+        // index
+        val subSchema = Reads.readBack(
+          org.apache.spark.sql.types.StructType(
+            staged.schema.filterNot(_.name == "__ap")), Seq("gen")).json
         vals.foreach { v =>
           val sub = subIndexPath(indexPath, v)
           fs0.delete(hpath(sub), true)
@@ -590,7 +592,8 @@ object Similarity extends Logging {
               hpath(s"$sub/index.parquet")),
             s"buildIndex: cannot install staged postings for category '$v'" +
               s" at $sub")
-          commitBuild(spark, sub, meta.copy(n_rows = counts(v)))
+          commitBuild(spark, sub, meta.copy(n_rows = counts(v),
+            schema = Some(subSchema)))
         }
         fs0.delete(hpath(stageP), true)
       } else vals.foreach { v =>
@@ -603,7 +606,7 @@ object Similarity extends Logging {
       vals
     }
     val metaFinal = meta.copy(n_rows = n, part_attr = partitionByAttribute,
-      part_values = partVals)
+      part_values = partVals, schema = Some(schema))
     // manifest LAST: a killed build leaves postings without a manifest,
     // which reads as "no index here" (readIndexMeta fails loudly) instead
     // of a silent half-index
@@ -714,32 +717,24 @@ object Similarity extends Logging {
     * audit preflight share: `predicate` routes to the per-category
     * sub-index for value `v` with an optional residual filter, under the
     * coercion guard evaluated against the index's STORED attribute type
-    * (one driver-side schema read, memoized on the meta listing
-    * signature). Keeping preflight and search on one code path means the
-    * audit always prices the route the search actually takes.
+    * (the manifest's postings schema). Keeping preflight and search on one
+    * code path means the audit always prices the route the search
+    * actually takes.
     */
   private[graft] def routedConjunct(spark: SparkSession, indexPath: String,
       meta: AnnIndexMeta, predicate: String): Option[(String, Option[String])] =
     meta.part_attr.flatMap { a =>
       equalityConjunct(predicate, a,
-        attrIsString = storedAttrTypeIsString(spark, indexPath, a))
+        attrIsString = storedAttrTypeIsString(spark, indexPath, meta, a))
         .filter { case (v, _) => meta.part_values.exists(_.contains(v)) }
     }
 
-  /** Whether attribute column `attr` is stored as a STRING in the index
-    * postings — one driver-side schema read (file listing + a footer, no
-    * Spark job), memoized per (indexPath, attr) on the meta listing
-    * signature so maintenance commits invalidate naturally. Unreadable
-    * schema reads as "string": the conservative direction (the guard then
-    * refuses to route non-string literals, falling back to the generic
-    * path, which is always correct).
-    */
   /** Size bound for the driver-side one-row memo maps (metaCache,
-    * attrTypeCache, selCache): a long-lived driver serving many index
-    * paths must not grow them forever (round-21 VERDICT). The bound is a
-    * crude clear-on-full rather than an LRU — each entry is a one-row
-    * memo whose miss costs one small job/listing, so a rare full flush is
-    * cheaper than per-hit bookkeeping.
+    * selCache): a long-lived driver serving many index paths must not grow
+    * them forever (round-21 VERDICT). The bound is a crude clear-on-full
+    * rather than an LRU — each entry is a one-row memo whose miss costs one
+    * small job/listing, so a rare full flush is cheaper than per-hit
+    * bookkeeping.
     */
   private val MemoMaxEntries = 1024
   private[graft] def cappedPut[K, V](
@@ -749,23 +744,17 @@ object Similarity extends Logging {
     ()
   }
 
-  private val attrTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, Boolean)]
+  /** Whether attribute column `attr` is stored as a STRING in the index
+    * postings, from the committed manifest's postings schema. An
+    * unreadable type reads as "string": the conservative direction (the
+    * guard then refuses to route non-string literals, falling back to the
+    * generic path, which is always correct).
+    */
   private def storedAttrTypeIsString(spark: SparkSession, indexPath: String,
-      attr: String): Boolean = {
-    val sig = metaSig(spark, indexPath)
-    val key = (indexPath, attr)
-    val hit = attrTypeCache.get(key)
-    if (hit != null && hit._1 == sig) hit._2
-    else {
-      val isString = scala.util.Try(
-        spark.read.parquet(s"$indexPath/index.parquet").schema(attr)
-          .dataType == org.apache.spark.sql.types.StringType).getOrElse(true)
-      cappedPut(attrTypeCache, key, (sig, isString))
-      isString
-    }
-  }
+      meta: AnnIndexMeta, attr: String): Boolean =
+    scala.util.Try(Generations.dataSchema(spark, layoutOf(indexPath),
+      meta.fence)(attr).dataType == org.apache.spark.sql.types.StringType)
+      .getOrElse(true)
 
   /** Memoized distinct-id count of the LIVE postings matching `filter` —
     * the filtered-search selectivity used for routing (exact fallback vs
@@ -896,54 +885,44 @@ object Similarity extends Logging {
     * Returns the posting row count, observed DURING the write pass
     * (org.apache.spark.sql.Observation) — the callers' report/bookkeeping
     * number, previously recomputed by a full read-back of the written
-    * directory (a second pass over the index at any scale).
+    * directory (a second pass over the index at any scale) — and the
+    * postings' read schema, which the manifest records.
     */
 
   private def writePostings(c: DataFrame, meta: AnnIndexMeta, gen: Int,
-      idxDir: String, overwrite: Boolean, partitionLeaves: Boolean): Long = {
-    val mode = if (overwrite) "overwrite" else "append"
+      idxDir: String, overwrite: Boolean, partitionLeaves: Boolean): (Long, String) = {
     val g = lit(gen).as("gen")
-    val obs = org.apache.spark.sql.Observation()
-    def counted(df: DataFrame): DataFrame =
-      df.observe(obs, count(lit(1)).as("rows"))
     // declared attribute columns ride every posting as plain data columns
     // (the candidateFilter predicate surface — parquet-pushdown-able)
     val attrs = meta.attr_cols.getOrElse(Nil).map(col)
-    meta.method match {
+    val (postings, leafCols) = meta.method match {
       case "quantized" =>
-        counted(c.select(g +: col("id") +:
+        (c.select(g +: col("id") +:
             VectorFunctions.quantize_vec(col("vec")).as("q") +:
-            col("vec") +: attrs: _*))
-          .write.mode(mode).partitionBy("gen").parquet(idxDir)
+            col("vec") +: attrs: _*), Nil)
       case "ivf" =>
         // assignment clamps to the trained centroid count exactly like
         // ivfTopK (fewer cells than declared just means probing all of them)
         val assignN = math.min(meta.n_assign.get, meta.vectors.get.length)
-        val assigned = c.withColumn("cell", explode(VectorFunctions.nearest_cells(
+        (c.withColumn("cell", explode(VectorFunctions.nearest_cells(
             col("vec"), meta.vectors.get, assignN)))
-          .select(g +: col("cell") +: col("id") +: col("vec") +: attrs: _*)
-        val w = counted(
-          if (partitionLeaves) assigned.repartition(col("cell")) else assigned)
-          .write.mode(mode)
-        (if (partitionLeaves) w.partitionBy("gen", "cell")
-         else w.partitionBy("gen"))
-          .parquet(idxDir)
+          .select(g +: col("cell") +: col("id") +: col("vec") +: attrs: _*),
+          Seq("cell"))
       case "lsh" =>
         val ppt = meta.planes_per_table.get
-        val posted = c.select(col("id") +: col("vec") +:
+        (c.select(col("id") +: col("vec") +:
             posexplode(VectorFunctions.sign_buckets(col("vec"),
               meta.vectors.get, ppt)).as(Seq("tbl", "bucket")) +: attrs: _*)
           .select(g +: col("tbl") +: col("bucket") +: col("id") +:
-            col("vec") +: attrs: _*)
-        val w = counted(
-          if (partitionLeaves) posted.repartition(col("tbl"), col("bucket"))
-          else posted)
-          .write.mode(mode)
-        (if (partitionLeaves) w.partitionBy("gen", "tbl", "bucket")
-         else w.partitionBy("gen"))
-          .parquet(idxDir)
+            col("vec") +: attrs: _*), Seq("tbl", "bucket"))
     }
-    observedOr(obs, "rows", 0L)
+    val parts = "gen" +: (if (partitionLeaves) leafCols else Nil)
+    val obs = org.apache.spark.sql.Observation()
+    (if (partitionLeaves) postings.repartition(leafCols.map(col): _*) else postings)
+      .observe(obs, count(lit(1)).as("rows"))
+      .write.mode(if (overwrite) "overwrite" else "append")
+      .partitionBy(parts: _*).parquet(idxDir)
+    (observedOr(obs, "rows", 0L), Reads.readBack(postings.schema, parts).json)
   }
 
   /** INCREMENTAL index maintenance — append a batch of NEW vectors to a
@@ -981,7 +960,7 @@ object Similarity extends Logging {
       indexPath: String): DataFrame = {
     val spark = newRows.sparkSession
     import spark.implicits._
-    val meta = readIndexMeta(spark, indexPath)
+    val meta = schemedMeta(spark, indexPath)
     // a per-category family's top and sub indexes must stay the SAME
     // corpus: appending to the top alone would leave every routed
     // (equality-filtered) search blind to the new rows. Until the family
@@ -994,7 +973,8 @@ object Similarity extends Logging {
         "would desynchronize the routed sub-indexes from the top index; " +
         "rebuild the family with knn_index on the extended snapshot")
     val idxDir = s"$indexPath/index.parquet"
-    val postings = spark.read.parquet(idxDir)
+    val gl = layoutOf(indexPath)
+    val postings = Generations.dataSchema(spark, gl, meta.fence)
     // appended postings must match the stored column types exactly or the
     // parquet read would mix schemas (e.g. array<float> vs array<double>);
     // declared attribute columns must arrive with the batch — an appended
@@ -1008,11 +988,10 @@ object Similarity extends Logging {
         "under every candidateFilter; supply the columns or rebuild " +
         "without attributeColumns")
     val c = newRows.select(
-      col(idCol).cast(postings.schema("id").dataType).as("id") +:
-      col(vecCol).cast(postings.schema("vec").dataType).as("vec") +:
-      attrCols.map(a => col(a).cast(postings.schema(a).dataType).as(a)): _*)
+      col(idCol).cast(postings("id").dataType).as("id") +:
+      col(vecCol).cast(postings("vec").dataType).as("vec") +:
+      attrCols.map(a => col(a).cast(postings(a).dataType).as(a)): _*)
     val fs = indexFs(spark, indexPath)
-    val gl = layoutOf(indexPath)
     // retract a crashed predecessor's orphans and a completed compaction's
     // uncleaned folded generations (Generations.sweep)
     Generations.sweep(fs, gl, meta.fence)
@@ -1030,7 +1009,7 @@ object Similarity extends Logging {
     // follow the COMMITTED leaf layout (decided once at build time) —
     // mixed directory depths across generations would break partition
     // discovery
-    val idxRows = writePostings(cObserved, meta, meta.generation + 1, idxDir,
+    val (idxRows, _) = writePostings(cObserved, meta, meta.generation + 1, idxDir,
       overwrite = false,
       partitionLeaves = leafPartitionedOnDisk(spark, idxDir))
     val (n, sig) = Generations.signature(probeObs)
@@ -1112,7 +1091,7 @@ object Similarity extends Logging {
   def compactIndex(spark: SparkSession, indexPath: String,
       retainFolded: Boolean = false): DataFrame = {
     import spark.implicits._
-    val meta = readIndexMeta(spark, indexPath)
+    val meta = schemedMeta(spark, indexPath)
     // per-category family: fold every sub-index first (their report rows
     // are subsumed — the family compacts as one maintenance action)
     meta.part_values.getOrElse(Nil).foreach { v =>
@@ -1233,15 +1212,14 @@ object Similarity extends Logging {
   def deleteIndex(ids: DataFrame, idCol: String, indexPath: String): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val meta = readIndexMeta(spark, indexPath)
-    val postings = spark.read.parquet(s"$indexPath/index.parquet")
+    val meta = schemedMeta(spark, indexPath)
     // persist the distinct batch only when a per-category family will
     // cascade it into every sub-index (multiple consumers); the plain
     // single-index delete consumes it exactly once — inside the one
     // observed tombstone-write job below
     val isFamily = meta.part_values.exists(_.nonEmpty)
-    val d0 = ids.select(col(idCol)
-        .cast(postings.schema("id").dataType).as("id"))
+    val d0 = ids.select(col(idCol).cast(Generations.dataSchema(spark,
+        layoutOf(indexPath), meta.fence)("id").dataType).as("id"))
       .distinct()
     val d =
       if (isFamily)
@@ -1395,6 +1373,14 @@ object Similarity extends Logging {
       cappedPut(metaCache, indexPath, (manSig, m))
       m
     }
+  }
+
+  /** A maintenance verb's view of the committed meta: its postings schema
+    * filled in ([[Generations.schemed]]), so the verb's commit records it.
+    */
+  private def schemedMeta(spark: SparkSession, indexPath: String): AnnIndexMeta = {
+    val m = readIndexMeta(spark, indexPath)
+    m.withFence(Generations.schemed(spark, layoutOf(indexPath), m.fence))
   }
 
   /** Top-k search against a STORED index ([[buildIndex]]) — no training, no
@@ -1663,11 +1649,15 @@ case class AnnIndexMeta(method: String, dim: Int, n_rows: Long,
     // that sub-index: full recall at the sub-corpus's scan cost, no
     // probe widening. None = a plain single index
     part_attr: Option[String] = None,
-    part_values: Option[Seq[String]] = None) {
+    part_values: Option[Seq[String]] = None,
+    // the postings' read schema (Spark JSON, `gen` included) — readers
+    // pass it instead of inferring it with a Spark job. None on an index
+    // committed before the key existed; its next commit records it
+    schema: Option[String] = None) {
   /** The generation fence these flat fields carry ([[Generations]]). */
-  def fence: Generations.Fence =
-    Generations.Fence(generation, base_gen, tomb_gen, tomb_base, tomb_rows, batch_sig)
+  def fence: Generations.Fence = Generations.Fence(generation, base_gen,
+    tomb_gen, tomb_base, tomb_rows, batch_sig, schema)
   def withFence(f: Generations.Fence): AnnIndexMeta = copy(generation = f.generation,
     base_gen = f.base_gen, tomb_gen = f.tomb_gen, tomb_base = f.tomb_base,
-    tomb_rows = f.tomb_rows, batch_sig = f.batch_sig)
+    tomb_rows = f.tomb_rows, batch_sig = f.batch_sig, schema = f.schema)
 }

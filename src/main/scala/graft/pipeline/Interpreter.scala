@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
 
 import graft.config._
 import graft.config.TransformOp._
+import graft.sinks.Reads
 import graft.sources.SourceResolver
 
 /** PipelineSpec → DataFrame interpreter — the Spark-native equivalent of
@@ -602,7 +603,7 @@ object Interpreter extends Logging {
             "operator's runtime cost is the backstop")
           None
         } else try {
-          val old0 = df.sparkSession.read.parquet(
+          val old0 = Reads.parquet(df.sparkSession,
             resolvePath(t.comparePath.get, dataDir, specId))
           Some(t.compareFilter.fold(old0)(f => old0.filter(expr(f))))
         } catch {
@@ -820,7 +821,7 @@ object Interpreter extends Logging {
 
   private def readSummaryArtifact(spark: SparkSession, path: String,
       grouped: Boolean, specId: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Reads.parquet(spark, path)
     requireSummarySchema(df, s"summaryPath '$path'", grouped, specId)
     df
   }
@@ -831,7 +832,7 @@ object Interpreter extends Logging {
     */
   private def readSketchArtifact(spark: SparkSession, path: String,
       dims: Seq[String], specId: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Reads.parquet(spark, path)
     val missing = (dims ++ Seq("sketch", "n_rows")).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"[$specId] sketchPath '$path' is not a distinct-sketch table for " +
@@ -876,7 +877,7 @@ object Interpreter extends Logging {
     */
   private def readQuantileArtifact(spark: SparkSession, path: String,
       dims: Seq[String], specId: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Reads.parquet(spark, path)
     val missing = (dims ++ Seq("qsketch", "n_rows")).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"[$specId] quantilePath '$path' is not a quantile-sketch table for " +
@@ -898,7 +899,7 @@ object Interpreter extends Logging {
     */
   private def readStatsArtifact(spark: SparkSession, path: String,
       dims: Seq[String], specId: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Reads.parquet(spark, path)
     // a WINDOWED scalar_summary artifact holds one row set per window
     // cell — joined as a snapshot baseline it would duplicate every
     // (dims, column) row; fold the windows out first (the embedding
@@ -1434,7 +1435,7 @@ object Interpreter extends Logging {
       // sketchPath legs only) has no comparePath to read — old raw data is
       // never touched, which is the artifact discipline's whole point
       lazy val old = {
-        val old0 = df.sparkSession.read.parquet(
+        val old0 = Reads.parquet(df.sparkSession,
           resolvePath(t.comparePath.get, dataDir, specId))
         t.compareFilter.fold(old0)(f => old0.filter(expr(f)))
       }
@@ -1840,7 +1841,7 @@ object Interpreter extends Logging {
       val idC = t.idColumn; val vecC = t.column; val kk = t.k
       val p = resolvePath(t.indexPath.get, dataDir, specId)
       val meta = requireIndexMeta(df.sparkSession, p, t, specId)
-      val q0 = df.sparkSession.read.parquet(
+      val q0 = Reads.parquet(df.sparkSession,
         resolvePath(t.queryPath.get, dataDir, specId))
       val queries = t.queryFilter.fold(q0)(f => q0.filter(expr(f)))
       val raw = graft.operators.Similarity.indexedTopK(queries, idC, vecC,
@@ -1871,7 +1872,7 @@ object Interpreter extends Logging {
       // (same recall contract, smaller cells), lsh buckets it
       val corpus0 = df.withColumn(vecC, col(vecC).cast("array<double>"))
       val corpus = t.candidateFilter.fold(corpus0)(f => corpus0.filter(expr(f)))
-      val q0 = df.sparkSession.read.parquet(resolvePath(t.queryPath.get, dataDir, specId))
+      val q0 = Reads.parquet(df.sparkSession, resolvePath(t.queryPath.get, dataDir, specId))
       val queries = t.queryFilter.fold(q0)(f => q0.filter(expr(f)))
         .withColumn(vecC, col(vecC).cast("array<double>"))
       val result = t.method.getOrElse("exact") match {
@@ -1968,7 +1969,7 @@ object Interpreter extends Logging {
       // construction (eval sets are small; the corpus side never collects).
       // The projection form keeps the op stateless → streaming-legal in
       // any output mode, and shuffle-free in batch.
-      val bench0 = df.sparkSession.read.parquet(resolvePath(t.benchPath, dataDir, specId))
+      val bench0 = Reads.parquet(df.sparkSession, resolvePath(t.benchPath, dataDir, specId))
       val bench = t.benchFilter.fold(bench0)(f => bench0.filter(expr(f)))
       val hashes = graft.operators.TextAnalysis.benchShingleHashes(
         bench, t.column, t.shingleSize)
@@ -2195,7 +2196,7 @@ object Interpreter extends Logging {
     // changelog to a static parquet snapshot (the startSnapshotSink store
     // keyed by (key, versionTs)) — the streaming-legal shape
     val changelog0 = a.snapshotPath match {
-      case Some(p) => spark.read.parquet(resolvePath(p, sources.dataDir, spec.id))
+      case Some(p) => Reads.parquet(spark, resolvePath(p, sources.dataDir, spec.id))
       case None    => sources.stream(spark, op.enrichmentTopic)
     }
     // fail with intent, not Spark's unsupported-window chain: the temporal

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The generation protocol of every APPENDABLE stored artifact (the knn
   * index's postings, the shingle history) — the reference's compacted-topic
@@ -39,7 +40,11 @@ object Generations extends Logging {
   case class Fence(generation: Int = 0, base_gen: Int = 0,
       tomb_gen: Int = -1, tomb_base: Int = 0, tomb_rows: Long = 0L,
       @JsonDeserialize(contentAs = classOf[java.lang.Long])
-      batch_sig: Option[Long] = None) {
+      batch_sig: Option[Long] = None,
+      // the data generations' read schema (Spark JSON, `gen` included) —
+      // what lets [[live]] read without an inference job. None on a
+      // manifest written before the key existed: [[schemed]] infers it
+      schema: Option[String] = None) {
     def tombsActive: Boolean = tomb_gen >= tomb_base
 
     /** The fence after appending a batch of `n` rows with signature `sig`
@@ -87,37 +92,78 @@ object Generations extends Logging {
       default
     }(_.asInstanceOf[T])
 
-  /** Generations `[lo, hi]` of `dir`, `gen` column included: one listing,
-    * then the committed `gen=N` directories are read by name, so an
-    * underscore-named root never meets Spark's hidden-path filter (and its
-    * "All paths were ignored" WARN) and orphans are never listed.
+  /** Generations `[lo, hi]` of `dir` under `schema` (`gen` included): one
+    * listing, then the committed `gen=N` directories are read by name, so
+    * an underscore-named root never meets Spark's hidden-path filter (and
+    * its "All paths were ignored" WARN) and orphans are never listed.
     */
-  private def gens(spark: SparkSession, dir: String, lo: Int, hi: Int): DataFrame = {
+  private def gens(spark: SparkSession, dir: String, lo: Int, hi: Int,
+      schema: StructType): DataFrame = {
+    val paths = genDirs(spark, dir, lo, hi)
+    if (paths.isEmpty)
+      Reads.known(spark, schema, Seq(dir)).filter(col("gen") >= lo && col("gen") <= hi)
+    else Reads.known(spark, schema, paths, Map("basePath" -> dir))
+  }
+
+  private def genDirs(spark: SparkSession, dir: String, lo: Int, hi: Int): Seq[String] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+    (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
       .map(_.getPath).filter(_.getName match {
         case GenDir(n) => n.toInt >= lo && n.toInt <= hi
         case _         => false
-      })
-    if (paths.isEmpty)
-      spark.read.parquet(dir).filter(col("gen") >= lo && col("gen") <= hi)
-    else spark.read.option("basePath", dir).parquet(paths.map(_.toString): _*)
+      }).map(_.toString)
   }
+
+  /** Artifacts whose schema-less manifest has been reported once. */
+  private val inferredWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** `f` with its data schema filled in. A manifest written before the
+    * schema key existed infers it from the committed generations — as the
+    * reads always did, counted (`Fallbacks`, site `reads.schema_inferred`;
+    * one WARN per artifact) — and the verb committing the returned fence
+    * records it.
+    */
+  def schemed(spark: SparkSession, l: Layout, f: Fence): Fence =
+    if (f.schema.isDefined) f
+    else {
+      graft.observe.Fallbacks.record("reads.schema_inferred",
+        s"the manifest of ${l.data} records no data schema: inferring it " +
+          "with a Spark job, as before, until the artifact's next commit records it",
+        warn = inferredWarned.add(l.data))
+      val paths = genDirs(spark, l.data, f.base_gen, f.generation)
+      val df =
+        if (paths.isEmpty) Reads.parquet(spark, l.data)
+        else Reads.parquet(spark, paths, Map("basePath" -> l.data))
+      f.copy(schema = Some(df.schema.json))
+    }
+
+  /** The read schema of the data generations (`gen` included). */
+  def dataSchema(spark: SparkSession, l: Layout, f: Fence): StructType =
+    Reads.fromJson(schemed(spark, l, f).schema.get)
+
+  /** The tombstone generations' read schema: [[tombstone]] writes the
+    * data's `id` and an int `upto`, partitioned by `gen`.
+    */
+  private[graft] def tombSchema(data: StructType): StructType =
+    Reads.readBack(StructType(Seq(data("id"),
+      StructField("upto", IntegerType), StructField("gen", IntegerType))), Seq("gen"))
 
   /** The rows a reader may see: gen-fenced to the committed range and
     * anti-joined against the ACTIVE tombstone set (broadcast below the
     * [[TombBroadcastMaxRows]] bar, read from the fence's `tomb_rows` — no
-    * probe job). The `gen` column is dropped on the way out.
+    * probe job), both read under the fence's schema. The `gen` column is
+    * dropped on the way out.
     */
   def live(spark: SparkSession, l: Layout, f: Fence): DataFrame = {
-    val fenced = gens(spark, l.data, f.base_gen, f.generation)
+    val schema = dataSchema(spark, l, f)
+    val fenced = gens(spark, l.data, f.base_gen, f.generation, schema)
     val screened =
       if (!f.tombsActive) fenced
       else {
         val bar = spark.conf.getOption("spark.graft.knn.tombBroadcastMaxRows")
           .map(_.toLong).getOrElse(TombBroadcastMaxRows)
-        val tombs0 = gens(spark, l.tombs, f.tomb_base, f.tomb_gen)
+        val tombs0 = gens(spark, l.tombs, f.tomb_base, f.tomb_gen, tombSchema(schema))
           .select(col("id").as("__tid"), col("upto").as("__tupto"))
         val tombs =
           if (f.tomb_rows <= bar) broadcast(tombs0)

@@ -271,6 +271,7 @@ object BatchSink extends org.apache.spark.internal.Logging {
       if (partitionCols.isEmpty) Nil
       else Commit.leafPartitionDirs(fs, staged, partitionCols.size),
       retainAside = false)
+    if (partitionCols.isEmpty) Reads.remember(spark, path, merged.schema)
     n
   }
 
@@ -349,19 +350,22 @@ object BatchSink extends org.apache.spark.internal.Logging {
       val needed = neededFiles(files.map(_.getLen).sum)
       if (files.length <= needed) None
       else {
-        rewritten(readLeaves(spark, path, Seq(leaf(cur, rel).toString), partitionCols)
-            .drop(partitionCols: _*), needed.toInt)
+        val rows = readLeaves(spark, path, Seq(leaf(cur, rel).toString), partitionCols)
+          .drop(partitionCols: _*)
+        rewritten(rows, needed.toInt)
           .write.mode("overwrite").parquet(leaf(staged, rel).toString)
-        Some(rel -> files.length)
+        Some((rel, files.length, rows.schema))
       }
     }
     // a flat store's leaf "" swaps the whole root. retainAside: the
     // pre-compaction data outlives the swap under `<path>.old` (a grace
     // window for recovery / slow readers pointed at it); the next
     // writer's recovery sweeps it
-    if (compacted.nonEmpty)
+    if (compacted.nonEmpty) {
       Commit.install(fs, cur, compacted.map(_._1).filter(_.nonEmpty), retainAside)
-    compacted.map { case (rel, n) => n - dataFiles(leaf(cur, rel)).length }.sum.toLong
+      if (partitionCols.isEmpty) Reads.remember(spark, path, compacted.head._3)
+    }
+    compacted.map { case (rel, n, _) => n - dataFiles(leaf(cur, rel)).length }.sum.toLong
   }
 
   /** Above this many touched partitions an upsert logs one WARN (it still
@@ -398,13 +402,15 @@ object BatchSink extends org.apache.spark.internal.Logging {
     * differ across partitions, and inference sampling an old-schema file
     * would silently DROP an evolved column from the rewrite. The footer
     * read covers the given directories only. A flat store is rewritten
-    * whole on every upsert, so it holds one schema and reads plain.
+    * whole on every upsert, so it holds one schema and reads plain — under
+    * the schema the previous rewrite recorded ([[Reads.remember]]) while
+    * its listing is the one installed.
     */
   private def readLeaves(spark: org.apache.spark.sql.SparkSession, path: String,
       dirs: Seq[String], partitionCols: Seq[String]): DataFrame =
-    (if (partitionCols.isEmpty) spark.read
-     else spark.read.option("basePath", path).option("mergeSchema", "true"))
-      .parquet(dirs: _*)
+    Reads.parquet(spark, dirs,
+      if (partitionCols.isEmpty) Map.empty
+      else Map("basePath" -> path, "mergeSchema" -> "true"))
 
   /** Key-determined bucket column for the partitioned snapshot: a writer
     * computes `changes.withColumn("bucket", keyBucket(n, col(key)))` and

@@ -70,10 +70,16 @@ class ParquetSourceResolver(dir: String, val catalog: SchemaCatalog) extends Lat
     * spark.sql.legacy.parquet.nanosAsLong).
     */
   def rawSchema(spark: SparkSession, topic: TopicConfig): org.apache.spark.sql.types.StructType =
-    spark.read.parquet(path(topic.name)).schema
+    raw(spark, topic).schema
+
+  /** The topic's files as they are; re-resolving an unchanged topic reuses
+    * its inferred schema ([[graft.sinks.Reads]]).
+    */
+  private def raw(spark: SparkSession, topic: TopicConfig): DataFrame =
+    graft.sinks.Reads.parquet(spark, path(topic.name))
 
   override def stream(spark: SparkSession, topic: TopicConfig): DataFrame =
-    fixNanos(spark.read.parquet(path(topic.name)), topic.name)
+    fixNanos(raw(spark, topic), topic.name)
 }
 
 /** Batch resolver over JSONL topic dumps (`<dir>/<topic>.jsonl`) — the

@@ -16,6 +16,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field, array element and map value nullable — the
+    * form a file-source relation reads back.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Register a native expression as a SQL function on this session. */
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit = {

@@ -142,6 +142,31 @@ class SpecSurfaceSpec extends AnyFunSuite {
       s"config keys documented but never read: ${(documented -- read).mkString(", ")}")
   }
 
+  test("every engine parquet read in src/main goes through graft.sinks.Reads") {
+    import scala.jdk.CollectionConverters._
+    // the helper itself, and the fixture readers of the query catalogue,
+    // the accuracy contracts and the bench mains: they read the provisioned
+    // test tables, not engine state
+    val exempt = Set("Reads.scala", "Queries.scala", "Accuracy.scala",
+      "Bench.scala", "StreamBench.scala", "ScalingBench.scala")
+    // a batch read chain from `.read` (not `.readStream`) to its terminal
+    // format call, across lines
+    val chain = ("\\.read\\b((?:(?!\\.read\\b)[\\s\\S])*?)" +
+      "\\.(parquet|json|csv|orc|text|load|table)\\(").r
+    val files = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }
+    val adHoc = files.filterNot(f => exempt(f.getFileName.toString)).flatMap { f =>
+      val text = Files.readString(f)
+      chain.findAllMatchIn(text).filter(m => m.group(2) == "parquet" ||
+          (m.group(2) == "load" && m.group(1).contains("\"parquet\"")))
+        .map(m => s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(files.exists(_.getFileName.toString == "Reads.scala") && adHoc.isEmpty,
+      s"parquet reads outside graft.sinks.Reads (pass the schema it knows, or " +
+        s"go through Reads.parquet): ${adHoc.mkString(", ")}")
+  }
+
   test("SpecFuzzProperties carries a valid-spec generator property per op") {
     val names = SpecFuzzProperties.properties.map(_._1).toSeq
     val uncovered = SpecSurface.transformOps.filterNot(op =>
