@@ -714,8 +714,8 @@ object Drift {
         // a ZERO-ROW artifact still yields one global-aggregate row, with
         // the maxes null — filter it so the zero-baseline fallback below
         // actually fires (getDouble on the null would NPE)
-        val r = baseRe.select(col("__bdims"), col("__bnorm"), col("__bn"))
-          .collect().headOption.filterNot(_.isNullAt(2))
+        val r = graft.sinks.Exec.run(baseRe)(_.select(col("__bdims"), col("__bnorm"), col("__bn"))
+          .collect().headOption.filterNot(_.isNullAt(2)))
         val (bdSeq, bnorm, bn) = r
           .map(x => (x.getSeq[Double](0), x.getDouble(1), x.getDouble(2)))
           .getOrElse((Seq.empty[Double], 0.0, 0.0))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.sinks.{Commit, Generations, Reads}
+import graft.sinks.{Commit, Exec, Generations, Reads}
 
 /** The stored shingle history ([[Dedup.shingleIndex]] rows: id, sh, n,
   * shingle_size) that `dedup_near historyPath` screens against, and its
@@ -74,8 +74,8 @@ object ShingleHistory extends Logging {
         s"missing column(s) ${missing.mkString(", ")} (found: " +
         s"${df.columns.mkString(", ")}). Build the history artifact with " +
         "the shingle_index op (or Dedup.shingleIndex) at publish time")
-    val widths = df.select(col("shingle_size").cast("int"))
-      .distinct().limit(3).collect().toSeq
+    val widths = Exec.run(df)(_.select(col("shingle_size").cast("int"))
+      .distinct().limit(3).collect().toSeq)
       .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
     require(!widths.contains(None),
       s"[$where] historyPath '$p' carries null (or non-numeric) " +
@@ -222,9 +222,9 @@ object ShingleHistory extends Logging {
     val l = layout(p)
     Generations.sweep(fs, l, m.fence)
     val obs = Observation()
-    Generations.signed(Dedup.shingleIndex(docs, idCol, textCol, width), obs)
+    Exec.run(docs)(d => Generations.signed(Dedup.shingleIndex(d, idCol, textCol, width), obs)
       .withColumn("gen", lit(m.fence.generation + 1))
-      .write.mode("append").partitionBy("gen").parquet(p)
+      .write.mode("append").partitionBy("gen").parquet(p))
     val (n, sig) = Generations.signature(obs)
     m.fence.appended(n, sig).filter(_ => n > 0) match {
       case Some(f) =>

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 
 import graft.functions.VectorFunctions
-import graft.sinks.{Commit, Generations, Reads}
+import graft.sinks.{Commit, Exec, Generations, Reads}
 import graft.sinks.Generations.observedOr
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -68,10 +68,10 @@ object Similarity extends Logging {
     // pseudo-random but reproducible permutation; the take is still a
     // bounded top-k heap, never a full sort.
     val base = corpus.select(col(idCol), col(vecCol).cast("array<double>"))
-    val sampled: Array[Array[Double]] = countObs.fold(base)(o =>
-        base.observe(o, count(lit(1)).as("n")))
+    val sampled: Array[Array[Double]] = Exec.run(base)(b => countObs.fold(b)(o =>
+        b.observe(o, count(lit(1)).as("n")))
       .orderBy(xxhash64(col(idCol)), col(idCol)).limit(sampleN)
-      .collect()
+      .collect())
       .sortBy(r => String.valueOf(r.get(0))) // order-stable seeding start
       .map(_.getSeq[Double](1).toArray)
     require(sampled.nonEmpty, "kmeansCentroids needs a non-empty corpus")
@@ -425,7 +425,7 @@ object Similarity extends Logging {
       attributeColumns.map(col): _*)
     val theDim =
       if (dim > 0) dim
-      else c.select(size(col("vec")).as("d")).limit(1).collect().headOption
+      else Exec.run(c)(_.select(size(col("vec")).as("d")).limit(1).collect()).headOption
         .map(_.getInt(0))
         .getOrElse(throw new IllegalArgumentException(
           "buildIndex: corpus is empty and dim is undeclared — declare dim " +
@@ -437,7 +437,7 @@ object Similarity extends Logging {
     // it during the kmeans training scan (already a full corpus pass).
     // Only lsh still pays the count up front: it has no earlier full pass,
     // and the leaf-layout sizing needs n before the write.
-    val n0 = if (method == "lsh") c.count() else -1L
+    val n0 = if (method == "lsh") Exec.run(c)(_.count()) else -1L
     val meta0: AnnIndexMeta = method match {
       case "quantized" =>
         AnnIndexMeta("quantized", theDim, n0, None, None, None, None, None, None)
@@ -527,12 +527,12 @@ object Similarity extends Logging {
       // safe, and produced by the SAME expression the staged write below
       // partitions on, so the driver's value→directory mapping and the
       // executors' directory names cannot disagree)
-      val catRows = c.filter(col(a).isNotNull)
+      val catRows = Exec.run(c)(_.filter(col(a).isNotNull)
         .groupBy(col(a).cast("string").as("__v"))
         .agg(count(lit(1)).as("n"))
         .select(col("__v"), col("n"), hex(xxhash64(col("__v"))).as("__ap"))
         .limit(MaxCategorySubIndexes + 1)
-        .collect()
+        .collect())
       require(catRows.length <= MaxCategorySubIndexes,
         s"buildIndex partitionByAttribute '$a' has more than " +
           s"$MaxCategorySubIndexes distinct values — a per-category family " +
@@ -578,7 +578,7 @@ object Similarity extends Logging {
               .select(col("__ap") +: g +: col("tbl") +: col("bucket") +:
                 col("id") +: col("vec") +: attrCols2: _*)
         }
-        staged.write.mode("overwrite").partitionBy("__ap", "gen").parquet(stageP)
+        Exec.run(staged)(_.write.mode("overwrite").partitionBy("__ap", "gen").parquet(stageP))
         // each renamed category directory reads as a flat gen-partitioned
         // index
         val subSchema = Reads.readBack(
@@ -787,8 +787,8 @@ object Similarity extends Logging {
     val hit = selCache.get(key)
     if (hit != null && hit._1 == sig) hit._2
     else {
-      val n = livePostings(spark, indexPath, meta)
-        .filter(expr(filter)).select("id").distinct().count()
+      val n = Exec.run(livePostings(spark, indexPath, meta))(
+        _.filter(expr(filter)).select("id").distinct().count())
       cappedPut(selCache, key, (sig, n))
       n
     }
@@ -918,10 +918,10 @@ object Similarity extends Logging {
     }
     val parts = "gen" +: (if (partitionLeaves) leafCols else Nil)
     val obs = org.apache.spark.sql.Observation()
-    (if (partitionLeaves) postings.repartition(leafCols.map(col): _*) else postings)
+    Exec.run(postings)(p => (if (partitionLeaves) p.repartition(leafCols.map(col): _*) else p)
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy(parts: _*).parquet(idxDir)
+      .partitionBy(parts: _*).parquet(idxDir))
     (observedOr(obs, "rows", 0L), Reads.readBack(postings.schema, parts).json)
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
 
 import graft.config._
 import graft.config.TransformOp._
-import graft.sinks.Reads
+import graft.sinks.{Exec, Reads}
 import graft.sources.SourceResolver
 
 /** PipelineSpec → DataFrame interpreter — the Spark-native equivalent of
@@ -326,7 +326,7 @@ object Interpreter extends Logging {
         val stale =
           if (!stalenessApplies) Nil
           else {
-            val n = df.count()
+            val n = Exec.run(df)(_.count())
             if (n == meta.n_rows) Nil
             else Seq(graft.observe.PlanAudit.Finding("warn", KnnStaleIndex,
               s"knn indexPath '$p' was built over ${meta.n_rows} corpus rows " +
@@ -618,7 +618,7 @@ object Interpreter extends Logging {
       oldTry.toSeq.flatMap { old =>
         val probeCols = (t.categoricalColumns ++ t.embeddingGroupBy).distinct
         val aggs = probeCols.map(c => approx_count_distinct(col(c), 0.05).as(c))
-        val row = old.agg(aggs.head, aggs.tail: _*).head()
+        val row = Exec.run(old)(_.agg(aggs.head, aggs.tail: _*).head())
         // a column declared BOTH as categoricalColumns entry and as the
         // embeddingGroupBy stratum gets BOTH findings — each names its own
         // remediation, and dropping one would lose that guidance
@@ -930,8 +930,8 @@ object Interpreter extends Logging {
     */
   private def requireStatsCover(baseline: DataFrame, cols: Seq[String],
       path: String, specId: String): Unit = {
-    val present = baseline.select("col_name").distinct()
-      .collect().map(_.getString(0)).toSet
+    val present = Exec.run(baseline)(_.select("col_name").distinct()
+      .collect().map(_.getString(0)).toSet)
     val absent = cols.filterNot(present)
     require(absent.isEmpty,
       s"[$specId] statsPath '$path' carries no rows for declared " +
@@ -1078,13 +1078,13 @@ object Interpreter extends Logging {
             // form) written with OVERWRITE: the same rejects re-land in
             // place, a different batch gets its own leaf, and a clean batch
             // writes nothing at all
-            val pr = rejects.agg(count(lit(1)).as("n"),
+            val pr = Exec.run(rejects)(_.agg(count(lit(1)).as("n"),
               coalesce(expr("bit_xor(xxhash64(payload))"), lit(0L)).as("h"))
-              .head()
+              .head())
             if (pr.getLong(0) > 0) {
               val sig = java.lang.Long.toHexString(
                 pr.getLong(1) * 31L + pr.getLong(0))
-              rejects.write.mode("overwrite").parquet(s"$dlq/batch=$sig")
+              Exec.run(rejects)(_.write.mode("overwrite").parquet(s"$dlq/batch=$sig"))
               logInfo(s"[$specId] parse_json: dead-lettered ${pr.getLong(0)} " +
                 s"reject(s) to $dlq/batch=$sig")
             }

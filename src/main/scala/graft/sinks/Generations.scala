@@ -232,12 +232,12 @@ object Generations extends Logging {
     // plain counts bracket the dedup
     val pObs = Observation()
     val dObs = Observation()
-    matched.select("id")
+    Exec.run(matched)(_.select("id")
       .observe(pObs, count(lit(1)).as("p"))
       .distinct()
       .observe(dObs, count(lit(1)).as("d"))
       .select(lit(gen).as("gen"), col("id"), lit(f.generation).as("upto"))
-      .write.mode("append").partitionBy("gen").parquet(l.tombs)
+      .write.mode("append").partitionBy("gen").parquet(l.tombs))
     val rows = observedOr(pObs, "p", 0L)
     if (rows == 0L) {
       // the empty partitioned write landed no gen directory, but it may
@@ -271,13 +271,13 @@ object Generations extends Logging {
     val newGen = f.generation + 1
     val obs = Observation()
     val rows0 = live(spark, l, f)
-    write(rows0.observe(obs, count(lit(1)).as("rows")), lit(newGen).as("gen"))
+    Exec.run(rows0)(r => write(r.observe(obs, count(lit(1)).as("rows")), lit(newGen).as("gen")))
     val rows = observedOr(obs, "rows", 0L)
     val genDir = new Path(l.data, s"gen=$newGen")
     // dynamic partitioning writes nothing for zero rows
     if (rows == 0L && !fs.exists(genDir))
-      rows0.select(emptyCols.map(col): _*).limit(0).write.mode("overwrite")
-        .parquet((genDir.toString +: Some(emptyLeaf).filter(_.nonEmpty).toSeq).mkString("/"))
+      Exec.run(rows0)(_.select(emptyCols.map(col): _*).limit(0).write.mode("overwrite")
+        .parquet((genDir.toString +: Some(emptyLeaf).filter(_.nonEmpty).toSeq).mkString("/")))
     val copied = Commit.footerRowCount(spark.sessionState.newHadoopConf(), genDir)
     require(copied == rows,
       s"fold: consolidated generation $genDir holds $copied rows but the " +

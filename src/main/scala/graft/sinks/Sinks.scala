@@ -137,27 +137,29 @@ object BatchSink extends org.apache.spark.internal.Logging {
       // wrap modulo 2^32 to an arbitrary (possibly negative) file count
       ((est + t - 1) / BigInt(t)).min(BigInt(100000)).max(BigInt(1)).toInt
     }
-    if (topic.zOrderBy.nonEmpty) {
-      // X27 through config: cluster FIRST (the shared Scale.zCluster
-      // kernel — z-value computed on the raw columns, dropped after the
-      // range+sort), THEN shape for the sink; the kafka projection is
-      // narrow, so it preserves the clustered partitioning and order, and
-      // no synthetic column ever approaches the JSON value
-      Interpreter.toKafkaShape(graft.operators.Scale.zCluster(
-          df, topic.zOrderBy, fileCount(df)))
-        .write.mode("overwrite").parquet(dest)
-    } else if (topic.partitionBy.nonEmpty) {
-      // X24 through config: hive-partitioned topic data — the partition
-      // columns ride OUTSIDE the JSON as physical columns and become
-      // directories on write (they stay inside the JSON too: layout is
-      // not a serde change). Repartition BY the layout columns so each
-      // directory receives ~one file set, not one file per task.
-      Interpreter.toKafkaShape(df, carry = topic.partitionBy)
-        .repartition(parts, topic.partitionBy.map(col): _*)
-        .write.mode("overwrite").partitionBy(topic.partitionBy: _*).parquet(dest)
-    } else {
-      Interpreter.toKafkaShape(df).repartition(fileCount(df))
-        .write.mode("overwrite").parquet(dest)
+    Exec.run(df) { df =>
+      if (topic.zOrderBy.nonEmpty) {
+        // X27 through config: cluster FIRST (the shared Scale.zCluster
+        // kernel — z-value computed on the raw columns, dropped after the
+        // range+sort), THEN shape for the sink; the kafka projection is
+        // narrow, so it preserves the clustered partitioning and order, and
+        // no synthetic column ever approaches the JSON value
+        Interpreter.toKafkaShape(graft.operators.Scale.zCluster(
+            df, topic.zOrderBy, fileCount(df)))
+          .write.mode("overwrite").parquet(dest)
+      } else if (topic.partitionBy.nonEmpty) {
+        // X24 through config: hive-partitioned topic data — the partition
+        // columns ride OUTSIDE the JSON as physical columns and become
+        // directories on write (they stay inside the JSON too: layout is
+        // not a serde change). Repartition BY the layout columns so each
+        // directory receives ~one file set, not one file per task.
+        Interpreter.toKafkaShape(df, carry = topic.partitionBy)
+          .repartition(parts, topic.partitionBy.map(col): _*)
+          .write.mode("overwrite").partitionBy(topic.partitionBy: _*).parquet(dest)
+      } else {
+        Interpreter.toKafkaShape(df).repartition(fileCount(df))
+          .write.mode("overwrite").parquet(dest)
+      }
     }
     true
   }
@@ -233,8 +235,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else {
         // touched partitions as the writer names their directories: each
         // partition column cast to string (under the session time zone)
-        val touched = changes.select(partitionCols.map(col(_).cast("string")): _*)
-          .distinct().collect()
+        val touched = Exec.run(changes)(
+          _.select(partitionCols.map(col(_).cast("string")): _*).distinct().collect())
         if (touched.isEmpty) return 0L // empty micro-batch: snapshot unchanged
         if (touched.length > WarnTouchedPartitions)
           logWarning(s"[$path] changelog batch touches ${touched.length} " +
@@ -264,8 +266,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       }.unionByName(changes, allowMissingColumns = true),
       keys, orderCols)
     val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
-    merged.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(staged.toString)
+    Exec.run(merged)(_.write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staged.toString))
     val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
     Commit.install(fs, cur,
       if (partitionCols.isEmpty) Nil
@@ -352,8 +354,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else {
         val rows = readLeaves(spark, path, Seq(leaf(cur, rel).toString), partitionCols)
           .drop(partitionCols: _*)
-        rewritten(rows, needed.toInt)
-          .write.mode("overwrite").parquet(leaf(staged, rel).toString)
+        Exec.run(rows)(rewritten(_, needed.toInt)
+          .write.mode("overwrite").parquet(leaf(staged, rel).toString))
         Some((rel, files.length, rows.schema))
       }
     }

@@ -22,6 +22,33 @@ object Bridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** A new session sharing `spark`'s context, cache and catalog, with a
+    * copy of its conf and functions. Its query executions reach the
+    * listeners `spark` has when each one ends — the observations of frames
+    * observed on `spark` complete through them — instead of copies of the
+    * listeners it had when cloned.
+    */
+  def cloneSession(spark: SparkSession): SparkSession = {
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    val home = spark.listenerManager
+    home.listListeners().foreach(clone.listenerManager.unregister)
+    clone.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = home.listListeners().foreach(_.onSuccess(f, qe, ns))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = home.listListeners().foreach(_.onFailure(f, qe, e))
+    })
+    clone
+  }
+
+  /** A frame over `plan` bound to `spark`: its actions plan and execute
+    * under `spark`'s conf.
+    */
+  def ofRows(spark: SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Register a native expression as a SQL function on this session. */
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit = {

@@ -1785,14 +1785,17 @@ class InterpreterSpec extends SparkSuite {
     val appendJobs = jobsDuring(shingleAppend(
       docs.filter(col("doc_id") >= 40 && col("doc_id") < 60), p))
     val retractJobs = jobsDuring(shingleRetract(docs.filter(col("doc_id") < 2), p))
-    // the counts measured once the live read took its schema from the
-    // manifest (retract 4 -> 3); a new probe job in either verb fails here
+    info(s"jobs: shingle_index_append $appendJobs, shingle_index_retract $retractJobs")
+    // the counts measured once these small plans ran without adaptive
+    // execution (graft.sinks.Exec; retract 3 -> 2: its tombstone write is
+    // one job plus the tombstone set's broadcast); a new probe job in
+    // either verb fails here
     assert(appendJobs <= AppendJobs && retractJobs <= RetractJobs,
       s"shingle_index_append ran $appendJobs jobs (pin $AppendJobs), " +
         s"shingle_index_retract $retractJobs (pin $RetractJobs)")
   }
   private val AppendJobs = 1
-  private val RetractJobs = 3
+  private val RetractJobs = 2
 
   test("a shingle screen with pending retractions logs no data-source WARN (the tombstone set is read by file, not by underscore directory)") {
     val dir = tempDirPath("graft_shingle_warn").toString

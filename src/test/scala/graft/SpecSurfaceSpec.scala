@@ -167,6 +167,30 @@ class SpecSurfaceSpec extends AnyFunSuite {
         s"go through Reads.parquet): ${adHoc.mkString(", ")}")
   }
 
+  test("only GraftSession and graft.sinks.Exec set the adaptive switch or the shuffle partition count") {
+    import scala.jdk.CollectionConverters._
+    // GraftSession sets the session-wide values; Exec runs a small plan
+    // with AQE off and one shuffle partition. Anything else switching them
+    // (or installing a thread conf) would take plans out of Exec's decision
+    val exempt = Set("GraftSession.scala", "Exec.scala")
+    // a mention of either key, by name or by SQLConf entry, or a thread
+    // conf — unless it is the argument of a read
+    val setting = ("(?<!\\.get\\(|\\.getOption\\()" +
+      "(\"spark\\.sql\\.(adaptive\\.enabled|shuffle\\.partitions)\"" +
+      "|SQLConf\\.(ADAPTIVE_EXECUTION_ENABLED|SHUFFLE_PARTITIONS)\\b|withExistingConf\\b)").r
+    val files = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }
+    val hits = files.filterNot(f => exempt(f.getFileName.toString)).flatMap { f =>
+      val text = Files.readString(f)
+      setting.findAllMatchIn(text)
+        .map(m => s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(files.exists(_.getFileName.toString == "Exec.scala") && hits.isEmpty,
+      s"AQE / shuffle-partition settings outside GraftSession and Exec " +
+        s"(route the action through graft.sinks.Exec.run): ${hits.mkString(", ")}")
+  }
+
   test("SpecFuzzProperties carries a valid-spec generator property per op") {
     val names = SpecFuzzProperties.properties.map(_._1).toSeq
     val uncovered = SpecSurface.transformOps.filterNot(op =>
