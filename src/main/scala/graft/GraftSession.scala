@@ -23,9 +23,9 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // AQE stays on for every plan but the small ones: an action whose
-      // inputs fit under autoBroadcastJoinThreshold runs without it, as one
-      // job (graft.sinks.Exec; DEPLOY.md "Small plans")
+      // AQE stays on for every plan but the small ones: a maintenance
+      // verb's action whose inputs fit under autoBroadcastJoinThreshold runs
+      // without it, as one job (graft.sinks.Exec; DEPLOY.md "Small plans")
       .config("spark.sql.adaptive.enabled", "true")
       // Allow shuffled-hash join where its size conditions hold instead of
       // always sorting both sides (optimization-guide §3.1/§9): the planner

@@ -118,7 +118,24 @@ object Interpreter extends Logging {
         else logWarning(msg)
       }
     }
+    // a maintenance verb's output is written as one of its own actions
+    // (graft.sinks.Exec); a filter after the verb makes it a new frame
+    if (!out.isStreaming && spec.filter.isEmpty &&
+        spec.transform.lastOption.exists(maintenanceVerb)) Exec.verbOutput(out)
     (out, specFindings.toSeq)
+  }
+
+  /** The stored-artifact lifecycle's verbs: the knn index's build, append,
+    * delete, compact and indexed search, the shingle history's screen,
+    * append, retract and compact, and the drift monitor.
+    */
+  private def maintenanceVerb(t: TransformOp): Boolean = t match {
+    case _: KnnIndex | _: KnnIndexAppend | _: KnnIndexDelete | _: KnnIndexCompact |
+        _: ShingleIndexAppend | _: ShingleIndexRetract | _: ShingleIndexCompact |
+        _: SnapshotDrift => true
+    case k: Knn => k.indexPath.isDefined
+    case d: DedupNear => d.historyPath.isDefined
+    case _ => false
   }
 
   /** Build a windowed snapshot_drift monitor spec in its
@@ -1078,13 +1095,13 @@ object Interpreter extends Logging {
             // form) written with OVERWRITE: the same rejects re-land in
             // place, a different batch gets its own leaf, and a clean batch
             // writes nothing at all
-            val pr = Exec.run(rejects)(_.agg(count(lit(1)).as("n"),
+            val pr = rejects.agg(count(lit(1)).as("n"),
               coalesce(expr("bit_xor(xxhash64(payload))"), lit(0L)).as("h"))
-              .head())
+              .head()
             if (pr.getLong(0) > 0) {
               val sig = java.lang.Long.toHexString(
                 pr.getLong(1) * 31L + pr.getLong(0))
-              Exec.run(rejects)(_.write.mode("overwrite").parquet(s"$dlq/batch=$sig"))
+              rejects.write.mode("overwrite").parquet(s"$dlq/batch=$sig")
               logInfo(s"[$specId] parse_json: dead-lettered ${pr.getLong(0)} " +
                 s"reject(s) to $dlq/batch=$sig")
             }

@@ -4,26 +4,34 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 
-/** How each engine action executes. Adaptive execution runs every
-  * exchange, broadcast and cache materialisation of a plan as its own
-  * Spark job and re-plans the rest after each one — on a maintenance verb
-  * over kilobytes those per-stage barriers cost more than the work. A plan
-  * whose inputs fit under the broadcast bar has nothing for AQE to fix:
-  * every shuffle coalesces to one partition and every join broadcasts.
+/** How the maintenance verbs' actions execute. Adaptive execution runs
+  * every exchange, broadcast and cache materialisation of a plan as its
+  * own Spark job and re-plans the rest after each one — on a maintenance
+  * verb over kilobytes those per-stage barriers cost more than the work. A
+  * plan whose inputs fit under the broadcast bar has nothing for AQE to
+  * fix: every shuffle coalesces to one partition and every join broadcasts.
+  *
+  * Only the verbs go through here: their own actions (the generation
+  * writes, the knn build and search probes, the monitor's collects) call
+  * [[run]], and their output frames, marked by [[verbOutput]], reach it
+  * through [[sink]]. The verbs' plans are the engine's own, and what they
+  * add to their inputs before a shuffle is bounded (shingles per document,
+  * probed cells per query). A pipeline's data plane never comes here: its
+  * plans can grow past their inputs (an explode, a join) and keep AQE's
+  * split of the shuffle by measured size.
   *
   * [[run]] decides per action from the byte size of the leaves of the
   * frame's analyzed plan (subqueries included), with no filesystem call:
   *
   *  - a file relation: its file index's size, from the listing the read
   *    already did;
-  *  - a local relation, and a `LogicalRDD` carrying its origin's
-  *    statistics (a foreachBatch frame);
+  *  - a local relation;
   *  - a cached relation: through the leaves of the plan it caches.
   *
   * When the total is at most `spark.sql.autoBroadcastJoinThreshold` (-1:
@@ -51,6 +59,23 @@ object Exec {
     SQLConf.withExistingConf(target.sessionState.conf)(action(frame))
   }
 
+  /** `df`, marked as a maintenance verb's output: [[sink]] writes it
+    * through [[run]]. A frame derived from it is not marked.
+    */
+  def verbOutput(df: DataFrame): DataFrame = {
+    df.queryExecution.analyzed.setTagValue(VerbOutput, ())
+    df
+  }
+
+  /** `action(df)`: through [[run]] when `df` is a maintenance verb's
+    * output, under the session conf otherwise.
+    */
+  def sink[T](df: DataFrame)(action: DataFrame => T): T =
+    if (df.queryExecution.analyzed.getTagValue(VerbOutput).isDefined) run(df)(action)
+    else action(df)
+
+  private val VerbOutput = TreeNodeTag[Unit]("graft.verbOutput")
+
   /** Whether `df`'s inputs are known to fit under `home`'s broadcast bar. A
     * plan kept adaptive only because a leaf's size is unknown is counted
     * (`Fallbacks`, site `exec.size_unknown`; one WARN per leaf class).
@@ -59,7 +84,7 @@ object Exec {
     val conf = home.sessionState.conf
     val bar = conf.autoBroadcastJoinThreshold
     if (bar < 0) return false
-    val sizes = leaves(df.queryExecution.analyzed).map(l => l -> leafBytes(l, conf))
+    val sizes = leaves(df.queryExecution.analyzed).map(l => l -> leafBytes(l))
     if (sizes.flatMap(_._2).sum > bar) false
     else sizes.collectFirst { case (l, None) => l } match {
       case None => true
@@ -78,15 +103,14 @@ object Exec {
   private def leaves(plan: LogicalPlan): Seq[LeafNode] =
     plan.collectWithSubqueries { case l: LeafNode => l }
 
-  private def leafBytes(leaf: LeafNode, conf: SQLConf): Option[BigInt] = leaf match {
+  private def leafBytes(leaf: LeafNode): Option[BigInt] = leaf match {
     case r: LogicalRelation => r.relation match {
       case fs: HadoopFsRelation => Some(BigInt(fs.location.sizeInBytes))
       case _ => None
     }
     case r: LocalRelation => Some(r.computeStats().sizeInBytes)
-    case r: LogicalRDD => Some(r.computeStats().sizeInBytes).filter(_ < conf.defaultSizeInBytes)
     case r: InMemoryRelation =>
-      val sizes = leaves(r.cacheBuilder.logicalPlan).map(leafBytes(_, conf))
+      val sizes = leaves(r.cacheBuilder.logicalPlan).map(leafBytes)
       if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
     case _ => None
   }

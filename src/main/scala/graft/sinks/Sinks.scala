@@ -137,7 +137,7 @@ object BatchSink extends org.apache.spark.internal.Logging {
       // wrap modulo 2^32 to an arbitrary (possibly negative) file count
       ((est + t - 1) / BigInt(t)).min(BigInt(100000)).max(BigInt(1)).toInt
     }
-    Exec.run(df) { df =>
+    Exec.sink(df) { df =>
       if (topic.zOrderBy.nonEmpty) {
         // X27 through config: cluster FIRST (the shared Scale.zCluster
         // kernel — z-value computed on the raw columns, dropped after the
@@ -235,8 +235,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else {
         // touched partitions as the writer names their directories: each
         // partition column cast to string (under the session time zone)
-        val touched = Exec.run(changes)(
-          _.select(partitionCols.map(col(_).cast("string")): _*).distinct().collect())
+        val touched = changes.select(partitionCols.map(col(_).cast("string")): _*)
+          .distinct().collect()
         if (touched.isEmpty) return 0L // empty micro-batch: snapshot unchanged
         if (touched.length > WarnTouchedPartitions)
           logWarning(s"[$path] changelog batch touches ${touched.length} " +
@@ -266,8 +266,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       }.unionByName(changes, allowMissingColumns = true),
       keys, orderCols)
     val staged = new org.apache.hadoop.fs.Path(Commit.staging(path))
-    Exec.run(merged)(_.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(staged.toString))
+    merged.write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staged.toString)
     val n = Commit.footerRowCount(spark.sessionState.newHadoopConf(), staged)
     Commit.install(fs, cur,
       if (partitionCols.isEmpty) Nil
@@ -354,8 +354,8 @@ object BatchSink extends org.apache.spark.internal.Logging {
       else {
         val rows = readLeaves(spark, path, Seq(leaf(cur, rel).toString), partitionCols)
           .drop(partitionCols: _*)
-        Exec.run(rows)(rewritten(_, needed.toInt)
-          .write.mode("overwrite").parquet(leaf(staged, rel).toString))
+        rewritten(rows, needed.toInt)
+          .write.mode("overwrite").parquet(leaf(staged, rel).toString)
         Some((rel, files.length, rows.schema))
       }
     }

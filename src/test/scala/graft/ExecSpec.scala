@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,7 +18,8 @@ import graft.sources.ParquetSourceResolver
 
 /** [[Exec.run]]: an action over inputs under the broadcast bar runs with
   * adaptive execution off and one shuffle partition; anything else runs
-  * under the session conf.
+  * under the session conf. [[BatchSink.write]] goes through it only for a
+  * maintenance verb's output.
   */
 class ExecSpec extends SparkSuite {
 
@@ -35,18 +36,29 @@ class ExecSpec extends SparkSuite {
         .exists(adaptive)
   }
 
-  /** (action, adaptive) of every query execution `body` ends, as a
+  /** The partition counts of `p`'s adaptive shuffle reads: what AQE made
+    * of each shuffle it could coalesce.
+    */
+  private def shuffleReads(p: SparkPlan): Seq[Int] = p match {
+    case a: AdaptiveSparkPlanExec => shuffleReads(a.executedPlan)
+    case r: AQEShuffleReadExec => r.partitionSpecs.size +: shuffleReads(r.child)
+    case s: QueryStageExec => shuffleReads(s.plan)
+    case _ => (p.children ++ p.innerChildren.collect { case c: SparkPlan => c })
+      .flatMap(shuffleReads)
+  }
+
+  /** (action, executed plan) of every query execution `body` ends, as a
     * listener on the session hears them — small actions run on a clone of
     * the session, whose executions reach the session's listeners.
     */
-  private def executions(body: => Any): Seq[(String, Boolean)] = {
-    val seen = new ConcurrentLinkedQueue[(String, Boolean)]()
+  private def plans(body: => Any): Seq[(String, SparkPlan)] = {
+    val seen = new ConcurrentLinkedQueue[(String, SparkPlan)]()
     val l = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        seen.add((f, adaptive(qe.executedPlan))); ()
+        seen.add((f, qe.executedPlan)); ()
       }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = {
-        seen.add((f, adaptive(qe.executedPlan))); ()
+        seen.add((f, qe.executedPlan)); ()
       }
     }
     org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
@@ -56,10 +68,16 @@ class ExecSpec extends SparkSuite {
     seen.asScala.toSeq
   }
 
-  private def withBar[T](bar: String)(body: => T): T = {
-    val old = spark.conf.getOption(Bar)
-    spark.conf.set(Bar, bar)
-    try body finally old.fold(spark.conf.unset(Bar))(spark.conf.set(Bar, _))
+  /** (action, adaptive) of every query execution `body` ends. */
+  private def executions(body: => Any): Seq[(String, Boolean)] =
+    plans(body).map { case (f, p) => (f, adaptive(p)) }
+
+  private def withBar[T](bar: String)(body: => T): T = withConf(Bar, bar)(body)
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** A small parquet input and a shuffle-plus-write over it. */
@@ -118,6 +136,29 @@ class ExecSpec extends SparkSuite {
       }
       assert(inner.nonEmpty && inner.forall(_._2), inner.toString)
       assert(outer.filterNot(inner.contains).exists(!_._2), outer.toString)
+    }
+  }
+
+  test("a pipeline output under the bar that grows before its shuffle keeps AQE's split of the shuffle") {
+    // 2000 input rows, a few KB, become 400,000 distinct groups before the
+    // aggregation's shuffle: a data-plane frame, not a verb's output
+    def grows(): DataFrame = spark.read.parquet(input)
+      .select(col("id"), explode(sequence(lit(1), lit(200))).as("r"))
+      .groupBy("id", "r").count().withColumn(Interpreter.KeyCol, col("id"))
+    val out = tempDir("graft_exec_grow")
+    val topic = graft.config.OutputTopic(name = "grows")
+    def write(df: DataFrame): Seq[SparkPlan] =
+      plans(BatchSink.write(df, topic, out, new DirProvisioner(out))).map(_._2)
+    // a 16 KB advisory partition size stands in for a shuffle of more than
+    // the session's 64 MB
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k") {
+      val data = write(grows())
+      assert(data.nonEmpty && data.forall(adaptive), data.toString)
+      val reads = data.flatMap(shuffleReads)
+      assert(reads.exists(_ > 1), s"the aggregation's shuffle was read as $reads partitions")
+      // the same frame as a maintenance verb's output: one partition, no AQE
+      val verb = write(Exec.verbOutput(grows()))
+      assert(verb.nonEmpty && verb.forall(!adaptive(_)), verb.toString)
     }
   }
 
