@@ -84,17 +84,20 @@ object Interpreter extends Logging {
     // (the volume the declaration will actually face)
     val specFindings = scala.collection.mutable.ListBuffer
       .empty[graft.observe.PlanAudit.Finding]
-    val transformed = spec.transform.foldLeft(built) { (df, t) =>
-      val fs = specAudit(df, t, sources.dataDir, spec.id)
-      specFindings ++= fs
-      // fail-mode refuses BEFORE the stage is applied: several transforms
-      // (dedup collapse, profile) execute eagerly at build, and the whole
-      // point of a config-level finding is to refuse before that burn
-      if (fs.nonEmpty && spec.planAudit.contains("fail"))
-        throw new IllegalStateException(s"[${spec.id}] plan audit: " +
-          fs.map(w => s"${w.rule} (${w.detail})").mkString("; ") +
-          " — fix the declaration or declare planAudit: \"warn\"")
-      applyTransform(df, t, sources.dataDir, spec.id)
+    val transformed = spec.transform.zipWithIndex.foldLeft(built) { case (df, (t, i)) =>
+      def stage: DataFrame = {
+        val fs = specAudit(df, t, sources.dataDir, spec.id)
+        specFindings ++= fs
+        // fail-mode refuses BEFORE the stage is applied: several transforms
+        // (dedup collapse, profile) execute eagerly at build, and the whole
+        // point of a config-level finding is to refuse before that burn
+        if (fs.nonEmpty && spec.planAudit.contains("fail"))
+          throw new IllegalStateException(s"[${spec.id}] plan audit: " +
+            fs.map(w => s"${w.rule} (${w.detail})").mkString("; ") +
+            " — fix the declaration or declare planAudit: \"warn\"")
+        applyTransform(df, t, sources.dataDir, spec.id)
+      }
+      if (sourceFed(spec, i)) stage else Exec.dataPlane(stage)
     }
     // pre-sink predicate (post-aggregation for AGGREGATION = HAVING);
     // Catalyst pushes it down through the plan wherever legal
@@ -121,9 +124,20 @@ object Interpreter extends Logging {
     // a maintenance verb's output is written as one of its own actions
     // (graft.sinks.Exec); a filter after the verb makes it a new frame
     if (!out.isStreaming && spec.filter.isEmpty &&
-        spec.transform.lastOption.exists(maintenanceVerb)) Exec.verbOutput(out)
+        spec.transform.lastOption.exists(maintenanceVerb) &&
+        sourceFed(spec, spec.transform.size - 1)) Exec.verbOutput(out)
     (out, specFindings.toSeq)
   }
+
+  /** Whether transform `i` of `spec` reads its source as loaded, at most
+    * filtered. Anything else ahead of it (a join or aggregation mode, a
+    * transform other than a filter) may grow its input past what the
+    * maintenance verbs' own operators bound, so a verb there runs its
+    * actions under the session conf ([[Exec.dataPlane]]).
+    */
+  private def sourceFed(spec: PipelineSpec, i: Int): Boolean =
+    spec.processingMode == ProcessingMode.SimpleStream &&
+      spec.transform.take(i).forall(_.isInstanceOf[Filter])
 
   /** The stored-artifact lifecycle's verbs: the knn index's build, append,
     * delete, compact and indexed search, the shingle history's screen,

@@ -24,7 +24,8 @@ import org.apache.spark.sql.internal.SQLConf
   * add to their inputs before a shuffle is bounded (shingles per document,
   * probed cells per query). A pipeline's data plane never comes here: its
   * plans can grow past their inputs (an explode, a join) and keep AQE's
-  * split of the shuffle by measured size.
+  * split of the shuffle by measured size. Nor does a verb fed by it: the
+  * interpreter runs such a verb inside [[dataPlane]].
   *
   * [[run]] decides per action from the byte size of the leaves of the
   * frame's analyzed plan (subqueries included), with no filesystem call:
@@ -53,7 +54,7 @@ object Exec {
   /** `action(df)` under the execution conf `df`'s inputs call for. */
   def run[T](df: DataFrame)(action: DataFrame => T): T = {
     val home = homeOf(df.sparkSession)
-    val target = if (small(df, home)) smallSession(home) else home
+    val target = if (!inDataPlane.value && small(df, home)) smallSession(home) else home
     val frame =
       if (target eq df.sparkSession) df else Bridge.ofRows(target, df.queryExecution.analyzed)
     SQLConf.withExistingConf(target.sessionState.conf)(action(frame))
@@ -75,6 +76,14 @@ object Exec {
     else action(df)
 
   private val VerbOutput = TreeNodeTag[Unit]("graft.verbOutput")
+
+  /** `body` with every [[run]] in it under the session conf: a verb whose
+    * input the data plane shaped (a join, an aggregation, a transform other
+    * than a filter) can see that input grow past its sources.
+    */
+  def dataPlane[T](body: => T): T = inDataPlane.withValue(true)(body)
+
+  private val inDataPlane = new scala.util.DynamicVariable(false)
 
   /** Whether `df`'s inputs are known to fit under `home`'s broadcast bar. A
     * plan kept adaptive only because a leaf's size is unknown is counted

@@ -199,6 +199,16 @@ class ExecSpec extends SparkSuite {
     // compacted: the steady state of a daily screen
     val screenJobs = run("daily-screen-ingest")
     info(s"jobs per verb, report write included: $jobs; steady screen $screenJobs")
+    // a transform other than a filter ahead of the verb: the verb's input
+    // is the data plane's, and its actions and output write keep the
+    // session conf
+    val monitor = specs("daily-scalar-monitor")
+    val prefixed = monitor.copy(transform =
+      graft.config.TransformOp.RedactPii(column = Some("event_type")) +: monitor.transform)
+    val prefixedRuns = executions(BatchSink.write(Interpreter.build(spark, prefixed, resolver),
+      prefixed.outputTopic.get, out, new DirProvisioner(out)))
+    assert(prefixedRuns.size > 1 && prefixedRuns.forall(_._2),
+      s"the prefixed monitor ran an action without AQE: $prefixedRuns")
     // measured with every action one job plus its broadcasts: the delete's
     // tombstone write (the tombstone set's broadcast into the live read),
     // the search's staleness and selectivity counts and its broadcasts, the
