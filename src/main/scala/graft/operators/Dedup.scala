@@ -704,11 +704,8 @@ object Dedup extends Logging {
     val stride = 1 + probeT
     val bucketCap =
       if (maxBucketSize >= 0) maxBucketSize else 32 * occupancyTarget
-    // Seq-of-Seq (structural equality) so two identically-seeded calls build
-    // semanticEquals expressions — cache/exchange reuse across queries works.
-    val planes: Seq[Seq[Double]] = (0 until lTables).flatMap { t =>
-      hyperplanes(dim, bPlanes, seed + t * 7919).map(_.toSeq)
-    }
+    // structural equality: cache/exchange reuse across queries works
+    val planes = tablePlanes(dim, lTables, bPlanes, seed)
     // The banded frame: (id, tbl, bucket) rows — ~20 bytes regardless of
     // dim — (1+T) of them per table when probing: the main bucket plus the
     // T lowest-|margin| bit-flip neighbors, all from ONE reference-object
@@ -1172,4 +1169,14 @@ object Dedup extends Logging {
       v.map(_ / norm)
     }
   }
+
+  /** The `planesPerTable` hyperplanes of each of `nTables` tables, table
+    * `t` seeded `seed + t * 7919` — the one multi-table scheme of the
+    * cosine-pair LSH and the lsh knn index. Seq-of-Seq (structural
+    * equality) so two identically-seeded calls build semanticEquals
+    * expressions.
+    */
+  private[graft] def tablePlanes(dim: Int, nTables: Int, planesPerTable: Int,
+      seed: Long): Seq[Seq[Double]] =
+    (0 until nTables).flatMap(t => hyperplanes(dim, planesPerTable, seed + t * 7919).map(_.toSeq))
 }

@@ -35,17 +35,9 @@ object Similarity extends Logging {
     * an exchange — each map partition ships at most k rows per query.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topk(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "p")))
-      .select(col("query_id"), (col("rank0") + 1).cast("int").as("rank"),
-        col("p._2").as("neighbor_id"), col("p._1").as("cos"))
-  }
+      vecCol: String, k: Int): DataFrame =
+    rankRows(scored(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), Nil,
+      queryFrame(queries, idCol, vecCol)), k, distinct = false)
 
   /** Deterministic sampled k-means (Lloyd) for the IVF coarse quantizer.
     * The sample is bounded (`sampleN` lowest-id vectors via a top-k take,
@@ -163,80 +155,24 @@ object Similarity extends Logging {
     // nCells/3 keeps full recall at a fraction of the scan (the clustered
     // pin in OperatorsSpec holds 0.9 at 4/16). The recall contract assumes
     // nAssign >= 2 (boundary points indexed twice).
-    val (cells, probes) =
-      if (nCells > 0 && nProbe > 0) (nCells, nProbe)
+    // The corpus count (an eager full-scan job) is only needed to derive an
+    // UNDECLARED nCells; auto nProbe derives from nCells in [[probeAndRank]].
+    val cells =
+      if (nCells > 0) nCells
       else {
-        // the corpus count (an eager full-scan job at build time) is only
-        // needed to derive an UNDECLARED nCells — a declared nCells with
-        // auto nProbe sizes from the declaration alone
-        val c0 = if (nCells > 0) nCells
-          else {
-            val n = math.max(1L, corpus.count())
-            math.min(1024, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
-          }
-        val p0 = if (nProbe > 0) nProbe
-          else math.max(4, math.ceil(c0 / 3.0).toInt)
-        logInfo(s"ivfTopK auto-sized: nCells=$c0 nProbe=$p0")
-        (c0, p0)
+        val n = math.max(1L, corpus.count())
+        val c0 = math.min(1024, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
+        logInfo(s"ivfTopK auto-sized: nCells=$c0")
+        c0
       }
     require(nAssign >= 1 && nAssign <= cells, "nAssign must be in [1, nCells]")
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     // Seq-of-Seq (structural equality) so identically-parameterized
-    // NearestCells expressions are semanticEquals — see SignBuckets
-    val centroids: Seq[Seq[Double]] =
-      kmeansCentroids(corpus, idCol, vecCol, cells).map(_.toSeq).toSeq
-    // kmeans returns min(nCells, distinct sample vectors) centroids — on a
-    // tiny/degenerate corpus that can undercut a declared or auto-sized
-    // probe/assign count, and NearestCells requires nAssign <= cells. Clamp
-    // both (the old query×centroid window-rank form degraded the same way:
-    // fewer cells than asked just means probing all of them).
-    val kk = centroids.length
-    val assignN = math.min(nAssign, kk)
-    val probeN = math.min(probes, kk)
-    if (probeN < probes || assignN < nAssign) {
-      logWarning(s"ivfTopK: kmeans produced $kk cells (< requested); " +
-        s"clamping nProbe $probes->$probeN nAssign $nAssign->$assignN")
-    }
-
-    // Both corpus assignment and query probing go through ONE
-    // [[graft.functions.NearestCells]] node carrying the centroid matrix as
-    // a codegen reference object. The previous literal-array argmin put
-    // nCells × dim literal nodes into the plan (≈16k nodes at 245 cells ×
-    // 64 dims), fell out of codegen, and made assignment wall time track
-    // plan size instead of FLOPs — measured 4.8× at 3× data; this form is
-    // O(1) plan nodes and a tight primitive loop per row. Ties break on
-    // lower cell id, matching the old array_position/orderBy semantics.
-    val assigned =
-      if (assignN == 1)
-        c.withColumn("cell",
-          element_at(VectorFunctions.nearest_cells(col("cv"), centroids, 1), 1))
-      else
-        c.withColumn("cell",
-          explode(VectorFunctions.nearest_cells(col("cv"), centroids, assignN)))
-
-    // Query-side probing: the same expression, nProbe nearest cells per
-    // query — a map-side projection, replacing the old query × centroid
-    // broadcast cross join + window rank (one fewer BroadcastNestedLoopJoin
-    // in the plan, and no per-query row_number sort).
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probed = q.withColumn("cell",
-      explode(VectorFunctions.nearest_cells(col("qv"), centroids, probeN)))
-      .select(col("query_id"), col("qv"), col("cell"))
-
-    // multi-assignment can surface one (query, neighbor) via several probed
-    // cells with a bit-identical score — the distinct-pairs TopK collapses
-    // those INSIDE the partial aggregate, so no dropDuplicates exchange over
-    // the corpus-sized scored relation; the plan stays single-pass.
-    val scored = assigned.join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-    val top = if (assignN == 1) graft.functions.TopK.topk(col("cos"), col("neighbor_id"), k)
-      else graft.functions.TopK.topkDistinct(col("cos"), col("neighbor_id"), k)
-    scored.groupBy(col("query_id"))
-      .agg(top.as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "p")))
-      .select(col("query_id"), (col("rank0") + 1).cast("int").as("rank"),
-        col("p._2").as("neighbor_id"), col("p._1").as("cos"))
+    // NearestCells expressions are semanticEquals — see SignBuckets.
+    // kmeans may return fewer centroids than `cells` on a degenerate
+    // corpus; the projection and the probe clamp to the trained count.
+    val centroids = kmeansCentroids(corpus, idCol, vecCol, cells).map(_.toSeq).toSeq
+    transientTopK(corpus, queries, idCol, vecCol, k, AnnIndexMeta("ivf", 0, 0L,
+      Some(cells), Some(nAssign), None, None, None, Some(centroids)), nProbe = nProbe)
   }
 
   /** LSH-bucketed ANN top-k (the third X3 path, alongside brute-force and
@@ -259,32 +195,10 @@ object Similarity extends Logging {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, dim: Int, nTables: Int = 16, planesPerTable: Int = 4,
-      seed: Long = 42L): DataFrame = {
-    val planes: Seq[Seq[Double]] = (0 until nTables).flatMap { t =>
-      Dedup.hyperplanes(dim, planesPerTable, seed + t * 7919).map(_.toSeq)
-    }
-    def bucketed(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(id), col(vec),
-        posexplode(VectorFunctions.sign_buckets(col(vec), planes, planesPerTable))
-          .as(Seq("tbl", "bucket")))
-    val cb = bucketed(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-      "neighbor_id", "cv")
-    val qb = bucketed(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "query_id", "qv")
-    // corpus×nTables rows stay in their map task (broadcast join, no
-    // exchange) — carrying cv through the explode is free, and saves the
-    // candidate-rejoin second corpus scan the pair operators need
-    val scored = cb.join(broadcast(qb), Seq("tbl", "bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topkDistinct(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "p")))
-      .select(col("query_id"), (col("rank0") + 1).cast("int").as("rank"),
-        col("p._2").as("neighbor_id"), col("p._1").as("cos"))
-  }
+      seed: Long = 42L): DataFrame =
+    transientTopK(corpus, queries, idCol, vecCol, k, AnnIndexMeta("lsh", dim, 0L,
+      None, None, Some(nTables), Some(planesPerTable), Some(seed),
+      Some(Dedup.tablePlanes(dim, nTables, planesPerTable, seed))))
 
   /** Int8-quantized brute-force top-k with exact re-rank (X3 quantized
     * path). The corpus is scored against the broadcast query set on the
@@ -300,28 +214,20 @@ object Similarity extends Logging {
     * touches only `|queries| · k · refine` rows.
     */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, refine: Int = 4): DataFrame = {
-    val cq = corpus.select(col(idCol).as("neighbor_id"),
-      VectorFunctions.quantize_vec(col(vecCol)).as("cq"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorFunctions.quantize_vec(col(vecCol)).as("qq"))
-    val cands = cq.join(broadcast(q.select(col("query_id"), col("qq"))),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("acos", VectorFunctions.quantized_cos(col("qq"), col("cq")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topk(col("acos"), col("neighbor_id"), k * refine).as("top"))
-      .select(col("query_id"), explode(col("top")).as("p"))
-      .select(col("query_id"), col("p._2").as("neighbor_id"))
-    cands
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), "neighbor_id")
-      .join(broadcast(q.select(col("query_id"), col("qv"))), "query_id")
-      .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topk(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "p")))
-      .select(col("query_id"), (col("rank0") + 1).cast("int").as("rank"),
-        col("p._2").as("neighbor_id"), col("p._1").as("cos"))
-  }
+      vecCol: String, k: Int, refine: Int = 4): DataFrame =
+    transientTopK(corpus, queries, idCol, vecCol, k,
+      AnnIndexMeta("quantized", 0, 0L, None, None, None, None, None, None), refine = refine)
+
+  /** A search without a stored index: the corpus goes through the same
+    * [[postings]] projection a build writes, in memory, and is searched by
+    * the same [[probeAndRank]] as the stored index — so stored == rebuilt
+    * holds by construction.
+    */
+  private def transientTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, meta: AnnIndexMeta, nProbe: Int = 0,
+      refine: Int = 4): DataFrame =
+    probeAndRank(postings(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), meta),
+      meta, queryFrame(queries, idCol, vecCol), k, nProbe, refine)
 
   /** The storage-side half of the quantized path: the input frame with its
     * vector column replaced by the int8 sketch struct — write THIS at
@@ -365,6 +271,101 @@ object Similarity extends Logging {
         col("p._2").as("neighbor_id"), col("p._1").as("cos")): _*)
   }
 
+  /** The query side of every search: (query_id, qv) scored in double, plus
+    * the window's time column when the search is windowed.
+    */
+  private def queryFrame(queries: DataFrame, idCol: String, vecCol: String,
+      win: Option[(String, org.apache.spark.sql.Column)] = None): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("qv")) ++ win.map(w => col(w._1)): _*)
+
+  /** Postings (`keys`, id, vec) scored by exact cosine against the probe
+    * rows sharing their `keys` (every probe row when `keys` is empty),
+    * self-matches excluded. The probe side is broadcast unless it is a
+    * stream (Spark broadcasts the static side of a stream-static join on
+    * its own sizing), so the corpus-sized side never crosses an exchange.
+    */
+  private def scored(index: DataFrame, keys: Seq[String], probes: DataFrame): DataFrame = {
+    val c = index.select(keys.map(col) ++ Seq(col("id").as("neighbor_id"),
+      col("vec").cast("array<double>").as("cv")): _*)
+    val p = if (probes.isStreaming) probes else broadcast(probes)
+    (if (keys.isEmpty) c.join(p, col("neighbor_id") =!= col("query_id"))
+     else c.join(p, keys).filter(col("neighbor_id") =!= col("query_id")))
+      .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
+  }
+
+  /** The one probe-and-rank per method, over a posting frame — a stored
+    * index's live postings, or a corpus projected through [[postings]] in
+    * memory — and the [[AnnIndexMeta]] holding its geometry. `q` is a
+    * [[queryFrame]]. `selectivity` (filtered, live corpus rows) widens the
+    * ivf probe of a filtered search.
+    */
+  private def probeAndRank(index: DataFrame, meta: AnnIndexMeta, q: DataFrame,
+      k: Int, nProbe: Int, refine: Int,
+      win: Option[(String, org.apache.spark.sql.Column)] = None,
+      selectivity: Option[(Long, Long)] = None): DataFrame = meta.method match {
+    case "quantized" =>
+      require(!q.isStreaming && win.isEmpty,
+        "indexedTopK over a quantized index is batch-only and unwindowed " +
+          "(the int8 propose + exact re-rank is two chained " +
+          "aggregations, which a stream cannot run) — store an ivf or " +
+          "lsh index for streaming retrieval")
+      // the int8 sketch proposes k * refine candidates per query; the
+      // exact cosine over their full vectors picks the final k, so the
+      // rounding error (≲1.6e-2 per score) only costs recall when a true
+      // neighbor falls below rank k * refine on the sketch
+      val qq = q.withColumn("qq", VectorFunctions.quantize_vec(col("qv")))
+      val cands = index.select(col("id").as("neighbor_id"), col("q").as("cq"))
+        .join(broadcast(qq.select(col("query_id"), col("qq"))),
+          col("neighbor_id") =!= col("query_id"))
+        .withColumn("acos", VectorFunctions.quantized_cos(col("qq"), col("cq")))
+        .groupBy(col("query_id"))
+        .agg(graft.functions.TopK.topk(col("acos"), col("neighbor_id"),
+          k * refine).as("top"))
+        .select(col("query_id"), explode(col("top")).as("p"))
+        .select(col("query_id"), col("p._2").as("neighbor_id"))
+      val rescored = cands
+        .join(index.select(col("id").as("neighbor_id"),
+          col("vec").cast("array<double>").as("cv")), "neighbor_id")
+        .join(broadcast(q), "query_id")
+        .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
+      rankRows(rescored, k, distinct = false)
+    case "ivf" =>
+      val cents = meta.vectors.get
+      val kk = cents.length
+      // auto-nProbe derives from the DECLARED nCells (meta.n_cells) then
+      // clamps to the trained count, so a kmeans that clamped the grid
+      // still probes what was asked for. A candidateFilter WIDENS the
+      // probe count by 1/selectivity (clamped to all cells): each probed
+      // cell surfaces only ~sel of its postings, so probing base/sel cells
+      // restores the unfiltered candidate volume — the k contract and the
+      // recall contract both ride on candidate volume, not cell count.
+      val baseProbe =
+        if (nProbe > 0) nProbe
+        else math.max(4, math.ceil(meta.n_cells.get / 3.0).toInt)
+      val widened = selectivity.fold(baseProbe) { case (nf, nl) =>
+        val sel = math.max(nf.toDouble / nl, 1.0 / kk)
+        math.ceil(baseProbe / sel).toInt
+      }
+      if (widened > baseProbe)
+        logInfo(s"indexedTopK: candidateFilter selectivity " +
+          f"${selectivity.get._1.toDouble / selectivity.get._2}%.3f " +
+          s"widened nProbe $baseProbe -> ${math.min(widened, kk)} of $kk cells")
+      val probed = q.withColumn("cell",
+        explode(VectorFunctions.nearest_cells(col("qv"), cents, math.min(widened, kk))))
+      // multi-assignment surfaces one (query, neighbor) through several
+      // probed cells with a bit-identical score
+      rankRows(scored(index, Seq("cell"), probed), k,
+        distinct = meta.n_assign.exists(_ > 1), win = win.map(_._2))
+    case "lsh" =>
+      val probed = q.select(col("*"), posexplode(VectorFunctions.sign_buckets(col("qv"),
+        meta.vectors.get, meta.planes_per_table.get)).as(Seq("tbl", "bucket")))
+      // a pair colliding in several tables collapses in the heap
+      rankRows(scored(index, Seq("tbl", "bucket"), probed), k, distinct = true,
+        win = win.map(_._2))
+    case other => throw new IllegalArgumentException(s"unknown knn index method '$other'")
+  }
+
   /** Build and STORE an ANN index artifact under `indexPath` — the X3
     * analogue of the drift family's stored-artifact discipline (the
     * reference's design is likewise build-once-reuse state:
@@ -381,16 +382,21 @@ object Similarity extends Logging {
     *    state (trained centroids for ivf / generated hyperplanes for lsh —
     *    a few hundred KB at most) sits in the `_manifest/vectors.bin`
     *    sidecar, written once per build and named by the manifest.
-    *  - `index.parquet` — the postings, carrying the full vectors so the
-    *    index is SELF-CONTAINED (query time never rescans the corpus):
-    *    quantized → (id, q int8-sketch, vec); ivf → (id, vec) PARTITIONED BY
-    *    cell; lsh → (id, vec) PARTITIONED BY (tbl, bucket). The partition
-    *    layout is the scale lever: a probe reads only its cells' directories
-    *    (dynamic partition pruning through the broadcast probe join), so
-    *    query cost tracks nProbe/nCells of the INDEX, not the corpus scan.
-    *    Partitioning is skipped past 4096 cells (filesystem-dir explosion —
-    *    correctness is unaffected, pruning is lost; declare a coarser
-    *    geometry).
+    *  - `index.parquet` — the postings ([[postings]]), carrying the full
+    *    vectors so the index is SELF-CONTAINED (query time never rescans
+    *    the corpus), under `gen=N` generation directories: quantized →
+    *    (id, q int8-sketch, vec); ivf → (cell, id, vec); lsh → (tbl,
+    *    bucket, id, vec). ivf/lsh postings are PARTITIONED BY cell or
+    *    (tbl, bucket) only when the build clears the rows-per-leaf bar
+    *    ([[shouldPartitionLeaves]]: at most 4096 leaves, each expected to
+    *    hold `spark.graft.knn.partitionMinRowsPerLeaf` rows, default 1024);
+    *    below it they stay flat, the leaf columns as plain data columns.
+    *    The partition layout is the scale lever: a probe reads only its
+    *    cells' directories (dynamic partition pruning through the
+    *    broadcast probe join), so query cost tracks nProbe/nCells of the
+    *    INDEX, not the corpus scan; below the bar the sliver directories
+    *    would cost more than they prune. Appends and compactions follow
+    *    the layout the build chose.
     *
     * Geometry is DECLARED, not auto-sized: the artifact pins it (an
     * auto-sized build would silently re-derive different geometry per
@@ -464,11 +470,9 @@ object Similarity extends Logging {
       case "lsh" =>
         require(nTables >= 1 && planesPerTable >= 1 && planesPerTable <= 31,
           "buildIndex method=lsh needs nTables >= 1 and planesPerTable in [1, 31]")
-        val planes = (0 until nTables).flatMap { t =>
-          Dedup.hyperplanes(theDim, planesPerTable, seed + t * 7919).map(_.toSeq)
-        }
         AnnIndexMeta("lsh", theDim, n0, None, None, Some(nTables),
-          Some(planesPerTable), Some(seed), Some(planes))
+          Some(planesPerTable), Some(seed),
+          Some(Dedup.tablePlanes(theDim, nTables, planesPerTable, seed)))
       case other => throw new IllegalArgumentException(
         s"buildIndex method '$other' unknown (quantized, ivf, lsh; exact " +
           "has no index to store — the scan is the plan)")
@@ -562,22 +566,8 @@ object Similarity extends Logging {
         val stageP = s"$indexPath/_family_stage_postings"
         val fc = c.filter(col(a).isNotNull)
           .withColumn("__ap", hex(xxhash64(col(a).cast("string"))))
-        val g = lit(0).as("gen")
-        val attrCols2 = attributeColumns.map(col)
-        val staged = method match {
-          case "quantized" =>
-            fc.select(col("__ap") +: g +: col("id") +:
-                VectorFunctions.quantize_vec(col("vec")).as("q") +:
-                col("vec") +: attrCols2: _*)
-          case "lsh" =>
-            val ppt = meta.planes_per_table.get
-            fc.select(col("__ap") +: col("id") +: col("vec") +:
-                posexplode(VectorFunctions.sign_buckets(col("vec"),
-                  meta.vectors.get, ppt)).as(Seq("tbl", "bucket")) +:
-                attrCols2: _*)
-              .select(col("__ap") +: g +: col("tbl") +: col("bucket") +:
-                col("id") +: col("vec") +: attrCols2: _*)
-        }
+        val staged = postings(fc, meta, "__ap" +: attributeColumns)
+          .withColumn("gen", lit(0))
         Exec.run(staged)(_.write.mode("overwrite").partitionBy("__ap", "gen").parquet(stageP))
         // each renamed category directory reads as a flat gen-partitioned
         // index
@@ -729,21 +719,6 @@ object Similarity extends Logging {
         .filter { case (v, _) => meta.part_values.exists(_.contains(v)) }
     }
 
-  /** Size bound for the driver-side one-row memo maps (metaCache,
-    * selCache): a long-lived driver serving many index paths must not grow
-    * them forever (round-21 VERDICT). The bound is a crude clear-on-full
-    * rather than an LRU — each entry is a one-row memo whose miss costs one
-    * small job/listing, so a rare full flush is cheaper than per-hit
-    * bookkeeping.
-    */
-  private val MemoMaxEntries = 1024
-  private[graft] def cappedPut[K, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V], k: K, v: V): Unit = {
-    if (m.size >= MemoMaxEntries) m.clear()
-    m.put(k, v)
-    ()
-  }
-
   /** Whether attribute column `attr` is stored as a STRING in the index
     * postings, from the committed manifest's postings schema. An
     * unreadable type reads as "string": the conservative direction (the
@@ -789,7 +764,7 @@ object Similarity extends Logging {
     else {
       val n = Exec.run(livePostings(spark, indexPath, meta))(
         _.filter(expr(filter)).select("id").distinct().count())
-      cappedPut(selCache, key, (sig, n))
+      Reads.cappedPut(selCache, key, (sig, n))
       n
     }
   }
@@ -866,63 +841,100 @@ object Similarity extends Logging {
     }
   }
 
-  /** Method-specific posting write shared by [[buildIndex]] (gen 0,
-    * overwrite) and [[appendIndex]] (gen g+1, append): assign each row to
-    * its cells/buckets with the META's pinned geometry and write under the
-    * generation partition. `gen` is ALWAYS the FIRST partition column —
-    * that is the append crash-ordering lever: a generation only becomes
-    * visible when the meta's `generation` advances to it (readers filter
-    * `gen <= meta.generation`), and a crashed append's orphaned
-    * half-written generation is retracted by deleting ONE top-level
-    * `gen=N` directory before the retry. The cell/bucket partitioning
-    * (the DPP pruning lever) nests under it when `partitionLeaves` — the
-    * build-time [[shouldPartitionLeaves]] sizing — and the postings are
-    * then REPARTITIONED on the leaf columns first (the compactIndex
-    * discipline, now applied to every posting write): each leaf lands as
-    * one task's file instead of one file PER MAP TASK per leaf, which at
-    * M map tasks × L leaves is an M×L small-file explosion (guide §6).
+  /** The hive leaf columns of the method's postings (ivf cell, lsh
+    * (tbl, bucket); quantized has none).
+    */
+  private def leafCols(method: String): Seq[String] = method match {
+    case "ivf" => Seq("cell")
+    case "lsh" => Seq("tbl", "bucket")
+    case _     => Nil
+  }
+
+  /** The method's posting columns, leaf columns first. */
+  private def postingCols(method: String): Seq[String] =
+    leafCols(method) ++ (if (method == "quantized") Seq("id", "q", "vec") else Seq("id", "vec"))
+
+  /** The one posting projection: `(id, vec)` rows become the method's
+    * posting rows under `meta`'s geometry, the `carry` columns riding after
+    * them — quantized (id, q int8-sketch, vec); ivf (cell, id, vec), one
+    * row per assigned cell, the assignment clamped to the trained centroid
+    * count (fewer cells than declared just means probing all of them); lsh
+    * (tbl, bucket, id, vec), one row per table. Build, append, the
+    * per-category family's one-pass staging and the transient searches all
+    * project through here. Postings carry the full vector, so a probe
+    * scores its candidates without rejoining the corpus.
+    *
+    * Cell assignment (like the query-side probe) is ONE
+    * [[graft.functions.NearestCells]] node carrying the centroid matrix as
+    * a codegen reference object: a literal-array argmin put nCells × dim
+    * literal nodes into the plan, fell out of codegen and made assignment
+    * time track plan size (measured 4.8× at 3× data). `cell` is written
+    * as int, the type a leaf-partitioned read gives it, so the postings
+    * schema does not depend on the layout.
+    */
+  private def postings(c: DataFrame, meta: AnnIndexMeta, carry: Seq[String] = Nil): DataFrame = {
+    val tail = col("id") +: col("vec") +: carry.map(col)
+    meta.method match {
+      case "quantized" =>
+        c.select(col("id") +: VectorFunctions.quantize_vec(col("vec")).as("q") +:
+          col("vec") +: carry.map(col): _*)
+      case "ivf" =>
+        val assignN = math.min(meta.n_assign.get, meta.vectors.get.length)
+        c.select(explode(VectorFunctions.nearest_cells(col("vec"), meta.vectors.get, assignN)
+          .cast("array<int>")).as("cell") +: tail: _*)
+      case "lsh" =>
+        c.select(posexplode(VectorFunctions.sign_buckets(col("vec"), meta.vectors.get,
+          meta.planes_per_table.get)).as(Seq("tbl", "bucket")) +: tail: _*)
+    }
+  }
+
+  /** Write one posting generation — `gen` plus the posting columns — under
+    * `idxDir` in the index's layout. `gen` is ALWAYS the FIRST partition
+    * column — the crash-ordering lever: a generation only becomes visible
+    * when the meta's `generation` advances to it (readers filter
+    * `gen <= meta.generation`), and a crashed write's orphaned generation
+    * is retracted by deleting ONE top-level `gen=N` directory. The leaf
+    * directories (the DPP pruning lever) nest under it when
+    * `partitionLeaves`, and the rows are then REPARTITIONED on the leaf
+    * columns first: each leaf lands as one task's file instead of one file
+    * PER MAP TASK per leaf, which at M map tasks × L leaves is an M×L
+    * small-file explosion (guide §6). `tap` sees the frame the write
+    * consumes.
+    */
+  private def writeGeneration(rows: DataFrame, method: String, partitionLeaves: Boolean,
+      mode: String, idxDir: String, tap: DataFrame => DataFrame = identity): Unit = {
+    val leaves = if (partitionLeaves) leafCols(method) else Nil
+    tap(if (leaves.isEmpty) rows else rows.repartition(leaves.map(col): _*))
+      .write.mode(mode).partitionBy("gen" +: leaves: _*).parquet(idxDir)
+  }
+
+  /** The posting write of [[buildIndex]] (gen 0, overwrite) and
+    * [[appendIndex]] (gen g+1, append): the [[postings]] projection under
+    * the META's pinned geometry, written by [[writeGeneration]] with the
+    * build-time [[shouldPartitionLeaves]] layout. An append passes the
+    * index's `recorded` postings schema and every posting column is cast
+    * to its recorded type, so an index whose `cell` was written as bigint
+    * stays uniform.
     *
     * Returns the posting row count, observed DURING the write pass
-    * (org.apache.spark.sql.Observation) — the callers' report/bookkeeping
-    * number, previously recomputed by a full read-back of the written
-    * directory (a second pass over the index at any scale) — and the
-    * postings' read schema, which the manifest records.
+    * (org.apache.spark.sql.Observation) rather than by a read-back of the
+    * written directory, and the postings' read schema, which the manifest
+    * records.
     */
-
-  private def writePostings(c: DataFrame, meta: AnnIndexMeta, gen: Int,
-      idxDir: String, overwrite: Boolean, partitionLeaves: Boolean): (Long, String) = {
-    val g = lit(gen).as("gen")
+  private def writePostings(c: DataFrame, meta: AnnIndexMeta, gen: Int, idxDir: String,
+      overwrite: Boolean, partitionLeaves: Boolean,
+      recorded: Option[org.apache.spark.sql.types.StructType] = None): (Long, String) = {
     // declared attribute columns ride every posting as plain data columns
     // (the candidateFilter predicate surface — parquet-pushdown-able)
-    val attrs = meta.attr_cols.getOrElse(Nil).map(col)
-    val (postings, leafCols) = meta.method match {
-      case "quantized" =>
-        (c.select(g +: col("id") +:
-            VectorFunctions.quantize_vec(col("vec")).as("q") +:
-            col("vec") +: attrs: _*), Nil)
-      case "ivf" =>
-        // assignment clamps to the trained centroid count exactly like
-        // ivfTopK (fewer cells than declared just means probing all of them)
-        val assignN = math.min(meta.n_assign.get, meta.vectors.get.length)
-        (c.withColumn("cell", explode(VectorFunctions.nearest_cells(
-            col("vec"), meta.vectors.get, assignN)))
-          .select(g +: col("cell") +: col("id") +: col("vec") +: attrs: _*),
-          Seq("cell"))
-      case "lsh" =>
-        val ppt = meta.planes_per_table.get
-        (c.select(col("id") +: col("vec") +:
-            posexplode(VectorFunctions.sign_buckets(col("vec"),
-              meta.vectors.get, ppt)).as(Seq("tbl", "bucket")) +: attrs: _*)
-          .select(g +: col("tbl") +: col("bucket") +: col("id") +:
-            col("vec") +: attrs: _*), Seq("tbl", "bucket"))
-    }
-    val parts = "gen" +: (if (partitionLeaves) leafCols else Nil)
+    val p = postings(c, meta, meta.attr_cols.getOrElse(Nil))
+    val rows = p.select(lit(gen).as("gen") +: p.columns.toSeq.map(n =>
+      recorded.fold(col(n))(s => col(n).cast(s(n).dataType).as(n))): _*)
     val obs = org.apache.spark.sql.Observation()
-    Exec.run(postings)(p => (if (partitionLeaves) p.repartition(leafCols.map(col): _*) else p)
-      .observe(obs, count(lit(1)).as("rows"))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy(parts: _*).parquet(idxDir))
-    (observedOr(obs, "rows", 0L), Reads.readBack(postings.schema, parts).json)
+    Exec.run(rows)(r => writeGeneration(r, meta.method, partitionLeaves,
+      if (overwrite) "overwrite" else "append", idxDir,
+      w => w.observe(obs, count(lit(1)).as("rows"))))
+    val parts = "gen" +: (if (partitionLeaves) leafCols(meta.method) else Nil)
+    (observedOr(obs, "rows", 0L), Reads.readBack(rows.schema, parts).json)
   }
 
   /** INCREMENTAL index maintenance — append a batch of NEW vectors to a
@@ -974,7 +986,7 @@ object Similarity extends Logging {
         "rebuild the family with knn_index on the extended snapshot")
     val idxDir = s"$indexPath/index.parquet"
     val gl = layoutOf(indexPath)
-    val postings = Generations.dataSchema(spark, gl, meta.fence)
+    val stored = Generations.dataSchema(spark, gl, meta.fence)
     // appended postings must match the stored column types exactly or the
     // parquet read would mix schemas (e.g. array<float> vs array<double>);
     // declared attribute columns must arrive with the batch — an appended
@@ -988,9 +1000,9 @@ object Similarity extends Logging {
         "under every candidateFilter; supply the columns or rebuild " +
         "without attributeColumns")
     val c = newRows.select(
-      col(idCol).cast(postings("id").dataType).as("id") +:
-      col(vecCol).cast(postings("vec").dataType).as("vec") +:
-      attrCols.map(a => col(a).cast(postings(a).dataType).as(a)): _*)
+      col(idCol).cast(stored("id").dataType).as("id") +:
+      col(vecCol).cast(stored("vec").dataType).as("vec") +:
+      attrCols.map(a => col(a).cast(stored(a).dataType).as(a)): _*)
     val fs = indexFs(spark, indexPath)
     // retract a crashed predecessor's orphans and a completed compaction's
     // uncleaned folded generations (Generations.sweep)
@@ -1010,8 +1022,8 @@ object Similarity extends Logging {
     // mixed directory depths across generations would break partition
     // discovery
     val (idxRows, _) = writePostings(cObserved, meta, meta.generation + 1, idxDir,
-      overwrite = false,
-      partitionLeaves = leafPartitionedOnDisk(spark, idxDir))
+      overwrite = false, partitionLeaves = leafPartitionedOnDisk(spark, idxDir),
+      recorded = Some(stored))
     val (n, sig) = Generations.signature(probeObs)
     val loObs = observedOr[Any](probeObs, "lo", null)
     if (loObs != null) {
@@ -1118,40 +1130,16 @@ object Similarity extends Logging {
     // on the layout columns so each cell's accumulated small files land as
     // one; an empty fold's marker mirrors the hive layout exactly (uniform
     // partition depth, so discovery never sees conflicting structures)
+    // (a flat layout needs no repartition: read-coalescing packs the
+    // accumulated small files into maxPartitionBytes-sized tasks, which IS
+    // the compaction)
     val partLeaves = leafPartitionedOnDisk(spark, idxDir)
-    val attrNames = meta.attr_cols.getOrElse(Nil)
-    val attrs = attrNames.map(col)
-    val (emptyLeaf, dataCols) = meta.method match {
-      case "quantized" => ("", Seq("id", "q", "vec"))
-      case "ivf" =>
-        if (partLeaves) ("cell=0", Seq("id", "vec")) else ("", Seq("cell", "id", "vec"))
-      case "lsh" =>
-        if (partLeaves) ("tbl=0/bucket=0", Seq("id", "vec"))
-        else ("", Seq("tbl", "bucket", "id", "vec"))
-    }
-    Generations.fold(spark, fs, gl, f, emptyLeaf, dataCols ++ attrNames,
-        retainFolded) { (live, g) =>
-      meta.method match {
-        case "quantized" =>
-          // flat layout: read-coalescing packs the accumulated small files
-          // into maxPartitionBytes-sized tasks, which IS the compaction
-          live.select(g +: col("id") +: col("q") +: col("vec") +: attrs: _*)
-            .write.mode("append").partitionBy("gen").parquet(idxDir)
-        case "ivf" =>
-          val sel = live.select(g +: col("cell") +: col("id") +: col("vec") +:
-              attrs: _*)
-          val w = (if (partLeaves) sel.repartition(col("cell")) else sel)
-            .write.mode("append")
-          (if (partLeaves) w.partitionBy("gen", "cell")
-           else w.partitionBy("gen")).parquet(idxDir)
-        case "lsh" =>
-          val sel = live.select(g +: col("tbl") +: col("bucket") +: col("id") +:
-              col("vec") +: attrs: _*)
-          val w = (if (partLeaves) sel.repartition(col("tbl"), col("bucket"))
-            else sel).write.mode("append")
-          (if (partLeaves) w.partitionBy("gen", "tbl", "bucket")
-           else w.partitionBy("gen")).parquet(idxDir)
-      }
+    val leaves = if (partLeaves) leafCols(meta.method) else Nil
+    val cols = postingCols(meta.method) ++ meta.attr_cols.getOrElse(Nil)
+    Generations.fold(spark, fs, gl, f, leaves.map(c => s"$c=0").mkString("/"),
+        cols.filterNot(leaves.contains), retainFolded) { (live, g) =>
+      writeGeneration(live.select(g +: cols.map(col): _*), meta.method, partLeaves,
+        "append", idxDir)
     } { (folded, _) => commitMeta(spark, indexPath, meta.withFence(folded)) }
     val folded = meta.generation - meta.base_gen + 1
     val newGen = meta.generation + 1
@@ -1321,7 +1309,7 @@ object Similarity extends Logging {
       m: AnnIndexMeta): Unit = {
     val sig = Commit.writeManifest(indexFs(spark, indexPath), hpath(indexPath),
       IndexManifest(m.copy(vectors = None), m.vectors.map(_ => VectorsFile)))
-    cappedPut(metaCache, indexPath, (sig, m))
+    Reads.cappedPut(metaCache, indexPath, (sig, m))
   }
 
   /** A build's commit: the once-per-build vectors sidecar, then the
@@ -1370,7 +1358,7 @@ object Similarity extends Logging {
             "knn_index"))
       val m = man.meta.copy(vectors =
         man.vectors_file.map(Commit.readSidecar(fs, hpath(indexPath), _)))
-      cappedPut(metaCache, indexPath, (manSig, m))
+      Reads.cappedPut(metaCache, indexPath, (manSig, m))
       m
     }
   }
@@ -1466,29 +1454,19 @@ object Similarity extends Logging {
           (filtered, Some((filteredLiveIdCount(spark, indexPath, meta, f),
             math.max(1L, meta.n_rows))))
       }
-    val exactFallback = selectivity.exists(_._1 <= k.toLong * ExactFallbackFactor)
     // STREAMING query frames are first-class for ivf/lsh (the stored
     // artifact makes streaming retrieval a stream-static join + ONE
-    // stateful top-k aggregation): the broadcast hint stays off the stream
-    // side (Spark broadcasts the static side of a stream-static join on
-    // its own sizing), and `win` — (timeColumn, window expression), the
-    // caller owns watermarking — keys the heap by (window, query) so cells
-    // finalize and evict instead of living forever. quantized is refused
-    // on a stream: its propose-then-re-rank is TWO chained aggregations.
-    val streaming = queries.isStreaming
-    val hint: DataFrame => DataFrame =
-      if (streaming) identity else (df: DataFrame) => broadcast(df)
-    val winCarry = win.map { case (ts, _) => col(ts) }.toSeq
-    val winExpr = win.map(_._2)
-    val q = queries.select(Seq(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv")) ++ winCarry: _*)
-    if (exactFallback) {
+    // stateful top-k aggregation): `win` — (timeColumn, window
+    // expression), the caller owns watermarking — keys the heap by
+    // (window, query) so cells finalize and evict instead of living
+    // forever. quantized is refused on a stream: its propose-then-re-rank
+    // is TWO chained aggregations.
+    val q = queryFrame(queries, idCol, vecCol, win)
+    if (selectivity.exists(_._1 <= k.toLong * ExactFallbackFactor)) {
       // the filtered corpus is tiny — scan it exactly (full recall, the
       // honest k guarantee; the scan is k × ExactFallbackFactor rows ×
-      // the broadcast query set, a rounding error next to any probe).
-      // Postings may carry one row per (cell|table) assignment — dedupe
-      // on id before scoring so no neighbor double-counts.
-      require(!streaming || meta.method != "quantized",
+      // the broadcast query set, a rounding error next to any probe)
+      require(!queries.isStreaming || meta.method != "quantized",
         "indexedTopK over a quantized index is batch-only — store an ivf " +
           "or lsh index for streaming retrieval")
       logInfo(s"indexedTopK: candidateFilter matches only " +
@@ -1500,85 +1478,8 @@ object Similarity extends Logging {
       // The distinct-pairs heap keeps the MAX-scoring copy per neighbor
       // (deterministic, and the same collapse rule as the ivf/lsh routes),
       // where a dropDuplicates would keep an arbitrary one
-      val c = index.select(col("id").as("neighbor_id"),
-        col("vec").cast("array<double>").as("cv"))
-      val scored = c.join(hint(q), col("neighbor_id") =!= col("query_id"))
-        .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-      return rankRows(scored, k, distinct = true, win = winExpr)
-    }
-    meta.method match {
-      case "quantized" =>
-        require(!streaming && win.isEmpty,
-          "indexedTopK over a quantized index is batch-only and unwindowed " +
-            "(the int8 propose + exact re-rank is two chained " +
-            "aggregations, which a stream cannot run) — store an ivf or " +
-            "lsh index for streaming retrieval")
-        val qq = q.withColumn("qq", VectorFunctions.quantize_vec(col("qv")))
-        val cands = index.select(col("id").as("neighbor_id"), col("q").as("cq"))
-          .join(broadcast(qq.select(col("query_id"), col("qq"))),
-            col("neighbor_id") =!= col("query_id"))
-          .withColumn("acos", VectorFunctions.quantized_cos(col("qq"), col("cq")))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopK.topk(col("acos"), col("neighbor_id"),
-            k * refine).as("top"))
-          .select(col("query_id"), explode(col("top")).as("p"))
-          .select(col("query_id"), col("p._2").as("neighbor_id"))
-        val rescored = cands
-          .join(index.select(col("id").as("neighbor_id"),
-            col("vec").cast("array<double>").as("cv")), "neighbor_id")
-          .join(broadcast(q), "query_id")
-          .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-        rankRows(rescored, k, distinct = false)
-      case "ivf" =>
-        val cents = meta.vectors.get.map(_.toSeq)
-        val kk = cents.length
-        // auto-nProbe derives from the DECLARED nCells (meta.n_cells) then
-        // clamps to the trained count — the exact arithmetic ivfTopK runs,
-        // so stored == rebuilt holds even when kmeans clamped the grid.
-        // A candidateFilter WIDENS the probe count by 1/selectivity
-        // (clamped to all cells): each probed cell surfaces only ~sel of
-        // its postings, so probing base/sel cells restores the unfiltered
-        // candidate volume — the k contract and the recall contract both
-        // ride on candidate volume, not cell count.
-        val baseProbe =
-          if (nProbe > 0) nProbe
-          else math.max(4, math.ceil(meta.n_cells.get / 3.0).toInt)
-        val widened = selectivity.fold(baseProbe) { case (nf, nl) =>
-          val sel = math.max(nf.toDouble / nl, 1.0 / kk)
-          math.ceil(baseProbe / sel).toInt
-        }
-        if (widened > baseProbe)
-          logInfo(s"indexedTopK: candidateFilter selectivity " +
-            f"${selectivity.get._1.toDouble / selectivity.get._2}%.3f " +
-            s"widened nProbe $baseProbe -> ${math.min(widened, kk)} " +
-            s"of $kk cells at $indexPath")
-        val probeN = math.min(widened, kk)
-        val probed = q.withColumn("cell",
-            explode(VectorFunctions.nearest_cells(col("qv"), cents, probeN)))
-          .select(Seq(col("query_id"), col("qv"), col("cell")) ++ winCarry: _*)
-        val scored = index
-          .select(col("cell"), col("id").as("neighbor_id"),
-            col("vec").cast("array<double>").as("cv"))
-          .join(hint(probed), Seq("cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-        rankRows(scored, k, distinct = meta.n_assign.exists(_ > 1),
-          win = winExpr)
-      case "lsh" =>
-        val planes = meta.vectors.get.map(_.toSeq)
-        val qb = q.select(Seq(col("query_id"), col("qv")) ++ winCarry ++ Seq(
-          posexplode(VectorFunctions.sign_buckets(col("qv"), planes,
-            meta.planes_per_table.get)).as(Seq("tbl", "bucket"))): _*)
-        val scored = index
-          .select(col("tbl"), col("bucket"), col("id").as("neighbor_id"),
-            col("vec").cast("array<double>").as("cv"))
-          .join(hint(qb), Seq("tbl", "bucket"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos", VectorFunctions.cosine_sim(col("qv"), col("cv")))
-        rankRows(scored, k, distinct = true, win = winExpr)
-      case other => throw new IllegalArgumentException(
-        s"indexPath '$indexPath' stores unknown method '$other'")
-    }
+      rankRows(scored(index, Nil, q), k, distinct = true, win = win.map(_._2))
+    } else probeAndRank(index, meta, q, k, nProbe, refine, win, selectivity)
   }
 }
 

@@ -49,7 +49,7 @@ object Reads {
         case Some((_, schema)) => known(spark, schema, paths, options)
         case None =>
           val df = spark.read.options(options).parquet(paths: _*)
-          put(key, stamp, df.schema)
+          cappedPut(memo, key, (stamp, df.schema))
           df
       }
     }
@@ -62,8 +62,8 @@ object Reads {
     * is a hit while the listing stays the one installed.
     */
   def remember(spark: SparkSession, path: String, written: StructType): Unit =
-    put((Seq(path), Map.empty), Stamp(listing(spark, Seq(path)),
-      inferenceConfs(spark)), readBack(written, Nil))
+    cappedPut(memo, (Seq(path), Map.empty[String, String]), (Stamp(listing(spark, Seq(path)),
+      inferenceConfs(spark)), readBack(written, Nil)))
 
   /** The schema Spark reads back from a parquet write of `written`
     * partitioned by `partitionCols`: the data columns (Spark keeps the
@@ -88,17 +88,21 @@ object Reads {
 
   private case class Stamp(files: Seq[(String, Long, Long)], confs: Map[String, String])
 
-  /** One entry per read (paths, options); a long-lived driver reading many
-    * path sets clears it when full — a miss costs one inference job.
-    */
-  private val MemoMaxEntries = 1024
+  /** One entry per read (paths, options); a miss costs one inference job. */
   private val memo =
     new ConcurrentHashMap[(Seq[String], Map[String, String]), (Stamp, StructType)]
 
-  private def put(key: (Seq[String], Map[String, String]), stamp: Stamp,
-      schema: StructType): Unit = {
-    if (memo.size >= MemoMaxEntries) memo.clear()
-    memo.put(key, (stamp, schema))
+  /** The bound of the engine's driver-side memo maps (this reader's, the
+    * knn index meta and selectivity memos): a long-lived driver serving
+    * many paths must not grow them forever. The bound is a crude
+    * clear-on-full rather than an LRU — each entry is a memo whose miss
+    * costs one small job or listing, so a rare full flush is cheaper than
+    * per-hit bookkeeping.
+    */
+  private val MemoMaxEntries = 1024
+  private[graft] def cappedPut[K, V](m: ConcurrentHashMap[K, V], k: K, v: V): Unit = {
+    if (m.size >= MemoMaxEntries) m.clear()
+    m.put(k, v)
     ()
   }
 

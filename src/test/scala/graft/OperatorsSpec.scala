@@ -1024,15 +1024,19 @@ class OperatorsSpec extends SparkSuite {
     assert(qr.getString(0) == "quantized" && qr.getInt(1) == 64 &&
       qr.getLong(2) == qr.getLong(3), qr.toString)
 
-    val iRep = Similarity.buildIndex(e, "vec_id", "embedding", "ivf",
-      s"$base/ivf", nCells = 16, nAssign = 2)
-    assert(rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10,
-        s"$base/ivf", nProbe = 6)) ==
-      rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
-        nCells = 16, nProbe = 6, nAssign = 2)),
-      "stored ivf index diverged from the direct path")
-    assert(iRep.head().getLong(3) == iRep.head().getLong(2) * 2,
-      "ivf multi-assignment must emit exactly nAssign postings per row")
+    // nAssign = 1 is single assignment: one posting per row, no
+    // distinct-pairs collapse
+    Seq(2, 1).foreach { a =>
+      val iRep = Similarity.buildIndex(e, "vec_id", "embedding", "ivf",
+        s"$base/ivf$a", nCells = 16, nAssign = a)
+      assert(rows(Similarity.indexedTopK(q, "vec_id", "embedding", 10,
+          s"$base/ivf$a", nProbe = 6)) ==
+        rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
+          nCells = 16, nProbe = 6, nAssign = a)),
+        s"stored ivf index (nAssign $a) diverged from the direct path")
+      assert(iRep.head().getLong(3) == iRep.head().getLong(2) * a,
+        "ivf assignment must emit exactly nAssign postings per row")
+    }
 
     Similarity.buildIndex(e, "vec_id", "embedding", "lsh", s"$base/lsh",
       nTables = 16, planesPerTable = 4)
@@ -1043,7 +1047,7 @@ class OperatorsSpec extends SparkSuite {
       "stored lsh index diverged from the direct path")
 
     // meta round-trips the geometry (the knn preflight's reference)
-    val meta = Similarity.readIndexMeta(spark, s"$base/ivf")
+    val meta = Similarity.readIndexMeta(spark, s"$base/ivf2")
     assert(meta.method == "ivf" && meta.n_cells.contains(16) &&
       meta.n_assign.contains(2) && meta.dim == 64 &&
       meta.vectors.exists(_.length == 16), meta.toString)
@@ -2569,12 +2573,12 @@ class OperatorsSpec extends SparkSuite {
   }
 
   test("driver memo maps stay bounded across many keys (cappedPut)") {
-    // the one-row memos (metaCache / attrTypeCache / selCache) are
-    // JVM-global — a long-lived driver serving many index paths must not
-    // grow them forever (round-21 VERDICT); cappedPut is their shared
-    // clear-on-full bound
+    // the driver memos (the reader's schema memo, the knn metaCache /
+    // selCache) are JVM-global — a long-lived driver serving many paths
+    // must not grow them forever; cappedPut is their shared clear-on-full
+    // bound
     val m = new java.util.concurrent.ConcurrentHashMap[String, Int]
-    (0 until 5000).foreach(i => Similarity.cappedPut(m, s"path-$i", i))
+    (0 until 5000).foreach(i => graft.sinks.Reads.cappedPut(m, s"path-$i", i))
     assert(m.size <= 1024, s"memo map grew past its bound: ${m.size}")
     // the most recent entry always lands (a flush never loses the put)
     assert(m.containsKey("path-4999"))

@@ -58,15 +58,21 @@ class ReadsSpec extends SparkSuite {
       historyManifest(p).fence, what)
 
   test("knn postings and tombstones: the manifest schema equals Spark's inference after build, append, delete and compact, for every method and leaf layout") {
-    Seq("quantized", "ivf", "lsh").foreach { method =>
-      val p = tempDir(s"graft_reads_knn_$method") + "/idx"
-      // ivf nests cell directories at this size; lsh stays flat
-      if (method == "ivf") spark.conf.set("spark.graft.knn.partitionMinRowsPerLeaf", "1")
+    // (method, nested): at this size every index stays flat under the
+    // default rows-per-leaf bar; a bar of 1 nests ivf's cell directories
+    Seq(("quantized", false), ("ivf", true), ("ivf", false), ("lsh", false)).foreach {
+        case (method, nested) =>
+      val p = tempDir(s"graft_reads_knn_$method${if (nested) "_nested" else ""}") + "/idx"
+      if (nested) spark.conf.set("spark.graft.knn.partitionMinRowsPerLeaf", "1")
       try Similarity.buildIndex(emb.filter(col("vec_id") < 60), "vec_id", "embedding",
         method, p, nCells = 4, nTables = 2, planesPerTable = 2,
         attributeColumns = Seq("label"))
       finally spark.conf.unset("spark.graft.knn.partitionMinRowsPerLeaf")
       assertKnnParity(p, s"$method build")
+      // the postings schema does not depend on the leaf layout
+      if (method == "ivf")
+        assert(Generations.dataSchema(spark, knnLayout(p), Similarity.readIndexMeta(spark, p)
+          .fence)("cell").dataType == org.apache.spark.sql.types.IntegerType, s"nested=$nested")
       Similarity.appendIndex(emb.filter(col("vec_id") >= 60 && col("vec_id") < 80),
         "vec_id", "embedding", p)
       assertKnnParity(p, s"$method append")
